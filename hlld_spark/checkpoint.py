@@ -32,12 +32,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from .core.accumulator import HllSpec, accumulator_for
-from .operators.sketch import (
-    _make_build_partials_arrow,
-    _make_merge_partials,
-    _merge_global,
-    _result_schema,
-)
+from .operators.sketch import _make_build_partials_arrow, _merge_partials
 
 
 def _split_id(path: str) -> str:
@@ -163,7 +158,4 @@ def checkpointed_build(
     if not partial_files:
         raise ValueError("no non-empty splits — input had no usable rows")
     partials = spark.read.parquet(*partial_files)
-    schema = partials.schema
-    if not keys:
-        return _merge_global(partials, schema)
-    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
+    return _merge_partials(partials, keys, partials.schema)

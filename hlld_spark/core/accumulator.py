@@ -15,10 +15,14 @@ companions (count-min, Bloom, t-digest, KLL) under the same interface
 ``update`` takes a whole Arrow/pandas batch — the per-row loop lives in
 vectorized numpy, never Python (input_hint requirement). Spark carries
 states as an opaque BinaryType column; partial aggregation happens in
-``mapInPandas`` (partition-local), final aggregation in
-``applyInPandas`` (register/counter merge), mirroring the reference's
-per-thread-update → shared-array two-phase shape
+``mapInArrow`` (partition-local), final aggregation folds the partials
+with :func:`merge_serialized` (register/counter merge), mirroring the
+reference's per-thread-update → shared-array two-phase shape
 (/root/reference/src/set.c:281-284).
+
+Every serialized sketch starts with ``MAGIC`` + its ``KIND_*`` tag byte;
+the companions and ``hll.serialize`` write and check that header from
+here.
 """
 
 from __future__ import annotations
@@ -78,9 +82,6 @@ class HllAccumulator:
 
     def update(self, state: np.ndarray, values, spec: HllSpec) -> np.ndarray:
         hashes = hll_hash(values)
-        return _hll.add_hashes(state, hashes, spec.precision)
-
-    def update_hashes(self, state: np.ndarray, hashes: np.ndarray, spec: HllSpec) -> np.ndarray:
         return _hll.add_hashes(state, hashes, spec.precision)
 
     # batch fast path used by the Spark partial-build stage: hash + pack
@@ -180,6 +181,20 @@ def new_builder(acc, spec):
     return GenericBuilder(acc, spec)
 
 
+def float64_batch(values) -> np.ndarray:
+    """A value batch (Arrow array/chunked array, pandas Series or
+    sequence) as float64; nulls become NaN. The ``prepare_batch`` of the
+    value sketches (KLL, t-digest)."""
+    import pyarrow as pa
+
+    if isinstance(values, pa.ChunkedArray):
+        values = values.combine_chunks()
+    if isinstance(values, pa.Array):
+        return np.asarray(values.cast(pa.float64()), dtype=np.float64)
+    if hasattr(values, "to_numpy"):
+        return values.to_numpy(dtype=np.float64, na_value=np.nan)
+    return np.asarray(values, dtype=np.float64)
+
 
 _ACCUMULATORS: dict[str, object] = {}
 _TAGS: dict[int, object] = {}
@@ -206,6 +221,22 @@ def deserialize_any(buf: bytes):
         raise ValueError(f"unknown sketch tag {buf[4]}")
     state, spec = acc.deserialize(buf)
     return acc, state, spec
+
+
+def merge_serialized(bufs) -> bytes:
+    """Fold serialized sketches of one kind into one serialized sketch:
+    deserialize → merge → serialize, with the first sketch's spec. The one
+    merge step behind the keyed and global Spark merges and SQL
+    ``sketch_merge``; a mix of kinds raises instead of reading one kind's
+    bytes as another's."""
+    it = iter(bufs)
+    acc, state, spec = deserialize_any(next(it))
+    for buf in it:
+        other_acc, other, _ = deserialize_any(buf)
+        if other_acc is not acc:
+            raise ValueError(f"cannot merge {acc.kind} with {other_acc.kind}")
+        state = acc.merge(state, other, spec)
+    return acc.serialize(state, spec)
 
 
 register_accumulator(HllAccumulator())

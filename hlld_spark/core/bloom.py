@@ -17,6 +17,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .accumulator import KIND_BLOOM, MAGIC, register_accumulator
 from .hashing import murmur3_x64_128
 
 _U64 = np.uint64
@@ -54,7 +55,7 @@ def _positions(h1: np.ndarray, h2: np.ndarray, k: int, m: int) -> np.ndarray:
 
 class BloomAccumulator:
     kind = "bloom"
-    tag = 3  # KIND_BLOOM
+    tag = KIND_BLOOM
 
     def zero(self, spec: BloomSpec) -> np.ndarray:
         return np.zeros(spec.bits, dtype=np.uint8)  # byte-per-bit in memory
@@ -100,18 +101,16 @@ class BloomAccumulator:
         return -(spec.bits / spec.hashes) * math.log(1 - x / spec.bits)
 
     def serialize(self, state: np.ndarray, spec: BloomSpec) -> bytes:
-        head = b"HS01" + bytes([self.tag, 0])
+        head = MAGIC + bytes([self.tag, 0])
         dims = np.array([spec.bits, spec.hashes], dtype="<u4").tobytes()
         return head + dims + np.packbits(state).tobytes()
 
     def deserialize(self, buf: bytes) -> tuple[np.ndarray, BloomSpec]:
-        if buf[:4] != b"HS01" or buf[4] != self.tag:
+        if buf[:4] != MAGIC or buf[4] != self.tag:
             raise ValueError("not a serialized Bloom sketch")
         bits, hashes = (int(x) for x in np.frombuffer(buf[6:14], dtype="<u4"))
         state = np.unpackbits(np.frombuffer(buf[14:], dtype=np.uint8))[:bits].copy()
         return state, BloomSpec(bits=bits, hashes=hashes)
 
-
-from .accumulator import register_accumulator  # noqa: E402
 
 register_accumulator(BloomAccumulator())

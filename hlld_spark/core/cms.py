@@ -19,6 +19,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .accumulator import KIND_CMS, MAGIC, register_accumulator
 from .hashing import murmur3_x64_128
 
 _U64 = np.uint64
@@ -55,7 +56,7 @@ def _positions(h1: np.ndarray, h2: np.ndarray, depth: int, width: int) -> np.nda
 
 class CmsAccumulator:
     kind = "cms"
-    tag = 2  # KIND_CMS
+    tag = KIND_CMS
 
     def zero(self, spec: CmsSpec) -> np.ndarray:
         return np.zeros((spec.depth, spec.width), dtype=np.int64)
@@ -99,18 +100,16 @@ class CmsAccumulator:
         return float(state[0].sum())
 
     def serialize(self, state: np.ndarray, spec: CmsSpec) -> bytes:
-        head = b"HS01" + bytes([self.tag, 0])
+        head = MAGIC + bytes([self.tag, 0])
         dims = np.array([spec.depth, spec.width], dtype="<u4").tobytes()
         return head + dims + state.astype("<i8").tobytes()
 
     def deserialize(self, buf: bytes) -> tuple[np.ndarray, CmsSpec]:
-        if buf[:4] != b"HS01" or buf[4] != self.tag:
+        if buf[:4] != MAGIC or buf[4] != self.tag:
             raise ValueError("not a serialized CMS sketch")
         depth, width = np.frombuffer(buf[6:14], dtype="<u4")
         state = np.frombuffer(buf[14:], dtype="<i8").reshape(int(depth), int(width)).copy()
         return state, CmsSpec(width=int(width), depth=int(depth))
 
-
-from .accumulator import register_accumulator  # noqa: E402
 
 register_accumulator(CmsAccumulator())

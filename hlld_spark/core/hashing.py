@@ -34,15 +34,7 @@ _A1 = U64(0x52DCE729)
 _A2 = U64(0x38495AB5)
 _F1 = U64(0xFF51AFD7ED558CCD)
 _F2 = U64(0xC4CEB9FE1A85EC53)
-_R31 = U64(31)
-_R27 = U64(27)
-_R33 = U64(33)
 _S33 = U64(33)
-_S64 = U64(64)
-
-
-def _rotl(x: np.ndarray, r: np.uint64) -> np.ndarray:
-    return (x << r) | (x >> (_S64 - r))
 
 
 def _rotl_ip(x: np.ndarray, r: int, t: np.ndarray) -> None:
@@ -50,15 +42,6 @@ def _rotl_ip(x: np.ndarray, r: int, t: np.ndarray) -> None:
     np.right_shift(x, U64(64 - r), out=t)
     np.left_shift(x, U64(r), out=x)
     np.bitwise_or(x, t, out=x)
-
-
-def _fmix64(k: np.ndarray) -> np.ndarray:
-    k = k ^ (k >> _S33)
-    k = k * _F1
-    k = k ^ (k >> _S33)
-    k = k * _F2
-    k = k ^ (k >> _S33)
-    return k
 
 
 def _fmix64_ip(k: np.ndarray, t: np.ndarray) -> None:

@@ -277,18 +277,18 @@ def unpack_registers(buf: bytes, precision: int) -> np.ndarray:
     return out[:m]
 
 
-_MAGIC = b"HS01"
-SKETCH_HLL = 1
-
-
 def serialize(registers: np.ndarray, precision: int) -> bytes:
     """Column format: 4-byte magic + type tag + precision + packed words.
     The packed-words payload is exactly the reference's mmap layout."""
-    return _MAGIC + bytes([SKETCH_HLL, precision]) + pack_registers(registers)
+    from .accumulator import KIND_HLL, MAGIC  # accumulator imports this module
+
+    return MAGIC + bytes([KIND_HLL, precision]) + pack_registers(registers)
 
 
 def deserialize(buf: bytes) -> tuple[np.ndarray, int]:
-    if buf[:4] != _MAGIC or buf[4] != SKETCH_HLL:
+    from .accumulator import KIND_HLL, MAGIC
+
+    if buf[:4] != MAGIC or buf[4] != KIND_HLL:
         raise ValueError("not a serialized HLL sketch")
     precision = buf[5]
     regs = unpack_registers(buf[6:], precision)

@@ -22,6 +22,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .accumulator import KIND_KLL, MAGIC, float64_batch, register_accumulator
+
 _C = 2.0 / 3.0
 _MIN_CAP = 8
 
@@ -75,27 +77,19 @@ def _compact(state: _KLL, spec: KllSpec) -> None:
 
 class KllAccumulator:
     kind = "kll"
-    tag = 5  # KIND_KLL
+    tag = KIND_KLL
 
     def zero(self, spec: KllSpec) -> _KLL:
         return _KLL([np.zeros(0, dtype=np.float64)])
 
     def prepare_batch(self, values, spec=None):
-        import pyarrow as pa
-
-        if isinstance(values, pa.ChunkedArray):
-            values = values.combine_chunks()
-        if isinstance(values, pa.Array):
-            return np.asarray(values.cast(pa.float64()), dtype=np.float64)
-        if hasattr(values, "to_numpy"):
-            return values.to_numpy(dtype=np.float64, na_value=np.nan)
-        return np.asarray(values, dtype=np.float64)
+        return float64_batch(values)
 
     def update_prepared(self, state: _KLL, prepared: np.ndarray, idx, spec: KllSpec) -> _KLL:
         return self._ingest(state, prepared[idx], spec)
 
     def update(self, state: _KLL, values, spec: KllSpec) -> _KLL:
-        return self._ingest(state, self.prepare_batch(values), spec)
+        return self._ingest(state, float64_batch(values), spec)
 
     def _ingest(self, state: _KLL, vals: np.ndarray, spec: KllSpec) -> _KLL:
         vals = vals[~np.isnan(vals)]
@@ -152,14 +146,14 @@ class KllAccumulator:
         return self.quantile(state, 0.5, spec)
 
     def serialize(self, state: _KLL, spec: KllSpec) -> bytes:
-        head = b"HS01" + bytes([self.tag, 0])
+        head = MAGIC + bytes([self.tag, 0])
         meta = np.array([spec.k, len(state.levels), state.n, state.parity], dtype="<i8").tobytes()
         sizes = np.array([len(b) for b in state.levels], dtype="<i8").tobytes()
         bufs = b"".join(b.astype("<f8").tobytes() for b in state.levels)
         return head + meta + sizes + bufs
 
     def deserialize(self, buf: bytes) -> tuple[_KLL, KllSpec]:
-        if buf[:4] != b"HS01" or buf[4] != self.tag:
+        if buf[:4] != MAGIC or buf[4] != self.tag:
             raise ValueError("not a serialized KLL sketch")
         k, nl, n, parity = (int(x) for x in np.frombuffer(buf[6:38], dtype="<i8"))
         sizes = np.frombuffer(buf[38 : 38 + 8 * nl], dtype="<i8")
@@ -171,7 +165,5 @@ class KllAccumulator:
             off += 8 * s
         return _KLL(levels, n, parity), KllSpec(k=k)
 
-
-from .accumulator import register_accumulator  # noqa: E402
 
 register_accumulator(KllAccumulator())

@@ -21,6 +21,8 @@ from dataclasses import dataclass
 
 import numpy as np
 
+from .accumulator import KIND_TDIGEST, MAGIC, float64_batch, register_accumulator
+
 
 @dataclass(frozen=True)
 class TDigestSpec:
@@ -67,28 +69,20 @@ def _cluster(means: np.ndarray, weights: np.ndarray, delta: float) -> tuple[np.n
 
 class TDigestAccumulator:
     kind = "tdigest"
-    tag = 4  # KIND_TDIGEST
+    tag = KIND_TDIGEST
 
     def zero(self, spec: TDigestSpec) -> _TD:
         e = np.zeros(0, dtype=np.float64)
         return _TD(e.copy(), e.copy())
 
     def prepare_batch(self, values, spec=None):
-        import pyarrow as pa
-
-        if isinstance(values, pa.ChunkedArray):
-            values = values.combine_chunks()
-        if isinstance(values, pa.Array):
-            return np.asarray(values.cast(pa.float64()), dtype=np.float64)
-        if hasattr(values, "to_numpy"):
-            return values.to_numpy(dtype=np.float64, na_value=np.nan)
-        return np.asarray(values, dtype=np.float64)
+        return float64_batch(values)
 
     def update_prepared(self, state: _TD, prepared: np.ndarray, idx, spec: TDigestSpec) -> _TD:
         return self._ingest(state, prepared[idx], spec)
 
     def update(self, state: _TD, values, spec: TDigestSpec) -> _TD:
-        return self._ingest(state, self.prepare_batch(values), spec)
+        return self._ingest(state, float64_batch(values), spec)
 
     def _ingest(self, state: _TD, vals: np.ndarray, spec: TDigestSpec) -> _TD:
         vals = vals[~np.isnan(vals)]
@@ -134,12 +128,12 @@ class TDigestAccumulator:
         return self.quantile(state, 0.5, spec)
 
     def serialize(self, state: _TD, spec: TDigestSpec) -> bytes:
-        head = b"HS01" + bytes([self.tag, 0])
+        head = MAGIC + bytes([self.tag, 0])
         meta = np.array([spec.compression, state.mn, state.mx, len(state.means)], dtype="<f8").tobytes()
         return head + meta + state.means.astype("<f8").tobytes() + state.weights.astype("<f8").tobytes()
 
     def deserialize(self, buf: bytes) -> tuple[_TD, TDigestSpec]:
-        if buf[:4] != b"HS01" or buf[4] != self.tag:
+        if buf[:4] != MAGIC or buf[4] != self.tag:
             raise ValueError("not a serialized t-digest")
         comp, mn, mx, n = np.frombuffer(buf[6:38], dtype="<f8")
         n = int(n)
@@ -147,7 +141,5 @@ class TDigestAccumulator:
         weights = np.frombuffer(buf[38 + 8 * n : 38 + 16 * n], dtype="<f8").copy()
         return _TD(means, weights, float(mn), float(mx)), TDigestSpec(compression=float(comp))
 
-
-from .accumulator import register_accumulator  # noqa: E402
 
 register_accumulator(TDigestAccumulator())

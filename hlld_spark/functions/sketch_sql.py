@@ -25,7 +25,8 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, IntegerType, LongType, StringType
 
 from ..core import hll as _hll
-from ..core.accumulator import deserialize_any
+from ..core.accumulator import deserialize_any, merge_serialized
+from ..operators.sketch import sketch_estimate
 
 
 @F.pandas_udf(DoubleType())
@@ -36,17 +37,6 @@ def _hll_cardinality(bufs: pd.Series) -> pd.Series:
             continue
         regs, p = _hll.deserialize(bytes(b))
         out[i] = _hll.cardinality(regs, p)
-    return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def _sketch_estimate(bufs: pd.Series) -> pd.Series:
-    out = np.full(len(bufs), np.nan)
-    for i, b in enumerate(bufs):
-        if b is None:
-            continue
-        acc, state, spec = deserialize_any(bytes(b))
-        out[i] = acc.estimate(state, spec)
     return pd.Series(out)
 
 
@@ -77,11 +67,7 @@ def _sketch_merge(a: pd.Series, b: pd.Series) -> pd.Series:
         if y is None:
             out.append(bytes(x))
             continue
-        acc, sx, spx = deserialize_any(bytes(x))
-        acy, sy, spy = deserialize_any(bytes(y))
-        if acc.kind != acy.kind:
-            raise ValueError(f"cannot merge {acc.kind} with {acy.kind}")
-        out.append(acc.serialize(acc.merge(sx, sy, spx), spx))
+        out.append(merge_serialized([bytes(x), bytes(y)]))
     return pd.Series(out)
 
 
@@ -116,7 +102,7 @@ def _bytes_for_precision(p: pd.Series) -> pd.Series:
 
 def register_sql_functions(spark: SparkSession) -> None:
     spark.udf.register("hll_cardinality", _hll_cardinality)
-    spark.udf.register("sketch_estimate_sql", _sketch_estimate)
+    spark.udf.register("sketch_estimate_sql", sketch_estimate)
     spark.udf.register("sketch_kind", _sketch_kind)
     spark.udf.register("sketch_bytes", _sketch_bytes)
     spark.udf.register("sketch_merge", _sketch_merge)

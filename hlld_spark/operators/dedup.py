@@ -441,7 +441,9 @@ def _token_shingle_hashes_ascii(
     prev_ns = np.empty(total, dtype=bool)
     prev_ns[0] = False
     prev_ns[1:] = m[:-1]
-    prev_ns[offsets[:-1]] = False
+    # an empty last doc starts at ``total``, past the buffer's end
+    doc_starts = offsets[:-1]
+    prev_ns[doc_starts[doc_starts < total]] = False
     next_ns = np.empty(total, dtype=bool)
     next_ns[-1] = False
     next_ns[:-1] = m[1:]

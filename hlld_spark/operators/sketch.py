@@ -5,13 +5,14 @@ updates into a shared array (/root/reference/src/conn_handler.c:166-217,
 src/set.c:267-289). Its distributed shape here:
 
     stage 1  mapInArrow    — partition-local build: hash + rho + scatter-max
-                             over Arrow batches (pandas fallback on old
-                             PySpark), one partial sketch per
+                             over Arrow batches, one partial sketch per
                              (partition, group). This is Catalyst's
                              partial-aggregate phase, hand-rolled because
                              Python UDAFs can't partial-agg natively.
     stage 2  applyInPandas — register-wise max (HLL) / counter-sum (CMS) /
-                             bitwise-OR (Bloom) merge per group.
+                             bitwise-OR (Bloom) merge per group; a global
+                             build merges in mapInArrow instead. Both
+                             fold with ``merge_serialized``.
 
 Scale properties (designed for 10^12 rows / 1000 executors):
 
@@ -20,9 +21,7 @@ Scale properties (designed for 10^12 rows / 1000 executors):
   groups shuffles ~10 × n_partitions × sketch_bytes — megabytes.
 * row-level key skew is irrelevant: a partition with 10^9 rows of one
   lang still emits exactly one partial per group. No salting is needed
-  for sketch builds (the partial agg *is* the salt); `salt_partitions`
-  exists for callers who want to bound per-task group fan-out when
-  grouping by a high-cardinality key.
+  for sketch builds (the partial agg *is* the salt).
 * input scan prunes to ``keys + [col]`` before entering Python, so
   parquet reads only the needed columns (check .explain ReadSchema).
 """
@@ -30,15 +29,13 @@ Scale properties (designed for 10^12 rows / 1000 executors):
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
-from ..core.accumulator import HllSpec, accumulator_for, deserialize_any
-from ..core.hashing import hll_hash
+from ..core.accumulator import HllSpec, accumulator_for, deserialize_any, merge_serialized
 
 _SKETCH_FIELD = "sketch"
 _NROWS_FIELD = "n_rows"
@@ -51,20 +48,10 @@ def _result_schema(df: DataFrame, keys: list[str]) -> StructType:
     return StructType(fields)
 
 
-def _group_indices(pdf: pd.DataFrame, keys: list[str]) -> dict[tuple, np.ndarray]:
-    if not keys:
-        return {(): np.arange(len(pdf))}
-    grouped = pdf.groupby(keys, sort=False, dropna=False).indices
-    if len(keys) == 1:
-        return {(k,): v for k, v in grouped.items()}
-    return grouped
-
-
 def _make_build_partials_arrow(keys: list[str], col: str, spec):
     """Arrow-native partial build (mapInArrow): no pandas conversion, no
     per-row PyObject strings — group codes via C++ dictionary_encode,
-    hashes via the zero-copy arrow buffer path. This is the hot path; the
-    pandas variant below is the fallback."""
+    hashes via the zero-copy arrow buffer path."""
     acc_kind = spec.kind
 
     def build_partials(batches):
@@ -155,60 +142,32 @@ def _make_build_partials_arrow(keys: list[str], col: str, spec):
     return build_partials
 
 
-def _make_build_partials(keys: list[str], col: str, spec):
-    acc_kind = spec.kind
-
-    def build_partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..core.accumulator import _ACCUMULATORS
-
-        acc = _ACCUMULATORS[acc_kind]
-        states: dict[tuple, object] = {}
-        counts: dict[tuple, int] = {}
-        for pdf in batches:
-            values = pdf[col]
-            mask = values.notna()
-            if not mask.all():
-                pdf = pdf[mask]
-                values = pdf[col]
-            if len(pdf) == 0:
-                continue
-            # hash/ingest the whole batch column once, slice per group
-            prepared = acc.prepare_batch(values, spec) if hasattr(acc, "prepare_batch") else None
-            for gkey, idx in _group_indices(pdf, keys).items():
-                st = states.get(gkey)
-                if st is None:
-                    st = acc.zero(spec)
-                    counts[gkey] = 0
-                if prepared is not None:
-                    st = acc.update_prepared(st, prepared, idx, spec)
-                else:
-                    st = acc.update(st, values.iloc[idx], spec)
-                states[gkey] = st
-                counts[gkey] += len(idx)
-        if not states:
-            return
-        rows = {k: [g[i] for g in states] for i, k in enumerate(keys)}
-        out = pd.DataFrame(rows)
-        out[_SKETCH_FIELD] = [acc.serialize(s, spec) for s in states.values()]
-        out[_NROWS_FIELD] = np.fromiter(counts.values(), dtype=np.int64, count=len(counts))
-        yield out
-
-    return build_partials
-
-
 def _make_merge_partials(keys: list[str]):
     def merge_partials(pdf: pd.DataFrame) -> pd.DataFrame:
-        bufs = pdf[_SKETCH_FIELD]
-        acc, state, spec = deserialize_any(bufs.iloc[0])
-        for b in bufs.iloc[1:]:
-            _, other, ospec = deserialize_any(b)
-            state = acc.merge(state, other, spec)
         row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[_SKETCH_FIELD] = [acc.serialize(state, spec)]
+        row[_SKETCH_FIELD] = [merge_serialized(pdf[_SKETCH_FIELD])]
         row[_NROWS_FIELD] = [int(pdf[_NROWS_FIELD].sum())]
         return pd.DataFrame(row)
 
     return merge_partials
+
+
+def _merge_all_arrow_factory():
+    def merge_all(batches):
+        import pyarrow as pa
+
+        bufs = []
+        n = 0
+        for rb in batches:
+            bufs += rb.column(rb.schema.get_field_index(_SKETCH_FIELD)).to_pylist()
+            n += sum(rb.column(rb.schema.get_field_index(_NROWS_FIELD)).to_pylist())
+        if bufs:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([merge_serialized(bufs)], pa.binary()), pa.array([n], pa.int64())],
+                names=[_SKETCH_FIELD, _NROWS_FIELD],
+            )
+
+    return merge_all
 
 
 #: above this many partial sketches, global merges go through a
@@ -242,15 +201,20 @@ def _merge_global(partials: DataFrame, schema) -> DataFrame:
     published error bounds (same property the keyed groupBy merge
     already relies on).
     """
-    use_arrow = hasattr(partials, "mapInArrow")
-    factory = _merge_all_arrow_factory if use_arrow else _merge_all_factory
-    mapper = "mapInArrow" if use_arrow else "mapInPandas"
     n = partials.rdd.getNumPartitions()
     out = partials
     if n > _GLOBAL_MERGE_FANIN:
         mid = int(math.ceil(math.sqrt(n)))
-        out = getattr(out.repartition(mid), mapper)(factory(), schema=schema)
-    return getattr(out.repartition(1), mapper)(factory(), schema=schema)
+        out = out.repartition(mid).mapInArrow(_merge_all_arrow_factory(), schema=schema)
+    return out.repartition(1).mapInArrow(_merge_all_arrow_factory(), schema=schema)
+
+
+def _merge_partials(partials: DataFrame, keys: list[str], schema) -> DataFrame:
+    """The finishing step of every build and re-merge: one row per key
+    group (``groupBy(keys).applyInPandas``), or one global row."""
+    if not keys:
+        return _merge_global(partials, schema)
+    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
 
 
 def build_sketches(
@@ -258,7 +222,6 @@ def build_sketches(
     keys: list[str] | None,
     col: str,
     spec=None,
-    salt_partitions: int | None = None,
 ) -> DataFrame:
     """``groupBy(keys).agg(sketch(col))`` → DataFrame(keys..., sketch, n_rows).
 
@@ -269,17 +232,9 @@ def build_sketches(
     keys = list(keys or [])
     accumulator_for(spec)  # validate early, on the driver
     pruned = df.select(*keys, col)
-    if salt_partitions:
-        pruned = pruned.repartition(salt_partitions, F.col(col) if not keys else F.col(keys[0]))
     schema = _result_schema(pruned, keys)
-    if hasattr(pruned, "mapInArrow"):
-        partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
-    else:  # older PySpark fallback: pandas batches
-        partials = pruned.mapInPandas(_make_build_partials(keys, col, spec), schema=schema)
-    if not keys:
-        # global sketch: exchange the KB-sized partials, tree-merge
-        return _merge_global(partials, schema)
-    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
+    partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
+    return _merge_partials(partials, keys, schema)
 
 
 def _pq_filter_to_expr(filters):
@@ -344,8 +299,6 @@ def build_sketches_parquet(
     col: str,
     spec=None,
     filter=None,
-    files_per_task: int | None = None,
-    batch_rows: int = 32768,
 ) -> DataFrame:
     """Sketch build with **worker-side parquet reads**: file splits are
     planned on the driver and each Spark python task reads its splits
@@ -383,60 +336,13 @@ def build_sketches_parquet(
         schema,
         keys + [col],
         filter=filter,
-        batch_rows=batch_rows,
-        files_per_task=files_per_task,
         # r7: ONE wave of full-width tasks — the sketch build is uniform
         # scan+hash work where the ~5-10 ms serialized per-Python-task
         # handshake dominates makespan variance (A/B: best 0.67 s vs
         # 1.05 s at bench scale); compute-heavy consumers keep waves=2
         waves=1,
     )
-    if not keys:
-        return _merge_global(partials, schema)
-    return partials.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
-
-
-def _merge_all_arrow_factory():
-    def merge_all(batches):
-        import pyarrow as pa
-
-        acc = state = spec = None
-        n = 0
-        for rb in batches:
-            sk_i = rb.schema.get_field_index(_SKETCH_FIELD)
-            nr_i = rb.schema.get_field_index(_NROWS_FIELD)
-            for buf, nr in zip(rb.column(sk_i).to_pylist(), rb.column(nr_i).to_pylist()):
-                a, st, sp = deserialize_any(buf)
-                if state is None:
-                    acc, state, spec = a, st, sp
-                else:
-                    state = acc.merge(state, st, spec)
-                n += int(nr)
-        if state is not None:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([acc.serialize(state, spec)], pa.binary()), pa.array([n], pa.int64())],
-                names=[_SKETCH_FIELD, _NROWS_FIELD],
-            )
-
-    return merge_all
-
-
-def _merge_all_factory():
-    def merge_all(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        acc = state = spec = None
-        n = 0
-        for pdf in batches:
-            for buf, nr in zip(pdf[_SKETCH_FIELD], pdf[_NROWS_FIELD]):
-                a, st, sp = deserialize_any(buf)
-                if state is None:
-                    acc, state, spec = a, st, sp
-                else:
-                    state = acc.merge(state, st, spec)
-                n += int(nr)
-        if state is not None:
-            yield pd.DataFrame({_SKETCH_FIELD: [acc.serialize(state, spec)], _NROWS_FIELD: [n]})
-
-    return merge_all
+    return _merge_partials(partials, keys, schema)
 
 
 def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
@@ -448,13 +354,7 @@ def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
     """
     keys = list(keys or [])
     base = sketch_df.select(*keys, _SKETCH_FIELD, _NROWS_FIELD)
-    if not keys:
-        schema = StructType(
-            [StructField(_SKETCH_FIELD, BinaryType(), False), StructField(_NROWS_FIELD, LongType(), False)]
-        )
-        return _merge_global(base, schema)
-    schema = _result_schema(base, keys)
-    return base.groupBy(*keys).applyInPandas(_make_merge_partials(keys), schema=schema)
+    return _merge_partials(base, keys, _result_schema(base, keys))
 
 
 def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> DataFrame:
@@ -487,17 +387,16 @@ def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> Data
 @F.pandas_udf(DoubleType())
 def sketch_estimate(bufs: pd.Series) -> pd.Series:
     """Primary estimate per serialized sketch (HLL → cardinality,
-    CMS/Bloom/t-digest/KLL → their scalar default)."""
-    out = np.empty(len(bufs), dtype=np.float64)
+    CMS/Bloom/t-digest/KLL → their scalar default); a null sketch, e.g.
+    from an outer join of sketch tables, estimates to NaN, which Spark
+    reads back as NULL."""
+    out = np.full(len(bufs), np.nan)
     for i, b in enumerate(bufs):
-        acc, state, spec = deserialize_any(b)
+        if b is None:
+            continue
+        acc, state, spec = deserialize_any(bytes(b))
         out[i] = acc.estimate(state, spec)
     return pd.Series(out)
-
-
-@F.pandas_udf(LongType())
-def sketch_size_bytes(bufs: pd.Series) -> pd.Series:
-    return pd.Series([len(b) for b in bufs], dtype=np.int64)
 
 
 def with_estimate(sketch_df: DataFrame, out: str = "estimate") -> DataFrame:

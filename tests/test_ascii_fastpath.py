@@ -65,6 +65,21 @@ def test_token_ascii_matches_pandas(n):
     assert np.array_equal(h0, h1)
 
 
+@pytest.mark.parametrize(
+    "texts",
+    [["tab\tsep", "  x  ", "y", ""], ["a b c", "", ""], ["", "one two", ""]],
+)
+def test_token_ascii_trailing_empty_doc(texts):
+    """A batch ending in an empty doc puts that doc's start offset at
+    the buffer's end; the boundary scatter must skip it, not index past."""
+    h0, o0, t0 = _token_shingle_hashes(pd.Series(texts), 2)
+    data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
+    h1, o1, t1 = _token_shingle_hashes_ascii(data, lens, 2)
+    assert np.array_equal(t0, t1)
+    assert np.array_equal(o0, o1)
+    assert np.array_equal(h0, h1)
+
+
 def test_sliced_batch_offsets():
     """to_batches()/slice produces arrays with offset>0 — the buffer
     extraction must rebase correctly."""

@@ -1,0 +1,112 @@
+"""The one merge fold (``merge_serialized``) behind the keyed merge, the
+global merge and SQL ``sketch_merge``: byte-identical to a pairwise
+deserialize → merge → serialize, and a mix of sketch kinds raises."""
+
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pytest
+
+from hlld_spark.core.accumulator import HllSpec, accumulator_for, deserialize_any, merge_serialized
+from hlld_spark.core.bloom import BloomSpec
+from hlld_spark.core.cms import CmsSpec
+from hlld_spark.core.kll import KllSpec
+from hlld_spark.core.tdigest import TDigestSpec
+from hlld_spark.operators.sketch import _make_merge_partials, _merge_all_arrow_factory
+
+SPECS = [HllSpec(12), CmsSpec(), BloomSpec(bits=4096, hashes=3), KllSpec(), TDigestSpec()]
+
+
+def _sketch(spec, lo, hi) -> bytes:
+    acc = accumulator_for(spec)
+    values = np.arange(lo, hi, dtype=np.float64) if spec.kind in ("kll", "tdigest") else [f"k{i}" for i in range(lo, hi)]
+    return acc.serialize(acc.update(acc.zero(spec), values, spec), spec)
+
+
+@pytest.mark.parametrize("spec", SPECS, ids=lambda s: s.kind)
+def test_fold_matches_pairwise_merge(spec):
+    bufs = [_sketch(spec, 300 * i, 300 * i + 500) for i in range(4)]
+    acc, state, sp = deserialize_any(bufs[0])
+    for b in bufs[1:]:
+        state = acc.merge(state, deserialize_any(b)[1], sp)
+    assert merge_serialized(bufs) == acc.serialize(state, sp)
+    assert merge_serialized(bufs[:1]) == bufs[0]
+
+
+@pytest.mark.parametrize(
+    "a, b",
+    [(HllSpec(12), BloomSpec(bits=4096, hashes=3)), (KllSpec(), TDigestSpec()), (CmsSpec(), HllSpec(12))],
+    ids=lambda s: s.kind,
+)
+def test_fold_rejects_mixed_kinds(a, b):
+    bufs = [_sketch(a, 0, 1000), _sketch(b, 0, 1000)]
+    with pytest.raises(ValueError, match=f"cannot merge {a.kind} with {b.kind}"):
+        merge_serialized(bufs)
+
+
+def test_keyed_and_global_merge_reject_mixed_kinds():
+    bufs = [_sketch(HllSpec(12), 0, 1000), _sketch(BloomSpec(bits=4096, hashes=3), 0, 1000)]
+    pdf = pd.DataFrame({"lang": ["en", "en"], "sketch": bufs, "n_rows": [1000, 1000]})
+    with pytest.raises(ValueError, match="cannot merge hll with bloom"):
+        _make_merge_partials(["lang"])(pdf)
+    rb = pa.RecordBatch.from_arrays(
+        [pa.array(bufs, pa.binary()), pa.array([1000, 1000], pa.int64())], names=["sketch", "n_rows"]
+    )
+    with pytest.raises(ValueError, match="cannot merge hll with bloom"):
+        list(_merge_all_arrow_factory()(iter([rb])))
+
+
+def test_global_merge_sums_rows_across_batches():
+    spec = HllSpec(12)
+    bufs = [_sketch(spec, 0, 700), _sketch(spec, 500, 1500), _sketch(spec, 1200, 2000)]
+    batches = [
+        pa.RecordBatch.from_arrays(
+            [pa.array(bs, pa.binary()), pa.array(ns, pa.int64())], names=["sketch", "n_rows"]
+        )
+        for bs, ns in ((bufs[:2], [700, 1000]), (bufs[2:], [800]))
+    ]
+    (out,) = list(_merge_all_arrow_factory()(iter(batches)))
+    assert out.column(0).to_pylist() == [merge_serialized(bufs)]
+    assert out.column(1).to_pylist() == [2500]
+    assert list(_merge_all_arrow_factory()(iter([]))) == []
+
+
+@pytest.mark.spark
+def test_merge_sketches_rejects_mixed_kinds(spark):
+    from hlld_spark.operators.sketch import merge_sketches
+
+    rows = [
+        ("en", _sketch(HllSpec(12), 0, 1000), 1000),
+        ("en", _sketch(BloomSpec(bits=4096, hashes=3), 0, 1000), 1000),
+    ]
+    df = spark.createDataFrame(rows, "lang string, sketch binary, n_rows long")
+    for keys in (["lang"], []):
+        with pytest.raises(Exception, match="cannot merge hll with bloom"):
+            merge_sketches(df, keys).collect()
+
+
+def test_null_sketch_estimates_to_nan():
+    from hlld_spark.operators.sketch import sketch_estimate
+
+    got = sketch_estimate.func(pd.Series([_sketch(HllSpec(12), 0, 1000), None]))
+    assert abs(got[0] - 1000) < 50
+    assert np.isnan(got[1])
+
+
+@pytest.mark.spark
+def test_null_sketch_row_estimates_to_null(spark):
+    """A null sketch, e.g. from an outer join of sketch tables, gets a
+    NaN estimate, which Spark's Arrow conversion reads back as NULL, in
+    both ``with_estimate`` and SQL ``sketch_estimate_sql``."""
+    from hlld_spark.functions.sketch_sql import register_sql_functions
+    from hlld_spark.operators.sketch import with_estimate
+
+    rows = [("en", _sketch(HllSpec(12), 0, 1000)), ("fr", None)]
+    df = spark.createDataFrame(rows, "lang string, sketch binary")
+    got = {r["lang"]: r["estimate"] for r in with_estimate(df).collect()}
+    assert abs(got["en"] - 1000) < 50
+    assert got["fr"] is None
+    register_sql_functions(spark)
+    df.createOrReplaceTempView("null_sketches")
+    sql = spark.sql("SELECT lang, sketch_estimate_sql(sketch) AS estimate FROM null_sketches").collect()
+    assert {r["lang"]: r["estimate"] for r in sql} == got
