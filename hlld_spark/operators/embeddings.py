@@ -13,7 +13,7 @@ Spark-first shape — the textbook one-pass moment aggregation:
   2. partials are tiny ((d²+d+1) doubles — 33 KB at d=64, 8 MB at
      d=1024) and are summed driver-side: the collect is bounded by the
      PARTITION count, not the row count — the same bounded-collect
-     contract as the sketch tree-merges;
+     contract as the sketch merges;
   3. eigendecomposition of the d×d covariance runs on the driver
      (numpy `eigh`; d ≤ a few thousand — never row-scale);
   4. projection/whitening broadcasts the (d×k) basis back and applies

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .ranking import TOKEN_PATTERN, tokens_col
+from .ranking import tokens_col
 
 
 def with_global_token_offsets(

@@ -83,8 +83,9 @@ class HlldServer(socketserver.ThreadingTCPServer):
         # path is vectorized so the critical section is the batch, not
         # the key
         self.registry_lock = threading.Lock()
-        self._should_run = threading.Event()
-        self._should_run.set()
+        # set once by shutdown(); the background loops wait on it, so they
+        # wake the moment it is set instead of at their next interval
+        self._stop = threading.Event()
         self._bg_threads: list[threading.Thread] = []
         self.flush_count = 0
         self.cold_sweep_count = 0
@@ -111,36 +112,21 @@ class HlldServer(socketserver.ThreadingTCPServer):
     # -- background threads (src/background.c) ---------------------------------
 
     def _flush_loop(self, interval: float) -> None:
-        while self._should_run.is_set():
-            self._sleep(interval)
-            if not self._should_run.is_set():
-                return
+        while not self._stop.wait(interval):
             with self.registry_lock:
                 self.registry.flush()
                 self.flush_count += 1
 
     def _cold_loop(self, interval: float) -> None:
-        while self._should_run.is_set():
-            self._sleep(interval)
-            if not self._should_run.is_set():
-                return
+        while not self._stop.wait(interval):
             with self.registry_lock:
                 swept = self.registry.cold_sweep()
                 self.cold_sweep_count += 1
             if swept:
                 log.info("cold-unmapped %d sets: %s", len(swept), swept)
 
-    def _sleep(self, interval: float) -> None:
-        # interruptible sleep: exits promptly on shutdown
-        end = threading.Event()
-        step = min(0.05, interval)
-        waited = 0.0
-        while self._should_run.is_set() and waited < interval:
-            end.wait(step)
-            waited += step
-
     def _udp_loop(self, process: bool) -> None:
-        while self._should_run.is_set():
+        while not self._stop.is_set():
             try:
                 data, _addr = self._udp_sock.recvfrom(65536)
             except socket.timeout:
@@ -171,7 +157,7 @@ class HlldServer(socketserver.ThreadingTCPServer):
         return t
 
     def shutdown(self) -> None:
-        self._should_run.clear()
+        self._stop.set()
         if self._udp_sock is not None:
             try:
                 self._udp_sock.close()

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 import gzip
 import zlib
-from datetime import datetime, timezone
+from datetime import datetime
 from typing import Iterator
 
 import pandas as pd
@@ -455,8 +455,3 @@ def write_warc_fixture(dir_path: str, n_pages: int = 240, n_files: int = 3) -> s
     )
     pq.write_table(table, os.path.join(dir_path, "truth.parquet"))
     return dir_path
-
-
-def utcnow_warc_date() -> str:
-    """Current time in WARC-Date format (helper for writers)."""
-    return datetime.now(timezone.utc).strftime("%Y-%m-%dT%H:%M:%SZ")

@@ -1,6 +1,8 @@
-"""The one merge fold (``merge_serialized``) behind the keyed merge, the
-global merge and SQL ``sketch_merge``: byte-identical to a pairwise
-deserialize → merge → serialize, and a mix of sketch kinds raises."""
+"""The one merge fold (``merge_serialized``) behind the merge kernel
+(``_merge_runs``, keyed and global) and SQL ``sketch_merge``:
+byte-identical to a pairwise deserialize → merge → serialize, and a mix
+of sketch kinds raises. The kernel folds each run of equal keys, across
+batch boundaries, into one row."""
 
 import numpy as np
 import pandas as pd
@@ -12,7 +14,7 @@ from hlld_spark.core.bloom import BloomSpec
 from hlld_spark.core.cms import CmsSpec
 from hlld_spark.core.kll import KllSpec
 from hlld_spark.core.tdigest import TDigestSpec
-from hlld_spark.operators.sketch import _make_merge_partials, _merge_all_arrow_factory
+from hlld_spark.operators.sketch import _merge_runs
 
 SPECS = [HllSpec(12), CmsSpec(), BloomSpec(bits=4096, hashes=3), KllSpec(), TDigestSpec()]
 
@@ -44,31 +46,59 @@ def test_fold_rejects_mixed_kinds(a, b):
         merge_serialized(bufs)
 
 
+def _batch(bufs, ns, langs=None) -> pa.RecordBatch:
+    cols = [pa.array(bufs, pa.binary()), pa.array(ns, pa.int64())]
+    names = ["sketch", "n_rows"]
+    if langs is not None:
+        cols, names = [pa.array(langs, pa.string())] + cols, ["lang"] + names
+    return pa.RecordBatch.from_arrays(cols, names=names)
+
+
 def test_keyed_and_global_merge_reject_mixed_kinds():
     bufs = [_sketch(HllSpec(12), 0, 1000), _sketch(BloomSpec(bits=4096, hashes=3), 0, 1000)]
-    pdf = pd.DataFrame({"lang": ["en", "en"], "sketch": bufs, "n_rows": [1000, 1000]})
     with pytest.raises(ValueError, match="cannot merge hll with bloom"):
-        _make_merge_partials(["lang"])(pdf)
-    rb = pa.RecordBatch.from_arrays(
-        [pa.array(bufs, pa.binary()), pa.array([1000, 1000], pa.int64())], names=["sketch", "n_rows"]
-    )
+        list(_merge_runs(["lang"])(iter([_batch(bufs, [1000, 1000], ["en", "en"])])))
     with pytest.raises(ValueError, match="cannot merge hll with bloom"):
-        list(_merge_all_arrow_factory()(iter([rb])))
+        list(_merge_runs([])(iter([_batch(bufs, [1000, 1000])])))
 
 
 def test_global_merge_sums_rows_across_batches():
     spec = HllSpec(12)
     bufs = [_sketch(spec, 0, 700), _sketch(spec, 500, 1500), _sketch(spec, 1200, 2000)]
-    batches = [
-        pa.RecordBatch.from_arrays(
-            [pa.array(bs, pa.binary()), pa.array(ns, pa.int64())], names=["sketch", "n_rows"]
-        )
-        for bs, ns in ((bufs[:2], [700, 1000]), (bufs[2:], [800]))
-    ]
-    (out,) = list(_merge_all_arrow_factory()(iter(batches)))
+    batches = [_batch(bufs[:2], [700, 1000]), _batch(bufs[2:], [800])]
+    (out,) = list(_merge_runs([])(iter(batches)))
     assert out.column(0).to_pylist() == [merge_serialized(bufs)]
     assert out.column(1).to_pylist() == [2500]
-    assert list(_merge_all_arrow_factory()(iter([]))) == []
+    assert list(_merge_runs([])(iter([]))) == []
+    assert list(_merge_runs(["lang"])(iter([]))) == []
+
+
+def test_keyed_run_spanning_batches_gives_one_row():
+    """Sorted input: "en" runs from the first batch into the second, and
+    each key comes out once with its whole run folded."""
+    spec = HllSpec(12)
+    bufs = [_sketch(spec, 100 * i, 100 * i + 300) for i in range(5)]
+    batches = [
+        _batch(bufs[:3], [1, 2, 3], ["de", "en", "en"]),
+        _batch([], [], []),
+        _batch(bufs[3:], [4, 5], ["en", "fr"]),
+    ]
+    rows = [r for rb in _merge_runs(["lang"])(iter(batches)) for r in rb.to_pylist()]
+    assert rows == [
+        {"lang": "de", "sketch": bufs[0], "n_rows": 1},
+        {"lang": "en", "sketch": merge_serialized(bufs[1:4]), "n_rows": 9},
+        {"lang": "fr", "sketch": bufs[4], "n_rows": 5},
+    ]
+
+
+@pytest.mark.parametrize("spec", SPECS, ids=lambda s: s.kind)
+def test_global_stream_of_one_row_batches_matches_one_fold(spec):
+    """The open run collapses to one sketch at every batch boundary; the
+    bytes still equal a single ``merge_serialized`` over all partials."""
+    bufs = [_sketch(spec, 37 * i, 37 * i + 60) for i in range(200)]
+    (out,) = list(_merge_runs([])(_batch([b], [1]) for b in bufs))
+    assert out.column(0).to_pylist() == [merge_serialized(bufs)]
+    assert out.column(1).to_pylist() == [200]
 
 
 @pytest.mark.spark
@@ -110,3 +140,26 @@ def test_null_sketch_row_estimates_to_null(spark):
     df.createOrReplaceTempView("null_sketches")
     sql = spark.sql("SELECT lang, sketch_estimate_sql(sketch) AS estimate FROM null_sketches").collect()
     assert {r["lang"]: r["estimate"] for r in sql} == got
+
+
+@pytest.mark.spark
+def test_float_group_keys_match_groupby(spark):
+    """NaN is one group key and stays NaN (not NULL), NULL is another, and
+    0.0/-0.0 are one group, as in ``groupBy``: for the build and for a
+    re-merge to a coarser grain."""
+    from hlld_spark.operators.sketch import build_sketches, merge_sketches
+
+    ks = [0.0, -0.0, float("nan"), None, 1.5]
+    rows = [(ks[i % 5], "ab"[i // 5 % 2], f"u{i}") for i in range(4000)]
+    df = spark.createDataFrame(rows, "k double, s string, v string").repartition(3)
+
+    def key(k):
+        return None if k is None else "nan" if k != k else repr(k)
+
+    def groups(out):
+        return sorted(((key(r[0]),) + tuple(r[1:]) for r in out.collect()), key=str)
+
+    built = build_sketches(df, ["k", "s"], "v")
+    assert groups(built.select("k", "s", "n_rows")) == groups(df.groupBy("k", "s").count())
+    merged = merge_sketches(built, ["k"]).select("k", "n_rows")
+    assert groups(merged) == groups(df.groupBy("k").count())
