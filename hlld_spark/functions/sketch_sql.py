@@ -4,7 +4,7 @@
     register_sql_functions(spark)
     spark.sql("SELECT lang, hll_cardinality(sketch) FROM sketches")
 
-Functions (all pandas UDFs over the self-describing sketch binary):
+Functions (vectorized UDFs over the self-describing sketch binary):
 
     hll_cardinality(sketch) → double        estimator chain (O5)
     sketch_estimate_sql(sketch) → double    kind-dispatched default

@@ -34,7 +34,6 @@ import itertools
 import math
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
@@ -349,47 +348,44 @@ def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
 
 
 def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> DataFrame:
-    """SQL ROLLUP over sketches without rescanning rows: build once at
-    the finest grain, then re-merge upward (sketches are re-aggregable).
-    Output: keys (null = aggregated-out, like ROLLUP) + sketch + n_rows +
-    grouping_level (0 = finest … len(keys) = grand total).
+    """SQL ROLLUP over sketches from one scan: keys (null = aggregated-out)
+    + sketch + n_rows + grouping_level (0 = finest … len(keys) = total).
 
-    The rows are scanned once: every level's plan shares the finest
-    build's exchange, and building the plan runs no Spark job. At 100 TB
-    this is the difference between one scan and len(keys)+1 scans —
-    coarser grains merge a few KB of registers per group.
+    One build at the finest grain; each merged finest row is exploded in
+    the JVM into one row per level (level g nulls ``keys[len(keys)-g:]``)
+    and one merge keyed on ``keys + [grouping_level]`` folds every level,
+    so an aggregated-out NULL never meets a real NULL group. Level g ≡
+    ``merge_sketches(finest, keys[:len(keys)-g])``: byte for byte for
+    HLL/CMS/Bloom, within rank error for KLL/t-digest (fold order). The
+    merged rows are exploded, not the build's partials, which would save
+    an exchange but send partitions × groups partials to the grand-total
+    task. Building the plan runs no Spark job.
     """
-    spec = spec if spec is not None else HllSpec()
+    n = len(keys)
     finest = build_sketches(df, keys, col, spec)
-    out = finest.withColumn("grouping_level", F.lit(0))
-    level = finest
-    for i in range(len(keys), 0, -1):
-        coarser_keys = keys[: i - 1]
-        level = merge_sketches(level, coarser_keys)
-        withnulls = level
-        for k in keys[i - 1 :]:
-            withnulls = withnulls.withColumn(k, F.lit(None).cast(df.schema[k].dataType))
-        out = out.unionByName(
-            withnulls.select(*keys, _SKETCH_FIELD, _NROWS_FIELD).withColumn(
-                "grouping_level", F.lit(len(keys) - i + 1)
-            )
-        )
-    return out
+    level = F.col("grouping_level")
+    levels = finest.withColumn("grouping_level", F.explode(F.sequence(F.lit(0), F.lit(n)))).select(
+        *(F.when(level < n - j, F.col(k)).alias(k) for j, k in enumerate(keys)), level, _SKETCH_FIELD, _NROWS_FIELD
+    )
+    merge_keys = [*keys, "grouping_level"]
+    merged = _merge_partials(levels, merge_keys, _result_schema(levels, merge_keys))
+    return merged.select(*keys, _SKETCH_FIELD, _NROWS_FIELD, "grouping_level")
 
 
-@F.pandas_udf(DoubleType())
-def sketch_estimate(bufs: pd.Series) -> pd.Series:
+@F.arrow_udf(DoubleType())
+def sketch_estimate(bufs):
     """Primary estimate per serialized sketch (HLL → cardinality,
     CMS/Bloom/t-digest/KLL → their scalar default); a null sketch, e.g.
-    from an outer join of sketch tables, estimates to NaN, which Spark
-    reads back as NULL."""
+    from an outer join of sketch tables, and a NaN estimate both read
+    back as NULL."""
+    import pyarrow as pa
+
     out = np.full(len(bufs), np.nan)
-    for i, b in enumerate(bufs):
-        if b is None:
-            continue
-        acc, state, spec = deserialize_any(bytes(b))
-        out[i] = acc.estimate(state, spec)
-    return pd.Series(out)
+    for i, b in enumerate(bufs.to_pylist()):
+        if b is not None:
+            acc, state, spec = deserialize_any(b)
+            out[i] = acc.estimate(state, spec)
+    return pa.array(out, from_pandas=True)
 
 
 def with_estimate(sketch_df: DataFrame, out: str = "estimate") -> DataFrame:

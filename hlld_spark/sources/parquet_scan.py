@@ -30,14 +30,14 @@ def plan_parquet_splits(
     still parallelizes). A split is (file, rg_lo, rg_hi) with lo=-1
     meaning the whole file.
 
-    ``waves``: task count target in multiples of the parallelism, when
-    files outnumber cores. 2 (default) balances straggler smoothing for
-    compute-heavy consumers; scan-dominated uniform consumers (the
-    sketch build) pass 1 — every Python task costs ~5-10 ms of
-    serialized handshake, so halving the task count measurably wins
-    when per-task compute is small (r7 A/B in OPTIMIZATION_r07.md).
-    Only relevant when files ≲ waves·parallelism; at corpus scale the
-    file count dominates either way."""
+    ``waves``: at every file count the task count is
+    ``min(len(splits), waves·parallelism)``. 2 (default) leaves a second
+    wave, so a core whose task ends early takes another while a slow one
+    finishes. 1 is one task per core: every Python task costs ~5-10 ms of
+    serialized handshake, so the uniform, scan-dominated sketch build
+    measured faster with half the tasks (r7 A/B in OPTIMIZATION_r07.md),
+    but with no second wave a straggler (a slow core, a larger file) sets
+    the makespan."""
     from ..operators.sketch import list_parquet_files
 
     files = list_parquet_files(path)

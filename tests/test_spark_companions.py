@@ -12,6 +12,7 @@ from hlld_spark.core.kll import KllSpec
 from hlld_spark.core.tdigest import TDigestSpec
 from hlld_spark.operators.sketch import (
     build_sketches,
+    merge_sketches,
     rollup_sketches,
     sketch_estimate,
     with_estimate,
@@ -93,6 +94,90 @@ def test_rollup_sketches(spark, events):
     per_type = {r["event_type"]: bytes(r["sketch"]) for r in roll.filter("grouping_level = 1").collect()}
     direct_t = {r["event_type"]: bytes(r["sketch"]) for r in build_sketches(ev, ["event_type"], "user_id", spec).collect()}
     assert per_type == direct_t
+
+
+_N_ROLLUP = 12000
+
+
+def _rollup_frame(spark):
+    """Keys a (3 values) × b (4 values), a string column u with repeats,
+    and a double column v whose values per group are known exactly."""
+    return spark.range(0, _N_ROLLUP, 1, 4).selectExpr(
+        "cast(id % 3 as string) AS a",
+        "cast(id % 4 as string) AS b",
+        "cast(id % 5000 as string) AS u",
+        "cast((id * 7919) % 10007 as double) AS v",
+    )
+
+
+@pytest.mark.parametrize(
+    "spec",
+    [HllSpec(12), CmsSpec(width=1024, depth=4), BloomSpec(bits=1 << 14, hashes=3), KllSpec(), TDigestSpec()],
+    ids=lambda s: s.kind,
+)
+def test_rollup_levels_for_every_kind(spark, spec):
+    """Level g of a rollup is the finest build merged to ``keys[:2-g]``.
+    HLL, CMS and Bloom merges are exact, so the bytes equal both
+    ``merge_sketches(finest, keys[:2-g])`` and a direct build at that grain.
+    KLL and t-digest levels fold the finest sketches, whose merge order
+    may change bytes; their contract is rank error (core/kll.py), so
+    those levels are checked by ``n_rows`` and rank error ≤ 0.03."""
+    keys = ["a", "b"]
+    df = _rollup_frame(spark)
+    col = "v" if spec.kind in ("kll", "tdigest") else "u"
+    roll = rollup_sketches(df, keys, col, spec).collect()
+    finest = build_sketches(df, keys, col, spec)
+    ids = np.arange(_N_ROLLUP)
+    values = ((ids * 7919) % 10007).astype(np.float64)
+    for g in range(3):
+        kept = keys[: 2 - g]
+        level = {tuple(r[k] for k in kept): r for r in roll if r["grouping_level"] == g}
+        assert all(r[k] is None for r in level.values() for k in keys[2 - g :])
+        merged = {tuple(r[k] for k in kept): r for r in merge_sketches(finest, kept).collect()}
+        direct = {tuple(r[k] for k in kept): r for r in build_sketches(df, kept, col, spec).collect()}
+        assert set(level) == set(merged) == set(direct)
+        for key, r in level.items():
+            assert r["n_rows"] == merged[key]["n_rows"] == direct[key]["n_rows"]
+            if spec.kind not in ("kll", "tdigest"):
+                assert bytes(r["sketch"]) == bytes(merged[key]["sketch"]) == bytes(direct[key]["sketch"]), (g, key)
+                continue
+            mask = np.ones(_N_ROLLUP, dtype=bool)
+            for k, m, val in zip(keys, (3, 4), key):
+                mask &= ids % m == int(val)
+            vals = np.sort(values[mask])
+            acc, state, sp = deserialize_any(bytes(r["sketch"]))
+            for q in (0.1, 0.25, 0.5, 0.75, 0.9):
+                rank = np.searchsorted(vals, acc.quantile(state, q, sp)) / len(vals)
+                assert abs(rank - q) <= 0.03, (g, key, q, rank)
+
+
+def test_rollup_null_and_nan_keys(spark):
+    """A real NULL group and a key aggregated out by the rollup are both
+    NULL, but ``grouping_level`` keeps them apart, and a NaN key stays
+    NaN: every level equals a direct build at that grain."""
+    ks = [None, float("nan"), 1.5, -2.0]
+    ss = [None, "x", "y"]
+    rows = [(ks[i % 4], ss[i // 4 % 3], f"u{i % 700}") for i in range(6000)]
+    df = spark.createDataFrame(rows, "k double, s string, v string").repartition(3)
+    spec = HllSpec(12)
+    keys = ["k", "s"]
+
+    def key(vals):
+        return tuple("nan" if v != v else v for v in vals)
+
+    roll = rollup_sketches(df, keys, "v", spec).collect()
+    for g, n_groups in ((0, 12), (1, 4), (2, 1)):
+        kept = keys[: 2 - g]
+        level = [r for r in roll if r["grouping_level"] == g]
+        assert all(r[k] is None for r in level for k in keys[2 - g :])
+        got = {key(r[k] for k in kept): (bytes(r["sketch"]), r["n_rows"]) for r in level}
+        want = {
+            key(r[k] for k in kept): (bytes(r["sketch"]), r["n_rows"])
+            for r in build_sketches(df, kept, "v", spec).collect()
+        }
+        assert len(level) == len(got) == n_groups
+        assert got == want, g
+    assert sum(r["n_rows"] for r in roll) == 3 * 6000
 
 
 def test_registry_add_dataframe(spark, events, tmp_path):

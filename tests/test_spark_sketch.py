@@ -1,6 +1,8 @@
 """Spark-layer sketch aggregation: correctness vs exact, shard invariance,
 re-aggregation, and the web_pages corpus invariants."""
 
+import re
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -338,3 +340,15 @@ def test_building_a_sketch_plan_runs_no_job(spark, plan):
         assert sc.statusTracker().getJobIdsForGroup(group)  # the probe sees the action's jobs
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_rollup_plan_is_one_build_and_one_level_merge(spark):
+    """A rollup plans one build, one finest merge and one merge of every
+    level: 3 MapInArrow nodes and 2 shuffle exchanges on an input with no
+    shuffle of its own."""
+    from hlld_spark.plans.explain_tools import executed_plan
+
+    df = spark.range(20000).selectExpr("cast(id % 7 as string) AS a", "cast(id % 3 as string) AS b", "cast(id as string) AS u")
+    plan = executed_plan(rollup_sketches(df, ["a", "b"], "u"))
+    assert plan.count("MapInArrow ") == 3, plan
+    assert len(re.findall(r"(?<!Reused)Exchange ", plan)) == 2, plan
