@@ -45,7 +45,7 @@ def _split_id(path: str) -> str:
 
 def plan_splits(input_path: str) -> list[tuple[str, str]]:
     """[(split_id, file)] — deterministic for a fixed input set."""
-    from .operators.sketch import list_parquet_files
+    from .sources.parquet_scan import list_parquet_files
 
     return [(_split_id(f), f) for f in list_parquet_files(input_path)]
 

@@ -6,15 +6,18 @@ MurmurHash3_x64_128 (Austin Appleby's public-domain function) and keeps
 (see /root/reference/src/hll.c:128-135 and src/set.c:276-282).
 
 This module re-derives the algorithm from its published definition as a
-batch-vectorized numpy routine: no per-row Python, no C extension.  A
-batch of N variable-length strings is packed into one zero-padded
-``(N, W)`` uint8 matrix, body blocks are mixed with a descending-
-length-sorted active-prefix loop (each 16-byte block iteration touches
-only the rows that still have blocks left), and the tail is gathered
-with ``take_along_axis`` and mixed *unconditionally* — the murmur tail
-mix is the identity when the gathered tail word is zero, and the matrix
-is zero beyond each row's length by construction, so no masking is
-needed.
+batch-vectorized numpy routine: no per-row Python, no C extension.  Like
+the reference, it hashes each key where it lies: a batch is one Arrow
+binary/string array, its value bytes are copied once into a buffer with
+16 spare bytes at the end, and every 16-byte block is read as two
+unaligned little-endian uint64 lanes at the row's Arrow offset plus the
+block offset.  Body blocks are mixed with a descending-block-count-sorted
+active-prefix loop (each iteration touches only the rows that still have
+blocks left).  The two tail lanes are read the same way and masked to
+the row's remaining length, so the bytes of the next key never enter the
+mix; the murmur tail mix of a zero lane is the identity, so the masked
+mix is exact without a branch per tail length.  A null row hashes as the
+empty key.
 
 Bit-exactness is asserted against golden digests generated by running
 the reference's own compiled implementation
@@ -36,6 +39,11 @@ _F1 = U64(0xFF51AFD7ED558CCD)
 _F2 = U64(0xC4CEB9FE1A85EC53)
 _S33 = U64(33)
 
+# tail masks by remaining length r = len % 16: lane 1 keeps min(r, 8)
+# bytes, lane 2 keeps max(r - 8, 0)
+_TAIL_MASK1 = np.array([(1 << (8 * min(r, 8))) - 1 for r in range(16)], dtype=U64)
+_TAIL_MASK2 = np.array([(1 << (8 * max(r - 8, 0))) - 1 for r in range(16)], dtype=U64)
+
 
 def _rotl_ip(x: np.ndarray, r: int, t: np.ndarray) -> None:
     """In-place rotate-left using scratch t (same shape as x)."""
@@ -55,10 +63,18 @@ def _fmix64_ip(k: np.ndarray, t: np.ndarray) -> None:
     np.bitwise_xor(k, t, out=k)
 
 
-def _flat_bytes(values) -> tuple[np.ndarray, np.ndarray]:
-    """Normalize a batch (pyarrow Array / pandas Series / list of
-    str|bytes) to (concatenated uint8 buffer, per-row lengths) without
-    per-row Python work on the arrow path."""
+# Arrow offset width per binary-like type; any other type hashes as its
+# string form
+_OFFSET_DTYPES = {"string": np.int32, "binary": np.int32, "large_string": np.int64, "large_binary": np.int64}
+
+
+def _lanes(values) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Normalize a batch (pyarrow Array or ChunkedArray / pandas Series /
+    list of str|bytes) to (lanes, starts, lens): ``lanes[p]`` is the
+    little-endian uint64 at byte ``p`` of the batch's value bytes (one
+    copy, 16 zero bytes of slack after the last key, read unaligned);
+    ``starts``/``lens`` are each row's byte offset and length in it, a
+    null row having length 0."""
     import pyarrow as pa
 
     if isinstance(values, pa.ChunkedArray):
@@ -70,54 +86,25 @@ def _flat_bytes(values) -> tuple[np.ndarray, np.ndarray]:
             values = pa.array(list(values))
         else:
             values = pa.array(values)
-    t = values.type
-    if pa.types.is_string(t) or pa.types.is_binary(t):
-        values = values.cast(pa.large_binary())
-    elif pa.types.is_large_string(t):
-        values = values.cast(pa.large_binary())
-    elif not pa.types.is_large_binary(t):
-        values = values.cast(pa.large_string()).cast(pa.large_binary())
-    if values.null_count:
-        values = values.fill_null(b"")
+    offset_dtype = _OFFSET_DTYPES.get(str(values.type))
+    if offset_dtype is None:
+        values, offset_dtype = values.cast(pa.large_string()), np.int64
     n = len(values)
-    bufs = values.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int64)[values.offset : values.offset + n + 1]
-    data = np.frombuffer(bufs[2], dtype=np.uint8) if bufs[2] is not None else np.zeros(0, np.uint8)
-    lens = np.diff(offsets)
-    flat = data[offsets[0] : offsets[-1]]
-    return flat, lens
-
-
-_PAD_BUF = np.zeros(1 << 20, dtype=np.uint8)  # grow-only scratch, reused per worker
-
-
-def _to_padded_matrix(values) -> tuple[np.ndarray, np.ndarray]:
-    """Pack a batch of str/bytes into a zero-padded uint8 matrix.
-
-    Returns (matrix, lengths). The matrix width is a multiple of 16 with
-    at least 16 spare zero bytes after the longest row, so the 16-byte
-    tail gather never reads out of bounds. The backing buffer is a
-    module-level grow-only scratch: Spark python workers are
-    single-threaded, and reusing it avoids a multi-MB mmap/munmap pair
-    per batch (kernel contention at high parallelism).
-    """
-    global _PAD_BUF
-    flat, lens = _flat_bytes(values)
-    n = len(lens)
+    _, offs_buf, data_buf = values.buffers()
     if n == 0:
-        return np.zeros((0, 16), dtype=np.uint8), lens
-    maxlen = int(lens.max(initial=0))
-    width = ((maxlen // 16) + 2) * 16  # ≥16 zero bytes of slack for the tail gather
-    need = n * width
-    if len(_PAD_BUF) < need:
-        _PAD_BUF = np.zeros(max(need, 2 * len(_PAD_BUF)), dtype=np.uint8)
-    mat = _PAD_BUF[:need].reshape(n, width)
-    mat.fill(0)
-    # prefix-true mask per row → row-major boolean assignment lays the
-    # concatenated buffer into place without a Python loop
-    mask = np.arange(width, dtype=np.int64)[None, :] < lens[:, None]
-    mat[mask] = flat
-    return mat, lens
+        offsets = np.zeros(1, dtype=np.int64)
+    else:
+        offsets = np.frombuffer(offs_buf, dtype=offset_dtype)[values.offset : values.offset + n + 1]
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    buf = np.zeros(hi - lo + 16, dtype=np.uint8)
+    if hi > lo:
+        buf[: hi - lo] = np.frombuffer(data_buf, dtype=np.uint8, count=hi - lo, offset=lo)
+    starts = offsets[:-1].astype(np.int64) - lo
+    lens = np.diff(offsets).astype(np.int64)
+    if values.null_count:
+        lens[values.is_null().to_numpy(zero_copy_only=False)] = 0
+    lanes = np.ndarray(shape=(len(buf) - 7,), dtype="<u8", buffer=buf, strides=(1,))
+    return lanes, starts, lens
 
 
 def murmur3_x64_128(values) -> tuple[np.ndarray, np.ndarray]:
@@ -126,33 +113,32 @@ def murmur3_x64_128(values) -> tuple[np.ndarray, np.ndarray]:
     Matches MurmurHash3_x64_128 with seed 0 bit-for-bit. The reference
     keeps h2 (``out[1]``); use :func:`hll_hash` for that directly.
     """
-    mat, lens = _to_padded_matrix(values)
+    lanes, starts, lens = _lanes(values)
     n = len(lens)
     if n == 0:
         e = np.zeros(0, dtype=U64)
         return e, e
 
-    nblocks = (lens // 16).astype(np.int64)
+    nblocks = lens // 16
     # sort rows by descending block count so each body iteration works on
     # a contiguous active prefix
     order = np.argsort(-nblocks, kind="stable")
-    mat_s = mat[order]
+    starts_s = starts[order]
     lens_s = lens[order]
     nblocks_s = nblocks[order]
 
-    words = mat_s.view("<u8")  # (n, width/8) little-endian 64-bit lanes
     h1 = np.zeros(n, dtype=U64)
     h2 = np.zeros(n, dtype=U64)
 
-    maxb = int(nblocks_s[0]) if n else 0
+    maxb = int(nblocks_s[0])
     scratch = np.empty(n, dtype=U64)
-    # number of active rows per block index (descending-sorted prefix);
     # all mixing is in-place on views + one scratch buffer (minimal
     # allocation churn — matters with many workers per node)
     for j in range(maxb):
         na = int(np.searchsorted(-nblocks_s, -(j + 1), side="right"))
-        k1 = words[:na, 2 * j].copy()
-        k2 = words[:na, 2 * j + 1].copy()
+        pos = starts_s[:na] + 16 * j
+        k1 = lanes[pos]
+        k2 = lanes[pos + 8]
         s1 = h1[:na]
         s2 = h2[:na]
         t = scratch[:na]
@@ -175,17 +161,12 @@ def murmur3_x64_128(values) -> tuple[np.ndarray, np.ndarray]:
         np.multiply(s2, _M5, out=s2)
         np.add(s2, _A2, out=s2)
 
-    # tail: 16 zero-padded bytes starting at nblocks*16 per row; the
-    # zero-padding makes the unconditional mix exact (mixing k==0 is a
-    # no-op). Tail offsets are 16-byte aligned, so gather the two tail
-    # words directly from the flat u64 view — two n-sized gathers instead
-    # of an n×16 byte gather.
-    words_flat = words.reshape(-1)
-    lanes = words.shape[1]
-    row_base = np.arange(n, dtype=np.int64) * lanes
-    tail_lane = row_base + 2 * nblocks_s
-    k1 = words_flat[tail_lane]
-    k2 = words_flat[tail_lane + 1]
+    # tail: the two lanes after the last full block, masked to the
+    # remaining 0-15 bytes
+    tail = starts_s + 16 * nblocks_s
+    rem = lens_s - 16 * nblocks_s
+    k1 = lanes[tail] & _TAIL_MASK1[rem]
+    k2 = lanes[tail + 8] & _TAIL_MASK2[rem]
 
     np.multiply(k2, _C2, out=k2)
     _rotl_ip(k2, 33, scratch)

@@ -382,10 +382,10 @@ def decontaminate_parquet(
     exactly like ``build_sketches_parquet``."""
     import pyarrow as pa
 
-    from ..sources.parquet_scan import map_parquet_batches
+    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
 
     eval_text_col = eval_text_col or text_col
-    id_field = spark.read.parquet(path).schema[id_col]
+    id_field = parquet_schema(path, [id_col])[id_col]
     try:
         table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
     except EvalGramOverflow:

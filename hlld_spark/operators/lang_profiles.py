@@ -838,11 +838,10 @@ def lang_id_profiles_parquet(
     import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
-    from ..sources.parquet_scan import map_parquet_batches
+    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
 
     carry = list(carry_cols or [])
-    pq_schema = spark.read.parquet(path).schema
-    schema = StructType([pq_schema[c] for c in carry] + [StructField(out, StringType(), False)])
+    schema = StructType([*parquet_schema(path, carry), StructField(out, StringType(), False)])
 
     def fn(batches):
         from .dedup import _ascii_text_buffer

@@ -723,9 +723,9 @@ def multimodal_features_parquet(
     are payload-heavy."""
     import pyarrow as pa
 
-    from ..sources.parquet_scan import map_parquet_batches
+    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
 
-    id_field = spark.read.parquet(path).schema[id_col]
+    id_field = parquet_schema(path, [id_col])[id_col]
     schema = StructType(
         [
             id_field,

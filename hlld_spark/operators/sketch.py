@@ -43,8 +43,8 @@ _SKETCH_FIELD = "sketch"
 _NROWS_FIELD = "n_rows"
 
 
-def _result_schema(df: DataFrame, keys: list[str]) -> StructType:
-    fields = [df.schema[k] for k in keys]
+def _result_schema(schema: StructType, keys: list[str]) -> StructType:
+    fields = [schema[k] for k in keys]
     fields.append(StructField(_SKETCH_FIELD, BinaryType(), False))
     fields.append(StructField(_NROWS_FIELD, LongType(), False))
     return StructType(fields)
@@ -222,64 +222,9 @@ def build_sketches(
     keys = list(keys or [])
     accumulator_for(spec)  # validate early, on the driver
     pruned = df.select(*keys, col)
-    schema = _result_schema(pruned, keys)
+    schema = _result_schema(pruned.schema, keys)
     partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
     return _merge_partials(partials, keys, schema)
-
-
-def _pq_filter_to_expr(filters):
-    """Convert read_table-style [(col, op, val), ...] filters to a
-    pyarrow.dataset expression (for the row-group read path)."""
-    import pyarrow.dataset as ds
-
-    expr = None
-    for col, op, val in filters:
-        f = ds.field(col)
-        if op in ("=", "=="):
-            e = f == val
-        elif op == "!=":
-            e = f != val
-        elif op == "<":
-            e = f < val
-        elif op == "<=":
-            e = f <= val
-        elif op == ">":
-            e = f > val
-        elif op == ">=":
-            e = f >= val
-        elif op == "in":
-            e = f.isin(val)
-        else:
-            raise ValueError(f"unsupported filter op {op!r}")
-        expr = e if expr is None else (expr & e)
-    return expr
-
-
-def list_parquet_files(path: str) -> list[str]:
-    """Plan the file splits for a parquet table path or glob.
-
-    Uses pyarrow.dataset discovery (works for local paths AND object
-    stores like s3://, and skips `_SUCCESS`-style non-data files via the
-    default '_'/'.' ignore prefixes); falls back to glob for patterns.
-    """
-    import glob as _glob
-    import os as _os
-
-    import pyarrow.dataset as _ds
-
-    if "*" in path or "?" in path:
-        files = sorted(_glob.glob(path))
-    else:
-        try:
-            files = sorted(_ds.dataset(path, format="parquet").files)
-        except Exception:
-            if _os.path.isdir(path):
-                files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-            else:
-                files = sorted(_glob.glob(path))
-    if not files:
-        raise ValueError(f"no parquet files under {path!r}")
-    return files
 
 
 def build_sketches_parquet(
@@ -307,16 +252,27 @@ def build_sketches_parquet(
     tuple list OR a ``pyarrow.dataset`` Expression; both forms are
     evaluated in the parquet reader (row-group pruning + late
     materialization) on both the whole-file and row-group-split paths.
+
+    The key types come from the first file's footer
+    (:func:`~hlld_spark.sources.parquet_scan.parquet_schema`), so
+    building the plan runs no Spark job. Precondition: no key column is
+    an unsigned integer or, in a file Spark did not write, an INT96
+    timestamp — their Arrow read has no Spark type to hand back, so the
+    build raises ``ValueError`` here instead of failing in the tasks. A
+    missing key or value column also raises here.
     """
-    from ..sources.parquet_scan import map_parquet_batches
+    import pyarrow.parquet as pq
+
+    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
 
     spec = spec if spec is not None else HllSpec()
     keys = list(keys or [])
     accumulator_for(spec)
-    files = list_parquet_files(path)
-    # key schema from the parquet footer (driver-side, metadata only)
-    probe = spark.read.parquet(files[0]).select(*keys, col) if keys else spark.read.parquet(files[0]).select(col)
-    schema = _result_schema(probe, keys)
+    first = list_parquet_files(path)[0]
+    # the value column is only hashed or measured, so it needs no Spark type
+    if col not in pq.read_schema(first).names:
+        raise ValueError(f"parquet column {col!r} missing under {path!r}")
+    schema = _result_schema(parquet_schema(first, keys), keys)
     # one continuous batch stream per task ⇒ one partial per (task,
     # group), amortized across all of the task's splits
     partials = map_parquet_batches(
@@ -344,7 +300,7 @@ def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
     """
     keys = list(keys or [])
     base = sketch_df.select(*keys, _SKETCH_FIELD, _NROWS_FIELD)
-    return _merge_partials(base, keys, _result_schema(base, keys))
+    return _merge_partials(base, keys, _result_schema(base.schema, keys))
 
 
 def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> DataFrame:
@@ -368,7 +324,7 @@ def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> Data
         *(F.when(level < n - j, F.col(k)).alias(k) for j, k in enumerate(keys)), level, _SKETCH_FIELD, _NROWS_FIELD
     )
     merge_keys = [*keys, "grouping_level"]
-    merged = _merge_partials(levels, merge_keys, _result_schema(levels, merge_keys))
+    merged = _merge_partials(levels, merge_keys, _result_schema(levels.schema, merge_keys))
     return merged.select(*keys, _SKETCH_FIELD, _NROWS_FIELD, "grouping_level")
 
 

@@ -1,8 +1,9 @@
 """Worker-side parquet scanning as a reusable primitive.
 
 The engine's signature scale path (proven by `build_sketches_parquet`,
-operators/sketch.py): the driver plans file / row-group splits from
-parquet metadata, and each Spark python task reads its splits directly
+operators/sketch.py): the driver plans file / row-group splits and the
+output schema from parquet metadata alone — no Spark job runs while the
+plan is built — and each Spark python task reads its splits directly
 with pyarrow — column-pruned, filters pushed into the reader — then
 streams the Arrow batches through a caller-supplied transform. Row data
 NEVER crosses the JVM↔Python Arrow IPC channel, which on this class of
@@ -12,14 +13,116 @@ is the Spark 4 Python Data Source / pyiceberg plan_files pattern:
 object store → worker, scan next to the compute.
 
 ``map_parquet_batches(spark, path, fn, schema, columns)`` is the
-generic form; `build_sketches_parquet` is its oldest client, and any
-Arrow-batch operator (language ID, tokenization, fingerprinting) can
-ride the same splits.
+generic form and ``parquet_schema(path, columns)`` gives the Spark types
+of the columns it reads; `build_sketches_parquet` is their oldest
+client, and any Arrow-batch operator (language ID, tokenization,
+fingerprinting) can ride the same splits.
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructField, StructType
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def list_parquet_files(path: str) -> list[str]:
+    """Plan the file splits for a parquet table path or glob.
+
+    Uses pyarrow.dataset discovery (works for local paths AND object
+    stores like s3://, and skips `_SUCCESS`-style non-data files via the
+    default '_'/'.' ignore prefixes); falls back to glob for patterns.
+    """
+    import glob as _glob
+    import os as _os
+
+    import pyarrow.dataset as _ds
+
+    if "*" in path or "?" in path:
+        files = sorted(_glob.glob(path))
+    else:
+        try:
+            files = sorted(_ds.dataset(path, format="parquet").files)
+        except Exception:
+            if _os.path.isdir(path):
+                files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+            else:
+                files = sorted(_glob.glob(path))
+    if not files:
+        raise ValueError(f"no parquet files under {path!r}")
+    return files
+
+
+def parquet_schema(path: str, columns: list[str]) -> StructType:
+    """The Spark ``StructType`` of ``columns`` as ``spark.read.parquet``
+    would type them, read with pyarrow from the first file's footer: no
+    Spark job runs.
+
+    Types come from Spark's own row metadata when the file has it (Spark
+    wrote it), else from the Arrow schema (``from_arrow_type``, naive
+    timestamps as TIMESTAMP_NTZ, as Spark infers them). Raises
+    ``ValueError`` naming every requested column that is missing or that
+    neither source maps to the type the worker-side read produces:
+    unsigned integers, and INT96 timestamps without Spark metadata
+    (pyarrow reads those as naive nanoseconds, Spark as TIMESTAMP)."""
+    import pyarrow.parquet as pq
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    pf = pq.ParquetFile(list_parquet_files(path)[0])
+    arrow = pf.schema_arrow
+    meta = pf.metadata.metadata or {}
+    spark_fields = {}
+    if _SPARK_ROW_METADATA in meta:
+        spark_fields = {f.name: f.dataType for f in StructType.fromJson(json.loads(meta[_SPARK_ROW_METADATA]))}
+    leaves = pf.schema
+    int96 = {leaves.column(i).path.split(".")[0] for i in range(len(leaves)) if leaves.column(i).physical_type == "INT96"}
+    fields, bad = [], []
+    for c in columns:
+        t = spark_fields.get(c)
+        if t is None and c in arrow.names and c not in int96:
+            try:
+                t = from_arrow_type(arrow.field(c).type, prefer_timestamp_ntz=True)
+            except PySparkTypeError:
+                pass
+        if t is None:
+            bad.append(f"{c} ({arrow.field(c).type})" if c in arrow.names else f"{c} (missing)")
+        else:
+            fields.append(StructField(c, t, True))
+    if bad:
+        raise ValueError(f"parquet columns with no Spark type under {path!r}: {', '.join(bad)}")
+    return StructType(fields)
+
+
+def _pq_filter_to_expr(filters):
+    """Convert read_table-style [(col, op, val), ...] filters to a
+    pyarrow.dataset expression (for the row-group read path)."""
+    import pyarrow.dataset as ds
+
+    expr = None
+    for col, op, val in filters:
+        f = ds.field(col)
+        if op in ("=", "=="):
+            e = f == val
+        elif op == "!=":
+            e = f != val
+        elif op == "<":
+            e = f < val
+        elif op == "<=":
+            e = f <= val
+        elif op == ">":
+            e = f > val
+        elif op == ">=":
+            e = f >= val
+        elif op == "in":
+            e = f.isin(val)
+        else:
+            raise ValueError(f"unsupported filter op {op!r}")
+        expr = e if expr is None else (expr & e)
+    return expr
 
 
 def plan_parquet_splits(
@@ -38,8 +141,6 @@ def plan_parquet_splits(
     measured faster with half the tasks (r7 A/B in OPTIMIZATION_r07.md),
     but with no second wave a straggler (a slow core, a larger file) sets
     the makespan."""
-    from ..operators.sketch import list_parquet_files
-
     files = list_parquet_files(path)
     par = spark.sparkContext.defaultParallelism
     splits: list[tuple[str, int, int]]
@@ -78,8 +179,6 @@ def read_split_table(fp: str, lo: int, hi: int, columns: list[str], filter=None)
     sub = frag.subset(row_group_ids=list(range(lo, hi)))
     expr = None
     if filter is not None:
-        from ..operators.sketch import _pq_filter_to_expr
-
         expr = filter if isinstance(filter, pds.Expression) else _pq_filter_to_expr(filter)
     return sub.to_table(columns=columns, filter=expr, use_threads=False)
 
@@ -106,20 +205,20 @@ def map_parquet_batches(
     ffilter = filter
     fbatch = batch_rows
     # r7: the task list rides a JVM-native Range (one task-id row per
-    # partition) + a broadcast of the split table, NOT a parallelize()d
-    # Python RDD — the latter put a second Python round trip in front of
-    # EVERY task (measured ~0.5 s of serialized per-task overhead on a
-    # 64-task job, §OPTIMIZATION_r07.md). Splits are assigned by
-    # striding (tid::n_tasks), which balances like the old contiguous
-    # chunking; split order never affects results (all consumers
-    # aggregate or sort).
-    bsplits = spark.sparkContext.broadcast(splits)
+    # partition), NOT a parallelize()d Python RDD — the latter put a
+    # second Python round trip in front of EVERY task (measured ~0.5 s of
+    # serialized per-task overhead on a 64-task job, §OPTIMIZATION_r07.md).
+    # The split table travels in the task closure; PySpark broadcasts a
+    # pickled command over 1 MB itself, so a huge table still ships once.
+    # Splits are assigned by striding (tid::n_tasks), which balances like
+    # the old contiguous chunking; split order never affects results (all
+    # consumers aggregate or sort).
 
     def task(meta_batches):
         def gen():
             for rb in meta_batches:
                 for tid in rb.column(0).to_pylist():
-                    for fp, lo, hi in bsplits.value[tid::n_tasks]:
+                    for fp, lo, hi in splits[tid::n_tasks]:
                         tbl = read_split_table(fp, lo, hi, fcols, ffilter)
                         yield from tbl.to_batches(fbatch)
 

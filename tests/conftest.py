@@ -36,3 +36,17 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")
+
+
+def assert_plan_runs_no_job(spark, build, group: str) -> None:
+    """``build()`` returns a DataFrame without launching a Spark job; the
+    action on it does (so the job-group probe is live)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "build a plan")
+    try:
+        out = build()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        assert out.count() > 0
+        assert sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)

@@ -3,6 +3,8 @@ independent pure-python scalar implementation over arbitrary byte
 strings, and merge-algebra invariants under random shardings."""
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
 from hlld_spark.core import hll
@@ -76,6 +78,52 @@ def test_murmur_matches_scalar_spec(data):
     h1, h2 = murmur3_x64_128([data])
     e1, e2 = _murmur_scalar(data)
     assert (int(h1[0]), int(h2[0])) == (e1, e2)
+
+
+_ARROW_BINARY_TYPES = {
+    "string": pa.string(),
+    "large_string": pa.large_string(),
+    "binary": pa.binary(),
+    "large_binary": pa.large_binary(),
+}
+# keys of 0-48 UTF-8 bytes cross every 8- and 16-byte tail boundary
+_TEXT_KEY = st.text(max_size=48).filter(lambda s: len(s.encode()) <= 48)
+_BYTES_KEY = st.binary(max_size=48)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.data(), st.sampled_from([*_ARROW_BINARY_TYPES, "list", "series"]))
+def test_murmur_batch_shapes_match_scalar(data, kind):
+    """One batch per call over adversarial shapes — empty and null rows,
+    every tail length, non-ASCII text, sliced Arrow arrays with a
+    non-zero offset, ChunkedArrays with empty chunks, lists and pandas
+    Series — hashes each row exactly as the scalar spec does, a null
+    row (even one whose slot spans bytes) as the empty key."""
+    textual = kind in ("string", "large_string") or (kind not in _ARROW_BINARY_TYPES and data.draw(st.booleans()))
+    key = _TEXT_KEY if textual else _BYTES_KEY
+    rows = data.draw(st.lists(st.one_of(st.none(), key), max_size=40))
+    expected = [_murmur_scalar(b"" if r is None else r.encode() if isinstance(r, str) else r) for r in rows]
+    if kind == "list":
+        values = rows
+    elif kind == "series":
+        values = pd.Series(rows, dtype=object)
+    else:
+        t = _ARROW_BINARY_TYPES[kind]
+        head = data.draw(st.lists(key, max_size=3))
+        tail = data.draw(st.lists(key, max_size=3))
+        # a null slot may span bytes in Arrow; here each one spans ``fill``
+        fill = data.draw(key)
+        full = pa.array(head + [fill if r is None else r for r in rows] + tail, type=t)
+        valid = pa.array([True] * len(head) + [r is not None for r in rows] + [True] * len(tail), pa.bool_())
+        values = pa.Array.from_buffers(t, len(full), [valid.buffers()[1], *full.buffers()[1:]])
+        values = values.slice(len(head), len(rows))
+        if data.draw(st.booleans()):
+            cuts = sorted(data.draw(st.lists(st.integers(0, len(rows)), max_size=4)))
+            bounds = [0, *cuts, len(rows)]
+            chunks = [values.slice(a, b - a) for a, b in zip(bounds, bounds[1:])]
+            values = pa.chunked_array([pa.array([], type=t), *chunks], type=t)
+    h1, h2 = murmur3_x64_128(values)
+    assert [(int(a), int(b)) for a, b in zip(h1, h2)] == expected
 
 
 @settings(max_examples=30, deadline=None)

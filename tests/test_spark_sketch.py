@@ -18,6 +18,7 @@ from hlld_spark.operators.sketch import (
     with_estimate,
 )
 from hlld_spark.sources.webpages import extract_text, generate_web_pages
+from tests.conftest import assert_plan_runs_no_job
 
 pytestmark = pytest.mark.spark
 
@@ -317,29 +318,28 @@ def test_global_tree_merge_byte_identical_cms_bloom(spark, docs):
         assert wide["n_rows"] == flat["n_rows"]
 
 
-@pytest.mark.parametrize("plan", ["rollup", "keyed_then_global", "global"])
-def test_building_a_sketch_plan_runs_no_job(spark, plan):
+@pytest.mark.parametrize("plan", ["rollup", "keyed_then_global", "global", "parquet_keyed", "parquet_global"])
+def test_building_a_sketch_plan_runs_no_job(spark, plan, tmp_path):
     """Building a sketch DataFrame launches no Spark job: nothing probes
     the upstream (under AQE, reading its partition count would run every
-    shuffle stage on the driver, and the action would run them again)."""
+    shuffle stage on the driver, and the action would run them again),
+    and a parquet build types its keys from the file footer."""
+    from hlld_spark.operators.sketch import build_sketches_parquet
+
     df = spark.range(20000).selectExpr(
         "cast(id % 7 as string) AS lang", "cast(id % 3 as string) AS day", "cast(id as string) AS url"
     )
+    d = str(tmp_path / "pq")
+    if plan.startswith("parquet"):
+        df.write.parquet(d)
     build = {
         "rollup": lambda: rollup_sketches(df, ["lang", "day"], "url"),
         "keyed_then_global": lambda: merge_sketches(build_sketches(df, ["lang"], "url"), []),
         "global": lambda: build_sketches(df.repartition(16), [], "url"),
+        "parquet_keyed": lambda: build_sketches_parquet(spark, d, ["lang"], "url"),
+        "parquet_global": lambda: build_sketches_parquet(spark, d, [], "url"),
     }[plan]
-    sc = spark.sparkContext
-    group = f"sketch-plan-{plan}"
-    sc.setJobGroup(group, "build a sketch plan")
-    try:
-        out = build()
-        assert sc.statusTracker().getJobIdsForGroup(group) == []
-        assert out.count() > 0
-        assert sc.statusTracker().getJobIdsForGroup(group)  # the probe sees the action's jobs
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert_plan_runs_no_job(spark, build, f"sketch-plan-{plan}")
 
 
 def test_rollup_plan_is_one_build_and_one_level_merge(spark):
