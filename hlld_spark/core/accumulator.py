@@ -157,9 +157,11 @@ class HllBuilder:
 
 
 class GenericBuilder:
-    """Fallback builder: dense state from the first row (CMS/Bloom/
-    t-digest/KLL states are either fixed-size by spec or grow with data
-    anyway)."""
+    """The builder of every kind without its own (CMS, Bloom, t-digest,
+    KLL): ``zero(spec)`` when the group first appears, then
+    ``update_prepared`` with each batch's row indices for the group. CMS
+    and Bloom states are fixed-size by spec and t-digest/KLL grow with
+    their data, so none needs HLL's sparse phase."""
 
     __slots__ = ("acc", "spec", "state")
 

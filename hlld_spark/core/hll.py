@@ -291,6 +291,9 @@ def deserialize(buf: bytes) -> tuple[np.ndarray, int]:
     if buf[:4] != MAGIC or buf[4] != KIND_HLL:
         raise ValueError("not a serialized HLL sketch")
     precision = buf[5]
+    size = bytes_for_precision(precision)
+    if not size or len(buf) != 6 + size:
+        raise ValueError(f"not a valid HLL sketch: precision {precision}, {len(buf)} bytes")
     regs = unpack_registers(buf[6:], precision)
     return regs, precision
 

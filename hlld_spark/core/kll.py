@@ -157,6 +157,8 @@ class KllAccumulator:
             raise ValueError("not a serialized KLL sketch")
         k, nl, n, parity = (int(x) for x in np.frombuffer(buf[6:38], dtype="<i8"))
         sizes = np.frombuffer(buf[38 : 38 + 8 * nl], dtype="<i8")
+        if len(sizes) != nl or len(buf) != 38 + 8 * nl + 8 * int(sizes.sum()):
+            raise ValueError(f"a KLL sketch of {nl} levels needs 38 + 8·levels + 8·Σsizes bytes, got {len(buf)}")
         off = 38 + 8 * nl
         levels = []
         for s in sizes:

@@ -137,6 +137,8 @@ class TDigestAccumulator:
             raise ValueError("not a serialized t-digest")
         comp, mn, mx, n = np.frombuffer(buf[6:38], dtype="<f8")
         n = int(n)
+        if len(buf) != 38 + 16 * n:
+            raise ValueError(f"a t-digest of {n} centroids is {38 + 16 * n} bytes, got {len(buf)}")
         means = np.frombuffer(buf[38 : 38 + 8 * n], dtype="<f8").copy()
         weights = np.frombuffer(buf[38 + 8 * n : 38 + 16 * n], dtype="<f8").copy()
         return _TD(means, weights, float(mn), float(mx)), TDigestSpec(compression=float(comp))

@@ -177,9 +177,7 @@ def _probe_blob(spark: SparkSession, table: np.ndarray, method: str, bloom_fpr: 
 
         acc = BloomAccumulator()
         spec = BloomSpec.for_capacity(max(len(table), 1), bloom_fpr)
-        state = acc.zero(spec)
-        h1, h2 = _bloom_pair(table)
-        acc._add(state, h1, h2, spec)
+        state = acc.add_hashes(acc.zero(spec), *_bloom_pair(table), spec)
         return spark.sparkContext.broadcast(acc.serialize(state, spec))
     if method == "exact":
         return spark.sparkContext.broadcast(table.tobytes())
@@ -190,19 +188,11 @@ def _make_member(method: str, blob: bytes):
     """Build the vectorized membership fn from the broadcast payload —
     called once per task."""
     if method == "bloom":
-        from ..core.bloom import BloomAccumulator as _Acc
-        from ..core.bloom import _positions
+        from ..core.bloom import BloomAccumulator
 
-        state_l, spec_l = _Acc().deserialize(blob)
-
-        def member(h: np.ndarray) -> np.ndarray:
-            if len(h) == 0:
-                return np.zeros(0, dtype=bool)
-            h1, h2 = _bloom_pair(h)
-            pos = _positions(h1, h2, spec_l.hashes, spec_l.bits)
-            return state_l[pos].all(axis=0)
-
-        return member
+        acc = BloomAccumulator()
+        state, spec = acc.deserialize(blob)
+        return lambda h: acc.contains_hashes(state, *_bloom_pair(h), spec)
 
     sorted_hashes = np.frombuffer(blob, dtype=np.uint64)
     # cheap prefilter: a byte mask over the hash low bits turns ~97%+ of

@@ -51,9 +51,18 @@ def _result_schema(schema: StructType, keys: list[str]) -> StructType:
 
 
 def _make_build_partials_arrow(keys: list[str], col: str, spec):
-    """Arrow-native partial build (mapInArrow): no pandas conversion, no
-    per-row PyObject strings — group codes via C++ dictionary_encode,
-    hashes via the zero-copy arrow buffer path."""
+    """Arrow-native partial build (mapInArrow): one partial sketch per
+    group of the task's batches, with no pandas conversion and no
+    per-row Python objects.
+
+    Rows with a null value are dropped, the value column is prepared
+    (hashed, or cast to float64) once per batch, and a keyed batch is
+    grouped by one Arrow hash ``group_by`` whose ``list`` aggregate hands
+    back each group's row indices. With ``use_threads=False`` those come
+    in ascending row order, so each builder sees its rows in input order.
+    A group's key is the tuple of its ``to_pylist()`` values (Arrow
+    groups that compare equal there, -0.0 and 0.0, share one builder),
+    and the output key columns keep the batch schema's types."""
     acc_kind = spec.kind
 
     def build_partials(batches):
@@ -63,83 +72,48 @@ def _make_build_partials_arrow(keys: list[str], col: str, spec):
         from ..core.accumulator import _ACCUMULATORS, new_builder
 
         acc = _ACCUMULATORS[acc_kind]
-        states: dict[tuple, object] = {}  # gkey -> builder
+        states: dict[tuple, object] = {}  # group key -> builder
         counts: dict[tuple, int] = {}
-        reps: dict[tuple, tuple] = {}  # gkey -> pa scalars (preserve exact types)
-        key_types = None
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            if key_types is None:
-                key_types = [rb.schema.field(k).type for k in keys]
-            vcol = rb.column(rb.schema.get_field_index(col))
+            schema = rb.schema
+            vcol = rb.column(schema.get_field_index(col))
             if vcol.null_count:
                 rb = rb.filter(pc.is_valid(vcol))
                 if rb.num_rows == 0:
                     continue
-                vcol = rb.column(rb.schema.get_field_index(col))
+                vcol = rb.column(schema.get_field_index(col))
             prepared = acc.prepare_batch(vcol, spec)
-            if not keys:
-                b = states.get(())
-                if b is None:
-                    b = states[()] = new_builder(acc, spec)
-                    counts[()] = 0
-                b.add_prepared(prepared, np.arange(rb.num_rows))
-                counts[()] += rb.num_rows
-                continue
-            # combine per-key dictionary codes into one group code; for
-            # 3+ keys each step is re-encoded with np.unique so the code
-            # range stays ≤ batch size (no int64 overflow regardless of
-            # key count / category cardinality)
-            combined = None
-            for k in keys:
-                d = pc.dictionary_encode(rb.column(rb.schema.get_field_index(k)))
-                idxs = d.indices
-                ncat = len(d.dictionary)
-                codes = (
-                    idxs.fill_null(ncat).to_numpy(zero_copy_only=False).astype(np.int64)
-                    if idxs.null_count
-                    else idxs.to_numpy(zero_copy_only=False).astype(np.int64)
+            rows = np.arange(rb.num_rows)
+            if keys:
+                # dictionary keys: on plain columns, Arrow 16's SIMD
+                # grouper splits a multi-key group that is null in some
+                # key columns but not all; dictionary keys group exactly
+                key_cols = [pc.dictionary_encode(rb.column(schema.get_field_index(k))) for k in keys]
+                grouped = (
+                    pa.table([*key_cols, rows], names=[*keys, "__row"])
+                    .group_by(keys, use_threads=False)
+                    .aggregate([("__row", "list")])
                 )
-                if combined is None:
-                    combined = codes
-                else:
-                    combined = combined * (ncat + 1) + codes
-                    if len(keys) > 2:
-                        combined = np.unique(combined, return_inverse=True)[1]
-            order = np.argsort(combined, kind="stable")
-            sorted_codes = combined[order]
-            bounds = np.flatnonzero(np.diff(sorted_codes)) + 1
-            starts = np.concatenate(([0], bounds))
-            ends = np.concatenate((bounds, [len(order)]))
-            key_cols = [rb.column(rb.schema.get_field_index(k)) for k in keys]
-            for s, e in zip(starts, ends):
-                idx = order[s:e]
-                # group-key scalars straight from a representative row —
-                # exact arrow types preserved, nulls included
-                r0 = int(idx[0])
-                scalars = tuple(kc[r0] for kc in key_cols)
-                gkey = tuple(s.as_py() for s in scalars)
+                lists = grouped.column("__row_list").combine_chunks()
+                gkeys = zip(*(grouped.column(k).to_pylist() for k in keys))
+                groups = zip(gkeys, np.split(lists.values.to_numpy(), lists.offsets.to_numpy()[1:-1]))
+            else:
+                groups = [((), rows)]  # Arrow has no ``list`` aggregate without keys
+            for gkey, idx in groups:
                 b = states.get(gkey)
                 if b is None:
                     b = states[gkey] = new_builder(acc, spec)
                     counts[gkey] = 0
-                    reps[gkey] = scalars
                 b.add_prepared(prepared, idx)
                 counts[gkey] += len(idx)
         if not states:
             return
-        arrays = []
-        names = []
-        for i, k in enumerate(keys):
-            vals = [reps[g][i].as_py() for g in states]
-            arrays.append(pa.array(vals, type=key_types[i]))
-            names.append(k)
+        arrays = [pa.array([g[i] for g in states], type=schema.field(k).type) for i, k in enumerate(keys)]
         arrays.append(pa.array([acc.serialize(b.finish(), spec) for b in states.values()], type=pa.binary()))
-        names.append(_SKETCH_FIELD)
-        arrays.append(pa.array([counts[g] for g in states], type=pa.int64()))
-        names.append(_NROWS_FIELD)
-        yield pa.RecordBatch.from_arrays(arrays, names=names)
+        arrays.append(pa.array(list(counts.values()), type=pa.int64()))
+        yield pa.RecordBatch.from_arrays(arrays, names=[*keys, _SKETCH_FIELD, _NROWS_FIELD])
 
     return build_partials
 
@@ -159,10 +133,10 @@ def _merge_runs(keys: list[str]):
     sketch, so a task holds one batch plus one sketch at any fan-in; the
     round trip is exact for every kind, so the bytes equal one fold's.
     A global merge is one task whatever the fan-in: a partial costs ~56 µs
-    deserialize + ~3 µs merge at HLL p12 and ~2.6 ms merge as a 1.2 MB
-    Bloom filter, so even 1024 partials fold in 0.06 s / 2.7 s, and a
-    √n merge tree measured no faster there while its extra stage cost
-    +0.5 s on a 1.45 s job at 4 partials."""
+    deserialize + ~3 µs merge at HLL p12 and ~0.4 ms deserialize + merge
+    as a 1.2 MB Bloom filter, so even 1024 partials fold in 0.06 s /
+    0.4 s, and a √n merge tree measured no faster there while its extra
+    stage cost +0.5 s on a 1.45 s job at 4 partials."""
 
     def merge(batches):
         import pyarrow as pa

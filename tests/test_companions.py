@@ -2,6 +2,7 @@
 published papers + merge algebra + serde round-trips + Spark integration
 through the same two-phase build."""
 
+import hashlib
 import math
 
 import numpy as np
@@ -137,6 +138,28 @@ def test_bloom_fill_estimate():
     BLOOM.update(state, [f"e{i}" for i in range(8000)], spec)
     est = BLOOM.estimate(state, spec)
     assert abs(est - 8000) / 8000 < 0.05
+
+
+@pytest.mark.parametrize(
+    "spec, n, digest, false_hits, estimate",
+    [
+        (BloomSpec(bits=1001, hashes=3), 500, "67e9ab98b86472b08c2f4e4e381cda545df0e36648e0d377c13016617a2b5f7f", 433, 499.5352787292137),
+        (BloomSpec.for_capacity(10_000), 10_000, "4529d863305f75d47658d557fe8d14d24160420a7de2ef5075b951380a825552", 10, 10005.268410455803),
+    ],
+    ids=["1001_bits", "for_capacity_10k"],
+)
+def test_bloom_serialized_bytes_pinned(spec, n, digest, false_hits, estimate):
+    """The serialized bit order is a storage format: bit i is
+    ``0x80 >> (i & 7)`` of payload byte ``i >> 3``. Any other packing
+    (e.g. little-endian bits) would misread stored sketches."""
+    keys = [f"k{i}" for i in range(n)]
+    buf = BLOOM.serialize(BLOOM.update(BLOOM.zero(spec), keys, spec), spec)
+    assert hashlib.sha256(buf).hexdigest() == digest
+    _, state, sp = deserialize_any(buf)
+    assert sp == spec
+    assert BLOOM.contains(state, keys, spec).all()
+    assert int(BLOOM.contains(state, [f"x{i}" for i in range(1000)], spec).sum()) == false_hits
+    assert BLOOM.estimate(state, spec) == pytest.approx(estimate, rel=1e-12)
 
 
 # --- t-digest ----------------------------------------------------------------

@@ -34,6 +34,17 @@ def test_fold_matches_pairwise_merge(spec):
     assert merge_serialized(bufs[:1]) == bufs[0]
 
 
+@pytest.mark.parametrize("change", ["cut_8", "pad_8"])
+@pytest.mark.parametrize("spec", SPECS, ids=lambda s: s.kind)
+def test_deserialize_rejects_wrong_length(spec, change):
+    """A buffer shorter or longer than its header implies is an error, not
+    a different sketch."""
+    buf = _sketch(spec, 0, 1000)
+    bad = buf[:-8] if change == "cut_8" else buf + bytes(8)
+    with pytest.raises(ValueError):
+        deserialize_any(bad)
+
+
 @pytest.mark.parametrize(
     "a, b",
     [(HllSpec(12), BloomSpec(bits=4096, hashes=3)), (KllSpec(), TDigestSpec()), (CmsSpec(), HllSpec(12))],

@@ -11,6 +11,7 @@ from hlld_spark.core import hll
 from hlld_spark.core.accumulator import HllSpec
 from hlld_spark.core.hashing import hll_hash
 from hlld_spark.operators.sketch import (
+    _group_key,
     build_sketches,
     distinct_count,
     merge_sketches,
@@ -216,8 +217,8 @@ def test_parquet_direct_filter_pushdown(spark, wp, tmp_path):
 
 
 def test_null_group_keys_preserved(spark):
-    """SQL GROUP BY keeps the null group; so do we (arrow dictionary
-    null-code path)."""
+    """SQL GROUP BY keeps the null group; so does the build's Arrow
+    ``group_by``."""
     df = spark.createDataFrame(
         [("a", "x"), (None, "y"), (None, "z"), ("a", "y")], ["k", "v"]
     )
@@ -226,7 +227,7 @@ def test_null_group_keys_preserved(spark):
 
 
 def test_three_key_grouping(spark, wp):
-    """3+ group keys exercise the re-encoded code-combination path."""
+    """Three group keys in one Arrow ``group_by`` per batch."""
     df = wp.withColumn("day", F.to_date("warc_ts")).withColumn(
         "host", F.regexp_extract("url", r"https://([^/]+)/", 1)
     )
@@ -239,6 +240,39 @@ def test_three_key_grouping(spark, wp):
         for r in df.groupBy("lang", "day", "host").agg(F.count("url").alias("n")).collect()
     }
     assert got == exact
+
+
+_KEY_TYPE_EXPRS = {
+    "byte": "cast(id % 5 - 2 as tinyint)",
+    "short": "cast(id % 5 * 300 as smallint)",
+    "int": "cast(id % 5 - 2 as int)",
+    "long": "id % 5 * 10000000000",
+    "float": "cast(CASE id % 6 WHEN 0 THEN 'NaN' WHEN 1 THEN '-0.0' WHEN 2 THEN '0.0' ELSE id % 6 / 4 END as float)",
+    "double": "cast(CASE id % 6 WHEN 0 THEN 'NaN' WHEN 1 THEN '-0.0' WHEN 2 THEN '0.0' ELSE id % 6 / 4 END as double)",
+    "decimal": "cast(id % 5 / 4 as decimal(12, 3))",
+    "string": "CASE id % 5 WHEN 0 THEN '' ELSE concat('s', id % 5, 'ü') END",
+    "binary": "cast(concat('b', id % 5) as binary)",
+    "boolean": "id % 3 = 0",
+    "date": "date_add(date'1969-12-30', cast(id % 5 as int))",
+    "timestamp": "timestamp_seconds(id % 5 * 86399)",
+    "timestamp_ntz": "cast(timestamp_seconds(id % 5 * 86399) as timestamp_ntz)",
+}
+
+
+@pytest.mark.parametrize("kind", [*_KEY_TYPE_EXPRS, "all_null"])
+def test_key_type_matrix(spark, kind):
+    """One key of each Spark type, NULLs included: the groups and
+    ``n_rows`` equal ``groupBy(k).count()`` (NaN one group, -0.0 ≡ 0.0),
+    and the sketch bytes do not depend on the partitioning."""
+    key = F.lit(None) if kind == "all_null" else F.when(F.col("id") % 7 != 0, F.expr(_KEY_TYPE_EXPRS[kind]))
+    df = spark.range(0, 400, 1, 3).select(key.alias("k"), F.col("id").cast("string").alias("v"))
+    built = build_sketches(df, ["k"], "v", HllSpec(10)).collect()
+    again = build_sketches(df.repartition(7), ["k"], "v", HllSpec(10)).collect()
+    exact = {_group_key((r["k"],)): r["count"] for r in df.groupBy("k").count().collect()}
+    assert {_group_key((r["k"],)): r["n_rows"] for r in built} == exact
+    assert {_group_key((r["k"],)): bytes(r["sketch"]) for r in built} == {
+        _group_key((r["k"],)): bytes(r["sketch"]) for r in again
+    }
 
 
 def test_parquet_direct_single_giant_file_rowgroup_splits(spark, wp, tmp_path):
