@@ -124,8 +124,8 @@ def _gram_hashes_df(df: DataFrame, text_col: str, n: int, unit: str) -> DataFram
     # r7: AQE-rebalance the (tiny, post-filter) eval projection before
     # the Python stage — the gram extraction otherwise inherits the
     # SCAN's task count (e.g. 32-64 tasks for ~2k surviving docs), and
-    # each Python task costs ~10-15 ms of serialized handshake
-    # (§OPTIMIZATION_r07.md). AQE sizes the rebalance by bytes
+    # each Python task pays a fixed cost (~10-15 ms in r7, mostly the
+    # zip re-read hlld_spark/__init__.py now skips). AQE sizes the rebalance by bytes
     # (advisoryPartitionSizeInBytes), so corpus-sized eval tables still
     # fan out. Row placement only; the distinct gram set is unchanged.
     return df.select(text_col).hint("rebalance").mapInPandas(extract, schema).distinct()

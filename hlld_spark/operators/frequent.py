@@ -74,9 +74,11 @@ def _reduce_summaries(sum_df: DataFrame, schema: StructType, cap: int, fan_in: i
     φ-heavy superset guarantee survives the extra level (cap ≥ 1/φ ⇒
     φ·N > N/(cap+1)). Sentinel total rows (null item) sum through.
     Input summary rows are bounded (partitions × (cap+1)), so the one
-    round-robin exchange this adds is tiny; the INPUT is not rescanned."""
-    if sum_df.rdd.getNumPartitions() <= fan_in:
-        return sum_df
+    rebalance exchange this adds is tiny; the INPUT is not rescanned.
+    It always runs (a probe of the upstream's partition count to skip it
+    ran the upstream shuffle stages once more under AQE), and AQE merges
+    its small partitions: a plain ``repartition(64)`` ran 64 Python
+    tasks, +0.86 s on a 16-partition input at ``local[4]``."""
 
     def reduce_fn(batches):
         import pyarrow as pa
@@ -113,7 +115,7 @@ def _reduce_summaries(sum_df: DataFrame, schema: StructType, cap: int, fan_in: i
             names=[f.name for f in schema.fields],
         )
 
-    return sum_df.repartition(fan_in).mapInArrow(reduce_fn, schema)
+    return sum_df.hint("rebalance", fan_in).mapInArrow(reduce_fn, schema)
 
 
 def heavy_hitters(

@@ -135,8 +135,9 @@ def _merge_runs(keys: list[str]):
     A global merge is one task whatever the fan-in: a partial costs ~56 µs
     deserialize + ~3 µs merge at HLL p12 and ~0.4 ms deserialize + merge
     as a 1.2 MB Bloom filter, so even 1024 partials fold in 0.06 s /
-    0.4 s, and a √n merge tree measured no faster there while its extra
-    stage cost +0.5 s on a 1.45 s job at 4 partials."""
+    0.4 s, and a √n merge tree measured no faster there: its extra stage
+    cost a Python task wave (+0.5 s at 4 partials, mostly the per-task
+    zip re-read ``hlld_spark/__init__.py`` now skips; ~0.06 s since)."""
 
     def merge(batches):
         import pyarrow as pa
@@ -257,9 +258,10 @@ def build_sketches_parquet(
         keys + [col],
         filter=filter,
         # r7: ONE wave of full-width tasks — the sketch build is uniform
-        # scan+hash work where the ~5-10 ms serialized per-Python-task
-        # handshake dominates makespan variance (A/B: best 0.67 s vs
-        # 1.05 s at bench scale); compute-heavy consumers keep waves=2
+        # scan+hash work, and each Python task paid a fixed cost (mostly
+        # the zip-directory re-read hlld_spark/__init__.py now skips), so
+        # one wave measured faster (A/B: best 0.67 s vs 1.05 s at bench
+        # scale); compute-heavy consumers keep waves=2
         waves=1,
     )
     return _merge_partials(partials, keys, schema)

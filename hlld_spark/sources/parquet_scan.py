@@ -136,11 +136,11 @@ def plan_parquet_splits(
     ``waves``: at every file count the task count is
     ``min(len(splits), waves·parallelism)``. 2 (default) leaves a second
     wave, so a core whose task ends early takes another while a slow one
-    finishes. 1 is one task per core: every Python task costs ~5-10 ms of
-    serialized handshake, so the uniform, scan-dominated sketch build
-    measured faster with half the tasks (r7 A/B in OPTIMIZATION_r07.md),
-    but with no second wave a straggler (a slow core, a larger file) sets
-    the makespan."""
+    finishes. 1 is one task per core: every Python task paid a fixed cost
+    (mostly the zip-directory re-read ``hlld_spark/__init__.py`` now
+    skips), so the uniform, scan-dominated sketch build measured faster
+    with half the tasks (r7 A/B in OPTIMIZATION_r07.md), but with no
+    second wave a straggler (a slow core, a larger file) sets the makespan."""
     files = list_parquet_files(path)
     par = spark.sparkContext.defaultParallelism
     splits: list[tuple[str, int, int]]
@@ -206,8 +206,8 @@ def map_parquet_batches(
     fbatch = batch_rows
     # r7: the task list rides a JVM-native Range (one task-id row per
     # partition), NOT a parallelize()d Python RDD — the latter put a
-    # second Python round trip in front of EVERY task (measured ~0.5 s of
-    # serialized per-task overhead on a 64-task job, §OPTIMIZATION_r07.md).
+    # second Python round trip in front of EVERY task (measured +0.5 s on
+    # a 64-task job, §OPTIMIZATION_r07.md).
     # The split table travels in the task closure; PySpark broadcasts a
     # pickled command over 1 MB itself, so a huge table still ships once.
     # Splits are assigned by striding (tid::n_tasks), which balances like

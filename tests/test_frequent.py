@@ -238,3 +238,30 @@ def test_heavy_hitters_tree_reduce_long_keys(spark, sf_dir):
         for r in heavy_hitters(o, "o_custkey", phi=0.002, summary_fan_in=4).collect()
     }
     assert got == base
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_heavy_hitters_runs_upstream_shuffle_once(spark, aqe):
+    """Building the candidates runs the upstream shuffle's map stage (the
+    only 7-task stage) once: no plan-time probe of the summary frame's
+    partition count runs it a second time under AQE. Exact with AQE off
+    too (the summary rebalance then keeps all fan_in partitions)."""
+    sc = spark.sparkContext
+    df = spark.range(0, 4000, 1, 7).selectExpr("CAST(id % 9 AS STRING) AS item")
+    group = f"heavy-hitters-upstream-aqe-{aqe}"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc.setJobGroup(group, "heavy_hitters candidates")
+    try:
+        out = heavy_hitters(df.repartition(16), "item", phi=0.05, summary_fan_in=4)
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(s)
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+        assert {r["item"]: r["exact_count"] for r in out.collect()} == _exact(df, "item", 0.05)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert [s.numCompletedTasks for s in stages if s and s.numTasks == 7 and s.numCompletedTasks] == [7]
