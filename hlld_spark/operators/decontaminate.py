@@ -18,9 +18,10 @@ asymmetry:
   the driver (bounded by ``max_eval_grams`` — same bounded-collect
   pattern as the IVF centroid sample), sorted, and broadcast.
 * the CORPUS side never materializes an n-gram row: inside one
-  ``mapInPandas`` pass, each Arrow batch is shingle-hashed with the same
-  vectorized code-point kernel minhash uses
-  (``dedup._char_shingle_hashes``) and probed against the broadcast
+  Python pass, each batch's text column is shingle-hashed by the same
+  code-point kernels minhash uses (``dedup._char_shingle_hashes`` /
+  ``dedup._token_shingle_hashes``, one kernel per unit for any script
+  mix or NULLs) and probed against the broadcast
   table — a 2^24-slot byte-mask prefilter resolves ~97% of probes with
   one vectorized load, searchsorted runs only on survivors. Only
   ``(id, n_matched)`` leaves the worker: no corpus shuffle at all
@@ -54,14 +55,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .dedup import (
-    _ascii_text_buffer,
-    _char_shingle_hashes_ascii,
-    _char_shingle_hashes_with_lens,
-    _splitmix,
-    _token_shingle_hashes,
-    _token_shingle_hashes_ascii,
-)
+from .dedup import _char_shingle_hashes, _splitmix, _token_shingle_hashes
+from .skew import rebalance
 
 # second hash for the Bloom double-hashing scheme — any odd constant
 # xor + splitmix gives an independent-enough h2 from the gram hash
@@ -72,38 +67,19 @@ def _bloom_pair(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h, _splitmix(h ^ _BLOOM_H2_SALT)
 
 
-def _shingle(texts: pd.Series, n: int, unit: str):
-    """(hashes, per-doc offsets, per-doc length in the gram unit).
+def _shingle(texts, n: int, unit: str):
+    """(hashes, per-doc offsets, per-doc length in the gram unit) of a
+    text batch (Arrow string column, pandas Series or list).
 
     unit="token": whitespace-token n-grams (the published 13-gram rule's
     unit). unit="char": character n-grams. Both kernels emit ONE
     sentinel hash for docs shorter than n units (slot offsets[d]) —
     callers mask it, since no n-gram exists there."""
     if unit == "token":
-        h, offsets, units = _token_shingle_hashes(texts, n)
-        return h, offsets, units
+        return _token_shingle_hashes(texts, n)
     if unit == "char":
-        # code-point lengths come from the kernel's own encode pass
-        # (VERDICT r4 nit: no separate per-row Python len() map)
-        h, offsets, units = _char_shingle_hashes_with_lens(texts, n)
-        return h, offsets, units
+        return _char_shingle_hashes(texts, n)
     raise ValueError(f"unknown unit {unit!r} (expected 'token' or 'char')")
-
-
-def _shingle_arrow(col, n: int, unit: str):
-    """:func:`_shingle` for an Arrow string column: all-ASCII null-free
-    batches hash straight off the Arrow UTF-8 buffer (r7 — no pandas
-    conversion, no per-row encode; bit-identical results, see
-    dedup._token/_char_shingle_hashes_ascii); anything else falls back
-    to the exact pandas kernels."""
-    if unit in ("token", "char"):
-        fast = _ascii_text_buffer(col)
-        if fast is not None:
-            data, lens = fast
-            if unit == "char":
-                return _char_shingle_hashes_ascii(data, lens, n)
-            return _token_shingle_hashes_ascii(data, lens, n)
-    return _shingle(col.to_pandas(), n, unit)
 
 
 def _gram_hashes_df(df: DataFrame, text_col: str, n: int, unit: str) -> DataFrame:
@@ -121,14 +97,15 @@ def _gram_hashes_df(df: DataFrame, text_col: str, n: int, unit: str) -> DataFram
             keep[offsets[:-1][units < n]] = False
             yield pd.DataFrame({"gram_hash": np.unique(h[keep]).astype(np.int64)})
 
-    # r7: AQE-rebalance the (tiny, post-filter) eval projection before
-    # the Python stage — the gram extraction otherwise inherits the
-    # SCAN's task count (e.g. 32-64 tasks for ~2k surviving docs), and
-    # each Python task pays a fixed cost (~10-15 ms in r7, mostly the
-    # zip re-read hlld_spark/__init__.py now skips). AQE sizes the rebalance by bytes
-    # (advisoryPartitionSizeInBytes), so corpus-sized eval tables still
-    # fan out. Row placement only; the distinct gram set is unchanged.
-    return df.select(text_col).hint("rebalance").mapInPandas(extract, schema).distinct()
+    # Rebalance the (tiny, post-filter) eval projection before the
+    # Python stage — the gram extraction otherwise inherits the SCAN's
+    # task count (e.g. 32-64 tasks for ~2k surviving docs), and each
+    # Python task pays a fixed cost. At most one task wave, with AQE on
+    # or off; AQE also merges small partitions by
+    # advisoryPartitionSizeInBytes. Row placement only; the distinct
+    # gram set is unchanged.
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return rebalance(df.select(text_col), par).mapInPandas(extract, schema).distinct()
 
 
 class EvalGramOverflow(ValueError):
@@ -238,7 +215,7 @@ def _flag_counts(member, h, offsets, units, n: int) -> np.ndarray:
     return np.add.reduceat(hits.astype(np.int64), offsets[:-1])
 
 
-def _flag_batch(member, texts: pd.Series, n: int, unit: str = "char") -> np.ndarray:
+def _flag_batch(member, texts, n: int, unit: str = "char") -> np.ndarray:
     """Per-doc matched-gram occurrence counts for one batch."""
     h, offsets, units = _shingle(texts, n, unit)
     return _flag_counts(member, h, offsets, units, n)
@@ -359,8 +336,6 @@ def decontaminate_parquet(
     max_eval_grams: int = 20_000_000,
     unit: str = "token",
     filter=None,
-    batch_rows: int = 32768,
-    files_per_task: int | None = None,
 ) -> DataFrame:
     """:func:`decontaminate` with the corpus scan moved INTO the Python
     workers (``map_parquet_batches``): the driver plans file/row-group
@@ -385,21 +360,18 @@ def decontaminate_parquet(
 
         def gfn(batches):
             for rb in batches:
-                pdf = rb.to_pandas()
-                h, offsets, units = _shingle(pdf[text_col], n, unit)
+                h, offsets, units = _shingle(rb.column(text_col), n, unit)
                 keep = np.ones(len(h), dtype=bool)
                 keep[offsets[:-1][units < n]] = False
                 per_doc = offsets[1:] - offsets[:-1]
-                ids = np.repeat(pdf[id_col].values, per_doc)[keep]
-                if len(ids):
-                    yield pa.RecordBatch.from_pandas(
-                        pd.DataFrame({id_col: ids, "gram_hash": h[keep].astype(np.int64)}),
-                        preserve_index=False,
+                take = np.repeat(np.arange(rb.num_rows), per_doc)[keep]
+                if len(take):
+                    yield pa.RecordBatch.from_arrays(
+                        [rb.column(id_col).take(pa.array(take)), pa.array(h[keep].astype(np.int64))],
+                        names=[id_col, "gram_hash"],
                     )
 
-        corpus_grams = map_parquet_batches(
-            spark, path, gfn, gram_schema, [id_col, text_col], filter, batch_rows, files_per_task
-        )
+        corpus_grams = map_parquet_batches(spark, path, gfn, gram_schema, [id_col, text_col], filter)
         return _flag_via_join(corpus_grams, eval_df, id_col, eval_text_col, n, unit)
     probe_state = _probe_blob(spark, table, method, bloom_fpr)
 
@@ -408,23 +380,17 @@ def decontaminate_parquet(
     def fn(batches):
         member = _make_member(method, probe_state.value)
         for rb in batches:
-            # Arrow-native probe (r7): shingle straight off the Arrow
-            # string buffer (ASCII fast path, exact pandas fallback) and
+            # shingle straight off the Arrow string column and
             # materialize ONLY the flagged rows' ids — unflagged rows
             # never become Python objects at all
-            tcol = rb.column(rb.schema.get_field_index(text_col))
-            h, offsets, units = _shingle_arrow(tcol, n, unit)
+            h, offsets, units = _shingle(rb.column(text_col), n, unit)
             per_doc = _flag_counts(member, h, offsets, units, n)
             idx = np.flatnonzero(per_doc > 0)
             if len(idx):
-                ids = rb.column(rb.schema.get_field_index(id_col)).take(
-                    pa.array(idx)
-                )
+                ids = rb.column(id_col).take(pa.array(idx))
                 yield pa.RecordBatch.from_arrays(
                     [ids, pa.array(per_doc[idx], type=pa.int64())],
                     names=[id_col, "n_matched_grams"],
                 )
 
-    return map_parquet_batches(
-        spark, path, fn, schema, [id_col, text_col], filter, batch_rows, files_per_task
-    )
+    return map_parquet_batches(spark, path, fn, schema, [id_col, text_col], filter)

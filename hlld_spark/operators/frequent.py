@@ -43,6 +43,8 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from .skew import rebalance
+
 
 def _mg_update(counters: dict, items: np.ndarray, counts: np.ndarray, capacity: int) -> None:
     """Merge batch (item, count) pairs into a Misra–Gries dict of size
@@ -78,7 +80,8 @@ def _reduce_summaries(sum_df: DataFrame, schema: StructType, cap: int, fan_in: i
     It always runs (a probe of the upstream's partition count to skip it
     ran the upstream shuffle stages once more under AQE), and AQE merges
     its small partitions: a plain ``repartition(64)`` ran 64 Python
-    tasks, +0.86 s on a 16-partition input at ``local[4]``."""
+    tasks, +0.86 s on a 16-partition input at ``local[4]``. With AQE off
+    it is a plain ``repartition(fan_in)`` (see :func:`.skew.rebalance`)."""
 
     def reduce_fn(batches):
         import pyarrow as pa
@@ -115,7 +118,7 @@ def _reduce_summaries(sum_df: DataFrame, schema: StructType, cap: int, fan_in: i
             names=[f.name for f in schema.fields],
         )
 
-    return sum_df.hint("rebalance", fan_in).mapInArrow(reduce_fn, schema)
+    return rebalance(sum_df, fan_in).mapInArrow(reduce_fn, schema)
 
 
 def heavy_hitters(

@@ -823,8 +823,6 @@ def lang_id_profiles_parquet(
     out: str = "lang_id",
     carry_cols: list[str] | None = None,
     filter=None,
-    batch_rows: int = 32768,
-    files_per_task: int | None = None,
     max_chars: int | None = 1000,
 ) -> DataFrame:
     """:func:`with_lang_id_profiles` with the scan moved INTO the Python
@@ -876,6 +874,4 @@ def lang_id_profiles_parquet(
             out_pdf[out] = lang.values
             yield pa.RecordBatch.from_pandas(out_pdf, preserve_index=False)
 
-    return map_parquet_batches(
-        spark, path, fn, schema, carry + [text_col], filter, batch_rows, files_per_task
-    )
+    return map_parquet_batches(spark, path, fn, schema, carry + [text_col], filter)

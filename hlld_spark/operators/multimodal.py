@@ -708,8 +708,6 @@ def multimodal_features_parquet(
     id_col: str = "asset_id",
     payload_col: str = "payload",
     filter=None,
-    batch_rows: int = 1024,
-    files_per_task: int | None = None,
 ) -> DataFrame:
     """The 100-TB path for feature extraction (r5): the asset scan moves
     INTO the Python workers (``sources.parquet_scan.map_parquet_batches``
@@ -719,8 +717,7 @@ def multimodal_features_parquet(
     in place; only (id, kind, image features, audio features) leave the
     worker — payloads NEVER cross the JVM↔Python boundary or any
     exchange, which is the difference between shipping ~KB and ~MB per
-    row at image-corpus scale. ``batch_rows`` defaults low because rows
-    are payload-heavy."""
+    row at image-corpus scale."""
     import pyarrow as pa
 
     from ..sources.parquet_scan import map_parquet_batches, parquet_schema
@@ -737,10 +734,11 @@ def multimodal_features_parquet(
 
     def fn(batches):
         for rb in batches:
-            pdf = rb.to_pandas()
             kinds, imf, auf = [], [], []
-            for b in pdf[payload_col]:
-                b = bytes(b) if b is not None else b""
+            # one payload becomes a Python object at a time: a 32k-row
+            # batch of images is never copied out whole
+            for p in rb.column(payload_col):
+                b = p.as_py() or b""
                 if _is_image_payload(b):
                     try:
                         px = _decode_image(b).astype(np.float64)
@@ -774,14 +772,11 @@ def multimodal_features_parquet(
                 kinds.append("other")
                 imf.append(None)
                 auf.append(None)
-            out = pd.DataFrame(
-                {id_col: pdf[id_col].values, "kind": kinds, "features": imf, "audio_features": auf}
-            )
+            ids = rb.column(id_col).to_pandas().values
+            out = pd.DataFrame({id_col: ids, "kind": kinds, "features": imf, "audio_features": auf})
             yield pa.RecordBatch.from_pandas(out, preserve_index=False)
 
-    return map_parquet_batches(
-        spark, path, fn, schema, [id_col, payload_col], filter, batch_rows, files_per_task
-    )
+    return map_parquet_batches(spark, path, fn, schema, [id_col, payload_col], filter)
 
 
 def sample_video_frames(

@@ -43,6 +43,15 @@ def salted_exact_distinct(
     return stage1.groupBy(*keys).agg(F.sum("__partial").cast("long").alias(out))
 
 
+def rebalance(df: DataFrame, n: int) -> DataFrame:
+    """``df`` in at most ``n`` partitions, merged by size when AQE is on
+    (``hint("rebalance", n)``). Spark drops the REBALANCE hint when AQE
+    is off ("Unrecognized hint"), so that case takes ``repartition(n)``."""
+    if df.sparkSession.conf.get("spark.sql.adaptive.enabled").lower() == "true":
+        return df.hint("rebalance", n)
+    return df.repartition(n)
+
+
 def broadcast_threshold_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
     """Join with an explicit broadcast hint on the small side — removes
     the shuffle of the big side entirely (the registry-onto-sketches

@@ -7,7 +7,9 @@ spark-submit owns. AQE stays on so skewed shuffles re-plan at runtime.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -34,7 +36,11 @@ def ship_package(spark: SparkSession) -> str:
     if any(str(f).endswith("hlld_spark.zip") for f in existing):
         return "already-shipped"
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(tempfile.mkdtemp(prefix="hlld_spark_py"), "hlld_spark.zip")
+    zdir = tempfile.mkdtemp(prefix="hlld_spark_py")
+    # the driver imports from Spark's own copy of the zip, so ours is
+    # only needed while this interpreter serves it to executors
+    atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+    zpath = os.path.join(zdir, "hlld_spark.zip")
     with zipfile.ZipFile(zpath, "w", zipfile.ZIP_DEFLATED) as z:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

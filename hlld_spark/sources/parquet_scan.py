@@ -27,6 +27,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+#: rows per Arrow batch handed to ``map_parquet_batches``' transform; q11
+#: measured no difference between 2k and 32k (DEVNOTES r5)
+_BATCH_ROWS = 32768
 
 
 def list_parquet_files(path: str) -> list[str]:
@@ -125,9 +128,7 @@ def _pq_filter_to_expr(filters):
     return expr
 
 
-def plan_parquet_splits(
-    spark: SparkSession, path: str, files_per_task: int | None = None, waves: int = 2
-) -> tuple[list[tuple[str, int, int]], int]:
+def plan_parquet_splits(spark: SparkSession, path: str, waves: int = 2) -> tuple[list[tuple[str, int, int]], int]:
     """(splits, n_tasks): file-level splits normally; row-group-range
     splits when there are fewer files than task slots (one giant file
     still parallelizes). A split is (file, rg_lo, rg_hi) with lo=-1
@@ -144,7 +145,7 @@ def plan_parquet_splits(
     files = list_parquet_files(path)
     par = spark.sparkContext.defaultParallelism
     splits: list[tuple[str, int, int]]
-    if len(files) < par and files_per_task is None:
+    if len(files) < par:
         import pyarrow.parquet as _pq
 
         splits = []
@@ -157,12 +158,9 @@ def plan_parquet_splits(
         n_tasks = min(len(splits), waves * par)
     else:
         splits = [(f, -1, -1) for f in files]
-        if files_per_task is None:
-            # `waves` full-width task waves: balanced (uniform files)
-            # without ragged-last-wave makespan loss
-            n_tasks = min(len(splits), waves * par)
-        else:
-            n_tasks = (len(splits) + files_per_task - 1) // files_per_task
+        # `waves` full-width task waves: balanced (uniform files)
+        # without ragged-last-wave makespan loss
+        n_tasks = min(len(splits), waves * par)
     return splits, n_tasks
 
 
@@ -190,8 +188,6 @@ def map_parquet_batches(
     schema,
     columns: list[str],
     filter=None,
-    batch_rows: int = 32768,
-    files_per_task: int | None = None,
     waves: int = 2,
 ) -> DataFrame:
     """Apply ``fn(Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]``
@@ -200,10 +196,9 @@ def map_parquet_batches(
     (all of the task's splits), so per-task state (partial aggregates,
     summaries) amortizes across splits. ``waves``: see
     :func:`plan_parquet_splits`."""
-    splits, n_tasks = plan_parquet_splits(spark, path, files_per_task, waves)
+    splits, n_tasks = plan_parquet_splits(spark, path, waves)
     fcols = list(columns)
     ffilter = filter
-    fbatch = batch_rows
     # r7: the task list rides a JVM-native Range (one task-id row per
     # partition), NOT a parallelize()d Python RDD — the latter put a
     # second Python round trip in front of EVERY task (measured +0.5 s on
@@ -220,7 +215,7 @@ def map_parquet_batches(
                 for tid in rb.column(0).to_pylist():
                     for fp, lo, hi in splits[tid::n_tasks]:
                         tbl = read_split_table(fp, lo, hi, fcols, ffilter)
-                        yield from tbl.to_batches(fbatch)
+                        yield from tbl.to_batches(_BATCH_ROWS)
 
         yield from fn(gen())
 

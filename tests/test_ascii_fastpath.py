@@ -1,22 +1,201 @@
-"""r7 optimization gates: the Arrow/ASCII shingle fast paths must be
-bit-identical to the exact pandas kernels on every input shape — mixed
-doc lengths, exotic ASCII whitespace (str.split's full ASCII set),
-empty docs, docs shorter than the window, sliced Arrow batches — and
-the dispatcher must fall back (not mis-hash) on non-ASCII or nulls."""
+"""The char and token shingle kernels read one code-point buffer: the
+Arrow UTF-8 value bytes when a batch is all ASCII (zero-copy), else one
+whole-batch UTF-32 decode. These tests hold both kernels to pure-Python
+definitions — k-code-point substrings and ``str.split()`` n-grams,
+hashed per the poly/splitmix definition with the short-doc sentinel —
+on adversarial batch shapes (empty, leading/trailing empty docs,
+whitespace-only docs, NULLs, sliced and chunked Arrow, mixed script,
+every ``str.split()`` separator, U+200B), and pin their output bytes.
+"""
+
+import hashlib
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from hlld_spark.operators.dedup import (
+    _POLY_B,
+    _WS_TABLE,
     _ascii_text_buffer,
-    _char_shingle_hashes_ascii,
-    _char_shingle_hashes_with_lens,
+    _char_shingle_hashes,
     _token_shingle_hashes,
-    _token_shingle_hashes_ascii,
 )
-from hlld_spark.operators.decontaminate import _shingle, _shingle_arrow
+from hlld_spark.operators.decontaminate import _shingle
+
+_M64 = (1 << 64) - 1
+
+
+def _poly(vals) -> int:
+    h = 0
+    for v in vals:
+        h = (h * int(_POLY_B) + int(v)) & _M64
+    return h
+
+
+def _splitmix(z: int) -> int:
+    z = (z + 0x9E3779B97F4A7C15) & _M64
+    z = ((z ^ (z >> 30)) * 0xBF58476D1CE4E5B9) & _M64
+    z = ((z ^ (z >> 27)) * 0x94D049BB133111EB) & _M64
+    return z ^ (z >> 31)
+
+
+def _windows(units: list, k: int) -> list[int]:
+    """splitmix(poly) of every length-k window, or ONE whole-doc
+    sentinel when the doc has fewer than k units."""
+    if len(units) < k:
+        return [_splitmix(_poly(units))]
+    return [_splitmix(_poly(units[i : i + k])) for i in range(len(units) - k + 1)]
+
+
+def _reference(texts, k: int, unit: str):
+    """(hashes, offsets, per-doc unit counts) by definition: k-char
+    substrings of the code points, or k-grams of ``str.split()`` tokens
+    whose own hash is splitmix(poly(code points))."""
+    out, offs, units = [], [0], []
+    for t in texts:
+        t = t or ""
+        if unit == "char":
+            u = [ord(c) for c in t]
+        else:
+            u = [_splitmix(_poly(ord(c) for c in tok)) for tok in t.split()]
+        out += _windows(u, k)
+        offs.append(len(out))
+        units.append(len(u))
+    return np.array(out, dtype=np.uint64), np.array(offs), np.array(units)
+
+
+_KERNELS = {"char": _char_shingle_hashes, "token": _token_shingle_hashes}
+
+
+def _assert_matches_reference(batch, texts, k, unit):
+    h, o, u = _KERNELS[unit](batch, k)
+    rh, ro, ru = _reference(texts, k, unit)
+    assert h.dtype == np.uint64
+    np.testing.assert_array_equal(u, ru)
+    np.testing.assert_array_equal(o, ro)
+    np.testing.assert_array_equal(h, rh)
+
+
+# --- adversarial batch shapes ----------------------------------------------
+
+#: every str.split() separator: ASCII \t\n\v\f\r, FS/GS/RS/US and space,
+#: then NEL, NBSP, OGHAM, U+2000-200A, LS, PS, NNBSP, MMSP, U+3000
+_WS = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680" + "".join(
+    chr(c) for c in range(0x2000, 0x200B)
+) + "\u2028\u2029\u202f\u205f\u3000"
+_ASCII_WS = _WS[:10]
+#: mixed script, non-separators that look like one (U+200B, U+FEFF,
+#: U+180E), astral code points
+_MIXED = "abz09.,éÿЖж日本م\u200b\ufeff\u180e\U0001d518\U0001f600"
+
+_ascii_docs = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(alphabet=_ASCII_WS, min_size=1, max_size=4),
+    st.text(alphabet="abcxyz01" + _ASCII_WS, max_size=24),
+)
+_mixed_docs = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(alphabet=_WS, min_size=1, max_size=4),
+    st.text(alphabet=_MIXED + _WS, max_size=24),
+)
+_CONTAINERS = ("list", "pandas", "arrow", "large_arrow", "slice", "chunked")
+
+
+@st.composite
+def text_batches(draw):
+    """(batch in some container, the texts it holds as Python values)."""
+    docs = draw(st.lists(draw(st.sampled_from([_ascii_docs, _mixed_docs])), max_size=10))
+    texts = [""] * draw(st.integers(0, 2)) + docs + [""] * draw(st.integers(0, 2))
+    kind = draw(st.sampled_from(_CONTAINERS))
+    if kind == "list":
+        return texts, texts
+    if kind == "pandas":
+        return pd.Series(texts, dtype=object), texts
+    if kind == "large_arrow":
+        return pa.array(texts, type=pa.large_string()), texts
+    if kind == "slice":
+        lo, hi = draw(st.integers(0, 3)), draw(st.integers(0, 3))
+        padded = ["pad é"] * lo + texts + ["tail"] * hi
+        return pa.array(padded, type=pa.string()).slice(lo, len(texts)), texts
+    if kind == "chunked":
+        cut = draw(st.integers(0, len(texts)))
+        chunks = [pa.array(texts[:cut], type=pa.string()), pa.array(texts[cut:], type=pa.string())]
+        return pa.chunked_array(chunks, type=pa.string()), texts
+    return pa.array(texts, type=pa.string()), texts
+
+
+@settings(max_examples=200, deadline=None)
+@given(text_batches(), st.integers(min_value=1, max_value=6))
+def test_char_kernel_matches_definition(batch, k):
+    _assert_matches_reference(batch[0], batch[1], k, "char")
+
+
+@settings(max_examples=200, deadline=None)
+@given(text_batches(), st.integers(min_value=1, max_value=4))
+def test_token_kernel_matches_definition(batch, n):
+    _assert_matches_reference(batch[0], batch[1], n, "token")
+
+
+def test_whitespace_table_is_str_split():
+    """The non-ASCII separator table is exactly Python's str.split() set
+    (which has no member above U+3000)."""
+    ws = {c for c in range(0x110000) if chr(c).isspace() and c >= 0x80}
+    assert max(ws) < len(_WS_TABLE)
+    assert set(np.flatnonzero(_WS_TABLE).tolist()) == ws
+
+
+# --- bit-identity pin ---------------------------------------------------------
+
+PIN_BATCH = [
+    "",
+    "The quick brown fox jumps over the lazy dog near the riverbank today",
+    None,
+    "  \t leading and trailing whitespace \n ",
+    "héllo wörld çafé naïve résumé",
+    "日本語のテキスト 東京 大阪",
+    "Привет мир, как дела?",
+    "مرحبا بالعالم",
+    "tok\x1cfs\x1dgs\x1ers\x1fus\x0bvt\x0cff\rcr",
+    "nbsp\u00a0nel\u0085ogham\u1680en\u2000em\u2003hair\u200aline\u2028para\u2029",
+    "nnbsp\u202fmmsp\u205fideo\u3000end",
+    "zero\u200bwidth\ufeffbom not\u200bspace \u180emvs",
+    "astral \U0001d518\U0001d52b\U0001d526 \U0001f600\U0001f601 emoji",
+    " ".join(["w%dé" % i if i % 3 else "中%d" % i for i in range(20)]) + "\u2009tail",
+    "one two three four five six seven eight nine ten eleven twelve thirteen fourteen",
+    "ab",
+    "\u3000 \u00a0 ",
+    "x",
+    "",
+]
+
+#: SHA-256 of (hashes <u8, offsets <i8, lengths <i8) from the pandas/UTF-32
+#: kernels these replaced; persisted minhash signatures and gram tables
+#: depend on these bytes
+PIN_SHA256 = {
+    ("char", 3): "db5255f08193a08ffbf5bee3c40f30e66011bf485ba637ee04a764a4b62bcfdd",
+    ("char", 13): "1255723651826cc32600d91412d70f6b7f956a5e3543b43f6812aca63f232757",
+    ("token", 2): "29bcd6d4e2e03894b08086f8a50ea23018ad2a91de378728c79756e17ecd7576",
+    ("token", 13): "858c023a977954975b7484bb2e4875b20489e02a28a36d160f67c2a22fe340ca",
+}
+
+
+@pytest.mark.parametrize("unit,k", sorted(PIN_SHA256))
+@pytest.mark.parametrize("container", ["pandas", "arrow"])
+def test_shingle_bytes_pinned(unit, k, container):
+    batch = pd.Series(PIN_BATCH, dtype=object) if container == "pandas" else pa.array(PIN_BATCH)
+    h, o, u = _KERNELS[unit](batch, k)
+    m = hashlib.sha256()
+    for arr, dt in ((h, "<u8"), (o, "<i8"), (u, "<i8")):
+        m.update(np.asarray(arr, dtype=dt).tobytes())
+    assert m.hexdigest() == PIN_SHA256[(unit, k)]
+
+
+# --- fixed regression cases ---------------------------------------------------
 
 
 def _rand_ascii_texts(rng, n_docs):
@@ -43,26 +222,18 @@ def _rand_ascii_texts(rng, n_docs):
 
 @pytest.mark.parametrize("k", [3, 13])
 def test_char_ascii_matches_pandas(k):
-    rng = np.random.default_rng(7)
-    texts = _rand_ascii_texts(rng, 200)
-    h0, o0, l0 = _char_shingle_hashes_with_lens(pd.Series(texts), k)
-    data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
-    h1, o1, l1 = _char_shingle_hashes_ascii(data, lens, k)
-    assert np.array_equal(l0, l1)
-    assert np.array_equal(o0, o1)
-    assert np.array_equal(h0, h1)
+    """An all-ASCII batch hashes the same from Arrow (zero-copy bytes) and
+    from pandas, and both match the definition."""
+    texts = _rand_ascii_texts(np.random.default_rng(7), 200)
+    for batch in (pa.array(texts, type=pa.string()), pd.Series(texts)):
+        _assert_matches_reference(batch, texts, k, "char")
 
 
 @pytest.mark.parametrize("n", [2, 13])
 def test_token_ascii_matches_pandas(n):
-    rng = np.random.default_rng(11)
-    texts = _rand_ascii_texts(rng, 200)
-    h0, o0, t0 = _token_shingle_hashes(pd.Series(texts), n)
-    data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
-    h1, o1, t1 = _token_shingle_hashes_ascii(data, lens, n)
-    assert np.array_equal(t0, t1)
-    assert np.array_equal(o0, o1)
-    assert np.array_equal(h0, h1)
+    texts = _rand_ascii_texts(np.random.default_rng(11), 200)
+    for batch in (pa.array(texts, type=pa.string()), pd.Series(texts)):
+        _assert_matches_reference(batch, texts, n, "token")
 
 
 @pytest.mark.parametrize(
@@ -72,12 +243,8 @@ def test_token_ascii_matches_pandas(n):
 def test_token_ascii_trailing_empty_doc(texts):
     """A batch ending in an empty doc puts that doc's start offset at
     the buffer's end; the boundary scatter must skip it, not index past."""
-    h0, o0, t0 = _token_shingle_hashes(pd.Series(texts), 2)
-    data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
-    h1, o1, t1 = _token_shingle_hashes_ascii(data, lens, 2)
-    assert np.array_equal(t0, t1)
-    assert np.array_equal(o0, o1)
-    assert np.array_equal(h0, h1)
+    _assert_matches_reference(pa.array(texts, type=pa.string()), texts, 2, "token")
+    _assert_matches_reference(pa.array(texts + ["é"], type=pa.string()).slice(0, len(texts)), texts, 2, "token")
 
 
 def test_sliced_batch_offsets():
@@ -92,30 +259,31 @@ def test_sliced_batch_offsets():
 
 
 def test_fallback_on_non_ascii_and_nulls():
+    """The ASCII buffer (lang-id's gate) refuses non-ASCII and NULLs; the
+    shingle kernels take both, from Arrow and pandas alike."""
     assert _ascii_text_buffer(pa.array(["héllo", "plain"])) is None
     assert _ascii_text_buffer(pa.array(["plain", None])) is None
-    # dispatcher: non-ASCII goes through the exact pandas kernel
-    texts = ["héllo wörld çafé", "ascii only here", "日本語 テキスト です ね"]
+    texts = ["héllo wörld çafé", None, "ascii only here", "日本語 テキスト です ね"]
     for unit in ("char", "token"):
         h0, o0, u0 = _shingle(pd.Series(texts), 13, unit)
-        h1, o1, u1 = _shingle_arrow(pa.array(texts), 13, unit)
+        h1, o1, u1 = _shingle(pa.array(texts), 13, unit)
         assert np.array_equal(h0, h1) and np.array_equal(o0, o1) and np.array_equal(u0, u1)
+        _assert_matches_reference(pa.array(texts), texts, 13, unit)
 
 
 def test_dispatcher_ascii_equals_pandas():
-    rng = np.random.default_rng(13)
-    texts = _rand_ascii_texts(rng, 150)
+    texts = _rand_ascii_texts(np.random.default_rng(13), 150)
     for unit in ("char", "token"):
         h0, o0, u0 = _shingle(pd.Series(texts), 13, unit)
-        h1, o1, u1 = _shingle_arrow(pa.array(texts), 13, unit)
+        h1, o1, u1 = _shingle(pa.array(texts), 13, unit)
         assert np.array_equal(h0, h1) and np.array_equal(o0, o1) and np.array_equal(u0, u1)
 
 
 def test_empty_batch():
-    data, lens = _ascii_text_buffer(pa.array([], type=pa.string()))
-    for fn in (_char_shingle_hashes_ascii, _token_shingle_hashes_ascii):
-        h, o, u = fn(data, lens, 13)
-        assert len(h) == 0 and list(o) == [0] and len(u) == 0
+    for batch in (pa.array([], type=pa.string()), pd.Series([], dtype=object), []):
+        for fn in _KERNELS.values():
+            h, o, u = fn(batch, 13)
+            assert len(h) == 0 and list(o) == [0] and len(u) == 0
 
 
 def test_profile_lang_ascii_matches_pandas():
@@ -133,9 +301,6 @@ def test_profile_lang_ascii_matches_pandas():
     texts += ["", "  ", "ab", "x " * 40, "word " * 700]  # >1000 chars triggers truncation
     texts += _rand_ascii_texts(rng, 100)
     want = _profile_lang_batch(pd.Series(texts)).to_numpy()
-    from hlld_spark.operators.dedup import _ascii_text_buffer
-
     data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
     got = _profile_lang_ascii(data, lens)
     assert np.array_equal(want, got), list(zip(texts, want, got))[:5]
-

@@ -347,3 +347,44 @@ def test_unrelated_valueerror_propagates(spark, monkeypatch):
         d.decontaminate(docs, ev, "id", "text")
     # the overflow subtype still takes the fallback (sanity: it's a ValueError)
     assert issubclass(d.EvalGramOverflow, ValueError)
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_eval_gram_extraction_runs_one_task_wave(spark, aqe):
+    """The eval side's Python gram stage runs at most defaultParallelism
+    tasks — not one per scan partition, nor spark.sql.shuffle.partitions
+    — with AQE on and off; the gram set is the same either way."""
+    from hlld_spark.operators.decontaminate import _gram_hashes_df
+
+    sc = spark.sparkContext
+    par = sc.defaultParallelism
+    ev = spark.range(0, 600, 1, 3 * par).selectExpr(
+        "concat('doc ', id % 50, ' alpha beta gamma delta ', id % 7) AS text"
+    )
+    want = sorted(r[0] for r in _gram_hashes_df(ev.coalesce(1), "text", 3, "token").collect())
+    group = f"decon-eval-grams-aqe-{aqe}"
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", str(4 * par))
+    sc.setJobGroup(group, "eval gram extraction")
+    try:
+        got = sorted(r[0] for r in _gram_hashes_df(ev, "text", 3, "token").collect())
+        tracker = sc.statusTracker()
+        stages = [
+            tracker.getStageInfo(s)
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+    assert got == want and len(got) > 50
+    ran = sorted(s.numCompletedTasks for s in stages if s and s.numCompletedTasks)
+    if aqe == "false":
+        # scan, gram extraction, final distinct
+        assert ran == [par, 3 * par, 4 * par]
+    else:
+        # the scan, then stages AQE merged to at most one wave
+        assert ran[-1] == 3 * par and all(t <= par for t in ran[:-1])

@@ -96,7 +96,7 @@ def test_char_shingles_mixed_short_long_byte_identity(k):
         " ",
         "exactly" + "!" * k,
     ]
-    h, off = _char_shingle_hashes(pd.Series(texts), k)
+    h, off, _ = _char_shingle_hashes(pd.Series(texts), k)
     rh, roff = _reference_shingles(texts, k)
     assert list(off) == list(roff)
     assert h.dtype == np.uint64
@@ -105,7 +105,7 @@ def test_char_shingles_mixed_short_long_byte_identity(k):
 
 def test_char_shingles_all_short_batch():
     texts = ["a", "", "bc", "d"]
-    h, off = _char_shingle_hashes(pd.Series(texts), 5)
+    h, off, _ = _char_shingle_hashes(pd.Series(texts), 5)
     rh, roff = _reference_shingles(texts, 5)
     assert list(off) == list(roff) == [0, 1, 2, 3, 4]
     np.testing.assert_array_equal(h, rh)

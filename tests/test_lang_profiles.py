@@ -159,7 +159,7 @@ def test_batch_trigram_hashes_matches_shared_kernel():
     h, bases, counts = _batch_trigram_hashes(docs)
     for d, text in enumerate(docs):
         region = h[bases[d] : bases[d] + counts[d]]
-        expect, _ = _char_shingle_hashes(pd.Series([f" {text} "]), 3)
+        expect, _, _ = _char_shingle_hashes(pd.Series([f" {text} "]), 3)
         if len(text) == 0:
             assert counts[d] == 0  # shared kernel emits a sentinel; lang kernel nothing
             continue

@@ -238,7 +238,7 @@ def test_decontaminate_kernel_matches_bruteforce(corpus, evals, n):
     from hlld_spark.operators.dedup import _char_shingle_hashes
 
     # eval gram hashes, driver-side (mirrors _gram_hashes_df's masking)
-    h, offsets = _char_shingle_hashes(pd.Series(evals), n)
+    h, offsets, _ = _char_shingle_hashes(pd.Series(evals), n)
     keep = np.ones(len(h), dtype=bool)
     for d, e in enumerate(evals):
         if len(e) < n:
