@@ -12,14 +12,25 @@ if sys.version_info < (3, 12):
     # importer's last read, or that cannot be stat'ed (FileFinder's rule).
     _reread_directory = zipimport.zipimporter.invalidate_caches
 
-    def _invalidate_if_changed(self):
+    def _archive_signature(archive: str):
         try:
-            st = os.stat(self.archive)
-            sig = (st.st_ino, st.st_size, st.st_mtime_ns)
+            st = os.stat(archive)
         except OSError:
-            sig = None
+            return None
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+
+    def _invalidate_if_changed(self):
+        sig = _archive_signature(self.archive)
         if sig is None or sig != getattr(self, "_archive_sig", None):
             _reread_directory(self)
             self._archive_sig = sig
 
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+
+    # In a PySpark worker this package is first imported by a task whose
+    # setup (setup_spark_files' invalidate_caches) has just re-read every
+    # zip directory on the path: record those reads, so the worker's next
+    # task re-reads none.
+    for _importer in list(sys.path_importer_cache.values()):
+        if isinstance(_importer, zipimport.zipimporter):
+            _importer._archive_sig = _archive_signature(_importer.archive)

@@ -347,10 +347,11 @@ def decontaminate_parquet(
     exactly like ``build_sketches_parquet``."""
     import pyarrow as pa
 
-    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
+    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
 
     eval_text_col = eval_text_col or text_col
-    id_field = parquet_schema(path, [id_col])[id_col]
+    files = list_parquet_files(path)
+    id_field = parquet_schema(files, [id_col])[id_col]
     try:
         table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
     except EvalGramOverflow:
@@ -371,7 +372,7 @@ def decontaminate_parquet(
                         names=[id_col, "gram_hash"],
                     )
 
-        corpus_grams = map_parquet_batches(spark, path, gfn, gram_schema, [id_col, text_col], filter)
+        corpus_grams = map_parquet_batches(spark, files, gfn, gram_schema, [id_col, text_col], filter)
         return _flag_via_join(corpus_grams, eval_df, id_col, eval_text_col, n, unit)
     probe_state = _probe_blob(spark, table, method, bloom_fpr)
 
@@ -393,4 +394,4 @@ def decontaminate_parquet(
                     names=[id_col, "n_matched_grams"],
                 )
 
-    return map_parquet_batches(spark, path, fn, schema, [id_col, text_col], filter)
+    return map_parquet_batches(spark, files, fn, schema, [id_col, text_col], filter)

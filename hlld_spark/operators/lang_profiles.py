@@ -836,10 +836,11 @@ def lang_id_profiles_parquet(
     import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
-    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
+    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
 
     carry = list(carry_cols or [])
-    schema = StructType([*parquet_schema(path, carry), StructField(out, StringType(), False)])
+    files = list_parquet_files(path)
+    schema = StructType([*parquet_schema(files, carry), StructField(out, StringType(), False)])
 
     def fn(batches):
         from .dedup import _ascii_text_buffer
@@ -874,4 +875,4 @@ def lang_id_profiles_parquet(
             out_pdf[out] = lang.values
             yield pa.RecordBatch.from_pandas(out_pdf, preserve_index=False)
 
-    return map_parquet_batches(spark, path, fn, schema, carry + [text_col], filter)
+    return map_parquet_batches(spark, files, fn, schema, carry + [text_col], filter)

@@ -720,9 +720,10 @@ def multimodal_features_parquet(
     row at image-corpus scale."""
     import pyarrow as pa
 
-    from ..sources.parquet_scan import map_parquet_batches, parquet_schema
+    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
 
-    id_field = parquet_schema(path, [id_col])[id_col]
+    files = list_parquet_files(path)
+    id_field = parquet_schema(files, [id_col])[id_col]
     schema = StructType(
         [
             id_field,
@@ -776,7 +777,7 @@ def multimodal_features_parquet(
             out = pd.DataFrame({id_col: ids, "kind": kinds, "features": imf, "audio_features": auf})
             yield pa.RecordBatch.from_pandas(out, preserve_index=False)
 
-    return map_parquet_batches(spark, path, fn, schema, [id_col, payload_col], filter)
+    return map_parquet_batches(spark, files, fn, schema, [id_col, payload_col], filter)
 
 
 def sample_video_frames(

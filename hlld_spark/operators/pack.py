@@ -55,17 +55,22 @@ def with_global_token_offsets(
     # Scan parquet nodes each with its own regexp_extract_all). An
     # explicit shared exchange can't fix it: column pruning gives the
     # two branches different exchange inputs, so ReuseExchange never
-    # matches. localCheckpoint(eager=False) materializes the bucketed
-    # rows ONCE and both branches read the checkpoint (same pattern as
-    # the connected-components rounds in operators/cluster.py). Callers
-    # should pass a NARROW frame (pack_sequences projects to
-    # (id, count)): the checkpoint then stores ~16-24 B/row — far
-    # cheaper than a second full scan+tokenize whenever upstream
-    # per-row work dominates, and the same order as the window shuffle
-    # the computation needs anyway. The bucket prefixes come back via a
-    # broadcast join (n_buckets rows ≪ docs by construction), so doc
-    # rows cross exactly ONE exchange (the window's).
-    b = df.withColumn("__bucket", bucket).localCheckpoint(eager=False)
+    # matches. A lazy checkpoint materializes the bucketed rows and both
+    # branches read it (same pattern as the connected-components rounds
+    # in operators/cluster.py). Callers should pass a NARROW frame
+    # (pack_sequences projects to (id, count)): the checkpoint then
+    # stores ~16-24 B/row — far cheaper than a second full scan+tokenize
+    # whenever upstream per-row work dominates.
+    # With a checkpoint dir set, the checkpoint is the reliable one: a
+    # lost executor's rows are re-read from it, where a local checkpoint
+    # fails the job. A reliable checkpoint is not cached, so writing its
+    # files computes the upstream again (RDD.checkpoint's documented
+    # cost); a local checkpoint caches it and computes it once.
+    bucketed = df.withColumn("__bucket", bucket)
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        b = bucketed.checkpoint(eager=False)
+    else:
+        b = bucketed.localCheckpoint(eager=False)
     totals = b.groupBy("__bucket").agg(F.sum(count_col).alias("__btot"))
     # global window over BUCKET AGGREGATES only — n_buckets rows
     wb = Window.orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1)
@@ -78,8 +83,11 @@ def with_global_token_offsets(
         .orderBy(id_col)
         .rowsBetween(Window.unboundedPreceding, -1)
     )
+    # no broadcast hint: there is one prefix row per non-empty bucket, up
+    # to one per doc when ids are sparse, so the optimizer (AQE at run
+    # time) picks the join; a small prefix side is still broadcast
     return (
-        b.join(F.broadcast(prefixes), "__bucket")
+        b.join(prefixes, "__bucket")
         .withColumn(
             out_col,
             F.col("__bprefix") + F.coalesce(F.sum(count_col).over(ww), F.lit(0)),

@@ -26,6 +26,15 @@ Scale properties (designed for 10^12 rows / 1000 executors):
   for sketch builds (the partial agg *is* the salt).
 * input scan prunes to ``keys + [col]`` before entering Python, so
   parquet reads only the needed columns (check .explain ReadSchema).
+
+Where the rows come from: ``build_sketches_parquet`` plans file splits on
+the driver and reads them in the Python tasks with pyarrow
+(``sources/parquet_scan.py``). ``build_sketches`` does the same when its
+pruned input is a bare parquet file scan — e.g. ``spark.read.parquet(p)``
+with only columns selected — so no row crosses the JVM scan or the
+JVM→Python Arrow channel; any other input streams its rows into stage 1
+through ``mapInArrow``. Both feed the same partial kernel and
+``_merge_partials``.
 """
 
 from __future__ import annotations
@@ -38,6 +47,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
 from ..core.accumulator import HllSpec, accumulator_for, deserialize_any, merge_serialized
+from ..sources.parquet_scan import bare_parquet_files, list_parquet_files, map_parquet_batches, parquet_schema
 
 _SKETCH_FIELD = "sketch"
 _NROWS_FIELD = "n_rows"
@@ -192,13 +202,58 @@ def build_sketches(
 
     ``spec`` defaults to reference-default HLL (p=12, eps≈2%
     — /root/reference/src/config.c:26-27).
+
+    The input is pruned to ``keys + [col]``. When that pruned frame is a
+    bare parquet file scan (:func:`~hlld_spark.sources.parquet_scan.bare_parquet_files`,
+    decided from the optimized plan without running a job), the build
+    reads its files worker-side as :func:`build_sketches_parquet` does, so
+    no row crosses the JVM scan or the JVM→Python Arrow channel. It
+    takes the ``mapInArrow`` path over the frame's rows instead when the
+    pruned plan holds anything but column references over one parquet
+    relation (a filter, a derived or aliased column, a limit, a join, a
+    cached or streaming frame, a non-file source); when the relation is
+    partitioned or bucketed, or reads with ``mergeSchema``,
+    ``ignoreCorruptFiles``, ``ignoreMissingFiles`` or field ids; when a
+    file is not a ``file:`` URI; or when a column's Spark type is not
+    string, binary, boolean or a byte/short/int/long/float/double number,
+    differs from the type in the first file's footer, or reaches Python
+    as another Arrow type than pyarrow reads (e.g. ``binaryAsString``
+    over unannotated binary, a dictionary-encoded column, large var
+    types). Both paths give byte-identical HLL, CMS and Bloom sketches and
+    equal ``n_rows``; KLL and t-digest fold in a different order, so they
+    agree within rank error.
     """
     spec = spec if spec is not None else HllSpec()
     keys = list(keys or [])
     accumulator_for(spec)  # validate early, on the driver
     pruned = df.select(*keys, col)
     schema = _result_schema(pruned.schema, keys)
+    files = bare_parquet_files(pruned)
+    if files is not None:
+        return _build_from_files(pruned.sparkSession, files, keys, col, spec, schema)
     partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
+    return _merge_partials(partials, keys, schema)
+
+
+def _build_from_files(spark, files: list[str], keys: list[str], col: str, spec, schema, filter=None) -> DataFrame:
+    """The worker-side-read build: each Python task reads its splits of
+    ``files`` with pyarrow and feeds one continuous batch stream to the
+    partial kernel, so the task emits one partial per group whatever its
+    split count; ``_merge_partials`` finishes it."""
+    partials = map_parquet_batches(
+        spark,
+        files,
+        _make_build_partials_arrow(keys, col, spec),
+        schema,
+        keys + [col],
+        filter=filter,
+        # r7: ONE wave of full-width tasks — the sketch build is uniform
+        # scan+hash work, and each Python task paid a fixed cost (mostly
+        # the zip-directory re-read hlld_spark/__init__.py now skips), so
+        # one wave measured faster (A/B: best 0.67 s vs 1.05 s at bench
+        # scale); compute-heavy consumers keep waves=2
+        waves=1,
+    )
     return _merge_partials(partials, keys, schema)
 
 
@@ -214,6 +269,7 @@ def build_sketches_parquet(
     planned on the driver and each Spark python task reads its splits
     directly with pyarrow (column-pruned, optional pushed-down filter),
     so no row data crosses the JVM↔Python Arrow IPC channel.
+    ``build_sketches`` takes the same path for a bare parquet scan.
 
     Why this exists: profiled on local[N], the generic DataFrame path
     saturates at ~5.4M rows/s on the shared JVM-side Arrow IPC/allocator
@@ -234,37 +290,14 @@ def build_sketches_parquet(
     an unsigned integer or, in a file Spark did not write, an INT96
     timestamp — their Arrow read has no Spark type to hand back, so the
     build raises ``ValueError`` here instead of failing in the tasks. A
-    missing key or value column also raises here.
+    key or value column missing from the first file also raises here.
     """
-    import pyarrow.parquet as pq
-
-    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
-
     spec = spec if spec is not None else HllSpec()
     keys = list(keys or [])
     accumulator_for(spec)
-    first = list_parquet_files(path)[0]
-    # the value column is only hashed or measured, so it needs no Spark type
-    if col not in pq.read_schema(first).names:
-        raise ValueError(f"parquet column {col!r} missing under {path!r}")
-    schema = _result_schema(parquet_schema(first, keys), keys)
-    # one continuous batch stream per task ⇒ one partial per (task,
-    # group), amortized across all of the task's splits
-    partials = map_parquet_batches(
-        spark,
-        path,
-        _make_build_partials_arrow(keys, col, spec),
-        schema,
-        keys + [col],
-        filter=filter,
-        # r7: ONE wave of full-width tasks — the sketch build is uniform
-        # scan+hash work, and each Python task paid a fixed cost (mostly
-        # the zip-directory re-read hlld_spark/__init__.py now skips), so
-        # one wave measured faster (A/B: best 0.67 s vs 1.05 s at bench
-        # scale); compute-heavy consumers keep waves=2
-        waves=1,
-    )
-    return _merge_partials(partials, keys, schema)
+    files = list_parquet_files(path)
+    schema = _result_schema(parquet_schema(files, keys), keys)
+    return _build_from_files(spark, files, keys, col, spec, schema, filter)
 
 
 def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:

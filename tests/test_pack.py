@@ -2,6 +2,7 @@
 bit-identical to a naive running sum; chunk math checked by hand and by
 reconstruction invariants."""
 
+import os
 import random
 
 import pytest
@@ -30,6 +31,55 @@ def test_offsets_match_naive_prefix_sum(spark):
     for i, n in sorted(rows):
         assert got[i] == acc, i
         acc += n
+
+
+def _naive_offsets(rows) -> dict:
+    out, acc = {}, 0
+    for i, n in sorted(rows):
+        out[i] = acc
+        acc += n
+    return out
+
+
+@pytest.mark.spark
+def test_sparse_64bit_ids_plan_no_forced_broadcast(spark):
+    """One bucket per doc (sparse 64-bit ids, span 1): the offsets are the
+    running sum, and the prefix join carries no broadcast hint, so the
+    optimizer sizes it."""
+    rng = random.Random(5)
+    ids = rng.sample(range(-(1 << 61), 1 << 61), 400)
+    rows = [(i, rng.randrange(0, 50)) for i in ids]
+    df = spark.createDataFrame(rows, "doc_id long, n long")
+    out = with_global_token_offsets(df, "doc_id", "n", bucket_span=1)
+    assert "broadcast" not in out._jdf.queryExecution().optimizedPlan().toString().lower()
+    assert {r["doc_id"]: r["token_offset"] for r in out.collect()} == _naive_offsets(rows)
+
+
+@pytest.mark.spark
+def test_reliable_and_local_checkpoint_give_identical_offsets(spark, tmp_path):
+    """With a checkpoint dir set, the bucketed rows go through a reliable
+    checkpoint (files in that dir); without one, a local checkpoint. Both
+    give the naive running sum."""
+    rng = random.Random(9)
+    rows = [(i, rng.randrange(0, 300)) for i in rng.sample(range(0, 1 << 40), 500)]
+    df = spark.createDataFrame(rows, "doc_id long, n long")
+    sc = spark.sparkContext
+
+    def offsets():
+        return {r["doc_id"]: r["token_offset"] for r in with_global_token_offsets(df, "doc_id", "n", bucket_span=1 << 30).collect()}
+
+    assert sc.getCheckpointDir() is None
+    local = offsets()
+    sc.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        reliable = offsets()
+        # the reliable branch wrote its checkpoint files under the dir
+        assert any(files for _, _, files in os.walk(tmp_path / "ckpt"))
+    finally:
+        # SparkContext has no public way to clear the dir again
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert local == reliable == _naive_offsets(rows)
 
 
 @pytest.mark.spark

@@ -186,17 +186,19 @@ def test_many_groups_sparse_builder(spark, wp):
 
 def test_parquet_direct_build_matches_dataframe_path(spark, wp, tmp_path):
     """build_sketches_parquet (worker-side scan) is byte-identical to the
-    generic DataFrame path, for grouped and global builds."""
+    generic DataFrame path, for grouped and global builds. The DataFrame
+    side builds from ``wp``, the cached frame written to ``d``: a build of
+    ``spark.read.parquet(d)`` would take the same pyarrow read."""
     from hlld_spark.operators.sketch import build_sketches_parquet
 
     d = str(tmp_path / "wp")
     wp.write.parquet(d)
     spec = HllSpec(12)
     a = {r["lang"]: bytes(r["sketch"]) for r in build_sketches_parquet(spark, d, ["lang"], "url", spec).collect()}
-    b = {r["lang"]: bytes(r["sketch"]) for r in build_sketches(spark.read.parquet(d), ["lang"], "url", spec).collect()}
+    b = {r["lang"]: bytes(r["sketch"]) for r in build_sketches(wp, ["lang"], "url", spec).collect()}
     assert a == b
     ga = build_sketches_parquet(spark, d, [], "url", spec).collect()[0]
-    gb = build_sketches(spark.read.parquet(d), [], "url", spec).collect()[0]
+    gb = build_sketches(wp, [], "url", spec).collect()[0]
     assert bytes(ga["sketch"]) == bytes(gb["sketch"]) and ga["n_rows"] == gb["n_rows"]
 
 

@@ -64,7 +64,11 @@ def test_plan_column_pruning(spark, sf_dir):
     # — would materialize every column into the cache instead)
     spark.catalog.clearCache()
     fresh = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    sk = build_sketches(fresh, ["lang"], "doc_id", HllSpec(12))
+    # a bare scan is read worker-side (only the key and value columns): no JVM scan
+    routed = build_sketches(fresh, ["lang"], "doc_id", HllSpec(12))
+    assert read_columns(routed) == [] and scan_info(routed)["has_python_map_in_arrow"]
+    # any other input keeps the JVM scan, pruned to the columns the build uses
+    sk = build_sketches(fresh.where(F.col("doc_id").isNotNull()), ["lang"], "doc_id", HllSpec(12))
     cols = read_columns(sk)
     assert set(cols) == {"lang", "doc_id"}  # text/source/n_chars not read
     assert scan_info(sk)["has_python_map_in_arrow"]

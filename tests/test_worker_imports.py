@@ -100,3 +100,65 @@ def test_reused_worker_skips_zip_directory_reads(spark):
     assert reused
     assert [r["reads"] for r in reused] == [0] * len(reused)
     assert all(r["pyspark_zips"] > 0 for r in reused)
+
+
+@pytest.mark.spark
+@pytest.mark.skipif(sys.version_info >= (3, 12), reason="3.12+ re-reads zip directories lazily")
+def test_fresh_worker_second_task_reads_no_zip_directory(spark):
+    """The task that first imports hlld_spark in a worker records the zip
+    directories its setup has just read, so the worker's next task —
+    whose setup calls ``invalidate_caches()`` again — reads none. A new
+    entry in ``SparkContext.environment`` gives these tasks their own
+    worker pool, so the workers are fresh whatever ran before."""
+
+    # nested, so they are pickled by value and do not import hlld_spark themselves
+    def first(batches):
+        import os
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+
+        fresh = "hlld_spark" not in sys.modules
+        import hlld_spark  # noqa: F401
+
+        # count every zip-directory read from here on, across this worker's tasks
+        reads = zipimport._probe_reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"fresh": [fresh], "pid": [os.getpid()], "reads": [0]})
+
+    def second(batches):
+        import os
+        import zipimport
+
+        import pyarrow as pa
+
+        reads = getattr(zipimport, "_probe_reads", None)
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"fresh": [reads is not None], "pid": [os.getpid()], "reads": [-1 if reads is None else len(reads)]}
+        )
+
+    sc = spark.sparkContext
+    n = sc.defaultParallelism
+    df = spark.range(0, n, 1, n)
+    schema = "fresh boolean, pid long, reads long"
+    sc.environment["HLLD_SPARK_PROBE_POOL"] = str(id(df))
+    try:
+        firsts = df.mapInArrow(first, schema).collect()
+        seconds = df.mapInArrow(second, schema).collect()
+    finally:
+        del sc.environment["HLLD_SPARK_PROBE_POOL"]
+    assert all(r["fresh"] for r in firsts)
+    probed = [r for r in seconds if r["fresh"]]
+    assert probed and {r["pid"] for r in probed} <= {r["pid"] for r in firsts}
+    assert [r["reads"] for r in probed] == [0] * len(probed)
