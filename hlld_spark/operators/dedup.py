@@ -341,13 +341,13 @@ _WS_TABLE[[0x85, 0xA0, 0x1680, *range(0x2000, 0x200B), 0x2028, 0x2029, 0x202F, 0
 
 
 def _utf8_values(col) -> tuple[np.ndarray, np.ndarray]:
-    """(uint8 value bytes, per-doc byte lengths) of a null-free Arrow
-    ``string``/``large_string`` array; zero-copy except slicing."""
+    """(uint8 value bytes, per-row byte lengths) of a null-free Arrow
+    string or binary array, regular or large; zero-copy except slicing."""
     n = len(col)
     if n == 0:
         return np.zeros(0, dtype=np.uint8), np.zeros(0, dtype=np.int64)
     _, obuf, vbuf = col.buffers()
-    odt = np.int64 if pa.types.is_large_string(col.type) else np.int32
+    odt = np.int64 if pa.types.is_large_string(col.type) or pa.types.is_large_binary(col.type) else np.int32
     offs = np.frombuffer(obuf, dtype=odt, count=col.offset + n + 1)[col.offset :].astype(np.int64)
     data = np.frombuffer(vbuf or b"", dtype=np.uint8, count=int(offs[-1]))[offs[0] :]
     return data, np.diff(offs)
@@ -447,9 +447,7 @@ def _token_shingle_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray, np.nda
     return h, out_off, ntoks
 
 
-def _minhash_signatures(
-    texts: pd.Series, num_perm: int, k: int, seed: int = 1, unit: str = "char"
-) -> np.ndarray:
+def _minhash_signatures(texts, num_perm: int, k: int, seed: int = 1, unit: str = "char") -> np.ndarray:
     """(n_docs, num_perm) uint64 minhash signatures, vectorized: one
     shingle-hash pass + num_perm affine mixes with minimum.reduceat.
     ``unit="token"`` (r4) shingles k whitespace tokens instead of k
@@ -475,6 +473,29 @@ def _minhash_signatures(
     return sig
 
 
+def _signature_matrix(arr, num_perm: int) -> np.ndarray:
+    """The (n, num_perm) uint64 view of an Arrow binary column of
+    signatures (``num_perm`` little-endian uint64s per row), zero-copy.
+    Raises ValueError on a signature of any other byte length, e.g. from
+    a persisted table signed with another ``num_perm``."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    data, lens = _utf8_values(arr)
+    if (lens != num_perm * 8).any():
+        raise ValueError(
+            f"signature byte lengths {sorted(set(lens.tolist()))[:4]} do not match num_perm={num_perm} "
+            f"({num_perm * 8} bytes): the table was signed with other parameters"
+        )
+    return data.view(np.uint64).reshape(len(arr), num_perm)
+
+
+def _binary_rows(mat: np.ndarray) -> pa.Array:
+    """A C-contiguous 2-D array as an Arrow binary array of its rows."""
+    n, width = len(mat), mat.shape[1] * mat.itemsize
+    offsets = np.arange(n + 1, dtype=np.int32) * np.int32(width)
+    return pa.Array.from_buffers(pa.binary(), n, [None, pa.py_buffer(offsets), pa.py_buffer(mat)])
+
+
 def minhash_signature_df(
     df: DataFrame,
     id_col: str,
@@ -491,22 +512,16 @@ def minhash_signature_df(
     column's METADATA (survives a parquet round-trip), and
     :func:`minhash_dedup_against` asserts they match at probe time
     (ADVICE r4: a silent mismatch returned near-zero matches)."""
-    out_schema = StructType(
-        [df.schema[id_col], StructField("signature", BinaryType(), False)]
-    )
+    out_schema = StructType([df.schema[id_col], StructField("signature", BinaryType(), False)])
 
     def compute(batches):
-        for pdf in batches:
-            sig = _minhash_signatures(pdf[text_col], num_perm, shingle_k, unit=shingle_unit)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "signature": [s.tobytes() for s in sig]}
-            )
+        for rb in batches:
+            sig = _minhash_signatures(rb.column(text_col), num_perm, shingle_k, unit=shingle_unit)
+            yield pa.RecordBatch.from_arrays([rb.column(id_col), _binary_rows(sig)], names=[id_col, "signature"])
 
-    out = df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
+    out = df.select(id_col, text_col).mapInArrow(compute, schema=out_schema)
     meta = {"num_perm": num_perm, "shingle_k": shingle_k, "shingle_unit": shingle_unit}
-    return out.select(
-        id_col, F.col("signature").alias("signature", metadata=meta)
-    )
+    return out.select(id_col, F.col("signature").alias("signature", metadata=meta))
 
 
 def minhash_bands(sig_df: DataFrame, id_col: str, num_perm: int, bands: int) -> DataFrame:
@@ -525,28 +540,26 @@ def minhash_bands(sig_df: DataFrame, id_col: str, num_perm: int, bands: int) -> 
     )
 
     def explode_bands(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            n = rb.num_rows
+            if n == 0:
                 continue
-            sigs = np.stack([np.frombuffer(s, dtype=np.uint64) for s in pdf["signature"]])
-            out_band, out_bucket, out_id, out_sig = [], [], [], []
-            for b in range(bands):
-                chunk = sigs[:, b * rows : (b + 1) * rows]
-                bucket = hll_hash([c.tobytes() for c in chunk]).astype(np.int64)
-                out_band.append(np.full(len(pdf), b, dtype=np.int64))
-                out_bucket.append(bucket)
-                out_id.append(pdf[id_col].values)
-                out_sig.extend(pdf["signature"].values)
-            yield pd.DataFrame(
-                {
-                    "band": np.concatenate(out_band),
-                    "bucket": np.concatenate(out_bucket),
-                    id_col: np.concatenate(out_id),
-                    "signature": out_sig,
-                }
+            sigs = _signature_matrix(rb.column("signature"), num_perm)
+            buckets = [
+                hll_hash(_binary_rows(np.ascontiguousarray(sigs[:, b * rows : (b + 1) * rows]))).view(np.int64)
+                for b in range(bands)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.repeat(np.arange(bands, dtype=np.int64), n)),
+                    pa.array(np.concatenate(buckets)),
+                    pa.concat_arrays([rb.column(id_col)] * bands),
+                    pa.concat_arrays([rb.column("signature")] * bands),
+                ],
+                names=["band", "bucket", id_col, "signature"],
             )
 
-    return sig_df.mapInPandas(explode_bands, schema=band_schema)
+    return sig_df.select(id_col, "signature").mapInArrow(explode_bands, schema=band_schema)
 
 
 def minhash_dedup_against(
@@ -602,11 +615,9 @@ def minhash_dedup_against(
     ).withColumnRenamed("signature", "__sig_c")
     cand = nb.join(cb, ["band", "bucket"])
 
-    @F.pandas_udf(DoubleType())
-    def est_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-        sa = np.stack([np.frombuffer(x, dtype=np.uint64) for x in a])
-        sb = np.stack([np.frombuffer(x, dtype=np.uint64) for x in b])
-        return pd.Series((sa == sb).mean(axis=1))
+    @F.arrow_udf(DoubleType())
+    def est_udf(a, b):
+        return pa.array((_signature_matrix(a, num_perm) == _signature_matrix(b, num_perm)).mean(axis=1))
 
     scored = (
         cand.withColumn("jaccard_est", est_udf(F.col("__sig_n"), F.col("__sig_c")))
@@ -619,58 +630,110 @@ def minhash_dedup_against(
     return all_ids.join(scored, "id", "left")
 
 
-def _capped_cluster_pairs(ids: np.ndarray, score, is_hit, cap: int):
-    """Generic capped within-bucket pairing (VERDICT r2 #6).
+def _verify_fold(keys: list[str], id_col: str, to_matrix, score, is_hit, cap: int):
+    """The one within-bucket verify kernel (mapInArrow). Its input arrives
+    sorted by ``(*keys, id_col)``, so a bucket is a run of equal keys,
+    which may cross batch boundaries. ``to_matrix(batch)`` gives one value
+    row per input row, ``score(A, B)`` the score matrix between value rows
+    and ``is_hit(S)`` its match mask.
 
-    ``ids`` must be sorted ascending; ``score(ia, ib)`` returns the
-    (len(ia), len(ib)) pairwise score matrix between row-index arrays;
-    ``is_hit(S)`` the boolean match mask.
+    A run is cut into chunks of ``cap`` rows in id order; the first is the
+    head. Each chunk is scored all-pairs, and each later chunk against the
+    head too, so a hot bucket keeps every pair that shares a chunk or has
+    a row in the head; a pair spanning two non-head chunks is missed by
+    this bucket (VERDICT r2 #6, r3 #8). Cost ≤ 2·n·cap scores; the fold
+    holds at most the head, the open chunk and one batch, and skips the
+    one-row runs inside a batch unvisited.
 
-    Shape: the bucket is processed in id-sorted chunks of ``cap`` rows.
-    Every chunk runs ALL-PAIRS internally, and every overflow chunk is
-    additionally scored against the ENTIRE head chunk (the cap
-    smallest-id rows) — not just the single bucket min. So a hot bucket
-    keeps full recall for (a) any pair co-resident in a chunk and (b)
-    any pair whose cluster reaches the head chunk, where the old
-    min-only anchoring lost every overflow-tail pair whose cluster
-    didn't include the one minimum row. Cost ≤ 2·n·cap comparisons —
-    still linear in bucket size.
+    Yields (id, keeper_id, score) batches, one row per matched row of a
+    bucket: keeper = its smallest matching id (a head hit wins)."""
+    if cap < 1:
+        raise ValueError(f"max_bucket_pairwise must be at least 1, got {cap}")
 
-    Returns (ids, keeper_ids, scores) numpy arrays: one row per matched
-    doc, keeper = its smallest matching id seen (head hits win, since
-    head ids are globally smallest).
-    """
-    n = len(ids)
-    out_i: list = []
-    out_k: list = []
-    out_s: list = []
-    head = np.arange(min(cap, n))
-    for lo in range(0, n, cap):
-        idx = np.arange(lo, min(lo + cap, n))
-        S = score(idx, idx)
-        hit = np.tril(is_hit(S), -1)  # keeper candidates: strictly smaller ids
-        any_local = hit.any(axis=1)
-        first_local = hit.argmax(axis=1)
-        if lo == 0:
-            rows = np.flatnonzero(any_local)
-            out_i.extend(ids[idx[rows]])
-            out_k.extend(ids[idx[first_local[rows]]])
-            out_s.extend(S[rows, first_local[rows]])
-            continue
-        S0 = score(idx, head)
-        hit0 = is_hit(S0)
-        any_head = hit0.any(axis=1)
-        first_head = hit0.argmax(axis=1)
-        for r in np.flatnonzero(any_local | any_head):
-            if any_head[r]:  # head ids < this chunk's ids: smallest keeper
-                out_i.append(ids[idx[r]])
-                out_k.append(ids[head[first_head[r]]])
-                out_s.append(S0[r, first_head[r]])
+    def fold(batches):
+        run_key, head, open_ids, open_vals, out = None, None, [], [], []
+
+        def close_chunk():
+            nonlocal head
+            ids, vals = pa.concat_arrays(open_ids), np.concatenate(open_vals)
+            open_ids.clear()
+            open_vals.clear()
+            S = score(vals, vals)
+            hit = np.tril(is_hit(S), -1)  # keeper candidates: strictly smaller ids
+            first = np.where(hit.any(axis=1), hit.argmax(axis=1), -1)
+            keepers = ids
+            if head is None:
+                head = (ids, vals)
             else:
-                out_i.append(ids[idx[r]])
-                out_k.append(ids[idx[first_local[r]]])
-                out_s.append(S[r, first_local[r]])
-    return np.asarray(out_i), np.asarray(out_k), np.asarray(out_s, dtype=np.float64)
+                S0 = score(vals, head[1])
+                hit0 = is_hit(S0)
+                first = np.where(hit0.any(axis=1), len(ids) + hit0.argmax(axis=1), first)
+                S, keepers = np.hstack([S, S0]), pa.concat_arrays([ids, head[0]])
+            rows = np.flatnonzero(first >= 0)
+            out.append((ids.take(rows), keepers.take(first[rows]), S[rows, first[rows]]))
+
+        def emit():
+            i, k, sc = zip(*out)
+            out.clear()
+            cols = [pa.concat_arrays(i), pa.concat_arrays(k), pa.array(np.concatenate(sc))]
+            return pa.RecordBatch.from_arrays(cols, names=["id", "keeper_id", "score"])
+
+        for rb in batches:
+            if rb.num_rows == 0:
+                continue
+            kcols = [rb.column(k).to_numpy(zero_copy_only=False) for k in keys]
+            brk = np.flatnonzero(np.any([c[1:] != c[:-1] for c in kcols], axis=0)) + 1
+            bounds = np.concatenate(([0], brk, [rb.num_rows]))
+            visit = np.diff(bounds) > 1
+            visit[[0, -1]] = True  # the edge runs may continue across batches
+            ids, vals = rb.column(id_col), to_matrix(rb)
+            for r in np.flatnonzero(visit):
+                lo, hi = int(bounds[r]), int(bounds[r + 1])
+                key = tuple(c[lo] for c in kcols)
+                if key != run_key:
+                    if open_ids:
+                        close_chunk()
+                    run_key, head = key, None
+                while lo < hi:
+                    take = min(cap - sum(map(len, open_vals)), hi - lo)
+                    open_ids.append(ids.slice(lo, take))
+                    open_vals.append(vals[lo : lo + take])
+                    lo += take
+                    if sum(map(len, open_vals)) == cap:
+                        close_chunk()
+            if open_ids:  # copy the open chunk out of this batch's buffers
+                open_ids[:], open_vals[:] = [pa.concat_arrays(open_ids)], [np.concatenate(open_vals)]
+            if out:
+                yield emit()
+        if open_ids:
+            close_chunk()
+        if out:
+            yield emit()
+
+    return fold
+
+
+def _verify_runs(df: DataFrame, keys: list[str], id_col: str, score_field, to_matrix, score, is_hit, cap: int):
+    """(id, keeper_id, ``score_field``) verified pairs of the buckets
+    ``keys`` of ``df``: one :func:`_verify_fold` per shuffle partition."""
+    id_type = df.schema[id_col].dataType
+    schema = StructType([StructField("id", id_type, False), StructField("keeper_id", id_type, False), score_field])
+    fold = _verify_fold(keys, id_col, to_matrix, score, is_hit, cap)
+    return df.repartition(*keys).sortWithinPartitions(*keys, id_col).mapInArrow(fold, schema=schema)
+
+
+def _keeper_labels(pairs: DataFrame, all_ids: DataFrame, best, self_score) -> DataFrame:
+    """One (id, keeper_id, score) row per row of ``all_ids`` (one ``id``
+    column): the smallest keeper over the id's pairs, which may come from
+    several buckets, with the ``best`` of their scores; else the id itself
+    with ``self_score``."""
+    score = pairs.columns[2]
+    labels = pairs.groupBy("id").agg(F.min("keeper_id").alias("keeper_id"), best(score).alias(score))
+    return (
+        all_ids.join(labels, "id", "left")
+        .withColumn("keeper_id", F.coalesce(F.col("keeper_id"), F.col("id")))
+        .withColumn(score, F.coalesce(F.col(score), F.lit(self_score)))
+    )
 
 
 def minhash_match_pairs(
@@ -692,34 +755,16 @@ def minhash_match_pairs(
     connected components). Shuffle shape: (band_key → id, signature)
     rows only — text never moves past signature computation."""
     sig_df = minhash_signature_df(df, id_col, text_col, num_perm, shingle_k, shingle_unit).cache()
-    banded = minhash_bands(sig_df, id_col, num_perm, bands)
-
-    id_type = sig_df.schema[id_col].dataType
-    pair_schema = StructType(
-        [
-            StructField("id", id_type, False),
-            StructField("keeper_id", id_type, False),
-            StructField("jaccard_est", DoubleType(), False),
-        ]
+    return _verify_runs(
+        minhash_bands(sig_df, id_col, num_perm, bands),
+        ["band", "bucket"],
+        id_col,
+        StructField("jaccard_est", DoubleType(), False),
+        lambda rb: _signature_matrix(rb.column("signature"), num_perm),
+        lambda A, B: (A[:, None, :] == B[None, :, :]).mean(axis=2),
+        lambda S: S >= threshold,
+        max_bucket_pairwise,
     )
-    cap = max_bucket_pairwise
-
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id": [], "keeper_id": [], "jaccard_est": []})
-        order = np.argsort(pdf[id_col].to_numpy())
-        ids = pdf[id_col].to_numpy()[order]
-        sigs = np.stack([np.frombuffer(s, dtype=np.uint64) for s in pdf["signature"].to_numpy()[order]])
-        i, k, s = _capped_cluster_pairs(
-            ids,
-            lambda ia, ib: (sigs[ia][:, None, :] == sigs[ib][None, :, :]).mean(axis=2),
-            lambda S: S >= threshold,
-            cap,
-        )
-        return pd.DataFrame({"id": i, "keeper_id": k, "jaccard_est": s})
-
-    return banded.groupBy("band", "bucket").applyInPandas(bucket_pairs, schema=pair_schema)
 
 
 def minhash_lsh_dedup(
@@ -749,9 +794,9 @@ def minhash_lsh_dedup(
     means two near-dups sharing a bucket are paired even when neither
     matches the bucket's min-id doc. Buckets hotter than
     ``max_bucket_pairwise`` run chunked all-pairs + head-chunk anchoring
-    (:func:`_capped_cluster_pairs`): overflow pairs co-resident in a
-    chunk, or whose cluster reaches the cap smallest-id rows, are still
-    found (VERDICT r2 #6 — min-only anchoring lost overflow-tail pairs).
+    (:func:`_verify_fold`): overflow pairs co-resident in a chunk, or
+    whose cluster reaches the cap smallest-id rows, are still found
+    (VERDICT r2 #6 — min-only anchoring lost overflow-tail pairs).
 
     Scale shape: rows shuffled are (band_key → id, signature) pairs —
     band keys are 8-byte hashes, signatures num_perm*8 bytes; no text
@@ -768,16 +813,7 @@ def minhash_lsh_dedup(
         max_bucket_pairwise=max_bucket_pairwise,
         shingle_unit=shingle_unit,
     )
-    # a doc may match in several bands/buckets → global min keeper
-    labels = pairs.groupBy("id").agg(
-        F.min("keeper_id").alias("keeper_id"), F.max("jaccard_est").alias("jaccard_est")
-    )
-    all_ids = df.select(F.col(id_col).alias("id"))
-    out = (
-        all_ids.join(labels, "id", "left")
-        .withColumn("keeper_id", F.coalesce(F.col("keeper_id"), F.col("id")))
-        .withColumn("jaccard_est", F.coalesce(F.col("jaccard_est"), F.lit(1.0)))
-    )
+    out = _keeper_labels(pairs, df.select(F.col(id_col).alias("id")), F.max, 1.0)
     # transitive closure by pointer jumping: keeper ← keeper(keeper),
     # log₂(chain length) rounds collapse chains (A→B→C ⇒ A→C). Each round
     # is one self-join on the small (id, keeper) label table.
@@ -849,7 +885,7 @@ def hash64_block_dedup(
     shared block); verified by ALL-PAIRS popcount ≤ threshold within
     the bucket (vectorized m×m xor; overflow beyond
     ``max_bucket_pairwise`` runs chunked all-pairs + head-chunk
-    anchoring — see :func:`_capped_cluster_pairs`). NULL hashes (e.g.
+    anchoring — see :func:`_verify_fold`). NULL hashes (e.g.
     undecodable images) never pair and keep themselves. Only
     (id, block_val, hash) scalars shuffle — never payloads. Returns one
     row per ``all_ids`` row (default: ``hash_df``'s ids):
@@ -868,43 +904,18 @@ def hash64_block_dedup(
         )
         exploded = part if exploded is None else exploded.unionAll(part)
 
-    id_type = hash_df.schema[id_col].dataType
-    pair_schema = StructType(
-        [
-            StructField("id", id_type, False),
-            StructField("keeper_id", id_type, False),
-            StructField("hamming", LongType(), False),
-        ]
+    pairs = _verify_runs(
+        exploded,
+        ["block", "block_val"],
+        "id",
+        StructField("hamming", LongType(), False),
+        lambda rb: rb.column("__h64").to_numpy().view(np.uint64),
+        lambda A, B: _popcount64(A[:, None] ^ B[None, :]),
+        lambda S: S <= hamming_threshold,
+        max_bucket_pairwise,
     )
-    thr = hamming_threshold
-    cap = max_bucket_pairwise
-
-    def bucket_verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id": [], "keeper_id": [], "hamming": []})
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        hs = pdf["__h64"].to_numpy().astype(np.uint64)[order]
-        i, k, s = _capped_cluster_pairs(
-            ids,
-            lambda ia, ib: _popcount64(hs[ia][:, None] ^ hs[ib][None, :]),
-            lambda S: S <= thr,
-            cap,
-        )
-        return pd.DataFrame({"id": i, "keeper_id": k, "hamming": s.astype(np.int64)})
-
-    pairs = exploded.groupBy("block", "block_val").applyInPandas(bucket_verify, schema=pair_schema)
-    labels = pairs.groupBy("id").agg(F.min("keeper_id").alias("keeper_id"), F.min("hamming").alias("hamming"))
-    if all_ids is None:
-        all_ids = hash_df.select(F.col(id_col).alias("id"))
-    else:
-        all_ids = all_ids.select(F.col(id_col).alias("id"))
-    return (
-        all_ids.join(labels, "id", "left")
-        .withColumn("keeper_id", F.coalesce(F.col("keeper_id"), F.col("id")))
-        .withColumn("hamming", F.coalesce(F.col("hamming"), F.lit(0)))
-    )
+    all_ids = (hash_df if all_ids is None else all_ids).select(F.col(id_col).alias("id"))
+    return _keeper_labels(pairs, all_ids, F.min, 0)
 
 
 def simhash_dedup(
@@ -1044,7 +1055,7 @@ def embedding_cosine_dedup(
     buckets, exact ALL-PAIRS cosine verify within the bucket (one m×m
     gram matmul over unit-normalized vectors; overflow beyond
     ``max_bucket_pairwise`` runs chunked all-pairs + head-chunk
-    anchoring — see :func:`_capped_cluster_pairs`)."""
+    anchoring — see :func:`_verify_fold`)."""
     id_type = df.schema[id_col].dataType
     sig_schema = StructType(
         [
@@ -1071,41 +1082,24 @@ def embedding_cosine_dedup(
 
     sigs = df.select(id_col, vec_col).mapInPandas(sign_buckets, schema=sig_schema)
 
-    pair_schema = StructType(
-        [
-            StructField("id", id_type, False),
-            StructField("keeper_id", id_type, False),
-            StructField("cosine", DoubleType(), False),
-        ]
-    )
-    thr = threshold
-    cap = max_bucket_pairwise
-
-    def verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id": [], "keeper_id": [], "cosine": []})
-        order = np.argsort(pdf["id"].to_numpy())
-        ids = pdf["id"].to_numpy()[order]
-        vecs = np.stack([np.asarray(v) for v in pdf["vec"]])[order]
+    def unit_rows(rb):
+        vecs = rb.column("vec").flatten().to_numpy().reshape(rb.num_rows, -1)
         norms = np.linalg.norm(vecs, axis=1)
-        unit = vecs / np.where(norms == 0, 1.0, norms)[:, None]
-        i, k, s = _capped_cluster_pairs(
-            ids,
-            lambda ia, ib: unit[ia] @ unit[ib].T,  # exact cosine, one matmul
-            lambda S: S >= thr,
-            cap,
-        )
-        return pd.DataFrame({"id": i, "keeper_id": k, "cosine": s})
+        return vecs / np.where(norms == 0, 1.0, norms)[:, None]
 
-    pairs = sigs.groupBy("bucket").applyInPandas(verify, schema=pair_schema)
-    labels = pairs.groupBy("id").agg(F.min("keeper_id").alias("keeper_id"), F.max("cosine").alias("cosine"))
-    all_ids = df.select(F.col(id_col).alias("id"))
-    return (
-        all_ids.join(labels, "id", "left")
-        .withColumn("keeper_id", F.coalesce(F.col("keeper_id"), F.col("id")))
-        .withColumn("cosine", F.coalesce(F.col("cosine"), F.lit(1.0)))
+    pairs = _verify_runs(
+        sigs,
+        ["bucket"],
+        "id",
+        StructField("cosine", DoubleType(), False),
+        unit_rows,
+        # exact cosine, one GEMM: copying B keeps numpy off its SYRK path
+        # for A @ A.T, whose rounding differs in the last bit
+        lambda A, B: A @ B.copy().T,
+        lambda S: S >= threshold,
+        max_bucket_pairwise,
     )
+    return _keeper_labels(pairs, df.select(F.col(id_col).alias("id")), F.max, 1.0)
 
 
 def _span_gram_stream(

@@ -41,22 +41,27 @@ def list_parquet_files(path: str) -> list[str]:
     Uses pyarrow.dataset discovery (works for local paths AND object
     stores like s3://, and skips `_SUCCESS`-style non-data files via the
     default '_'/'.' ignore prefixes); falls back to glob for patterns.
+    Empty (0-byte) files are dropped, as Spark's parquet scan drops them.
     """
     import glob as _glob
     import os as _os
 
     import pyarrow.dataset as _ds
+    import pyarrow.fs as _fs
 
+    fs = _fs.LocalFileSystem()
     if "*" in path or "?" in path:
-        files = sorted(_glob.glob(path))
+        files = _glob.glob(path)
     else:
         try:
-            files = sorted(_ds.dataset(path, format="parquet").files)
+            d = _ds.dataset(path, format="parquet")
+            files, fs = d.files, d.filesystem
         except Exception:
             if _os.path.isdir(path):
-                files = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
+                files = _glob.glob(_os.path.join(path, "*.parquet"))
             else:
-                files = sorted(_glob.glob(path))
+                files = _glob.glob(path)
+    files = sorted(f for f, info in zip(files, fs.get_file_info(files)) if info.size)
     if not files:
         raise ValueError(f"no parquet files under {path!r}")
     return files

@@ -9,8 +9,8 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from hlld_spark.operators.sketch import build_sketches_parquet
-from hlld_spark.sources.parquet_scan import map_parquet_batches, parquet_schema, plan_parquet_splits
+from hlld_spark.operators.sketch import build_sketches, build_sketches_parquet
+from hlld_spark.sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema, plan_parquet_splits
 from tests.conftest import assert_plan_runs_no_job
 
 pytestmark = pytest.mark.spark
@@ -33,6 +33,23 @@ def test_identity_matches_dataframe_read(spark, web_dir):
     a = sorted((r["url"], r["lang"]) for r in got.collect())
     b = sorted((r["url"], r["lang"]) for r in spark.read.parquet(web_dir).select("url", "lang").collect())
     assert a == b
+
+
+def test_listing_drops_empty_files(spark, web_dir, tmp_path):
+    """A 0-byte file in a table directory is skipped, as Spark's parquet
+    scan skips it: the worker-side build equals the build over
+    ``spark.read.parquet`` of the same directory."""
+    import shutil
+
+    d = tmp_path / "with_empty"
+    shutil.copytree(web_dir, d)
+    (d / "part-99999-empty.parquet").write_bytes(b"")
+    good = list_parquet_files(web_dir)
+    assert [f.rsplit("/", 1)[1] for f in list_parquet_files(str(d))] == [f.rsplit("/", 1)[1] for f in good]
+    assert len(list_parquet_files(str(d / "*.parquet"))) == len(good)
+    got = sorted(tuple(r) for r in build_sketches_parquet(spark, str(d), ["lang"], "url").collect())
+    want = sorted(tuple(r) for r in build_sketches(spark.read.parquet(str(d)), ["lang"], "url").collect())
+    assert got == want and len(got) > 1
 
 
 def test_filter_pushdown_both_forms(spark, web_dir):
