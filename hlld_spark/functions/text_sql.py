@@ -14,8 +14,9 @@ Functions:
     ngram_jaccard(a, b, n) → double   exact char-n-gram Jaccard of a pair
                                       (hashed kernel; the LSH verify path)
 
-All are Arrow-batched pandas UDFs over the same whole-batch kernels the
-DataFrame operators use — no per-row Python.
+All are Arrow-batched UDFs (``arrow_udf`` for the two lang-id functions,
+``pandas_udf`` for ``ngram_jaccard``) over the same whole-batch kernels
+the DataFrame operators use — no per-row Python.
 """
 
 from __future__ import annotations
@@ -26,18 +27,18 @@ from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.types import DoubleType, StringType
 
 
-@F.pandas_udf(StringType())
-def _lang_id(texts: pd.Series) -> pd.Series:
+@F.arrow_udf(StringType())
+def _lang_id(texts):
     from ..operators.text import _lang_id_batch
 
     return _lang_id_batch(texts)
 
 
-@F.pandas_udf(StringType())
-def _lang_id_profiles(texts: pd.Series) -> pd.Series:
-    from ..operators.lang_profiles import _profile_lang_batch
+@F.arrow_udf(StringType())
+def _lang_id_profiles(texts):
+    from ..operators.lang_profiles import _profile_lang
 
-    return _profile_lang_batch(texts)
+    return _profile_lang(texts)
 
 
 def _ngram_jaccard_batch(a: pd.Series, b: pd.Series, n: pd.Series) -> pd.Series:

@@ -367,19 +367,24 @@ def _ascii_text_buffer(col) -> tuple[np.ndarray, np.ndarray] | None:
     return data, lens
 
 
-def _code_points(texts) -> tuple[np.ndarray, np.ndarray]:
-    """(code-point buffer, per-doc code-point lengths) of a text batch:
-    an Arrow ``string``/``large_string`` array or chunked array, a
-    pandas Series or a list. NULLs read as "". All-ASCII batches return
-    the ``uint8`` value bytes (zero-copy); any other batch is decoded
-    once, whole, to ``uint32`` lanes."""
+def _text_array(texts) -> pa.Array:
+    """A text batch (an Arrow ``string``/``large_string`` array or
+    chunked array, a pandas Series or a list) as one null-free Arrow
+    string array; NULLs read as ""."""
     col = texts if isinstance(texts, (pa.Array, pa.ChunkedArray)) else pa.array(texts, type=pa.string())
     if isinstance(col, pa.ChunkedArray):
         col = col.combine_chunks()
     if not (pa.types.is_string(col.type) or pa.types.is_large_string(col.type)):
         col = col.cast(pa.string())
-    if col.null_count:
-        col = col.fill_null("")
+    return col.fill_null("") if col.null_count else col
+
+
+def _code_points(texts) -> tuple[np.ndarray, np.ndarray]:
+    """(code-point buffer, per-doc code-point lengths) of any batch
+    :func:`_text_array` takes. All-ASCII batches return the ``uint8``
+    value bytes (zero-copy); any other batch is decoded once, whole, to
+    ``uint32`` lanes."""
+    col = _text_array(texts)
     fast = _ascii_text_buffer(col)
     if fast is not None:
         return fast
@@ -859,15 +864,21 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
 
 
+#: set bits of each byte value, for numpy < 2.0 (no ``bitwise_count``):
+#: eight table gathers per word ran ~13x faster than 64 shift-add
+#: passes on a 24x24 XOR matrix.
+_POPCOUNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+
+def _popcount64_table(x: np.ndarray) -> np.ndarray:
+    b = np.ascontiguousarray(x, dtype=np.uint64)
+    return _POPCOUNT8[b.reshape(-1).view(np.uint8)].reshape(-1, 8).sum(axis=1, dtype=np.int64).reshape(b.shape)
+
+
 def _popcount64(x: np.ndarray) -> np.ndarray:
     if hasattr(np, "bitwise_count"):
         return np.bitwise_count(x).astype(np.int64)
-    ham = np.zeros(x.shape, dtype=np.int64)
-    v = x.copy()
-    for _ in range(64):  # popcount via shift-add (vectorized)
-        ham += (v & _U64(1)).astype(np.int64)
-        v >>= _U64(1)
-    return ham
+    return _popcount64_table(x)
 
 
 def hash64_block_dedup(

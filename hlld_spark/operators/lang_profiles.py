@@ -8,9 +8,11 @@ inventories of each language, the same signal Cavnar & Trenkle's n-gram
 method [1994] and CLD-style profiles key on) and scores documents by
 trigram-profile match.
 
-Everything is batch-vectorized: one lowercase pass over the whole batch,
-one trigram poly-hash pass over a single concatenated code-point buffer
-(same polynomial as the dedup shingle kernels, finalization elided — a
+Everything is batch-vectorized in one Arrow-native kernel,
+``_profile_lang``: per chunk of docs, one code-point read
+(``dedup._code_points``), one lowercase pass, one trigram
+poly-hash pass over a single concatenated code-point buffer (same
+polynomial as the dedup shingle kernels, finalization elided — a
 bijection can't change equality), a byte-mask prefilter + sorted-array
 lookup into the compiled profile table, and reduceat accumulation into a
 (docs × langs) score matrix. No per-document Python in the scoring path.
@@ -35,7 +37,8 @@ a brief-mandated training-data-pipeline companion operator.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType
 
@@ -133,50 +136,29 @@ _TRIGRAM_K = 3
 # equality of un-finalized poly hashes is exactly equality of finalized
 # ones — the profile table simply stores un-finalized values, and the
 # scorer saves one full mixing pass over every corpus character.
-from .dedup import _POLY_B  # noqa: E402
+from .dedup import _POLY_B, _code_points, _text_array  # noqa: E402
+
+
+def _trigram_hashes(joined: np.ndarray) -> np.ndarray:
+    """Un-finalized poly hash of the trigram at every position of a
+    code-point buffer (``uint8`` or ``uint32``), in 2^17-position blocks
+    so each block's lanes stay cache-resident."""
+    n_pos = max(len(joined) - _TRIGRAM_K + 1, 0)
+    h = np.empty(n_pos, dtype=np.uint64)
+    for s in range(0, n_pos, 1 << 17):
+        e = min(s + (1 << 17), n_pos)
+        w64 = joined[s : e + _TRIGRAM_K - 1].astype(np.uint64)
+        hc = np.zeros(e - s, dtype=np.uint64)
+        for j in range(_TRIGRAM_K):
+            np.multiply(hc, _POLY_B, out=hc)
+            np.add(hc, w64[j : j + (e - s)], out=hc)
+        h[s:e] = hc
+    return h
 
 
 def _word_trigram_hashes(word: str) -> np.ndarray:
     """Un-finalized poly trigram hashes of one space-padded word."""
-    buf = np.frombuffer(f" {word} ".encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    n_pos = len(buf) - _TRIGRAM_K + 1
-    h = np.zeros(max(n_pos, 0), dtype=np.uint64)
-    for j in range(_TRIGRAM_K):
-        np.multiply(h, _POLY_B, out=h)
-        np.add(h, buf[j : n_pos + j], out=h)
-    return h
-
-
-def _batch_trigram_hashes(lowered: list[str]) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Trigram poly hashes of a batch of (already lowercased) docs at
-    EVERY position of one shared buffer, plus per-doc position regions.
-
-    Returns ``(h, bases, counts)``: doc d's trigrams (space-padded on
-    both edges, matching the padded-word profiles) are exactly
-    ``h[bases[d] : bases[d] + counts[d]]`` with ``counts[d] = len(doc)``
-    (0 for empty docs). The 3 positions between consecutive regions are
-    separator trigrams (they contain the NUL delimiter and can match no
-    profile trigram); callers score doc regions only, so no compaction
-    gather is needed (r5: the ``repeat``+``arange``+fancy-index gather
-    was the kernel's single biggest line).
-
-    One join + ONE utf-32 encode over the whole batch, three strided
-    multiply-adds, no finalization pass (see module note)."""
-    n_docs = len(lowered)
-    if n_docs == 0:
-        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.int64)
-    joined = " " + " \x00 ".join(lowered) + " "
-    buf = np.frombuffer(joined.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-    n_pos = len(buf) - _TRIGRAM_K + 1
-    h = np.zeros(max(n_pos, 0), dtype=np.uint64)
-    for j in range(_TRIGRAM_K):
-        np.multiply(h, _POLY_B, out=h)
-        np.add(h, buf[j : n_pos + j], out=h)
-    counts = np.fromiter((len(t) for t in lowered), dtype=np.int64, count=n_docs)
-    # doc d's content starts at 1 + sum_{j<d}(len_j + 3); its trigram
-    # region starts one char earlier (the leading pad space)
-    bases = np.concatenate(([0], np.cumsum(counts[:-1] + 3)))
-    return h, bases, counts
+    return _trigram_hashes(np.frombuffer(f" {word} ".encode("utf-32-le"), dtype=np.uint32))
 
 
 def _build_profile_table() -> tuple[np.ndarray, np.ndarray]:
@@ -335,6 +317,24 @@ _SCRIPT_HI = np.array([hi for _, _, hi in _SCRIPT_RANGES], dtype=np.uint32)
 _SCRIPT_LANG_J = np.array([_SCRIPT_LANGS[l] for l, _, _ in _SCRIPT_RANGES], dtype=np.int64)
 
 
+def _script_ratios(cps: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """(docs x ``_SCRIPT_LANGS``) share of each doc's code points that
+    lie in the language's ``_SCRIPT_RANGES``, from a batch's code-point
+    buffer and per-doc lengths (``dedup._code_points``)."""
+    nsl = len(_SCRIPT_LANGS)
+    cnt = np.zeros((len(lens), nsl), dtype=np.int64)
+    if cps.dtype != np.uint8:  # ASCII bytes lie in no script range
+        pos = np.flatnonzero(cps >= _SCRIPT_LO[0])
+        c = cps[pos]
+        # ranges are disjoint and sorted: ONE searchsorted classifies all
+        r = np.searchsorted(_SCRIPT_LO, c, side="right") - 1
+        hit = c <= _SCRIPT_HI[r]
+        doc = np.searchsorted(np.cumsum(lens), pos[hit], side="right")
+        key = doc * nsl + _SCRIPT_LANG_J[r[hit]]
+        cnt = np.bincount(key, minlength=len(lens) * nsl).reshape(len(lens), nsl)
+    return cnt / np.maximum(lens, 1)[:, None]
+
+
 # ---------------------------------------------------------------------------
 # batch scorer
 # ---------------------------------------------------------------------------
@@ -349,22 +349,55 @@ _SCRIPT_LANG_J = np.array([_SCRIPT_LANGS[l] for l, _, _ in _SCRIPT_RANGES], dtyp
 _SCORE_CHUNK = 4096
 
 
-def _chunk_bounds(lens: np.ndarray):
-    """(start_doc, byte_lo, byte_hi) triples cutting a batch into
-    _SCORE_CHUNK-doc chunks along the concatenated byte buffer."""
-    offsets = np.concatenate(([0], np.cumsum(lens)))
-    return [
-        (i, offsets[i], offsets[min(i + _SCORE_CHUNK, len(lens))])
-        for i in range(0, len(lens), _SCORE_CHUNK)
-    ]
+#: every label the kernel emits: the profile languages first (so a
+#: profile argmax indexes them), then the script-only languages, "und"
+_LABELS = pa.array(list(dict.fromkeys([*_PROFILE_LANGS, *_SCRIPT_LANGS, "und"])))
+_LABEL_J = {lang: j for j, lang in enumerate(_LABELS.to_pylist())}
+_UND = _LABEL_J["und"]
+
+
+def _lower(units: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Python ``str.lower`` of each doc of a code-point buffer, as
+    (code points, per-doc lengths); lowering may change a doc's length
+    (``İ`` becomes two code points). Arrow's ``utf8_lower`` is not
+    ``str.lower``: it has no final sigma and maps ``İ`` to ``i``."""
+    if units.dtype == np.uint8:  # ASCII: lower() is A-Z + 0x20
+        low = units.copy()
+        low[(low >= 65) & (low <= 90)] += 32
+        return low, lens
+    offs = np.concatenate(([0], np.cumsum(lens)))
+    if units.all():
+        # one lower() over the NUL-joined docs; lower() never makes a NUL
+        # and a NUL is neither cased nor case-ignorable, so each doc
+        # lowers as it would alone and the NULs give back its length
+        text = np.insert(units, offs[1:-1], 0).tobytes().decode("utf-32-le").lower()
+        low = np.frombuffer(text.encode("utf-32-le"), dtype=np.uint32)
+        nul = np.flatnonzero(low == 0)
+        return np.delete(low, nul), np.diff(np.concatenate(([-1], nul, [len(low)]))) - 1
+    # a doc holds a NUL, so the joined docs could not be split back
+    docs = [units[a:b].tobytes().decode("utf-32-le").lower() for a, b in zip(offs[:-1], offs[1:])]
+    low = np.frombuffer("".join(docs).encode("utf-32-le"), dtype=np.uint32)
+    return low, np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+
+
+def _space_joined(units: np.ndarray, lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """``" " + " \\x00 ".join(docs) + " "`` of a non-empty batch's
+    code-point (or byte) buffer, plus where each doc's region starts
+    (its leading space). The pads let edge trigrams and markers match
+    the space-padded words; the NUL blocks any match across two docs."""
+    ends = np.cumsum(lens)
+    idx = np.concatenate(([0], np.repeat(ends[:-1], 3), ends[-1:]))
+    pads = np.concatenate(([0x20], np.tile([0x20, 0, 0x20], len(lens) - 1), [0x20]))
+    return np.insert(units, idx, pads), np.concatenate(([0], np.cumsum(lens[:-1] + 3)))
 
 
 def _score_trigrams(
     h: np.ndarray, bases: np.ndarray, per_doc: np.ndarray, n_docs: int
 ) -> tuple[np.ndarray, np.ndarray]:
     """(scores, n_matched) from a shared trigram-hash buffer + per-doc
-    regions — the scoring half of the chunk kernel, shared verbatim by
-    the pandas and the r7 ASCII/Arrow paths."""
+    regions: doc d's trigrams are ``h[bases[d] : bases[d] + per_doc[d]]``
+    and the 3 positions before each later region are separator
+    trigrams."""
     hashes, weights, prefilter = _table()
     n_langs = weights.shape[1]
     scores = np.zeros((n_docs, n_langs))
@@ -411,169 +444,71 @@ def _score_trigrams(
     return scores, n_matched
 
 
-def _profile_lang_ascii(
-    data: np.ndarray,
-    lens: np.ndarray,
-    min_score: float = 1e-4,
-    max_chars: int | None = 1000,
-) -> np.ndarray:
-    """ASCII/Arrow twin of :func:`_profile_lang_batch_chunk` (r7): the
-    whole pipeline — prefix truncation, lowercase, the space/NUL-joined
-    buffer, trigram hashing, scoring, decision — runs on the Arrow
-    UTF-8 byte buffer with zero per-row Python. For ASCII input the
-    byte values ARE the code points and ASCII lower() is exactly
-    A-Z+0x20, so hashes and decisions are bit-identical to the pandas
-    kernel (asserted in tests); every script-ratio / char-vote branch
-    is definitionally zero on ASCII. Returns an object ndarray of lang
-    codes."""
-    from .dedup import _gather_segments
-
-    n_docs = len(lens)
-    if n_docs == 0:
-        return np.zeros(0, dtype=object)
-    lens2 = np.minimum(lens, max_chars) if max_chars is not None else lens
-    if max_chars is not None and (lens > max_chars).any():
-        offsets = np.concatenate(([0], np.cumsum(lens)))
-        data, _ = _gather_segments(data, offsets[:-1], lens2)
-    low = data.copy()
-    up = (low >= 65) & (low <= 90)
-    low[up] += 32
-    # joined = " " + " \x00 ".join(docs) + " " — built by scatter:
-    # spaces everywhere, doc bytes at their regions, NULs between docs
-    total = int(lens2.sum())
-    out_len = total + 3 * (n_docs - 1) + 2
-    starts_out = 1 + np.concatenate(([0], np.cumsum(lens2[:-1] + 3)))
-    joined = np.full(out_len, 0x20, dtype=np.uint8)
-    if total:
-        src_off = np.concatenate(([0], np.cumsum(lens2)))[:-1]
-        dest = np.repeat(starts_out - src_off, lens2) + np.arange(total, dtype=np.int64)
-        joined[dest] = low
-    if n_docs > 1:
-        joined[starts_out[:-1] + lens2[:-1] + 1] = 0
-    # trigram poly hashes at every position, chunked for cache locality
-    # (un-finalized, exactly _batch_trigram_hashes' arithmetic)
-    n_pos = out_len - _TRIGRAM_K + 1
-    h = np.empty(max(n_pos, 0), dtype=np.uint64)
-    CH = 1 << 17
-    for s in range(0, n_pos, CH):
-        e = min(s + CH, n_pos)
-        w64 = joined[s : e + _TRIGRAM_K - 1].astype(np.uint64)
-        hc = np.zeros(e - s, dtype=np.uint64)
-        for j in range(_TRIGRAM_K):
-            np.multiply(hc, _POLY_B, out=hc)
-            np.add(hc, w64[j : j + (e - s)], out=hc)
-        h[s:e] = hc
-    bases = starts_out - 1
-    per_doc = lens2
-    scores, n_matched = _score_trigrams(h, bases, per_doc, n_docs)
-    scores /= np.maximum(per_doc, 1)[:, None]
-    best_j = scores.argmax(axis=1)
-    best = scores[np.arange(n_docs), best_j]
-    confident = (best > min_score) & (n_matched >= 2)
-    out = np.where(confident, np.array(_PROFILE_LANGS, dtype=object)[best_j], "und")
-    return np.where(lens2 == 0, "und", out)
+def _char_votes(low: np.ndarray, low_lens: np.ndarray, scores: np.ndarray) -> np.ndarray:
+    """Add ``_CHAR_VOTE_W`` to a doc's score for each of its (lowered)
+    distinctive characters, in place; returns which docs got a vote."""
+    pos = np.flatnonzero(low >= _CHAR_VOTE_CPS[0])
+    c = low[pos]
+    vp = np.minimum(np.searchsorted(_CHAR_VOTE_CPS, c), len(_CHAR_VOTE_CPS) - 1)
+    hit = _CHAR_VOTE_CPS[vp] == c
+    doc = np.searchsorted(np.cumsum(low_lens), pos[hit], side="right")
+    np.add.at(scores, (doc, _CHAR_VOTE_LANG[vp[hit]]), _CHAR_VOTE_W)
+    voted = np.zeros(len(low_lens), dtype=bool)
+    voted[doc] = True
+    return voted
 
 
-def _profile_lang_batch(
-    texts: pd.Series, min_score: float = 1e-4, max_chars: int | None = 1000
-) -> pd.Series:
-    if len(texts) > _SCORE_CHUNK:
-        parts = [
-            _profile_lang_batch_chunk(texts.iloc[i : i + _SCORE_CHUNK], min_score, max_chars)
-            for i in range(0, len(texts), _SCORE_CHUNK)
-        ]
-        return pd.concat(parts, ignore_index=True)
-    return _profile_lang_batch_chunk(texts, min_score, max_chars)
+def _profile_lang(texts, min_score: float = 1e-4, max_chars: int | None = 1000) -> pa.Array:
+    """Profile language ID of a text batch (anything
+    ``dedup._text_array`` takes), as an Arrow string array of language
+    codes; "und" where nothing decides.
 
-
-def _profile_lang_batch_chunk(
-    texts: pd.Series, min_score: float = 1e-4, max_chars: int | None = 1000
-) -> pd.Series:
-    """Whole-batch profile language ID.
-
-    1. ONE lowercase pass (NUL-joined batch → str.lower → split; lower
-       never produces NUL so doc boundaries survive).
-    2. ONE trigram poly-hash pass over the concatenated code-point
-       buffer (``_batch_trigram_hashes`` — docs virtually space-padded
-       so edge trigrams match the padded-word profiles).
-    3. byte-mask prefilter + sorted-array lookup on survivors, reduceat
-       accumulation into (docs × langs).
-    4. han/kana script ratios override for zh/ja (no word segmentation);
-       cyrillic backstop for ru on short texts.
-
-    ``max_chars`` (r5, VERDICT r4 #1): score only the first N characters
-    of each document — language is decidable from a prefix (standard
-    CLD2-style practice), and on multi-KB web documents this caps the
-    kernel cost per doc. ``max_chars=None`` scores whole documents.
+    1. Keep each doc's first ``max_chars`` code points (CLD2-style:
+       language is decidable from a prefix, and the cap bounds the cost
+       of multi-KB web docs; None scores whole docs).
+    2. Per ``_SCORE_CHUNK`` docs: read the code points
+       (``_code_points``: the Arrow bytes of an ASCII chunk, else one
+       ``uint32`` decode), ``str.lower``, the space/NUL-joined buffer,
+       one trigram poly-hash pass, profile lookup and reduceat scoring
+       (``_score_trigrams``), distinctive-character votes and script
+       ratios.
+    3. The best length-normalized profile score decides when it rests
+       on two matched trigrams or a vote; then script-ratio rules apply
+       in ``_SCRIPT_RULES`` order (ja after zh: Japanese text holds han,
+       kana decides). For languages with a word profile the ratio only
+       backstops a profile miss.
     """
-    tl = [v if isinstance(v, str) else "" for v in texts]
-    if max_chars is not None:
-        tl = [v[:max_chars] for v in tl]
-    n_docs = len(tl)
-    if n_docs == 0:
-        return pd.Series([], dtype=object)
-    lowered = "\x00".join(tl).lower().split("\x00")
-    if len(lowered) != n_docs:  # pathological: lower() produced a NUL
-        lowered = [t.lower() for t in tl]
-    h, bases, per_doc = _batch_trigram_hashes(lowered)
-    scores, n_matched = _score_trigrams(h, bases, per_doc, n_docs)
-    # --- one utf-32 pass over non-ascii docs: distinctive-character
-    # votes (added to scores BEFORE the argmax) + script ratios ---------
-    lens = np.fromiter((len(t) for t in tl), dtype=np.int64, count=n_docs)
-    ratio_mat = np.zeros((n_docs, len(_SCRIPT_LANGS)))
-    has_char_vote = np.zeros(n_docs, dtype=bool)
-    na_idx = np.fromiter((i for i, s in enumerate(tl) if not s.isascii()), dtype=np.int64)
-    if len(na_idx):
-        sub = [tl[i] for i in na_idx]
-        sub_lens = lens[na_idx]
-        arr = np.frombuffer("".join(sub).encode("utf-32-le"), dtype=np.uint32)
-        # ONE searchsorted assigns each char its script range (ranges are
-        # disjoint and sorted); per-(doc, script) counts via bincount
-        rpos = np.searchsorted(_SCRIPT_LO, arr, side="right").astype(np.int64) - 1
-        rpos = np.maximum(rpos, 0)
-        in_range = (arr >= _SCRIPT_LO[rpos]) & (arr <= _SCRIPT_HI[rpos])
-        doc_of_char = np.repeat(np.arange(len(sub), dtype=np.int64), sub_lens)
-        nsl = len(_SCRIPT_LANGS)
-        key = doc_of_char[in_range] * nsl + _SCRIPT_LANG_J[rpos[in_range]]
-        cnt = np.bincount(key, minlength=len(sub) * nsl).reshape(len(sub), nsl)
-        ratio_mat[na_idx] = cnt / np.maximum(sub_lens, 1)[:, None]
-        # distinctive-character votes: lowercase the sub-buffer's case
-        # range cheaply (profiles/chars are lowercase; Č → č etc. differ
-        # by +0x20 only for Latin-1/Extended-A rows we care about — use
-        # the python-lowered text instead for exactness)
-        low = np.frombuffer(
-            "".join(lowered[i] for i in na_idx).encode("utf-32-le"), dtype=np.uint32
-        )
-        low_lens = np.fromiter((len(lowered[i]) for i in na_idx), dtype=np.int64, count=len(na_idx))
-        low_bounds = np.concatenate(([0], np.cumsum(low_lens)))
-        vp = np.minimum(np.searchsorted(_CHAR_VOTE_CPS, low), len(_CHAR_VOTE_CPS) - 1)
-        vhit = _CHAR_VOTE_CPS[vp] == low
-        if vhit.any():
-            hit_pos = np.flatnonzero(vhit)
-            doc_of = np.searchsorted(low_bounds, hit_pos, side="right") - 1
-            np.add.at(scores, (na_idx[doc_of], _CHAR_VOTE_LANG[vp[hit_pos]]), _CHAR_VOTE_W)
-            has_char_vote[na_idx[doc_of]] = True
-    scores /= np.maximum(per_doc, 1)[:, None]
+    col = _text_array(texts)
+    # a doc has at least as many bytes as code points, so a batch with no
+    # doc over max_chars bytes skips the slice (~20 ms per 32k web docs)
+    if max_chars is not None and len(col) and pc.max(pc.binary_length(col)).as_py() > max_chars:
+        col = pc.utf8_slice_codeunits(col, 0, max_chars)
+    n_docs = len(col)
+    lens = np.zeros(n_docs, dtype=np.int64)
+    low_lens = np.zeros(n_docs, dtype=np.int64)
+    scores = np.zeros((n_docs, len(_PROFILE_LANGS)))
+    n_matched = np.zeros(n_docs, dtype=np.int64)
+    voted = np.zeros(n_docs, dtype=bool)
+    ratios = np.zeros((n_docs, len(_SCRIPT_LANGS)))
+    for i in range(0, n_docs, _SCORE_CHUNK):
+        j = min(i + _SCORE_CHUNK, n_docs)
+        # read per chunk, so the ASCII chunks of a mixed batch stay bytes
+        units, lens[i:j] = _code_points(col.slice(i, j - i))
+        low, low_lens[i:j] = _lower(units, lens[i:j])
+        joined, bases = _space_joined(low, low_lens[i:j])
+        scores[i:j], n_matched[i:j] = _score_trigrams(_trigram_hashes(joined), bases, low_lens[i:j], j - i)
+        voted[i:j] = _char_votes(low, low_lens[i:j], scores[i:j])
+        ratios[i:j] = _script_ratios(units, lens[i:j])
+    scores /= np.maximum(low_lens, 1)[:, None]
     best_j = scores.argmax(axis=1)
     best = scores[np.arange(n_docs), best_j]
-    # one stray trigram is no evidence — unless distinctive characters
-    # voted (they count as matches for the confidence gate)
-    confident = (best > min_score) & ((n_matched >= 2) | has_char_vote)
-    out = np.where(confident, np.array(_PROFILE_LANGS, dtype=object)[best_j], "und")
-    # script-ratio identification, applied in _SCRIPT_RULES order (ja
-    # after zh: Japanese text contains han, kana decides). For languages
-    # WITH a word profile the ratio only backstops a profile miss. All
-    # ratios are zero on an ASCII-only batch — skip the 18 object-array
-    # np.where passes entirely then (r5 perf).
-    if len(na_idx):
-        for lang, thr, backstop in _SCRIPT_RULES:
-            r = ratio_mat[:, _SCRIPT_LANGS[lang]]
-            if backstop:
-                out = np.where((r > thr) & (out == "und"), lang, out)
-            else:
-                out = np.where(r > thr, lang, out)
-    out = np.where(lens == 0, "und", out)
-    return pd.Series(out, dtype=object)
+    # one stray trigram is no evidence, unless distinctive characters voted
+    code = np.where((best > min_score) & ((n_matched >= 2) | voted), best_j, _UND)
+    for lang, thr, backstop in _SCRIPT_RULES:
+        hit = ratios[:, _SCRIPT_LANGS[lang]] > thr
+        code[hit & (code == _UND) if backstop else hit] = _LABEL_J[lang]
+    code[lens == 0] = _UND
+    return _LABELS.take(pa.array(code))
 
 
 # ---------------------------------------------------------------------------
@@ -809,9 +744,9 @@ def with_lang_id_profiles(
     ``max_chars``: score only each document's first N characters
     (CLD2-style prefix decision; None = whole document)."""
 
-    @F.pandas_udf(StringType())
-    def lang_udf(t: pd.Series) -> pd.Series:
-        return _profile_lang_batch(t, max_chars=max_chars)
+    @F.arrow_udf(StringType())
+    def lang_udf(t):
+        return _profile_lang(t, max_chars=max_chars)
 
     return df.withColumn(out, lang_udf(F.col(text_col)))
 
@@ -833,7 +768,6 @@ def lang_id_profiles_parquet(
     the shared-JVM Arrow-IPC ceiling (~5.4M rows/s measured here)
     exactly like ``decontaminate_parquet``. Returns carry_cols + the
     lang-id column; equivalence-tested against the DataFrame path."""
-    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
     from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
@@ -843,36 +777,8 @@ def lang_id_profiles_parquet(
     schema = StructType([*parquet_schema(files, carry), StructField(out, StringType(), False)])
 
     def fn(batches):
-        from .dedup import _ascii_text_buffer
-
         for rb in batches:
-            # r7: all-ASCII batches are scored straight off the Arrow
-            # byte buffer (no pandas conversion, no per-row Python —
-            # bit-identical, see _profile_lang_ascii); mixed batches
-            # take the exact pandas kernel as before
-            tcol = rb.column(rb.schema.get_field_index(text_col))
-            fast = _ascii_text_buffer(tcol)
-            if fast is not None:
-                data, lens = fast
-                # chunk like _profile_lang_batch so the score matrix
-                # stays cache-sized regardless of batch rows
-                langs = [
-                    _profile_lang_ascii(
-                        data[int(off_lo) : int(off_hi)], lens[i : i + _SCORE_CHUNK], max_chars=max_chars
-                    )
-                    for i, off_lo, off_hi in _chunk_bounds(lens)
-                ]
-                lang_arr = pa.array(
-                    np.concatenate(langs) if langs else np.zeros(0, dtype=object),
-                    type=pa.string(),
-                )
-                cols = [rb.column(rb.schema.get_field_index(c)) for c in carry]
-                yield pa.RecordBatch.from_arrays(cols + [lang_arr], names=carry + [out])
-                continue
-            pdf = rb.to_pandas()
-            lang = _profile_lang_batch(pdf[text_col], max_chars=max_chars)
-            out_pdf = pd.DataFrame({c: pdf[c].values for c in carry})
-            out_pdf[out] = lang.values
-            yield pa.RecordBatch.from_pandas(out_pdf, preserve_index=False)
+            lang = _profile_lang(rb.column(text_col), max_chars=max_chars)
+            yield pa.RecordBatch.from_arrays([*(rb.column(c) for c in carry), lang], names=[*carry, out])
 
     return map_parquet_batches(spark, files, fn, schema, carry + [text_col], filter)

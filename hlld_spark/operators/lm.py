@@ -194,215 +194,3 @@ def perplexity_filter(
     ).select(id_col)
     return df.join(keep, id_col, "left_semi")
 
-
-# ---------------------------------------------------------------------------
-# broadcast-kernel scale path (r6): no joins, no position explosion
-# ---------------------------------------------------------------------------
-#
-# The join formulation above is oracle-friendly but at web scale its
-# cost is 5 string-keyed joins over a ~50x-exploded position stream —
-# measured 35k docs/s on 4M docs. The kernel path is the engine's
-# decontaminate-style design: count tables live as SORTED uint64 hash
-# arrays broadcast to every worker, and ONE mapInPandas pass scores all
-# positions with vectorized searchsorted lookups. Gram hashes come from
-# the shared token-shingle kernel (operators/dedup.py), so train and
-# score agree by construction; the driver gate still compares against
-# the literal-string SQL oracle, which cross-validates the hashing.
-
-import re as _re
-
-from .ranking import TOKEN_PATTERN as _TOKEN_PATTERN
-
-_TOKEN_RE = _re.compile(_TOKEN_PATTERN)
-
-
-def _normalize_series(texts: "pd.Series") -> "pd.Series":
-    import pandas as pd
-
-    return pd.Series(
-        [" ".join(_TOKEN_RE.findall((t or "").lower())) for t in texts],
-        index=texts.index,
-    )
-
-
-def _gram_hash_counts_kernel(df: DataFrame, text_col: str, order: int) -> DataFrame:
-    """(h, c) hashed ``order``-gram counts via the shared token-shingle
-    kernel — the hashed twin of :func:`ngram_counts`."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from .dedup import _token_shingle_hashes
-
-    schema = StructType([StructField("h", LongType(), False)])
-
-    def grams(batches):
-        for pdf in batches:
-            norm = _normalize_series(pdf[text_col])
-            h, offsets, ntoks = _token_shingle_hashes(norm, order)
-            if not len(h):
-                continue
-            # mask the sentinel slot of docs shorter than the order
-            keep = np.ones(len(h), dtype=bool)
-            short = ntoks < order
-            keep[offsets[:-1][short]] = False
-            yield pd.DataFrame({"h": h[keep].astype(np.int64)})
-
-    return (
-        df.select(text_col)
-        .mapInPandas(grams, schema=schema)
-        .groupBy("h")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-
-
-def train_stupid_backoff_hashed(
-    df: DataFrame,
-    text_col: str,
-    min_count: int = 1,
-    max_table_rows: int = 50_000_000,
-) -> dict:
-    """Hashed count tables for the kernel scorer: {order: (sorted
-    uint64 hashes, int64 counts)} + ``total_tokens``. The driver
-    collect is bounded by the PRUNED distinct-gram count per order
-    (``min_count`` is the 100-TB knob; ``max_table_rows`` raises
-    instead of silently OOMing — fall back to the join path past it)."""
-    import numpy as np
-
-    tables = {}
-    total = 0
-    for order in (1, 2, 3):
-        cdf = _gram_hash_counts_kernel(df, text_col, order)
-        if order > 1 and min_count > 1:
-            cdf = cdf.where(F.col("c") >= min_count)
-        n_rows = cdf.count()
-        if n_rows > max_table_rows:
-            raise ValueError(
-                f"order-{order} table has {n_rows} rows > max_table_rows"
-            )
-        rows = cdf.collect()
-        h = np.array([r["h"] for r in rows], dtype=np.int64).view(np.uint64)
-        c = np.array([r["c"] for r in rows], dtype=np.int64)
-        o = np.argsort(h)
-        tables[order] = (h[o], c[o])
-        if order == 1:
-            total = int(c.sum())
-    return {"tables": tables, "total_tokens": total}
-
-
-def _lookup(h: "np.ndarray", table) -> "np.ndarray":
-    import numpy as np
-
-    th, tc = table
-    if not len(th):
-        return np.zeros(len(h), dtype=np.int64)
-    idx = np.searchsorted(th, h)
-    idx_c = np.minimum(idx, len(th) - 1)
-    hit = th[idx_c] == h
-    return np.where(hit, tc[idx_c], 0)
-
-
-def stupid_backoff_scores_kernel(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    model: dict,
-    alpha: float = DEFAULT_ALPHA,
-    round_digits: int | None = None,
-) -> DataFrame:
-    """Kernel twin of :func:`stupid_backoff_scores`: identical scoring
-    semantics, ONE distributed pass, zero joins. Documents with zero
-    tokens are omitted (as the join path's explode does)."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from .dedup import _token_shingle_hashes
-
-    t1, t2, t3 = model["tables"][1], model["tables"][2], model["tables"][3]
-    n_total = float(model["total_tokens"])
-    la = float(np.log10(alpha))
-
-    schema = StructType(
-        [
-            docs.schema[id_col],
-            StructField("n_tokens", LongType(), False),
-            StructField("avg_logp", DoubleType(), False),
-            StructField("ppl", DoubleType(), False),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            norm = _normalize_series(pdf[text_col])
-            h1, o1, ntoks = _token_shingle_hashes(norm, 1)
-            h2, o2, _ = _token_shingle_hashes(norm, 2)
-            h3, o3, _ = _token_shingle_hashes(norm, 3)
-            T = ntoks
-            nz = T > 0
-            if not nz.any():
-                continue
-            doc_start = np.concatenate(([0], np.cumsum(T)))[:-1]
-            total_pos = int(T.sum())
-            pos = np.arange(total_pos) - np.repeat(doc_start[nz], T[nz])
-            didx = np.repeat(np.flatnonzero(nz), T[nz])
-
-            def g(h, o, off):
-                base = o[didx] + pos - off
-                safe = np.maximum(base, 0)
-                return h[np.minimum(safe, len(h) - 1)] if len(h) else np.zeros(total_pos, dtype=np.uint64)
-
-            w = g(h1, o1, 0)
-            ctx1 = g(h1, o1, 1)
-            big = g(h2, o2, 1)
-            ctx3 = g(h2, o2, 2)
-            tri = g(h3, o3, 2)
-            has2 = pos >= 1
-            has3 = pos >= 2
-            # docs shorter than the order store a sentinel; validity of
-            # the window itself needs the doc LONG enough too
-            has2 &= np.repeat(T[nz] >= 2, T[nz])
-            has3 &= np.repeat(T[nz] >= 3, T[nz])
-
-            c_w = _lookup(w, t1)
-            c_x1 = _lookup(ctx1, t1)
-            c_b = np.where(has2, _lookup(big, t2), 0)
-            c_x3 = np.where(has3, _lookup(ctx3, t2), 0)
-            c_t = np.where(has3, _lookup(tri, t3), 0)
-
-            m = np.minimum(pos + 1, 3)
-            use3 = (c_t > 0) & (c_x3 > 0)
-            use2 = ~use3 & (c_b > 0) & (c_x1 > 0)
-            use1 = ~use3 & ~use2 & (c_w > 0)
-            lp = np.empty(total_pos)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                lp[use3] = np.log10(c_t[use3] / c_x3[use3])
-                lp[use2] = (m[use2] - 2) * la + np.log10(c_b[use2] / c_x1[use2])
-                lp[use1] = (m[use1] - 1) * la + np.log10(c_w[use1] / n_total)
-                rest = ~(use3 | use2 | use1)
-                lp[rest] = (m[rest] - 1) * la + la - np.log10(n_total)
-
-            bounds = np.concatenate(([0], np.cumsum(T[nz])))[:-1]
-            sums = np.add.reduceat(lp, bounds)
-            avg = sums / T[nz]
-            ppl = np.power(10.0, -avg)
-            if round_digits is not None:
-                avg = np.round(avg, round_digits)
-                ppl = np.round(ppl, round_digits)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[nz],
-                    "n_tokens": T[nz],
-                    "avg_logp": avg,
-                    "ppl": ppl,
-                }
-            )
-
-    return docs.select(id_col, text_col).mapInPandas(score, schema=schema)

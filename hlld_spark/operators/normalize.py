@@ -42,6 +42,22 @@ def normalize_batch(texts: pd.Series, form: str = "NFC") -> pd.Series:
     return pd.Series(out)
 
 
+def _normalize_arrow(texts, form: str = "NFC"):
+    """:func:`normalize_batch` of an Arrow string array or chunked
+    array, regular or large, as an Arrow array."""
+    import pyarrow as pa
+
+    from .dedup import _ascii_text_buffer
+
+    col = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
+    # an all-ASCII batch is invariant under every normalization form
+    # (ASCII has no decompositions), so the input Arrow array passes
+    # through untouched: no pandas conversion, no per-row Python
+    if _ascii_text_buffer(col) is not None:
+        return col
+    return pa.Array.from_pandas(normalize_batch(col.to_pandas(), form), type=pa.string())
+
+
 def with_unicode_normalization(
     df: DataFrame,
     text_col: str = "text",
@@ -57,24 +73,7 @@ def with_unicode_normalization(
 
     @arrow_udf(StringType())
     def _norm(texts):
-        import numpy as np
-        import pyarrow as pa
-
-        col = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
-        # r7 fast path: an all-ASCII batch is invariant under every
-        # normalization form (ASCII has no decompositions), so the
-        # input Arrow buffer passes through untouched — no pandas
-        # conversion, no per-row Python. Checked with one vectorized
-        # max over the batch's UTF-8 data buffer.
-        if pa.types.is_string(col.type) and col.null_count == 0 and len(col):
-            bufs = col.buffers()
-            offs = np.frombuffer(bufs[1], dtype=np.int32, count=col.offset + len(col) + 1)
-            lo, hi = int(offs[col.offset]), int(offs[col.offset + len(col)])
-            data = np.frombuffer(bufs[2], dtype=np.uint8, count=hi)[lo:]
-            if len(data) == 0 or int(data.max()) < 128:
-                return col
-        out = normalize_batch(col.to_pandas(), form)
-        return pa.Array.from_pandas(out, type=pa.string())
+        return _normalize_arrow(texts, form)
 
     return df.withColumn(out_col, _norm(F.col(text_col)))
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
 
@@ -144,37 +145,35 @@ _LANG_MARKERS = {
 _MARKER_LANGS = [lang for lang, m in _LANG_MARKERS.items() if m]
 
 
-def _lang_id_batch(texts: pd.Series) -> pd.Series:
-    """Whole-batch vectorized language ID — no per-document Python loop
-    in the scoring path:
+def _lang_id_batch(texts) -> pa.Array:
+    """Whole-batch vectorized language ID of a text batch (anything
+    ``dedup._text_array`` takes), as an Arrow string array — no
+    per-document Python loop:
 
-    * marker profiles: shifted byte-compares over ONE concatenated
-      utf-8 buffer (each ASCII marker costs len(marker) vectorized
-      equality passes); match positions attribute to docs via
-      searchsorted on the doc byte offsets. NUL separators prevent
-      cross-doc matches; docs are space-padded so edge markers match.
-      ASCII case-folding is one in-place pass on the byte buffer.
-      Counts all (incl. overlapping) occurrences — a deliberate,
-      documented simplification vs str.count's non-overlap rule
-      (marker multiplicity only nudges scores, never flips a clean
-      classification).
-    * script ratios (ru/ja/zh): computed ONLY over the batch's
-      non-ASCII documents (C-level str.isascii prefilter), via one
-      utf-32 decode + cumsum-diff per script range. Pure-ASCII batches
-      skip this entirely.
+    * marker profiles: shifted byte-compares over the batch's Arrow
+      UTF-8 bytes, space-padded and NUL-separated per doc
+      (``lang_profiles._space_joined``: pads let edge markers match, the
+      NUL blocks cross-doc matches); each ASCII marker costs len(marker)
+      vectorized equality passes, and match positions attribute to docs
+      via searchsorted on the doc starts. ASCII case-folding is one
+      in-place pass on the bytes. Counts all (incl. overlapping)
+      occurrences — a deliberate, documented simplification vs
+      str.count's non-overlap rule (marker multiplicity only nudges
+      scores, never flips a clean classification).
+    * script ratios (ru/ja/zh): ``lang_profiles._script_ratios`` over
+      the batch's code points; an all-ASCII batch has none.
     """
-    tl = [v if isinstance(v, str) else "" for v in texts]
-    n_docs = len(tl)
+    from .dedup import _code_points, _text_array, _utf8_values
+    from .lang_profiles import _SCRIPT_LANGS, _space_joined, _script_ratios
+
+    col = _text_array(texts)
+    n_docs = len(col)
     if n_docs == 0:
-        return pd.Series([], dtype=object)
-    lens = np.fromiter((len(s) for s in tl), dtype=np.int64, count=n_docs)
+        return pa.array([], type=pa.string())
+    data, blens = _utf8_values(col)
+    cps, lens = _code_points(col)
     # --- marker scores over the lowered byte buffer -----------------------
-    # each doc = " <text> " + NUL terminator: pads let edge markers
-    # match, the NUL blocks any cross-doc match (markers are NUL-free)
-    enc = [(" " + s + " \x00").encode("utf-8") for s in tl]
-    blens = np.fromiter((len(b) for b in enc), dtype=np.int64, count=n_docs)
-    starts = np.concatenate(([0], np.cumsum(blens)))[:-1]
-    buf = np.frombuffer(b"".join(enc), dtype=np.uint8).copy()
+    buf, starts = _space_joined(data, blens)
     # ASCII case-fold in place (A-Z bytes never occur inside utf-8
     # multi-byte sequences, so this is utf-8-safe)
     upper = (buf >= 65) & (buf <= 90)
@@ -195,38 +194,20 @@ def _lang_id_batch(texts: pd.Series) -> pd.Series:
                 docs = np.searchsorted(starts, pos, side="right") - 1
                 np.add.at(scores[:, j], docs, 1.0)
     scores /= np.maximum(lens / 100.0, 1.0)[:, None]
-    # --- script ratios, non-ASCII docs only -------------------------------
-    cyr = np.zeros(n_docs)
-    kana = np.zeros(n_docs)
-    han = np.zeros(n_docs)
-    na_idx = np.fromiter((i for i, s in enumerate(tl) if not s.isascii()), dtype=np.int64)
-    if len(na_idx):
-        sub = [tl[i] for i in na_idx]
-        sub_lens = lens[na_idx]
-        arr = np.frombuffer("".join(sub).encode("utf-32-le"), dtype=np.uint32)
-        bounds = np.concatenate(([0], np.cumsum(sub_lens)))
-
-        def per_doc_ratio(mask: np.ndarray) -> np.ndarray:
-            c = np.concatenate(([0], np.cumsum(mask, dtype=np.int64)))
-            return (c[bounds[1:]] - c[bounds[:-1]]) / np.maximum(sub_lens, 1)
-
-        cyr[na_idx] = per_doc_ratio((arr >= 0x0400) & (arr <= 0x04FF))
-        kana[na_idx] = per_doc_ratio((arr >= 0x3040) & (arr <= 0x30FF))
-        han[na_idx] = per_doc_ratio((arr >= 0x4E00) & (arr <= 0x9FFF))
     best_j = scores.argmax(axis=1)
     best_score = scores[np.arange(n_docs), best_j]
     marker_lang = np.array(_MARKER_LANGS, dtype=object)[best_j]
     out = np.where(best_score > 0, marker_lang, "und")
-    out = np.where(han > 0.3, "zh", out)
-    out = np.where(kana > 0.05, "ja", out)
-    out = np.where(cyr > 0.3, "ru", out)
+    ratios = _script_ratios(cps, lens)
+    for lang, thr in (("zh", 0.3), ("ja", 0.05), ("ru", 0.3)):
+        out = np.where(ratios[:, _SCRIPT_LANGS[lang]] > thr, lang, out)
     out = np.where(lens == 0, "und", out)
-    return pd.Series(out, dtype=object)
+    return pa.array(out, type=pa.string())
 
 
 def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_id") -> DataFrame:
-    @F.pandas_udf(StringType())
-    def lang_udf(t: pd.Series) -> pd.Series:
+    @F.arrow_udf(StringType())
+    def lang_udf(t):
         return _lang_id_batch(t)
 
     return df.withColumn(out, lang_udf(F.col(text_col)))

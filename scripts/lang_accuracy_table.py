@@ -1,5 +1,5 @@
 """Emit the per-language held-out accuracy table recorded in COVERAGE.md
-(r5, VERDICT r4 #5): runs `_profile_lang_batch` over the 25-sentence
+(r5, VERDICT r4 #5): runs `_profile_lang` over the 25-sentence
 held-out corpus of every language (5 EVAL_SENTENCES + 20 extended) and
 prints a markdown table. The pytest gate
 (test_lang_profiles.test_extended_heldout_gate) asserts 100% on the same
@@ -10,9 +10,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import pandas as pd
-
-from hlld_spark.operators.lang_profiles import EVAL_SENTENCES, _profile_lang_batch
+from hlld_spark.operators.lang_profiles import EVAL_SENTENCES, _profile_lang
 from tests.lang_eval_extended import EXTENDED_SENTENCES
 
 
@@ -22,7 +20,7 @@ def main() -> None:
         sents = EVAL_SENTENCES[lang] + EXTENDED_SENTENCES[lang]
         texts += sents
         labels += [lang] * len(sents)
-    pred = list(_profile_lang_batch(pd.Series(texts)))
+    pred = _profile_lang(texts).to_pylist()
     per: dict[str, list[int]] = {}
     for lang, p in zip(labels, pred):
         ok, tot = per.setdefault(lang, [0, 0])

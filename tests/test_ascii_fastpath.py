@@ -4,8 +4,9 @@ whole-batch UTF-32 decode. These tests hold both kernels to pure-Python
 definitions — k-code-point substrings and ``str.split()`` n-grams,
 hashed per the poly/splitmix definition with the short-doc sentinel —
 on adversarial batch shapes (empty, leading/trailing empty docs,
-whitespace-only docs, NULLs, sliced and chunked Arrow, mixed script,
-every ``str.split()`` separator, U+200B), and pin their output bytes.
+whitespace-only docs, NULLs, NULs, sliced and chunked Arrow, mixed
+script, every ``str.split()`` separator, U+200B), and pin their output
+bytes. ``text_batches`` also drives the lang-id kernels' tests.
 """
 
 import hashlib
@@ -24,6 +25,7 @@ from hlld_spark.operators.dedup import (
     _token_shingle_hashes,
 )
 from hlld_spark.operators.decontaminate import _shingle
+from hlld_spark.operators.lang_profiles import _WORDS
 
 _M64 = (1 << 64) - 1
 
@@ -89,19 +91,30 @@ _WS = "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680" + "".join(
 _ASCII_WS = _WS[:10]
 #: mixed script, non-separators that look like one (U+200B, U+FEFF,
 #: U+180E), astral code points
-_MIXED = "abz09.,éÿЖж日本م\u200b\ufeff\u180e\U0001d518\U0001f600"
+_MIXED = "abz09.,éÿЖж日本のテم\u200b\ufeff\u180e\U0001d518\U0001f600"
+
+#: case pairs that lower() does not map one to one: a dotted capital I
+#: lowers to two code points, a capital sigma to a final or medial sigma
+_CASE = "İΣς"
+#: the profile kernel's function words, so lang-id batches hold matches
+_PROFILE_WORDS = sorted({w for ws in _WORDS.values() for w in ws[:12]})
+_PRINTABLE = "".join(map(chr, range(0x20, 0x7F)))
 
 _ascii_docs = st.one_of(
     st.none(),
     st.just(""),
     st.text(alphabet=_ASCII_WS, min_size=1, max_size=4),
-    st.text(alphabet="abcxyz01" + _ASCII_WS, max_size=24),
+    st.text(alphabet=_PRINTABLE + _ASCII_WS + "\x00", max_size=24),
+    st.lists(st.sampled_from([w for w in _PROFILE_WORDS if w.isascii()]), max_size=8).map(" ".join),
 )
 _mixed_docs = st.one_of(
     st.none(),
     st.just(""),
     st.text(alphabet=_WS, min_size=1, max_size=4),
-    st.text(alphabet=_MIXED + _WS, max_size=24),
+    st.text(alphabet=_MIXED + _CASE + _WS + "\x00", max_size=24),
+    st.lists(st.sampled_from(_PROFILE_WORDS + list(_CASE) + ["\x00"]), max_size=8).map(" ".join),
+    # script-dense docs, so the lang-id script-ratio rules fire and overlap
+    st.text(alphabet="日本のテЖжΣςم a", max_size=12),
 )
 _CONTAINERS = ("list", "pandas", "arrow", "large_arrow", "slice", "chunked")
 
@@ -110,6 +123,8 @@ _CONTAINERS = ("list", "pandas", "arrow", "large_arrow", "slice", "chunked")
 def text_batches(draw):
     """(batch in some container, the texts it holds as Python values)."""
     docs = draw(st.lists(draw(st.sampled_from([_ascii_docs, _mixed_docs])), max_size=10))
+    if draw(st.booleans()):
+        docs = [d.upper() if d and i % 2 else d for i, d in enumerate(docs)]
     texts = [""] * draw(st.integers(0, 2)) + docs + [""] * draw(st.integers(0, 2))
     kind = draw(st.sampled_from(_CONTAINERS))
     if kind == "list":
@@ -198,44 +213,6 @@ def test_shingle_bytes_pinned(unit, k, container):
 # --- fixed regression cases ---------------------------------------------------
 
 
-def _rand_ascii_texts(rng, n_docs):
-    ws = [" ", "\t", "\n", "\r", "\x0b", "\x0c", "\x1c", "\x1d", "\x1e", "\x1f"]
-    out = []
-    for _ in range(n_docs):
-        kind = rng.integers(0, 10)
-        if kind == 0:
-            out.append("")
-        elif kind == 1:
-            out.append(rng.choice(ws) * int(rng.integers(1, 5)))
-        elif kind == 2:
-            out.append("ab")  # shorter than any k used here
-        else:
-            n_words = int(rng.integers(1, 40))
-            words = [
-                "".join(chr(c) for c in rng.integers(33, 127, size=rng.integers(1, 12)))
-                for _ in range(n_words)
-            ]
-            seps = [str(rng.choice(ws)) * int(rng.integers(1, 3)) for _ in range(n_words)]
-            out.append("".join(w + s for w, s in zip(words, seps)))
-    return out
-
-
-@pytest.mark.parametrize("k", [3, 13])
-def test_char_ascii_matches_pandas(k):
-    """An all-ASCII batch hashes the same from Arrow (zero-copy bytes) and
-    from pandas, and both match the definition."""
-    texts = _rand_ascii_texts(np.random.default_rng(7), 200)
-    for batch in (pa.array(texts, type=pa.string()), pd.Series(texts)):
-        _assert_matches_reference(batch, texts, k, "char")
-
-
-@pytest.mark.parametrize("n", [2, 13])
-def test_token_ascii_matches_pandas(n):
-    texts = _rand_ascii_texts(np.random.default_rng(11), 200)
-    for batch in (pa.array(texts, type=pa.string()), pd.Series(texts)):
-        _assert_matches_reference(batch, texts, n, "token")
-
-
 @pytest.mark.parametrize(
     "texts",
     [["tab\tsep", "  x  ", "y", ""], ["a b c", "", ""], ["", "one two", ""]],
@@ -259,8 +236,8 @@ def test_sliced_batch_offsets():
 
 
 def test_fallback_on_non_ascii_and_nulls():
-    """The ASCII buffer (lang-id's gate) refuses non-ASCII and NULLs; the
-    shingle kernels take both, from Arrow and pandas alike."""
+    """The ASCII buffer refuses non-ASCII and NULLs; the shingle kernels
+    take both, from Arrow and pandas alike."""
     assert _ascii_text_buffer(pa.array(["héllo", "plain"])) is None
     assert _ascii_text_buffer(pa.array(["plain", None])) is None
     texts = ["héllo wörld çafé", None, "ascii only here", "日本語 テキスト です ね"]
@@ -271,36 +248,8 @@ def test_fallback_on_non_ascii_and_nulls():
         _assert_matches_reference(pa.array(texts), texts, 13, unit)
 
 
-def test_dispatcher_ascii_equals_pandas():
-    texts = _rand_ascii_texts(np.random.default_rng(13), 150)
-    for unit in ("char", "token"):
-        h0, o0, u0 = _shingle(pd.Series(texts), 13, unit)
-        h1, o1, u1 = _shingle(pa.array(texts), 13, unit)
-        assert np.array_equal(h0, h1) and np.array_equal(o0, o1) and np.array_equal(u0, u1)
-
-
 def test_empty_batch():
     for batch in (pa.array([], type=pa.string()), pd.Series([], dtype=object), []):
         for fn in _KERNELS.values():
             h, o, u = fn(batch, 13)
             assert len(h) == 0 and list(o) == [0] and len(u) == 0
-
-
-def test_profile_lang_ascii_matches_pandas():
-    """r7 ASCII lang-id kernel must decide identically to the pandas
-    kernel on ASCII input — including prefix truncation, empty docs and
-    whitespace-only docs."""
-    from hlld_spark.operators.lang_profiles import (
-        EVAL_SENTENCES,
-        _profile_lang_ascii,
-        _profile_lang_batch,
-    )
-
-    rng = np.random.default_rng(23)
-    texts = [s for ss in EVAL_SENTENCES.values() for s in ss if s.isascii()]
-    texts += ["", "  ", "ab", "x " * 40, "word " * 700]  # >1000 chars triggers truncation
-    texts += _rand_ascii_texts(rng, 100)
-    want = _profile_lang_batch(pd.Series(texts)).to_numpy()
-    data, lens = _ascii_text_buffer(pa.array(texts, type=pa.string()))
-    got = _profile_lang_ascii(data, lens)
-    assert np.array_equal(want, got), list(zip(texts, want, got))[:5]

@@ -384,8 +384,8 @@ def test_lang_id_batch_vectorized_consistency(spark):
         "zzz qqq xxx",  # no markers → und
         "le chat de la maison et les oiseaux des champs",
     ]
-    whole = list(_lang_id_batch(pd.Series(texts)))
-    single = [_lang_id_batch(pd.Series([t])).iloc[0] for t in texts]
+    whole = _lang_id_batch(pd.Series(texts)).to_pylist()
+    single = [_lang_id_batch(pd.Series([t])).to_pylist()[0] for t in texts]
     assert whole == single
     assert whole == ["en", "es", "de", "ru", "zh", "und", "und", "fr"]
 
@@ -578,9 +578,9 @@ def test_unicode_robustness_lang_and_minhash(spark):
         "собака и кошка бегут по полю 🏃 возле дома",
         "𝔘𝔫𝔦𝔠𝔬𝔡𝔢 𝔪𝔞𝔱𝔥 𝔰𝔱𝔶𝔩𝔢𝔡 𝔱𝔢𝔵𝔱 with the usual words of the day",
     ]
-    got = list(_lang_id_batch(pd.Series(texts)))
+    got = _lang_id_batch(pd.Series(texts)).to_pylist()
     assert got[0] == "en" and got[1] == "zh" and got[2] == "ru" and got[3] == "en"
-    single = [_lang_id_batch(pd.Series([t])).iloc[0] for t in texts]
+    single = [_lang_id_batch(pd.Series([t])).to_pylist()[0] for t in texts]
     assert got == single  # batch-shape invariant with multi-byte chars
     df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "doc_id long, text string")
     a = {r["doc_id"]: bytes(r["signature"]) for r in minhash_signature_df(df, "doc_id", "text", 32).collect()}

@@ -132,28 +132,21 @@ def test_broadcast_plan_shape(spark):
 
 
 @pytest.mark.spark
-def test_kernel_path_matches_join_path(spark):
-    """The hashed broadcast-kernel scorer must equal the join scorer
-    (and hence the reference) on every doc — incl. short docs, pruned
-    higher orders, and held-out unseen tokens."""
-    from hlld_spark.operators.lm import (
-        stupid_backoff_scores_kernel,
-        train_stupid_backoff_hashed,
-    )
-
+def test_pruned_join_path_matches_reference(spark):
+    """``min_count`` prunes orders 2-3 of the join path's count tables;
+    scores match the pruned reference on every doc, incl. short docs
+    and held-out unseen tokens."""
     train = _mk_corpus(9, 35) + ["w0", "w1 w2", ""]
     score = train + ["zzz unseen qqq w3 w4"]
     tdf = spark.createDataFrame([(t,) for t in train], "text string")
     sdf = spark.createDataFrame(list(enumerate(score)), "doc_id long, text string")
     for mc in (1, 2):
-        model = train_stupid_backoff_hashed(tdf, "text", min_count=mc)
+        counts = train_stupid_backoff(tdf, "text", min_count=mc)
+        total = counts[1].agg(F.sum("c")).collect()[0][0]
         got = {
             r["doc_id"]: (r["n_tokens"], r["avg_logp"], r["ppl"])
-            for r in stupid_backoff_scores_kernel(
-                sdf, "doc_id", "text", model
-            ).collect()
+            for r in stupid_backoff_scores(sdf, "doc_id", "text", counts, total).collect()
         }
-        # reference (join-path semantics) computed locally
         want = _ref_pruned(train, score, mc)
         assert set(got) == set(want)
         for i in want:
@@ -163,7 +156,7 @@ def test_kernel_path_matches_join_path(spark):
 
 def _ref_pruned(train_texts, score_texts, min_count, alpha=0.4):
     """Reference with min_count pruning of orders 2-3 (mirrors
-    train_stupid_backoff_hashed)."""
+    train_stupid_backoff)."""
     tok = lambda t: re.findall("[a-z0-9]+", t.lower())
     c1, c2, c3 = Counter(), Counter(), Counter()
     for t in (tok(x) for x in train_texts):

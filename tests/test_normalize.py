@@ -5,9 +5,11 @@ cross-engine agreement with DuckDB's utf8proc implementation."""
 import unicodedata
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from hlld_spark.operators.normalize import (
+    _normalize_arrow,
     normalize_batch,
     with_unicode_normalization,
     write_unicode_fixture,
@@ -43,6 +45,24 @@ def test_nulls_pass_through_and_bad_form_raises():
     assert out[0] is None and out[1] == "x"
     with pytest.raises(ValueError):
         normalize_batch(pd.Series(["x"]), "nfc-ish")
+
+
+@pytest.mark.parametrize("kind", ["string", "large_string", "slice", "chunked"])
+def test_arrow_batch_matches_stdlib(kind):
+    """The Arrow kernel, all-ASCII pass-through included, on regular,
+    large, sliced and chunked batches."""
+    for texts in (["plain", None, "", "ascii only"], [DECOMPOSED, "plain", None, COMPAT]):
+        if kind == "large_string":
+            batch = pa.array(texts, type=pa.large_string())
+        elif kind == "slice":
+            batch = pa.array(["pad é", *texts, "tail"]).slice(1, len(texts))
+        elif kind == "chunked":
+            batch = pa.chunked_array([pa.array(texts[:1]), pa.array(texts[1:])])
+        else:
+            batch = pa.array(texts)
+        for form in ("NFC", "NFKD"):
+            want = [None if t is None else unicodedata.normalize(form, t) for t in texts]
+            assert _normalize_arrow(batch, form).to_pylist() == want
 
 
 def test_fixture_is_genuinely_denormalized(tmp_path):

@@ -82,7 +82,7 @@ def test_lang_id_rides_worker_side_scan(spark, web_dir):
         counts: dict = {}
         for rb in batches:
             texts = pd.Series(rb.column(0).to_pylist())
-            for v in _lang_id_batch(texts):
+            for v in _lang_id_batch(texts).to_pylist():
                 counts[v] = counts.get(v, 0) + 1
         if counts:
             yield pa.RecordBatch.from_arrays(

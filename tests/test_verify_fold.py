@@ -12,6 +12,8 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from hlld_spark.operators.dedup import (
+    _popcount64,
+    _popcount64_table,
     _signature_matrix,
     _verify_fold,
     embedding_cosine_dedup,
@@ -28,6 +30,21 @@ def _score(A, B):
 
 def _is_hit(S):
     return S <= 1
+
+
+def test_popcount_table_matches_bin_count():
+    """The byte-table popcount (numpy < 2.0) counts the set bits of each
+    uint64, edge words included, and agrees with the dispatcher."""
+    rng = np.random.default_rng(5)
+    x = np.concatenate(
+        (np.array([0, (1 << 64) - 1, 1 << 63, 1], dtype=np.uint64), rng.integers(0, 1 << 64, 200, dtype=np.uint64))
+    )
+    want = [bin(int(v)).count("1") for v in x]
+    assert _popcount64_table(x).tolist() == want
+    assert _popcount64(x).tolist() == want
+    m = x[:8, None] ^ x[None, 8:20]
+    assert _popcount64_table(m).shape == (8, 12)
+    assert _popcount64_table(m).tolist() == [[bin(int(v)).count("1") for v in row] for row in m]
 
 
 def _reference(rows, cap):
