@@ -30,6 +30,28 @@ CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 WEB_ROWS = int(os.environ.get("BENCH_WEB_ROWS", "4000000"))
 
 
+def write_fixtures(spark, web_dir: str, hosts_dir: str, paras_dir: str) -> None:
+    """Write each web, hosts and paragraph parquet fixture that has no
+    ``_SUCCESS`` marker, with the same generation bench.py uses, so the
+    queries here run on a machine where bench.py never ran."""
+    from pyspark.sql import functions as F
+
+    from hlld_spark.sources.webpages import generate_web_pages
+
+    if not os.path.exists(os.path.join(web_dir, "_SUCCESS")):
+        generate_web_pages(spark, WEB_ROWS, partitions=2 * CPUS).write.mode("overwrite").parquet(web_dir)
+    web = spark.read.parquet(web_dir)
+    if not os.path.exists(os.path.join(hosts_dir, "_SUCCESS")):
+        web.select(F.regexp_extract("url", r"https://([^/]+)/", 1).alias("host")).write.mode(
+            "overwrite"
+        ).parquet(hosts_dir)
+    if not os.path.exists(os.path.join(paras_dir, "_SUCCESS")):
+        web.filter(F.pmod(F.xxhash64("url"), F.lit(max(WEB_ROWS // 500000, 1))) == 0).select(
+            "url",
+            F.regexp_replace("text", r"((?:\S+\s+){8})", "$1\n").alias("text"),
+        ).write.mode("overwrite").parquet(paras_dir)
+
+
 def build_queries(spark):
     """name -> (make_df_fn, action) mirroring bench.py's 18 queries.
     action 'collect'/'count' mirrors bench.py exactly; 'noop' forces
@@ -61,6 +83,7 @@ def build_queries(spark):
     web_dir = os.path.join(tempfile.gettempdir(), f"hlld_bench_web_{WEB_ROWS}")
     hosts_dir = os.path.join(tempfile.gettempdir(), f"hlld_bench_hosts_{WEB_ROWS}")
     paras_dir = os.path.join(tempfile.gettempdir(), f"hlld_bench_paras_{WEB_ROWS}")
+    write_fixtures(spark, web_dir, hosts_dir, paras_dir)
     web = spark.read.parquet(web_dir)
     li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
     hosts = spark.read.parquet(hosts_dir)

@@ -4,7 +4,9 @@
     register_sql_functions(spark)
     spark.sql("SELECT lang, hll_cardinality(sketch) FROM sketches")
 
-Functions (vectorized UDFs over the self-describing sketch binary):
+Functions (``arrow_udf``s over the self-describing sketch binary; a
+NULL input gives a NULL output, except ``sketch_bytes`` (0) and
+``sketch_merge`` (the other side)):
 
     hll_cardinality(sketch) → double        estimator chain (O5)
     sketch_estimate_sql(sketch) → double    kind-dispatched default
@@ -19,8 +21,8 @@ Functions (vectorized UDFs over the self-describing sketch binary):
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, IntegerType, LongType, StringType
 
@@ -29,75 +31,61 @@ from ..core.accumulator import deserialize_any, merge_serialized
 from ..operators.sketch import sketch_estimate
 
 
-@F.pandas_udf(DoubleType())
-def _hll_cardinality(bufs: pd.Series) -> pd.Series:
-    out = np.full(len(bufs), np.nan)
-    for i, b in enumerate(bufs):
-        if b is None:
-            continue
-        regs, p = _hll.deserialize(bytes(b))
-        out[i] = _hll.cardinality(regs, p)
-    return pd.Series(out)
+def _per_value(fn, out_type, *cols) -> pa.Array:
+    """``fn`` over each row's values; a row with any NULL input is NULL."""
+    rows = zip(*(c.to_pylist() for c in cols))
+    return pa.array([None if None in vals else fn(*vals) for vals in rows], type=out_type)
 
 
-@F.pandas_udf(StringType())
-def _sketch_kind(bufs: pd.Series) -> pd.Series:
-    out = []
-    for b in bufs:
-        if b is None:
-            out.append(None)
-            continue
-        acc, _, _ = deserialize_any(bytes(b))
-        out.append(acc.kind)
-    return pd.Series(out)
-
-
-@F.pandas_udf(LongType())
-def _sketch_bytes(bufs: pd.Series) -> pd.Series:
-    return pd.Series([len(b) if b is not None else 0 for b in bufs], dtype=np.int64)
-
-
-@F.pandas_udf(BinaryType())
-def _sketch_merge(a: pd.Series, b: pd.Series) -> pd.Series:
-    out = []
-    for x, y in zip(a, b):
-        if x is None:
-            out.append(bytes(y) if y is not None else None)
-            continue
-        if y is None:
-            out.append(bytes(x))
-            continue
-        out.append(merge_serialized([bytes(x), bytes(y)]))
-    return pd.Series(out)
-
-
-@F.pandas_udf(DoubleType())
-def _sketch_quantile(bufs: pd.Series, qs: pd.Series) -> pd.Series:
+def _quantile(b: bytes, q: float) -> float:
     """quantile q of a t-digest/KLL sketch; CMS/Bloom/HLL → error."""
-    out = np.full(len(bufs), np.nan)
-    for i, (b, q) in enumerate(zip(bufs, qs)):
-        if b is None or q is None:
-            continue
-        acc, state, spec = deserialize_any(bytes(b))
-        if not hasattr(acc, "quantile"):
-            raise ValueError(f"sketch kind {acc.kind!r} has no quantiles")
-        out[i] = acc.quantile(state, float(q), spec)
-    return pd.Series(out)
+    acc, state, spec = deserialize_any(b)
+    if not hasattr(acc, "quantile"):
+        raise ValueError(f"sketch kind {acc.kind!r} has no quantiles")
+    return acc.quantile(state, float(q), spec)
 
 
-@F.pandas_udf(DoubleType())
-def _error_for_precision(p: pd.Series) -> pd.Series:
-    return pd.Series([_hll.error_for_precision(int(x)) for x in p])
+@F.arrow_udf(DoubleType())
+def _hll_cardinality(bufs):
+    return _per_value(lambda b: _hll.cardinality(*_hll.deserialize(b)), pa.float64(), bufs)
 
 
-@F.pandas_udf(IntegerType())
-def _precision_for_error(eps: pd.Series) -> pd.Series:
-    return pd.Series([_hll.precision_for_error(float(x)) for x in eps], dtype=np.int32)
+@F.arrow_udf(StringType())
+def _sketch_kind(bufs):
+    return _per_value(lambda b: deserialize_any(b)[0].kind, pa.string(), bufs)
 
 
-@F.pandas_udf(LongType())
-def _bytes_for_precision(p: pd.Series) -> pd.Series:
-    return pd.Series([_hll.bytes_for_precision(int(x)) for x in p], dtype=np.int64)
+@F.arrow_udf(LongType())
+def _sketch_bytes(bufs):
+    return pc.binary_length(bufs).cast(pa.int64()).fill_null(0)
+
+
+@F.arrow_udf(BinaryType())
+def _sketch_merge(a, b):
+    """Pairwise merge; a NULL side yields the other side."""
+    merged = [x if y is None else y if x is None else merge_serialized([x, y])
+              for x, y in zip(a.to_pylist(), b.to_pylist())]
+    return pa.array(merged, type=pa.binary())
+
+
+@F.arrow_udf(DoubleType())
+def _sketch_quantile(bufs, qs):
+    return _per_value(_quantile, pa.float64(), bufs, qs)
+
+
+@F.arrow_udf(DoubleType())
+def _error_for_precision(p):
+    return _per_value(lambda x: _hll.error_for_precision(int(x)), pa.float64(), p)
+
+
+@F.arrow_udf(IntegerType())
+def _precision_for_error(eps):
+    return _per_value(lambda x: _hll.precision_for_error(float(x)), pa.int32(), eps)
+
+
+@F.arrow_udf(LongType())
+def _bytes_for_precision(p):
+    return _per_value(lambda x: _hll.bytes_for_precision(int(x)), pa.int64(), p)
 
 
 def register_sql_functions(spark: SparkSession) -> None:

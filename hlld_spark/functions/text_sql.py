@@ -14,17 +14,18 @@ Functions:
     ngram_jaccard(a, b, n) → double   exact char-n-gram Jaccard of a pair
                                       (hashed kernel; the LSH verify path)
 
-All are Arrow-batched UDFs (``arrow_udf`` for the two lang-id functions,
-``pandas_udf`` for ``ngram_jaccard``) over the same whole-batch kernels
-the DataFrame operators use — no per-row Python.
+All are ``arrow_udf``s over the same whole-batch kernels the DataFrame
+operators use — no per-row Python. ``ngram_jaccard`` is the UDF
+``dedup.ngram_jaccard_pairs`` calls; a column ``n`` is scored per
+distinct value, and a NULL ``n`` scores NULL.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession, functions as F
-from pyspark.sql.types import DoubleType, StringType
+from pyspark.sql.types import StringType
+
+from ..operators.dedup import _ngram_jaccard
 
 
 @F.arrow_udf(StringType())
@@ -39,29 +40,6 @@ def _lang_id_profiles(texts):
     from ..operators.lang_profiles import _profile_lang
 
     return _profile_lang(texts)
-
-
-def _ngram_jaccard_batch(a: pd.Series, b: pd.Series, n: pd.Series) -> pd.Series:
-    if len(a) == 0:
-        return pd.Series([], dtype=float)
-    ks = n.unique()
-    if len(ks) != 1:
-        # ADVICE r3: silently scoring every row with n.iloc[0] would be
-        # wrong for a COLUMN n — score per distinct n instead (each
-        # group through the same batch kernel; literals still take the
-        # single-pass fast path)
-        out = pd.Series(np.zeros(len(a)), index=a.index)
-        for kv in ks:
-            m = (n == kv).values
-            out[m] = _ngram_jaccard_batch(a[m], b[m], n[m]).values
-        return out
-    k = int(ks[0])
-    from ..operators.dedup import _pairwise_jaccard_hashed
-
-    return pd.Series(_pairwise_jaccard_hashed(a, b, k), index=a.index)
-
-
-_ngram_jaccard = F.pandas_udf(_ngram_jaccard_batch, DoubleType())
 
 
 def register_text_functions(spark: SparkSession) -> None:

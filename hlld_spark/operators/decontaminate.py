@@ -17,25 +17,25 @@ asymmetry:
   distinct n-gram hashes are computed distributively, collected ONCE to
   the driver (bounded by ``max_eval_grams`` — same bounded-collect
   pattern as the IVF centroid sample), sorted, and broadcast.
-* the CORPUS side never materializes an n-gram row: inside one
-  Python pass, each batch's text column is shingle-hashed by the same
-  code-point kernels minhash uses (``dedup._char_shingle_hashes`` /
-  ``dedup._token_shingle_hashes``, one kernel per unit for any script
-  mix or NULLs) and probed against the broadcast
-  table — a 2^24-slot byte-mask prefilter resolves ~97% of probes with
-  one vectorized load, searchsorted runs only on survivors. Only
-  ``(id, n_matched)`` leaves the worker: no corpus shuffle at all
-  (plan-asserted in tests).
+* the CORPUS side never materializes an n-gram row: each Arrow batch's
+  text column is read by the same gram stream minhash and span dedup
+  use (``dedup._grams``: one code-point kernel per unit for any script
+  mix or NULLs, docs shorter than n owning no gram) and probed against
+  the broadcast table — a 2^24-slot byte-mask prefilter resolves ~97%
+  of probes with one vectorized load, searchsorted runs only on
+  survivors. Only ``(id, n_matched)`` leaves the worker: no corpus
+  shuffle at all (plan-asserted in tests).
 * ``method="bloom"`` swaps the sorted array for this engine's own Bloom
   filter (``core.bloom``) built over the eval hashes: ~10x smaller
   broadcast at a documented false-positive rate. Bloom errors only
   OVER-flag (drop a clean doc), never under-flag — the safe direction
   for decontamination.
 * :func:`decontaminate_parquet` is the scan-dominated scale path: the
-  same probe riding the worker-side pyarrow scan
-  (``sources.parquet_scan.map_parquet_batches``), dodging the measured
-  ~5.4M rows/s JVM→Python Arrow-IPC ceiling exactly like
-  ``build_sketches_parquet`` does.
+  same probe closure fed by the worker-side pyarrow scan
+  (``sources.parquet_scan.map_parquet_batches``) in place of
+  ``mapInArrow`` over the DataFrame, dodging the measured ~5.4M rows/s
+  JVM→Python Arrow-IPC ceiling exactly like ``build_sketches_parquet``
+  does. The overflow join's corpus gram stream is shared the same way.
 
 Hash-match vs string-match: grams are compared by 64-bit splitmix-
 finalized poly hashes, so a collision could over-flag a document
@@ -48,14 +48,12 @@ the same shingle kernel as the dedup family.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
-from .dedup import _char_shingle_hashes, _splitmix, _token_shingle_hashes
+from .dedup import _grams, _splitmix
 from .skew import rebalance
 
 # second hash for the Bloom double-hashing scheme — any odd constant
@@ -67,35 +65,15 @@ def _bloom_pair(h: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return h, _splitmix(h ^ _BLOOM_H2_SALT)
 
 
-def _shingle(texts, n: int, unit: str):
-    """(hashes, per-doc offsets, per-doc length in the gram unit) of a
-    text batch (Arrow string column, pandas Series or list).
-
-    unit="token": whitespace-token n-grams (the published 13-gram rule's
-    unit). unit="char": character n-grams. Both kernels emit ONE
-    sentinel hash for docs shorter than n units (slot offsets[d]) —
-    callers mask it, since no n-gram exists there."""
-    if unit == "token":
-        return _token_shingle_hashes(texts, n)
-    if unit == "char":
-        return _char_shingle_hashes(texts, n)
-    raise ValueError(f"unknown unit {unit!r} (expected 'token' or 'char')")
-
-
 def _gram_hashes_df(df: DataFrame, text_col: str, n: int, unit: str) -> DataFrame:
     """Distinct n-gram hashes of a text column as a 1-column DataFrame
     (docs shorter than n units contribute nothing — no n-gram exists)."""
     schema = StructType([StructField("gram_hash", LongType(), False)])
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            h, offsets, units = _shingle(pdf[text_col], n, unit)
-            # mask out the whole-doc hash the kernel emits for short docs
-            # (exactly ONE slot per short doc, at offsets[d] — kernel
-            # contract; vectorized, VERDICT r3 #4)
-            keep = np.ones(len(h), dtype=bool)
-            keep[offsets[:-1][units < n]] = False
-            yield pd.DataFrame({"gram_hash": np.unique(h[keep]).astype(np.int64)})
+    def extract(batches):
+        for rb in batches:
+            h, _ = _grams(rb.column(text_col), n, unit)
+            yield pa.RecordBatch.from_arrays([pa.array(np.unique(h).view(np.int64))], names=["gram_hash"])
 
     # Rebalance the (tiny, post-filter) eval projection before the
     # Python stage — the gram extraction otherwise inherits the SCAN's
@@ -105,7 +83,7 @@ def _gram_hashes_df(df: DataFrame, text_col: str, n: int, unit: str) -> DataFram
     # advisoryPartitionSizeInBytes. Row placement only; the distinct
     # gram set is unchanged.
     par = df.sparkSession.sparkContext.defaultParallelism
-    return rebalance(df.select(text_col), par).mapInPandas(extract, schema).distinct()
+    return rebalance(df.select(text_col), par).mapInArrow(extract, schema).distinct()
 
 
 class EvalGramOverflow(ValueError):
@@ -200,44 +178,51 @@ def _make_member(method: str, blob: bytes):
     return member
 
 
-def _flag_counts(member, h, offsets, units, n: int) -> np.ndarray:
-    """Per-doc matched-gram occurrence counts from a shingle-kernel
-    (hashes, offsets, units) triple."""
-    if not len(h) or not len(units):
-        return np.zeros(len(units), dtype=np.int64)
-    hits = member(h)
-    # zero out short docs' whole-doc sentinel hash (one slot each —
-    # kernel contract; vectorized, VERDICT r3 #4)
-    hits[offsets[:-1][units < n]] = False
-    # the kernel emits >=1 hash per doc (short docs get a whole-doc
-    # sentinel, masked above), so offsets are strictly increasing and
-    # reduceat is well-defined per doc
-    return np.add.reduceat(hits.astype(np.int64), offsets[:-1])
+def _probe(probe_state, method: str, id_col: str, text_col: str, n: int, unit: str):
+    """The corpus probe over Arrow batches of (id, text): per-doc
+    matched-gram occurrence counts, yielded as (id, n_matched_grams) for
+    flagged docs only. Shared by the DataFrame path (``mapInArrow``) and
+    the worker-side parquet scan (``map_parquet_batches``); unflagged
+    rows never become Python objects."""
+
+    def fn(batches):
+        member = _make_member(method, probe_state.value)
+        for rb in batches:
+            h, offsets = _grams(rb.column(text_col), n, unit)
+            if not len(h):
+                continue
+            # per-doc counts from the hit slots' doc rows: a cumsum over
+            # every gram made the probe of a 12M-gram web batch ~15%
+            # slower (DEVNOTES "One gram stream")
+            hits = np.flatnonzero(member(h))
+            per_doc = np.bincount(np.searchsorted(offsets, hits, side="right") - 1, minlength=rb.num_rows)
+            idx = np.flatnonzero(per_doc > 0)
+            if len(idx):
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(id_col).take(pa.array(idx)), pa.array(per_doc[idx], type=pa.int64())],
+                    names=[id_col, "n_matched_grams"],
+                )
+
+    return fn
 
 
-def _flag_batch(member, texts, n: int, unit: str = "char") -> np.ndarray:
-    """Per-doc matched-gram occurrence counts for one batch."""
-    h, offsets, units = _shingle(texts, n, unit)
-    return _flag_counts(member, h, offsets, units, n)
+def _gram_occurrences(id_col: str, text_col: str, n: int, unit: str):
+    """(id, gram_hash) over Arrow batches of (id, text) — one row per
+    n-gram OCCURRENCE of every doc. The corpus side of the distributed
+    fallback join, shared like :func:`_probe`; never used when the eval
+    side fits the broadcast cap."""
 
+    def fn(batches):
+        for rb in batches:
+            h, offsets = _grams(rb.column(text_col), n, unit)
+            if len(h):
+                rows = np.repeat(np.arange(rb.num_rows), np.diff(offsets))
+                yield pa.RecordBatch.from_arrays(
+                    [rb.column(id_col).take(pa.array(rows)), pa.array(h.view(np.int64))],
+                    names=[id_col, "gram_hash"],
+                )
 
-def _corpus_gram_occurrences(docs: DataFrame, id_col: str, text_col: str, n: int, unit: str) -> DataFrame:
-    """(id, gram_hash) — one row per n-gram OCCURRENCE of every doc
-    (short-doc sentinel hashes masked). The corpus side of the
-    distributed fallback join; never used when the eval side fits the
-    broadcast cap."""
-    schema = StructType([docs.schema[id_col], StructField("gram_hash", LongType(), False)])
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            h, offsets, units = _shingle(pdf[text_col], n, unit)
-            keep = np.ones(len(h), dtype=bool)
-            keep[offsets[:-1][units < n]] = False
-            per_doc = offsets[1:] - offsets[:-1]
-            ids = np.repeat(pdf[id_col].values, per_doc)[keep]
-            yield pd.DataFrame({id_col: ids, "gram_hash": h[keep].astype(np.int64)})
-
-    return docs.select(id_col, text_col).mapInPandas(extract, schema)
+    return fn
 
 
 def _flag_via_join(corpus_grams: DataFrame, eval_df: DataFrame, id_col: str,
@@ -253,6 +238,22 @@ def _flag_via_join(corpus_grams: DataFrame, eval_df: DataFrame, id_col: str,
         .groupBy(id_col)
         .agg(F.count("*").alias("n_matched_grams"))
     )
+
+
+def _flag(run, id_field, eval_df, id_col, text_col, eval_text_col, n, method, bloom_fpr,
+          max_eval_grams, unit) -> DataFrame:
+    """Both entry points' body: ``run(fn, schema)`` maps an Arrow batch
+    closure over the corpus's (id, text) batches — ``mapInArrow`` over
+    the DataFrame or ``map_parquet_batches`` over the files."""
+    try:
+        table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
+    except EvalGramOverflow:
+        gram_schema = StructType([id_field, StructField("gram_hash", LongType(), False)])
+        corpus_grams = run(_gram_occurrences(id_col, text_col, n, unit), gram_schema)
+        return _flag_via_join(corpus_grams, eval_df, id_col, eval_text_col, n, unit)
+    probe_state = _probe_blob(eval_df.sparkSession, table, method, bloom_fpr)
+    schema = StructType([id_field, StructField("n_matched_grams", LongType(), False)])
+    return run(_probe(probe_state, method, id_col, text_col, n, unit), schema)
 
 
 def decontaminate(
@@ -292,35 +293,11 @@ def decontaminate(
     the scale path; the join is the correctness net for corpus-sized
     "eval" tables.
     """
-    eval_text_col = eval_text_col or text_col
-    spark = docs.sparkSession
-    try:
-        table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
-    except EvalGramOverflow:
-        return _flag_via_join(
-            _corpus_gram_occurrences(docs, id_col, text_col, n, unit),
-            eval_df, id_col, eval_text_col, n, unit,
-        )
-    probe_state = _probe_blob(spark, table, method, bloom_fpr)
-
-    schema = StructType(
-        [docs.schema[id_col], StructField("n_matched_grams", LongType(), False)]
+    return _flag(
+        lambda fn, schema: docs.select(id_col, text_col).mapInArrow(fn, schema),
+        docs.schema[id_col], eval_df, id_col, text_col, eval_text_col or text_col,
+        n, method, bloom_fpr, max_eval_grams, unit,
     )
-
-    def probe(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        member = _make_member(method, probe_state.value)
-        for pdf in batches:
-            per_doc = _flag_batch(member, pdf[text_col], n, unit)
-            flagged = per_doc > 0
-            if flagged.any():
-                yield pd.DataFrame(
-                    {
-                        id_col: pdf[id_col].values[flagged],
-                        "n_matched_grams": per_doc[flagged],
-                    }
-                )
-
-    return docs.select(id_col, text_col).mapInPandas(probe, schema)
 
 
 def decontaminate_parquet(
@@ -345,53 +322,12 @@ def decontaminate_parquet(
     scan dominates — the generic DataFrame path pays the shared-JVM
     Arrow-IPC ceiling (~5.4M rows/s measured here) that this path dodges,
     exactly like ``build_sketches_parquet``."""
-    import pyarrow as pa
-
     from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
 
-    eval_text_col = eval_text_col or text_col
     files = list_parquet_files(path)
-    id_field = parquet_schema(files, [id_col])[id_col]
-    try:
-        table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
-    except EvalGramOverflow:
-        # same distributed-join fallback as :func:`decontaminate`, with
-        # the corpus gram stream produced by the worker-side scan
-        gram_schema = StructType([id_field, StructField("gram_hash", LongType(), False)])
+    return _flag(
+        lambda fn, schema: map_parquet_batches(spark, files, fn, schema, [id_col, text_col], filter),
+        parquet_schema(files, [id_col])[id_col], eval_df, id_col, text_col, eval_text_col or text_col,
+        n, method, bloom_fpr, max_eval_grams, unit,
+    )
 
-        def gfn(batches):
-            for rb in batches:
-                h, offsets, units = _shingle(rb.column(text_col), n, unit)
-                keep = np.ones(len(h), dtype=bool)
-                keep[offsets[:-1][units < n]] = False
-                per_doc = offsets[1:] - offsets[:-1]
-                take = np.repeat(np.arange(rb.num_rows), per_doc)[keep]
-                if len(take):
-                    yield pa.RecordBatch.from_arrays(
-                        [rb.column(id_col).take(pa.array(take)), pa.array(h[keep].astype(np.int64))],
-                        names=[id_col, "gram_hash"],
-                    )
-
-        corpus_grams = map_parquet_batches(spark, files, gfn, gram_schema, [id_col, text_col], filter)
-        return _flag_via_join(corpus_grams, eval_df, id_col, eval_text_col, n, unit)
-    probe_state = _probe_blob(spark, table, method, bloom_fpr)
-
-    schema = StructType([id_field, StructField("n_matched_grams", LongType(), False)])
-
-    def fn(batches):
-        member = _make_member(method, probe_state.value)
-        for rb in batches:
-            # shingle straight off the Arrow string column and
-            # materialize ONLY the flagged rows' ids — unflagged rows
-            # never become Python objects at all
-            h, offsets, units = _shingle(rb.column(text_col), n, unit)
-            per_doc = _flag_counts(member, h, offsets, units, n)
-            idx = np.flatnonzero(per_doc > 0)
-            if len(idx):
-                ids = rb.column(id_col).take(pa.array(idx))
-                yield pa.RecordBatch.from_arrays(
-                    [ids, pa.array(per_doc[idx], type=pa.int64())],
-                    names=[id_col, "n_matched_grams"],
-                )
-
-    return map_parquet_batches(spark, files, fn, schema, [id_col, text_col], filter)

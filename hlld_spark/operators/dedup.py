@@ -23,7 +23,6 @@ pair verification (bounded by bucket sizes).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
@@ -32,12 +31,11 @@ from pyspark.sql.types import (
     BinaryType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
 
-from ..core.hashing import hll_hash, murmur3_x64_128
+from ..core.hashing import hll_hash
 
 _U64 = np.uint64
 _MERSENNE = (1 << 61) - 1
@@ -452,18 +450,44 @@ def _token_shingle_hashes(texts, n: int) -> tuple[np.ndarray, np.ndarray, np.nda
     return h, out_off, ntoks
 
 
+def _shingle_hashes(texts, n: int, unit: str) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The one unit dispatch: (hashes, per-doc offsets, per-doc length
+    in the unit) of a batch's ``unit="token"`` (whitespace-token) or
+    ``unit="char"`` n-grams, with one whole-doc sentinel hash per doc
+    shorter than n units."""
+    if unit == "token":
+        return _token_shingle_hashes(texts, n)
+    if unit == "char":
+        return _char_shingle_hashes(texts, n)
+    raise ValueError(f"unknown unit {unit!r} (expected 'token' or 'char')")
+
+
+def _grams(texts, n: int, unit: str) -> tuple[np.ndarray, np.ndarray]:
+    """(hashes, per-doc offsets) of every n-gram of a batch:
+    :func:`_shingle_hashes` without the short-doc sentinel, so a doc
+    shorter than n units owns zero slots and slot ``offsets[d] + i`` is
+    doc d's gram at unit position i. Per-hash doc rows are
+    ``np.repeat(arange(n_docs), diff(offsets))`` (or, for a few slots,
+    ``searchsorted(offsets, slots, side="right") - 1``); per-doc counts
+    are never ``np.add.reduceat``, which gives an empty segment the next
+    element, not 0."""
+    h, offsets, units = _shingle_hashes(texts, n, unit)
+    short = units < n
+    if not short.any():
+        return h, offsets
+    keep = np.ones(len(h), dtype=bool)
+    keep[offsets[:-1][short]] = False
+    return h[keep], np.concatenate(([0], np.cumsum(np.where(short, 0, units - n + 1))))
+
+
 def _minhash_signatures(texts, num_perm: int, k: int, seed: int = 1, unit: str = "char") -> np.ndarray:
     """(n_docs, num_perm) uint64 minhash signatures, vectorized: one
     shingle-hash pass + num_perm affine mixes with minimum.reduceat.
     ``unit="token"`` (r4) shingles k whitespace tokens instead of k
     characters — the production web-dedup convention (SlimPajama /
-    RefinedWeb style token n-grams); same downstream banding."""
-    if unit == "token":
-        h, offsets, _ = _token_shingle_hashes(texts, k)
-    elif unit == "char":
-        h, offsets, _ = _char_shingle_hashes(texts, k)
-    else:
-        raise ValueError(f"unknown unit {unit!r} (expected 'token' or 'char')")
+    RefinedWeb style token n-grams); same downstream banding. A doc
+    shorter than k units is signed by its whole-doc sentinel hash."""
+    h, offsets, _ = _shingle_hashes(texts, k, unit)
     n_docs = len(offsets) - 1
     starts = offsets[:-1]
     rng = np.random.RandomState(seed)
@@ -837,9 +861,10 @@ def minhash_lsh_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _simhash_batch(texts: pd.Series) -> np.ndarray:
-    """64-bit simhash per doc: whitespace tokens, ±1 votes per bit."""
-    toks_per_doc = [(t or "").split() for t in texts]
+def _simhash_batch(texts) -> np.ndarray:
+    """64-bit simhash per doc of any batch :func:`_text_array` takes:
+    whitespace tokens, ±1 votes per bit."""
+    toks_per_doc = [t.split() for t in _text_array(texts).to_pylist()]
     counts = np.array([max(len(t), 1) for t in toks_per_doc], dtype=np.int64)
     flat = [tok for toks in toks_per_doc for tok in (toks or [""])]
     h = hll_hash(flat)
@@ -856,12 +881,11 @@ def simhash_df(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     out_schema = StructType([df.schema[id_col], StructField("simhash", LongType(), False)])
 
     def compute(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "simhash": _simhash_batch(pdf[text_col]).astype(np.int64)}
-            )
+        for rb in batches:
+            sim = pa.array(_simhash_batch(rb.column(text_col)).view(np.int64))
+            yield pa.RecordBatch.from_arrays([rb.column(id_col), sim], names=[id_col, "simhash"])
 
-    return df.select(id_col, text_col).mapInPandas(compute, schema=out_schema)
+    return df.select(id_col, text_col).mapInArrow(compute, schema=out_schema)
 
 
 #: set bits of each byte value, for numpy < 2.0 (no ``bitwise_count``):
@@ -954,7 +978,7 @@ def simhash_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _pairwise_jaccard_hashed(a: pd.Series, b: pd.Series, n: int) -> np.ndarray:
+def _pairwise_jaccard_hashed(a, b, n: int) -> np.ndarray:
     """Exact Jaccard of hashed char-n-gram sets for a batch of (a, b)
     pairs: ONE shingle-hash pass per side, then per-pair
     unique/intersect on the small slices.
@@ -982,6 +1006,25 @@ def _pairwise_jaccard_hashed(a: pd.Series, b: pd.Series, n: int) -> np.ndarray:
     return outv
 
 
+@F.arrow_udf(DoubleType())
+def _ngram_jaccard(a, b, n):
+    """Hashed char-n-gram Jaccard of each (a, b) row pair. A column
+    ``n`` is scored per distinct value, each group through one kernel
+    pass (scoring every row with the first row's n would be wrong); a
+    NULL ``n`` scores NULL. Serves :func:`ngram_jaccard_pairs` and the
+    SQL ``ngram_jaccard``."""
+    ns = n.to_numpy(zero_copy_only=False)
+    valid = n.is_valid().to_numpy(zero_copy_only=False)
+    out = np.zeros(len(a))
+    for k in np.unique(ns[valid]):
+        m = ns == k
+        if m.all():  # a literal n: one pass, no copy
+            out[:] = _pairwise_jaccard_hashed(a, b, int(k))
+        else:
+            out[m] = _pairwise_jaccard_hashed(a.filter(pa.array(m)), b.filter(pa.array(m)), int(k))
+    return pa.array(out, mask=~valid)
+
+
 def ngram_jaccard_pairs(
     pairs_df: DataFrame, text_a: str, text_b: str, n: int = 3, out: str = "jaccard",
     exact: bool = False,
@@ -999,25 +1042,18 @@ def ngram_jaccard_pairs(
 
     ``exact=True`` opts into the per-pair Python-set path over the true
     string n-grams — collision-free, fine at small verify volume."""
-    if exact:
+    if not exact:
+        return pairs_df.withColumn(out, _ngram_jaccard(F.col(text_a), F.col(text_b), F.lit(n)))
 
-        @F.pandas_udf(DoubleType())
-        def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-            outv = np.zeros(len(a))
-            for i, (x, y) in enumerate(zip(a, b)):
-                sx = {(x or "")[j : j + n] for j in range(max(len(x or "") - n + 1, 1))}
-                sy = {(y or "")[j : j + n] for j in range(max(len(y or "") - n + 1, 1))}
-                u = len(sx | sy)
-                outv[i] = len(sx & sy) / u if u else 1.0
-            return pd.Series(outv)
-
-    else:
-
-        @F.pandas_udf(DoubleType())
-        def jac(a: pd.Series, b: pd.Series) -> pd.Series:
-            if len(a) == 0:
-                return pd.Series(np.zeros(0))
-            return pd.Series(_pairwise_jaccard_hashed(a, b, n))
+    @F.arrow_udf(DoubleType())
+    def jac(a, b):
+        outv = np.zeros(len(a))
+        for i, (x, y) in enumerate(zip(a.to_pylist(), b.to_pylist())):
+            sx = {(x or "")[j : j + n] for j in range(max(len(x or "") - n + 1, 1))}
+            sy = {(y or "")[j : j + n] for j in range(max(len(y or "") - n + 1, 1))}
+            u = len(sx | sy)
+            outv[i] = len(sx & sy) / u if u else 1.0
+        return pa.array(outv)
 
     return pairs_df.withColumn(out, jac(F.col(text_a), F.col(text_b)))
 
@@ -1079,19 +1115,28 @@ def embedding_cosine_dedup(
     def sign_buckets(batches):
         rng = np.random.RandomState(seed)
         planes_mat = None
-        for pdf in batches:
-            if len(pdf) == 0:
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            vecs = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+            col = rb.column(vec_col)
+            lens = pc.list_value_length(col).to_numpy(zero_copy_only=False)
+            if col.null_count or (lens != lens[0]).any():
+                raise ValueError(f"{vec_col!r} holds NULL vectors or vectors of unequal length")
+            flat = np.asarray(col.flatten().to_numpy(zero_copy_only=False), dtype=np.float64)
+            vecs = flat.reshape(rb.num_rows, -1)
             if planes_mat is None:
                 planes_mat = rng.standard_normal((vecs.shape[1], planes))
             proj = vecs @ planes_mat > 0
             bucket = np.zeros(len(vecs), dtype=np.int64)
             for p in range(planes):
                 bucket |= proj[:, p].astype(np.int64) << p
-            yield pd.DataFrame({"id": pdf[id_col].values, "bucket": bucket, "vec": list(vecs)})
+            offsets = pa.array(np.arange(rb.num_rows + 1, dtype=np.int32) * np.int32(vecs.shape[1]))
+            yield pa.RecordBatch.from_arrays(
+                [rb.column(id_col), pa.array(bucket), pa.ListArray.from_arrays(offsets, pa.array(flat))],
+                names=["id", "bucket", "vec"],
+            )
 
-    sigs = df.select(id_col, vec_col).mapInPandas(sign_buckets, schema=sig_schema)
+    sigs = df.select(id_col, vec_col).mapInArrow(sign_buckets, schema=sig_schema)
 
     def unit_rows(rb):
         vecs = rb.column("vec").flatten().to_numpy().reshape(rb.num_rows, -1)
@@ -1133,32 +1178,22 @@ def _span_gram_stream(
     schema = StructType(fields)
 
     def grams_fn(batches):
-        for pdf in batches:
-            h, offsets, lens = _char_shingle_hashes(pdf[text_col], span)
+        for rb in batches:
+            h, offsets = _grams(rb.column(text_col), span, "char")
             if not len(h):
                 continue
-            counts = np.maximum(lens - span + 1, 0)
-            # drop short docs' whole-doc sentinel slot (no span-gram exists)
-            out_counts = np.where(lens < span, 1, counts)
-            starts = np.concatenate(([0], np.cumsum(out_counts)))[:-1]
-            keep = np.ones(len(h), dtype=bool)
-            keep[starts[lens < span]] = False
-            ids = np.repeat(pdf[id_col].to_numpy(), out_counts)[keep]
-            hh = h[keep]
-            pos = np.arange(len(hh)) - np.repeat(
-                np.concatenate(([0], np.cumsum(counts)))[:-1][lens >= span],
-                counts[lens >= span],
-            )
+            rows = np.repeat(np.arange(rb.num_rows), np.diff(offsets))
+            pos = np.arange(len(h)) - offsets[rows]
             if stride > 1:
                 # per-doc position sampling: positions (p % stride == 0)
                 sel = pos % stride == 0
-                ids, hh, pos = ids[sel], hh[sel], pos[sel]
-            out = {id_col: ids, "gram_hash": hh.astype(np.int64)}
+                rows, h, pos = rows[sel], h[sel], pos[sel]
+            cols = [rb.column(id_col).take(pa.array(rows)), pa.array(h.view(np.int64))]
             if with_pos:
-                out["pos"] = pos.astype(np.int64)
-            yield pd.DataFrame(out)
+                cols.append(pa.array(pos))
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
-    return df.select(id_col, text_col).mapInPandas(grams_fn, schema=schema)
+    return df.select(id_col, text_col).mapInArrow(grams_fn, schema=schema)
 
 
 def duplicated_span_counts(

@@ -22,9 +22,10 @@ from hlld_spark.operators.dedup import (
     _WS_TABLE,
     _ascii_text_buffer,
     _char_shingle_hashes,
+    _grams,
+    _shingle_hashes,
     _token_shingle_hashes,
 )
-from hlld_spark.operators.decontaminate import _shingle
 from hlld_spark.operators.lang_profiles import _WORDS
 
 _M64 = (1 << 64) - 1
@@ -156,6 +157,32 @@ def test_token_kernel_matches_definition(batch, n):
     _assert_matches_reference(batch[0], batch[1], n, "token")
 
 
+@settings(max_examples=200, deadline=None)
+@given(text_batches(), st.sampled_from(["char", "token"]), st.integers(1, 5), st.integers(1, 3))
+def test_grams_match_substring_enumeration(batch, unit, n, stride):
+    """``_grams`` emits exactly the n-grams a pure-Python enumeration
+    finds — every unit position i with i + n <= len(units) of every
+    doc, none for a doc shorter than n — with the doc rows and positions
+    its callers derive from the offsets (``np.repeat`` of the doc index,
+    slot minus the doc's first slot), also after the span stream's
+    ``pos % stride == 0`` sampling."""
+    h, offsets = _grams(batch[0], n, unit)
+    rows = np.repeat(np.arange(len(batch[1])), np.diff(offsets))
+    pos = np.arange(len(h)) - offsets[rows]
+    sel = pos % stride == 0
+    got = list(zip(rows[sel].tolist(), pos[sel].tolist(), h[sel].tolist()))
+    want = []
+    for d, t in enumerate(batch[1]):
+        t = t or ""
+        if unit == "char":
+            u = [ord(c) for c in t]
+        else:
+            u = [_splitmix(_poly(ord(c) for c in tok)) for tok in t.split()]
+        want += [(d, i, _splitmix(_poly(u[i : i + n]))) for i in range(0, len(u) - n + 1, stride)]
+    assert h.dtype == np.uint64 and len(offsets) == len(batch[1]) + 1
+    assert got == want
+
+
 def test_whitespace_table_is_str_split():
     """The non-ASCII separator table is exactly Python's str.split() set
     (which has no member above U+3000)."""
@@ -242,8 +269,8 @@ def test_fallback_on_non_ascii_and_nulls():
     assert _ascii_text_buffer(pa.array(["plain", None])) is None
     texts = ["héllo wörld çafé", None, "ascii only here", "日本語 テキスト です ね"]
     for unit in ("char", "token"):
-        h0, o0, u0 = _shingle(pd.Series(texts), 13, unit)
-        h1, o1, u1 = _shingle(pa.array(texts), 13, unit)
+        h0, o0, u0 = _shingle_hashes(pd.Series(texts), 13, unit)
+        h1, o1, u1 = _shingle_hashes(pa.array(texts), 13, unit)
         assert np.array_equal(h0, h1) and np.array_equal(o0, o1) and np.array_equal(u0, u1)
         _assert_matches_reference(pa.array(texts), texts, 13, unit)
 

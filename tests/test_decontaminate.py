@@ -107,14 +107,14 @@ def test_unicode_grams(spark):
 
 
 def test_no_corpus_exchange_in_plan(spark):
-    """The scale claim, plan-asserted: flagging is ONE mapInPandas over
+    """The scale claim, plan-asserted: flagging is ONE mapInArrow over
     the corpus scan — no Exchange anywhere in the probe plan (the eval
     table is broadcast as a driver variable, not joined)."""
     docs = _corpus(spark)
     flagged = decontaminate(docs, _eval_set(spark), "doc_id", "text", n=13)
     plan = flagged._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-    assert plan.count("PythonMapInPandas") + plan.count("MapInPandas") >= 1
+    assert plan.count("MapInArrow") == 1 and "MapInPandas" not in plan
 
 
 def test_partitioning_invariance(spark):

@@ -220,35 +220,72 @@ def test_misra_gries_error_bound_property(items, capacity, batch_size):
         assert got >= tc - n / capacity - 1e-9, (it, got, tc, n, capacity)
 
 
+def _docs(alphabet: str, max_size: int):
+    """Docs drawn as NULL, empty, whitespace-only or text over ``alphabet``."""
+    return st.one_of(
+        st.none(), st.just(""), st.text(alphabet=" \t\n", min_size=1, max_size=3),
+        st.text(alphabet=alphabet, max_size=max_size),
+    )
+
+
+@st.composite
+def _text_container(draw, texts):
+    """``texts`` as a pandas Series, a sliced Arrow array or a chunked one."""
+    kind = draw(st.sampled_from(["pandas", "slice", "chunked"]))
+    if kind == "pandas":
+        return pd.Series(texts, dtype=object)
+    if kind == "slice":
+        lo = draw(st.integers(0, 2))
+        return pa.array(["pad ä"] * lo + texts + ["tail"], pa.string()).slice(lo, len(texts))
+    cut = draw(st.integers(0, len(texts)))
+    return pa.chunked_array([pa.array(texts[:cut], pa.string()), pa.array(texts[cut:], pa.string())])
+
+
+def _probe_counts(data, evals, corpus, n, unit):
+    """Per-doc matched-gram counts from the decontamination probe: the
+    eval table from ``_grams`` over ``evals`` in a drawn container, the
+    corpus as (id, text) record batches (a sliced batch or a pandas
+    frame, cut into one or two batches) through the ``_probe`` closure
+    both entry points map over their batches."""
+    from types import SimpleNamespace
+
+    from hlld_spark.operators.decontaminate import _probe
+    from hlld_spark.operators.dedup import _grams
+
+    h, _ = _grams(data.draw(_text_container(evals)), n, unit)
+    state = SimpleNamespace(value=np.unique(h).tobytes())
+    ids = pa.array(range(len(corpus)), pa.int64())
+    if data.draw(st.booleans()):
+        rb = pa.RecordBatch.from_pandas(pd.DataFrame({"id": ids.to_numpy(), "text": pd.Series(corpus, dtype=object)}))
+    else:
+        rb = pa.RecordBatch.from_arrays(
+            [pa.array([-1, *range(len(corpus))], pa.int64()), pa.array(["pad ä", *corpus], pa.string())],
+            names=["id", "text"],
+        ).slice(1)
+    cut = data.draw(st.integers(0, len(corpus)))
+    counts = np.zeros(len(corpus), dtype=np.int64)
+    for out in _probe(state, "exact", "id", "text", n, unit)(iter([rb.slice(0, cut), rb.slice(cut)])):
+        counts[out.column("id").to_numpy()] = out.column("n_matched_grams").to_numpy()
+    return counts
+
+
 @settings(max_examples=60, deadline=None)
 @given(
-    st.lists(st.text(alphabet="abc х日 ", min_size=0, max_size=30), min_size=1, max_size=15),
-    st.lists(st.text(alphabet="abc х日 ", min_size=0, max_size=20), min_size=1, max_size=4),
+    st.lists(_docs("abc х日 ", 30), min_size=1, max_size=15),
+    st.lists(_docs("abc х日 ", 20), min_size=1, max_size=4),
     st.integers(min_value=2, max_value=6),
+    st.data(),
 )
-def test_decontaminate_kernel_matches_bruteforce(corpus, evals, n):
-    """The decontamination probe (shingle kernel + prefiltered
-    searchsorted membership + per-doc reduceat) counts EXACTLY the
-    n-gram occurrences a brute-force python substring scan counts —
-    including short docs, empty docs, unicode, and doc boundaries."""
-    import numpy as np
-    import pandas as pd
-
-    from hlld_spark.operators.decontaminate import _flag_batch, _make_member
-    from hlld_spark.operators.dedup import _char_shingle_hashes
-
-    # eval gram hashes, driver-side (mirrors _gram_hashes_df's masking)
-    h, offsets, _ = _char_shingle_hashes(pd.Series(evals), n)
-    keep = np.ones(len(h), dtype=bool)
-    for d, e in enumerate(evals):
-        if len(e) < n:
-            keep[int(offsets[d]) : int(offsets[d + 1])] = False
-    table = np.sort(np.unique(h[keep]))
-    member = _make_member("exact", table.tobytes())
-    counts = _flag_batch(member, pd.Series(corpus), n)
-
-    ev_grams = {e[i : i + n] for e in evals for i in range(len(e) - n + 1)}
+def test_decontaminate_kernel_matches_bruteforce(corpus, evals, n, data):
+    """The decontamination probe (gram stream + prefiltered searchsorted
+    membership + per-doc hit counts) counts EXACTLY the n-gram
+    occurrences a brute-force python substring scan counts — including
+    NULL, empty, whitespace-only and short docs, unicode, and doc and
+    batch boundaries."""
+    counts = _probe_counts(data, evals, corpus, n, "char")
+    ev_grams = {e[i : i + n] for e in evals if e for i in range(len(e) - n + 1)}
     for doc, c in zip(corpus, counts):
+        doc = doc or ""
         expect = sum(
             1 for i in range(max(len(doc) - n + 1, 0)) if doc[i : i + n] in ev_grams
         )
@@ -257,34 +294,26 @@ def test_decontaminate_kernel_matches_bruteforce(corpus, evals, n):
 
 @settings(max_examples=60, deadline=None)
 @given(
-    st.lists(st.text(alphabet="ab х\t\n ", min_size=0, max_size=40), min_size=1, max_size=15),
-    st.lists(st.text(alphabet="ab х\t\n ", min_size=0, max_size=30), min_size=1, max_size=4),
+    st.lists(_docs("ab х\t\n ", 40), min_size=1, max_size=15),
+    st.lists(_docs("ab х\t\n ", 30), min_size=1, max_size=4),
     st.integers(min_value=2, max_value=4),
+    st.data(),
 )
-def test_decontaminate_token_kernel_matches_bruteforce(corpus, evals, n):
+def test_decontaminate_token_kernel_matches_bruteforce(corpus, evals, n, data):
     """Token-mode decontamination (round 4, the published 13-gram unit)
     counts EXACTLY the token n-gram occurrences a brute-force python
-    split()-window scan counts — across whitespace runs, empty docs,
-    docs shorter than n tokens, unicode, and doc boundaries."""
-    import numpy as np
-    import pandas as pd
-
-    from hlld_spark.operators.decontaminate import _flag_batch, _make_member, _shingle
-
-    h, offsets, units = _shingle(pd.Series(evals), n, "token")
-    keep = np.ones(len(h), dtype=bool)
-    keep[offsets[:-1][units < n]] = False
-    table = np.sort(np.unique(h[keep]))
-    member = _make_member("exact", table.tobytes())
-    counts = _flag_batch(member, pd.Series(corpus), n, unit="token")
-
+    split()-window scan counts — across whitespace runs, NULL, empty and
+    whitespace-only docs, docs shorter than n tokens, unicode, and doc
+    and batch boundaries."""
+    counts = _probe_counts(data, evals, corpus, n, "token")
     ev_grams = {
         tuple(e.split()[i : i + n])
         for e in evals
+        if e
         for i in range(len(e.split()) - n + 1)
     }
     for doc, c in zip(corpus, counts):
-        toks = doc.split()
+        toks = (doc or "").split()
         expect = sum(
             1 for i in range(max(len(toks) - n + 1, 0)) if tuple(toks[i : i + n]) in ev_grams
         )
@@ -335,7 +364,10 @@ def test_build_kernel_matches_python_groupby(rows, n_keys, data):
     (NaN one group, -0.0 ≡ 0.0, NULL a group), same HLL/CMS/Bloom bytes,
     same ``n_rows``, and the key columns keep their Arrow types. Rows with
     a NULL value are skipped. The cut includes empty batches and slices at
-    a non-zero offset; a bool third key covers 3-key grouping."""
+    a non-zero offset; a bool third key covers 3-key grouping. The batches
+    are dealt to 1-4 simulated tasks, one partial stream each, whose
+    partials reach the merge in a drawn order: the bytes do not depend on
+    how the input is split into tasks."""
     from hlld_spark.core.accumulator import accumulator_for
     from hlld_spark.core.bloom import BloomSpec
     from hlld_spark.core.cms import CmsSpec
@@ -352,6 +384,9 @@ def test_build_kernel_matches_python_groupby(rows, n_keys, data):
     cuts = sorted(data.draw(st.lists(st.integers(min_value=0, max_value=len(rows)), max_size=5)))
     bounds = [0, *cuts, len(rows)]
     batches = [rb.slice(0, 0), *(rb.slice(lo, hi - lo) for lo, hi in zip(bounds, bounds[1:]))]
+    n_tasks = data.draw(st.integers(min_value=1, max_value=4))
+    task_of = data.draw(st.lists(st.integers(0, n_tasks - 1), min_size=len(batches), max_size=len(batches)))
+    task_order = data.draw(st.permutations(range(n_tasks)))
 
     groups: dict[str, list] = {}
     for r in rows:
@@ -361,14 +396,20 @@ def test_build_kernel_matches_python_groupby(rows, n_keys, data):
     for spec in (HllSpec(10), CmsSpec(width=64, depth=3), BloomSpec(bits=1001, hashes=3)):
         acc = accumulator_for(spec)
         want = {g: (acc.serialize(acc.update(acc.zero(spec), vals, spec), spec), len(vals)) for g, vals in groups.items()}
-        partials = list(_make_build_partials_arrow(keys, "v", spec)(iter(batches)))
+        partials = [
+            p
+            for t in task_order
+            for p in _make_build_partials_arrow(keys, "v", spec)(b for b, bt in zip(batches, task_of) if bt == t)
+        ]
         if not groups:
             assert partials == []
             continue
-        (part,) = partials
-        assert [part.schema.field(k).type for k in keys] == [cols[k].type for k in keys]
+        assert len(partials) <= n_tasks
+        part = partials[0]
+        assert all([p.schema.field(k).type for k in keys] == [cols[k].type for k in keys] for p in partials)
+        # a stable sort by key: each group's partials stay in task order
         part_rows = sorted(
-            zip(*(part.column(i).to_pylist() for i in range(part.num_columns))),
+            (r for p in partials for r in zip(*(p.column(i).to_pylist() for i in range(p.num_columns)))),
             key=lambda r: repr(_group_key(r[:n_keys])),
         )
         sorted_part = pa.RecordBatch.from_arrays([pa.array(c, f.type) for c, f in zip(zip(*part_rows), part.schema)], schema=part.schema)

@@ -33,6 +33,12 @@ def test_sql_cardinality_and_kind(spark, docs):
         assert r["kind"] == "hll"
         assert r["sz"] == 6 + 13108  # header + p14 packed bytes
         assert abs(r["est"] - exact[r["lang"]]) / exact[r["lang"]] < 0.05
+    # a NULL sketch: NULL estimate and kind, 0 bytes
+    null = spark.sql(
+        "SELECT hll_cardinality(s) AS est, sketch_kind(s) AS kind, sketch_bytes(s) AS sz "
+        "FROM (SELECT CAST(NULL AS BINARY) AS s)"
+    ).first()
+    assert (null["est"], null["kind"], null["sz"]) == (None, None, 0)
 
 
 def test_sql_merge(spark, docs):
@@ -46,6 +52,13 @@ def test_sql_merge(spark, docs):
     ).first()
     exact = docs.filter(F.col("lang").isin("en", "de")).select("doc_id").distinct().count()
     assert abs(row["est"] - exact) / exact < 0.05
+    # a NULL side yields the other side; two NULLs yield NULL
+    row = spark.sql(
+        "SELECT sketch_merge(sketch, CAST(NULL AS BINARY)) = sketch AS left_kept, "
+        "sketch_merge(CAST(NULL AS BINARY), sketch) = sketch AS right_kept, "
+        "sketch_merge(CAST(NULL AS BINARY), CAST(NULL AS BINARY)) AS both FROM sk2 WHERE lang = 'en'"
+    ).first()
+    assert row["left_kept"] and row["right_kept"] and row["both"] is None
 
 
 def test_sql_scalar_laws(spark):
@@ -56,6 +69,13 @@ def test_sql_scalar_laws(spark):
     assert r["e"] == pytest.approx(0.01625)
     assert r["p"] == 14
     assert r["b"] == 820
+    # NULL in, NULL out (each law failed its task on NULL before)
+    r = spark.sql(
+        "SELECT hll_error_for_precision(CAST(NULL AS INT)) AS e, "
+        "hll_precision_for_error(CAST(NULL AS DOUBLE)) AS p, "
+        "hll_bytes_for_precision(CAST(NULL AS INT)) AS b"
+    ).first()
+    assert (r["e"], r["p"], r["b"]) == (None, None, None)
 
 
 def test_plan_column_pruning(spark, sf_dir):
@@ -111,6 +131,12 @@ def test_sql_quantile(spark, sf_dir):
         for got, q in ((row["med"], 0.5), (row["p90"], 0.9)):
             rank = sum(1 for v in exact if v <= got) / len(exact)
             assert abs(rank - q) <= 0.02, (name, q, rank)
+        # a NULL sketch or a NULL q gives NULL
+        row = spark.sql(
+            f"SELECT sketch_quantile(CAST(NULL AS BINARY), 0.5) AS a, "
+            f"sketch_quantile(sketch, CAST(NULL AS DOUBLE)) AS b FROM sk_{name}"
+        ).first()
+        assert (row["a"], row["b"]) == (None, None)
     # non-quantile sketches raise
     import pytest as _pt
 
@@ -150,7 +176,7 @@ def test_ngram_jaccard_column_n(spark):
 
     register_text_functions(spark)
     df = spark.createDataFrame(
-        [("abcdef", "abcdef", 3), ("abcdef", "abcdef", 5), ("abcdXf", "abcdef", 2)],
+        [("abcdef", "abcdef", 3), ("abcdef", "abcdef", 5), ("abcdXf", "abcdef", 2), ("abcdef", "abcdef", None)],
         "a string, b string, n int",
     ).coalesce(1)
     rows = df.selectExpr("ngram_jaccard(a, b, n) AS j").collect()
@@ -158,6 +184,9 @@ def test_ngram_jaccard_column_n(spark):
     # row 3: 2-grams of abcdXf vs abcdef -> {ab,bc,cd,dX,Xf} vs
     # {ab,bc,cd,de,ef}: 3 shared of 7 distinct
     assert abs(rows[2]["j"] - 3 / 7) < 1e-12
+    # a NULL n scores NULL
+    assert rows[3]["j"] is None
+    assert df.where("n IS NULL").selectExpr("ngram_jaccard(a, b, n) AS j").first()["j"] is None
 
 
 def test_registry_tolerates_corrupt_config_dir(tmp_path):

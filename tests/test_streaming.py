@@ -315,7 +315,7 @@ def pd_ts(s):
 
 def test_streaming_decontamination_matches_batch(spark, tmp_path):
     """r4: the decontamination probe composes with Structured Streaming
-    unchanged — `decontaminate` is one stateless mapInPandas over a
+    unchanged — `decontaminate` is one stateless mapInArrow over a
     broadcast gram table, so pointing it at a readStream yields exactly
     the batch flags as files arrive (the continuous-ingest counterpart
     of the batch cleaning pipeline)."""
