@@ -322,11 +322,12 @@ def decontaminate_parquet(
     scan dominates — the generic DataFrame path pays the shared-JVM
     Arrow-IPC ceiling (~5.4M rows/s measured here) that this path dodges,
     exactly like ``build_sketches_parquet``."""
-    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_schema
+    from ..sources.parquet_scan import list_parquet_files, map_parquet_batches, parquet_filter, parquet_schema
 
     files = list_parquet_files(path)
+    expr = parquet_filter(filter)  # before the eval-gram job: a bad filter raises first
     return _flag(
-        lambda fn, schema: map_parquet_batches(spark, files, fn, schema, [id_col, text_col], filter),
+        lambda fn, schema: map_parquet_batches(spark, files, fn, schema, [id_col, text_col], expr),
         parquet_schema(files, [id_col])[id_col], eval_df, id_col, text_col, eval_text_col or text_col,
         n, method, bloom_fpr, max_eval_grams, unit,
     )

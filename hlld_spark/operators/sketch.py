@@ -31,9 +31,11 @@ Where the rows come from: ``build_sketches_parquet`` plans file splits on
 the driver and reads them in the Python tasks with pyarrow
 (``sources/parquet_scan.py``). ``build_sketches`` does the same when its
 pruned input is a bare parquet file scan — e.g. ``spark.read.parquet(p)``
-with only columns selected — so no row crosses the JVM scan or the
-JVM→Python Arrow channel; any other input streams its rows into stage 1
-through ``mapInArrow``. Both feed the same partial kernel and
+with only columns selected, or with a ``to_date(ts)`` key such as the
+(lang, day) grain ``rollup_sketches`` builds — so no row crosses the JVM
+scan or the JVM→Python Arrow channel; a derived day is computed per
+batch in the task. Any other input streams its rows into stage 1 through
+``mapInArrow``. Both feed the same partial kernel and
 ``_merge_partials``.
 """
 
@@ -47,7 +49,15 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
 from ..core.accumulator import HllSpec, accumulator_for, deserialize_any, merge_serialized
-from ..sources.parquet_scan import bare_parquet_files, list_parquet_files, map_parquet_batches, parquet_schema
+from ..sources.parquet_scan import (
+    BareScan,
+    bare_parquet_scan,
+    list_parquet_files,
+    map_parquet_batches,
+    parquet_schema,
+    plain_scan,
+    project_batches,
+)
 
 _SKETCH_FIELD = "sketch"
 _NROWS_FIELD = "n_rows"
@@ -204,19 +214,26 @@ def build_sketches(
     — /root/reference/src/config.c:26-27).
 
     The input is pruned to ``keys + [col]``. When that pruned frame is a
-    bare parquet file scan (:func:`~hlld_spark.sources.parquet_scan.bare_parquet_files`,
-    decided from the optimized plan without running a job), the build
-    reads its files worker-side as :func:`build_sketches_parquet` does, so
-    no row crosses the JVM scan or the JVM→Python Arrow channel. It
-    takes the ``mapInArrow`` path over the frame's rows instead when the
-    pruned plan holds anything but column references over one parquet
-    relation (a filter, a derived or aliased column, a limit, a join, a
-    cached or streaming frame, a non-file source); when the relation is
+    bare parquet file scan (:func:`~hlld_spark.sources.parquet_scan.bare_parquet_scan`,
+    decided from the optimized plan and the footers without running a
+    job), the build reads its files worker-side as
+    :func:`build_sketches_parquet` does, so no row crosses the JVM scan or
+    the JVM→Python Arrow channel. A ``to_date(ts)`` / ``cast(ts AS date)``
+    column routes too: each task computes the day from the µs timestamps
+    it reads, when ``ts`` is a ``timestamp_ntz`` or a ``timestamp`` cast
+    in a fixed-offset zone (UTC, ``+05:30``), both parquet rebase modes
+    are CORRECTED, ``int96TimestampConversion`` is off and no footer asks
+    for a legacy rebase. It takes the ``mapInArrow`` path over the
+    frame's rows instead when the pruned plan holds anything else over
+    one parquet relation (a filter, another derived or an aliased column,
+    a region zone such as ``America/New_York``, a limit, a join, a cached
+    or streaming frame, a non-file source); when the relation is
     partitioned or bucketed, or reads with ``mergeSchema``,
     ``ignoreCorruptFiles``, ``ignoreMissingFiles`` or field ids; when a
-    file is not a ``file:`` URI; or when a column's Spark type is not
-    string, binary, boolean or a byte/short/int/long/float/double number,
-    differs from the type in the first file's footer, or reaches Python
+    file is not a ``file:`` URI; or when a column read as is has a Spark
+    type that is not string, binary, boolean or a
+    byte/short/int/long/float/double number, differs from the type in the
+    first file's footer, or reaches Python
     as another Arrow type than pyarrow reads (e.g. ``binaryAsString``
     over unannotated binary, a dictionary-encoded column, large var
     types). Both paths give byte-identical HLL, CMS and Bloom sketches and
@@ -228,24 +245,26 @@ def build_sketches(
     accumulator_for(spec)  # validate early, on the driver
     pruned = df.select(*keys, col)
     schema = _result_schema(pruned.schema, keys)
-    files = bare_parquet_files(pruned)
-    if files is not None:
-        return _build_from_files(pruned.sparkSession, files, keys, col, spec, schema)
+    scan = bare_parquet_scan(pruned)
+    if scan is not None:
+        return _build_from_files(pruned.sparkSession, scan, keys, col, spec, schema)
     partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
     return _merge_partials(partials, keys, schema)
 
 
-def _build_from_files(spark, files: list[str], keys: list[str], col: str, spec, schema, filter=None) -> DataFrame:
+def _build_from_files(spark, scan: BareScan, keys: list[str], col: str, spec, schema, filter=None) -> DataFrame:
     """The worker-side-read build: each Python task reads its splits of
-    ``files`` with pyarrow and feeds one continuous batch stream to the
+    ``scan.files`` with pyarrow, derives the scan's output columns
+    (``project_batches``) and feeds one continuous batch stream to the
     partial kernel, so the task emits one partial per group whatever its
     split count; ``_merge_partials`` finishes it."""
+    build, outputs = _make_build_partials_arrow(keys, col, spec), scan.outputs
     partials = map_parquet_batches(
         spark,
-        files,
-        _make_build_partials_arrow(keys, col, spec),
+        scan.files,
+        lambda batches: build(project_batches(batches, outputs)),
         schema,
-        keys + [col],
+        scan.sources,
         filter=filter,
         # r7: ONE wave of full-width tasks — the sketch build is uniform
         # scan+hash work, and each Python task paid a fixed cost (mostly
@@ -297,7 +316,7 @@ def build_sketches_parquet(
     accumulator_for(spec)
     files = list_parquet_files(path)
     schema = _result_schema(parquet_schema(files, keys), keys)
-    return _build_from_files(spark, files, keys, col, spec, schema, filter)
+    return _build_from_files(spark, plain_scan(files, keys + [col]), keys, col, spec, schema, filter)
 
 
 def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:
@@ -324,7 +343,9 @@ def rollup_sketches(df: DataFrame, keys: list[str], col: str, spec=None) -> Data
     HLL/CMS/Bloom, within rank error for KLL/t-digest (fold order). The
     merged rows are exploded, not the build's partials, which would save
     an exchange but send partitions × groups partials to the grand-total
-    task. Building the plan runs no Spark job.
+    task. Building the plan runs no Spark job. The build reads the files
+    worker-side whenever :func:`build_sketches` does, e.g. for the
+    ``(lang, to_date(ts))`` grain of a bare parquet scan.
     """
     n = len(keys)
     finest = build_sketches(df, keys, col, spec)

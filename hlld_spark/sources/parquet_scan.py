@@ -17,7 +17,8 @@ of the columns it reads. Both take a table path (listed once with
 :func:`list_parquet_files`) or the file list itself. Sketch builds are
 their main client: ``build_sketches_parquet`` reads a path this way, and
 ``build_sketches`` takes the same worker-side read whenever its pruned
-input is a bare parquet file scan (:func:`bare_parquet_files`); any
+input is a bare parquet file scan, its columns as read or cast from a
+timestamp to a date (:func:`bare_parquet_scan`); any
 Arrow-batch operator (language ID, tokenization, fingerprinting) can
 ride the same splits.
 """
@@ -25,7 +26,9 @@ ride the same splits.
 from __future__ import annotations
 
 import json
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructField, StructType
 
@@ -117,6 +120,8 @@ def parquet_schema(files: str | list[str], columns: list[str]) -> StructType:
 #: unchanged; dates, timestamps and decimals depend on rebase modes and
 #: precision rules a pyarrow read does not apply
 _BARE_TYPES = ("string", "binary", "boolean", "byte", "short", "integer", "long", "float", "double")
+#: source types of a derived ``cast(ts AS date)`` column
+_DAY_SOURCES = ("timestamp", "timestamp_ntz")
 _LOGICAL_RELATION = "org.apache.spark.sql.execution.datasources.LogicalRelation"
 _HADOOP_FS_RELATION = "org.apache.spark.sql.execution.datasources.HadoopFsRelation"
 _PARQUET_FORMAT = "org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat"
@@ -127,28 +132,137 @@ _READ_FLAGS = (
     ("ignoreCorruptFiles", "spark.sql.files.ignoreCorruptFiles"),
     ("ignoreMissingFiles", "spark.sql.files.ignoreMissingFiles"),
 )
+#: read options (session conf as the default) that must be CORRECTED for
+#: Spark to read a timestamp's stored value without a calendar rebase
+_REBASE_MODES = (
+    ("datetimeRebaseMode", "spark.sql.parquet.datetimeRebaseModeInRead"),
+    ("int96RebaseMode", "spark.sql.parquet.int96RebaseModeInRead"),
+)
+#: footer keys that make Spark rebase a file's timestamps whatever the mode
+_LEGACY_FOOTER_KEYS = (b"org.apache.spark.legacyINT96", b"org.apache.spark.legacyDateTime")
+_SPARK_VERSION = b"org.apache.spark.version"
 
 
-def bare_parquet_files(df: DataFrame) -> list[str] | None:
-    """The local files of ``df`` when it is a bare parquet file scan, else
-    None. Decided from the optimized logical plan: no Spark job runs.
+class BareScan(NamedTuple):
+    """A parquet scan that a worker-side read reproduces: ``files``, and
+    per output column, in order, ``(name, source, offset_s)``. ``source``
+    is the file column read for it; ``offset_s`` is None for the column as
+    read, or the fixed UTC offset in seconds at which the output is
+    ``cast(source AS date)``."""
 
-    Bare means: the plan is plain column references over one non-streaming
-    ``LogicalRelation`` of a ``HadoopFsRelation`` in ``ParquetFileFormat``,
-    with no partition columns, no bucketing, and none of ``mergeSchema``,
+    files: list[str]
+    outputs: tuple[tuple[str, str, int | None], ...]
+
+    @property
+    def sources(self) -> list[str]:
+        return list(dict.fromkeys(src for _, src, _ in self.outputs))
+
+
+def plain_scan(files: list[str], columns: list[str]) -> BareScan:
+    """The :class:`BareScan` that reads ``columns`` of ``files`` as they are."""
+    return BareScan(files, tuple((c, c, None) for c in dict.fromkeys(columns)))
+
+
+def _days(ts, offset_s: int):
+    """``cast(ts AS date)`` of a µs timestamp array at UTC+``offset_s``, as
+    date32. Floor division, as Spark's ``microsToDays``: ``pc.divide``
+    would truncate a pre-1970 instant toward zero, onto the next day.
+    Dividing to seconds first keeps the sum inside int64. NULL stays NULL."""
+    import pyarrow as pa
+
+    us = ts.cast(pa.int64())
+    days = (us.fill_null(0).to_numpy() // 1_000_000 + offset_s) // 86_400
+    mask = us.is_null().to_numpy(zero_copy_only=False) if us.null_count else None
+    return pa.array(days.astype(np.int32), mask=mask).cast(pa.date32())
+
+
+def project_batches(batches, outputs):
+    """A :class:`BareScan`'s output columns from batches of its sources."""
+    import pyarrow as pa
+
+    names = [name for name, _, _ in outputs]
+    for rb in batches:
+        cols = [rb.column(rb.schema.get_field_index(src)) for _, src, _ in outputs]
+        cols = [c if off is None else _days(c, off) for c, (_, _, off) in zip(cols, outputs)]
+        yield pa.RecordBatch.from_arrays(cols, names=names)
+
+
+def _option(spark, options, option: str, conf: str) -> str:
+    """A relation's read option, or the session conf when it is unset."""
+    value = options.get(option)
+    return value.get() if value.isDefined() else spark.conf.get(conf)
+
+
+def _scan_column(spark, expr) -> tuple[str, str, str, int | None] | None:
+    """``(name, source, source type, offset_s)`` of one projected column:
+    a plain column reference, or ``Alias(Cast(ts AS date))`` over a
+    ``timestamp`` column in a fixed-offset zone or a ``timestamp_ntz``
+    column (offset 0: its cast ignores the zone); None for anything else."""
+    kind = expr.getClass().getSimpleName()
+    if kind == "AttributeReference":
+        return expr.name(), expr.name(), expr.dataType().typeName(), None
+    if kind != "Alias" or expr.child().getClass().getSimpleName() != "Cast":
+        return None
+    cast = expr.child()
+    src = cast.child()
+    if src.getClass().getSimpleName() != "AttributeReference" or cast.dataType().typeName() != "date":
+        return None
+    src_type = src.dataType().typeName()
+    if src_type not in _DAY_SOURCES:
+        return None
+    offset = 0
+    if src_type == "timestamp":
+        tz = cast.timeZoneId()
+        if not tz.isDefined():
+            return None
+        jvm = spark._jvm
+        # the zone as Cast resolves it (short ids, "+5:30")
+        rules = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(tz.get()).getRules()
+        if not rules.isFixedOffset():
+            return None
+        offset = rules.getOffset(jvm.java.time.Instant.EPOCH).getTotalSeconds()
+    return expr.name(), src.name(), src_type, offset
+
+
+def _footers_read_corrected(files: list[str]) -> bool:
+    """No footer makes Spark rebase timestamps: none has a legacy key, and
+    none comes from a Spark writer before 3.1 (Spark rebases INT96 from
+    those; its own check is this string compare)."""
+    import pyarrow.parquet as pq
+
+    for f in files:
+        meta = pq.read_metadata(f).metadata or {}
+        version = meta.get(_SPARK_VERSION)
+        if any(k in meta for k in _LEGACY_FOOTER_KEYS) or (version is not None and version.decode() < "3.1.0"):
+            return False
+    return True
+
+
+def bare_parquet_scan(df: DataFrame) -> BareScan | None:
+    """The :class:`BareScan` of ``df`` when a worker-side read of its files
+    gives the rows Spark's scan would give, else None. Decided from the
+    optimized logical plan and the parquet footers: no Spark job runs.
+
+    That holds when the plan is column references, and ``cast(ts AS
+    date)`` of columns, over one non-streaming ``LogicalRelation`` of a
+    ``HadoopFsRelation`` in ``ParquetFileFormat``, with no partition
+    columns, no bucketing, and none of ``mergeSchema``,
     ``ignoreCorruptFiles`` or ``ignoreMissingFiles`` on (as a read option
     or in the session conf); no parquet field-id matching; every file URI
-    is ``file:``; and every column's Spark type is one of
-    ``_BARE_TYPES``, equals :func:`parquet_schema`'s type from the first
-    file's footer, and is read by pyarrow as the Arrow type Spark would
-    send to Python. A worker-side read of the returned files then gives
-    the rows the JVM scan would give. The list is Spark's own file listing
-    (``df.inputFiles()``) with empty files dropped, as Spark's scan drops
-    them."""
+    is ``file:``; and every column read has the Spark type that
+    :func:`parquet_schema` gives from the first file's footer. A column
+    read as is must be one of ``_BARE_TYPES`` and be read by pyarrow as
+    the Arrow type Spark would send to Python. A ``cast(ts AS date)``
+    needs ``ts`` to be a ``timestamp`` (its cast in a fixed-offset zone)
+    or ``timestamp_ntz`` stored in ms or µs (or INT96); both rebase modes
+    CORRECTED; ``int96TimestampConversion`` off; and no footer that makes
+    Spark rebase (:func:`_footers_read_corrected`). The file list is
+    Spark's own (``df.inputFiles()``) with empty files dropped, as
+    Spark's scan drops them."""
     import os
     from urllib.parse import unquote, urlparse
 
-    import pyarrow.parquet as pq
+    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     if df.isStreaming:  # a streaming plan cannot be optimized as a batch one
@@ -156,11 +270,16 @@ def bare_parquet_files(df: DataFrame) -> list[str] | None:
     spark = df.sparkSession
     plan = df._jdf.queryExecution().optimizedPlan()
     if plan.getClass().getSimpleName() == "Project":
+        columns = []
         exprs = plan.projectList().iterator()
         while exprs.hasNext():
-            if exprs.next().getClass().getSimpleName() != "AttributeReference":
+            column = _scan_column(spark, exprs.next())
+            if column is None:
                 return None
+            columns.append(column)
         plan = plan.child()
+    else:
+        columns = [(f.name, f.name, f.dataType.typeName(), None) for f in df.schema]
     if plan.getClass().getName() != _LOGICAL_RELATION:
         return None
     rel = plan.relation()
@@ -169,29 +288,41 @@ def bare_parquet_files(df: DataFrame) -> list[str] | None:
     if not rel.partitionSchema().isEmpty() or rel.bucketSpec().isDefined():
         return None
     options = rel.options()
-    for option, conf in _READ_FLAGS:
-        value = options.get(option)
-        if (value.get() if value.isDefined() else spark.conf.get(conf)).lower() == "true":
-            return None
+    if any(_option(spark, options, *flag).lower() == "true" for flag in _READ_FLAGS):
+        return None
     if spark.conf.get("spark.sql.parquet.fieldId.read.enabled").lower() == "true":
+        return None
+    outputs = tuple(dict.fromkeys((name, src, off) for name, src, _, off in columns))
+    if len({name for name, _, _ in outputs}) < len(outputs):
         return None
     uris = [urlparse(u) for u in df.inputFiles()]
     if not uris or any(u.scheme != "file" for u in uris):
         return None
     files = sorted(f for f in (unquote(u.path) for u in uris) if os.path.getsize(f) > 0)
-    schema = df.schema
-    if not files or any(f.dataType.typeName() not in _BARE_TYPES for f in schema):
+    sources = {src: src_type for _, src, src_type, _ in columns}
+    if not files or any(t not in _BARE_TYPES for _, _, t, off in columns if off is None):
         return None
     try:
-        footer = parquet_schema(files, schema.names)
+        footer = parquet_schema(files, list(sources))
+        arrow = _read_schema(files, list(sources))
     except ValueError:
         return None
-    arrow = pq.read_schema(files[0])
     large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes").lower() == "true"
-    for f, ff in zip(schema, footer):
-        if f.dataType != ff.dataType or arrow.field(f.name).type != to_arrow_type(f.dataType, prefers_large_types=large):
+    for f, af in zip(footer, arrow):
+        if f.dataType.typeName() != sources[f.name]:
             return None
-    return files
+        if sources[f.name] in _DAY_SOURCES:
+            if not (pa.types.is_timestamp(af.type) and af.type.unit == "us"):
+                return None
+        elif af.type != to_arrow_type(f.dataType, prefers_large_types=large):
+            return None
+    if any(off is not None for _, _, off in outputs) and not (
+        all(_option(spark, options, *mode).upper() == "CORRECTED" for mode in _REBASE_MODES)
+        and spark.conf.get("spark.sql.parquet.int96TimestampConversion").lower() != "true"
+        and _footers_read_corrected(files)
+    ):
+        return None
+    return BareScan(files, outputs)
 
 
 def plan_parquet_splits(spark: SparkSession, files: str | list[str], waves: int = 2) -> tuple[list[tuple[str, int, int]], int]:
@@ -230,18 +361,27 @@ def plan_parquet_splits(spark: SparkSession, files: str | list[str], waves: int 
     return splits, n_tasks
 
 
+def parquet_filter(filter):
+    """``filter`` (a read_table-style tuple list, or a pyarrow.dataset
+    Expression) as an Expression, or None. A malformed filter raises here,
+    on the driver, not in every task."""
+    import pyarrow.parquet as pq
+
+    return None if filter is None else pq.filters_to_expression(filter)
+
+
 def _split_scanner(fp: str, lo: int, hi: int, schema, filter=None, case_sensitive: bool = False):
     """One split's pyarrow scanner over the columns of ``schema`` (an Arrow
     schema), resolved as Spark's parquet reader resolves them: by name
     (ignoring case unless ``case_sensitive``; more than one match raises),
     cast to the schema's type, and all NULL where the file lacks the
-    column. ``filter`` (a read_table-style tuple list or a
+    column. INT96 reads in µs, as ``_read_schema`` types it. ``filter`` (a
     pyarrow.dataset Expression) prunes row groups and rows in the reader."""
     import pyarrow as pa
     import pyarrow.dataset as pds
-    import pyarrow.parquet as pq
 
-    frag = next(iter(pds.dataset(fp, format="parquet").get_fragments()))
+    fmt = pds.ParquetFileFormat(read_options=pds.ParquetReadOptions(coerce_int96_timestamp_unit="us"))
+    frag = next(iter(pds.dataset(fp, format=fmt).get_fragments()))
     if lo >= 0:
         frag = frag.subset(row_group_ids=list(range(lo, hi)))
     names = frag.physical_schema.names
@@ -251,28 +391,34 @@ def _split_scanner(fp: str, lo: int, hi: int, schema, filter=None, case_sensitiv
         if len(src) > 1:
             raise ValueError(f"column {f.name!r} matches {src} in {fp!r}")
         columns[f.name] = pds.field(src[0]).cast(f.type) if src else pds.scalar(pa.scalar(None, f.type))
-    expr = None if filter is None else pq.filters_to_expression(filter)
-    return frag.scanner(columns=columns, filter=expr, batch_size=_BATCH_ROWS, use_threads=False)
+    return frag.scanner(columns=columns, filter=filter, batch_size=_BATCH_ROWS, use_threads=False)
 
 
 def _read_schema(files: list[str], columns: list[str]):
     """The Arrow schema of ``columns`` in the first file, which every
-    split's read is cast to; a column missing there raises."""
+    split's read is cast to; a column missing there raises. Timestamps
+    read in µs, as Spark reads them: INT96 through pyarrow's
+    ``coerce_int96_timestamp_unit`` (in ns, a year outside 1677-2262
+    would wrap), seconds and milliseconds widened; ns stays ns."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    first = pq.read_schema(files[0])
+    first = pq.ParquetFile(files[0], coerce_int96_timestamp_unit="us").schema_arrow
     missing = [c for c in columns if c not in first.names]
     if missing:
         raise ValueError(f"parquet columns {missing} missing in {files[0]!r}")
-    return pa.schema([first.field(c) for c in dict.fromkeys(columns)])
+    fields = [first.field(c) for c in dict.fromkeys(columns)]
+    return pa.schema(
+        f.with_type(pa.timestamp("us", f.type.tz)) if pa.types.is_timestamp(f.type) and f.type.unit in ("s", "ms") else f
+        for f in fields
+    )
 
 
 def read_split_table(fp: str, lo: int, hi: int, columns: list[str], filter=None):
     """One split → pyarrow Table of ``columns`` as typed in ``fp``,
     column-pruned + filter-pushed; ``filter`` may be a read_table-style
     tuple list or a pyarrow.dataset Expression."""
-    return _split_scanner(fp, lo, hi, _read_schema([fp], columns), filter).to_table()
+    return _split_scanner(fp, lo, hi, _read_schema([fp], columns), parquet_filter(filter)).to_table()
 
 
 def map_parquet_batches(
@@ -290,13 +436,15 @@ def map_parquet_batches(
     sees one continuous batch stream per task (all of the task's splits),
     so per-task state (partial aggregates, summaries) amortizes across
     splits. Every batch has the first file's Arrow types; a later file
-    that lacks a column reads it as NULLs, as ``spark.read.parquet`` does.
+    that lacks a column reads it as NULLs, as ``spark.read.parquet`` does,
+    and every timestamp reads in µs. ``filter`` (see :func:`parquet_filter`)
+    is checked here, so a malformed one raises before any job runs.
     ``waves``: see :func:`plan_parquet_splits`."""
     files = _as_files(files)
     read_schema = _read_schema(files, columns)
     case_sensitive = spark.conf.get("spark.sql.caseSensitive").lower() == "true"
     splits, n_tasks = plan_parquet_splits(spark, files, waves)
-    ffilter = filter
+    expr = parquet_filter(filter)
     # r7: the task list rides a JVM-native Range (one task-id row per
     # partition), NOT a parallelize()d Python RDD — the latter put a
     # second Python round trip in front of EVERY task (measured +0.5 s on
@@ -312,7 +460,7 @@ def map_parquet_batches(
             for rb in meta_batches:
                 for tid in rb.column(0).to_pylist():
                     for fp, lo, hi in splits[tid::n_tasks]:
-                        yield from _split_scanner(fp, lo, hi, read_schema, ffilter, case_sensitive).to_batches()
+                        yield from _split_scanner(fp, lo, hi, read_schema, expr, case_sensitive).to_batches()
 
         yield from fn(gen())
 

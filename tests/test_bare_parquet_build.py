@@ -1,11 +1,14 @@
 """``build_sketches`` over a bare parquet scan reads the files worker-side
-(``sources/parquet_scan.bare_parquet_files``); every other input keeps the
-``mapInArrow`` path over the JVM scan. The routed build must give what the
-JVM path gives on the same frame: HLL, CMS and Bloom bytes and ``n_rows``
-equal, KLL and t-digest within rank error."""
+(``sources/parquet_scan.bare_parquet_scan``), also when a key is
+``cast(ts AS date)``; every other input keeps the ``mapInArrow`` path over
+the JVM scan. The routed build must give what the JVM path gives on the
+same frame: HLL, CMS and Bloom bytes and ``n_rows`` equal, KLL and
+t-digest within rank error."""
 
+import contextlib
 import os
 import zlib
+from unittest import mock
 
 import numpy as np
 import pyarrow as pa
@@ -18,8 +21,9 @@ from hlld_spark.core.bloom import BloomSpec
 from hlld_spark.core.cms import CmsSpec
 from hlld_spark.core.kll import KllSpec
 from hlld_spark.core.tdigest import TDigestSpec
-from hlld_spark.operators.sketch import _make_build_partials_arrow, _merge_partials, _result_schema, build_sketches
-from hlld_spark.sources.parquet_scan import bare_parquet_files
+from hlld_spark.operators import sketch
+from hlld_spark.operators.sketch import _make_build_partials_arrow, _merge_partials, _result_schema, build_sketches, rollup_sketches
+from hlld_spark.sources.parquet_scan import bare_parquet_scan
 from tests.conftest import assert_plan_runs_no_job
 
 pytestmark = pytest.mark.spark
@@ -125,7 +129,7 @@ def _read(spark, d: str, key: str, val: str):
 
 
 def _assert_routed_matches_jvm(df, keys, col, specs) -> None:
-    assert bare_parquet_files(df.select(*keys, col)) is not None
+    assert bare_parquet_scan(df.select(*keys, col)) is not None
     for spec in specs:
         routed = build_sketches(df, keys, col, spec)
         assert "FileScan" not in routed._jdf.queryExecution().executedPlan().toString()
@@ -141,6 +145,35 @@ def _assert_routed_matches_jvm(df, keys, col, specs) -> None:
             _assert_quantiles_in_rank(b, truth)
         else:
             assert a == b, type(spec).__name__
+
+
+def _jvm_rollup(df, keys, col, spec):
+    """``rollup_sketches`` with its build forced onto the JVM path."""
+    with mock.patch.object(sketch, "bare_parquet_scan", lambda _df: None):
+        return rollup_sketches(df, keys, col, spec)
+
+
+def _assert_routed_rollup_matches_jvm(df, keys, col, spec) -> None:
+    routed = rollup_sketches(df, keys, col, spec)
+    assert "FileScan" not in routed._jdf.queryExecution().executedPlan().toString()
+    levels = [*keys, "grouping_level"]
+    assert _rows(routed, levels) == _rows(_jvm_rollup(df, keys, col, spec), levels)
+
+
+@contextlib.contextmanager
+def _confs(spark, confs: dict):
+    """Session confs set for the block, restored after it."""
+    old = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.mark.parametrize("layout", ["files", "row_groups"])
@@ -179,6 +212,90 @@ def test_routed_build_plan_runs_no_job(spark, tmp_path):
     assert_plan_runs_no_job(spark, lambda: build_sketches(df, ["lang"], "url"), "sketch-plan-routed")
 
 
+_DAY_US = 86_400_000_000
+#: session zones of the day-key tests, as fixed UTC offsets in seconds
+ZONES = {"UTC": 0, "+05:30": 19_800, "-08:00": -28_800}
+#: ``spark.sql.parquet.outputTimestampType`` of each layout; ``ntz`` writes
+#: a ``timestamp_ntz`` column (always INT64 micros)
+TS_LAYOUTS = {"INT96": "INT96", "micros": "TIMESTAMP_MICROS", "millis": "TIMESTAMP_MILLIS", "ntz": "TIMESTAMP_MICROS"}
+
+
+def _instants(rng) -> list:
+    """µs instants: 1 µs and 1 ms either side of local midnight in every
+    zone of ``ZONES``, on days from year 1 to 9999 (before 1970, the day
+    before and after the epoch, 1582-10-15, past the year-2262 end of ns
+    timestamps), plus random ones over ±400 years."""
+    days = (-719_152, -141_427, -1, 0, 1, 19_700, 106_752, 200_000, 2_932_700)
+    out = []
+    for day in days:
+        for off in ZONES.values():
+            mid = day * _DAY_US - off * 1_000_000
+            out += [mid - 1000, mid - 1, mid, mid + 1, mid + 1000]
+    return out + rng.integers(-400 * 365 * _DAY_US, 400 * 365 * _DAY_US, 600).tolist()
+
+
+@pytest.fixture(scope="module")
+def ts_dirs(spark, tmp_path_factory):
+    """One Spark-written table per ``TS_LAYOUTS`` entry over the same
+    instants: (lang, url, ts), with NULL timestamps and a NULL url."""
+    rng = np.random.default_rng(7)
+    us = _instants(rng)
+    rows = [(f"l{i % 3}", f"u{i % 500}", v) for i, v in enumerate(us)]
+    rows += [(f"l{i % 3}", f"n{i}", None) for i in range(20)] + [("l0", None, 0)]
+    base = spark.createDataFrame(rows, "lang string, url string, us long").select(
+        "lang", "url", F.timestamp_micros("us").alias("ts")
+    )
+    root = tmp_path_factory.mktemp("ts")
+    out = {}
+    for layout, kind in TS_LAYOUTS.items():
+        out[layout] = str(root / layout)
+        frame = base.withColumn("ts", F.col("ts").cast("timestamp_ntz")) if layout == "ntz" else base
+        with _confs(spark, {"spark.sql.parquet.outputTimestampType": kind}):
+            frame.repartition(3).write.parquet(out[layout])
+    return out
+
+
+@pytest.mark.parametrize("zone", list(ZONES))
+@pytest.mark.parametrize("layout", list(TS_LAYOUTS))
+def test_routed_day_key_matches_jvm_path(spark, ts_dirs, layout, zone):
+    """A ``to_date(ts)`` key routes for INT96, micros, millis and
+    ``timestamp_ntz`` columns in a fixed-offset session zone; the routed
+    build and every rollup level equal the JVM path's, on NULL, pre-1970,
+    post-2262 and 1-µs-from-midnight timestamps."""
+    with _confs(spark, {"spark.sql.session.timeZone": zone}):
+        df = spark.read.parquet(ts_dirs[layout]).withColumn("day", F.to_date("ts"))
+        assert dict(df.dtypes)["ts"] == ("timestamp_ntz" if layout == "ntz" else "timestamp")
+        scan = bare_parquet_scan(df.select("lang", "day", "url"))
+        assert scan.outputs == (("lang", "lang", None), ("day", "ts", 0 if layout == "ntz" else ZONES[zone]), ("url", "url", None))
+        specs = [HllSpec(10), CmsSpec(width=256, depth=3), BloomSpec(bits=4096, hashes=3)]
+        _assert_routed_matches_jvm(df, ["lang", "day"], "url", specs)
+        _assert_routed_matches_jvm(df, ["day"], "url", specs[:1])
+        _assert_routed_rollup_matches_jvm(df, ["lang", "day"], "url", HllSpec(10))
+
+
+def test_routed_day_key_may_shadow_its_source(spark, ts_dirs):
+    """``withColumn("ts", to_date("ts"))``: the day is read from, and
+    named as, the timestamp column."""
+    df = spark.read.parquet(ts_dirs["INT96"]).withColumn("ts", F.to_date("ts"))
+    assert bare_parquet_scan(df.select("lang", "ts", "url")).outputs[1] == ("ts", "ts", 0)
+    _assert_routed_matches_jvm(df, ["lang", "ts"], "url", [HllSpec(10)])
+    _assert_routed_rollup_matches_jvm(df, ["lang", "ts"], "url", HllSpec(10))
+
+
+def test_routed_rollup_plan_has_no_file_scan(spark, tmp_path):
+    """A (lang, to_date(ts)) rollup, the shape of perfbench's
+    ``frame_build`` rollup, reads its files worker-side and builds its plan
+    without a job."""
+    d = str(tmp_path / "web")
+    spark.range(20000).selectExpr(
+        "cast(id % 7 as string) AS lang", "cast(id as string) AS url", "timestamp_seconds(id * 97) AS warc_ts"
+    ).write.parquet(d)
+    df = spark.read.parquet(d).withColumn("day", F.to_date("warc_ts"))
+    rollup = lambda: rollup_sketches(df, ["lang", "day"], "url", HllSpec(12))  # noqa: E731
+    assert_plan_runs_no_job(spark, rollup, "rollup-plan-routed")
+    assert "FileScan" not in rollup()._jdf.queryExecution().executedPlan().toString()
+
+
 @pytest.fixture(scope="module")
 def plain_dir(spark, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("fallback") / "plain")
@@ -188,6 +305,7 @@ def plain_dir(spark, tmp_path_factory):
         "date_add(DATE'2024-01-01', cast(id % 4 as int)) AS d",
         "timestamp_seconds(id % 6) AS ts",
         "cast(id % 3 as decimal(10, 2)) AS dec",
+        "cast(date_add(DATE'2024-01-01', cast(id % 4 as int)) as string) AS ds",
     ).repartition(3).write.parquet(d)
     return d
 
@@ -199,6 +317,15 @@ def _fallback_inputs(spark, plain_dir, tmp_path):
     os.makedirs(unannotated)
     pq.write_table(pa.table({"b": pa.array([b"x%d" % (i % 7) for i in range(500)]), "url": [str(i) for i in range(500)]}), f"{unannotated}/f.parquet")
     plain = spark.read.parquet(plain_dir)
+
+    def legacy_int96():
+        d = str(tmp_path / "legacy_int96")
+        with _confs(spark, {"spark.sql.parquet.int96RebaseModeInWrite": "LEGACY"}):
+            plain.write.parquet(d)
+        footers = [pq.read_metadata(f"{d}/{f}").metadata for f in os.listdir(d) if f.endswith(".parquet")]
+        assert footers and all(b"org.apache.spark.legacyINT96" in m for m in footers)
+        return spark.read.parquet(d).withColumn("day", F.to_date("ts")), ["day"]
+
     return {
         "filter": lambda: (plain.filter(F.col("lang") != "0"), ["lang"]),
         "derived": lambda: (plain.withColumn("l2", F.upper("lang")), ["l2"]),
@@ -211,17 +338,30 @@ def _fallback_inputs(spark, plain_dir, tmp_path):
         "timestamp": lambda: (plain, ["ts"]),
         "decimal": lambda: (plain, ["dec"]),
         "binary_as_string": lambda: (spark.read.parquet(unannotated), ["b"]),
+        "region_zone": lambda: (plain.withColumn("day", F.to_date("ts")), ["day"]),
+        "legacy_int96_footer": legacy_int96,
+        "date_trunc": lambda: (plain.withColumn("dt", F.date_trunc("day", "ts")), ["dt"]),
+        "hour": lambda: (plain.withColumn("h", F.hour("ts")), ["h"]),
+        "cast_string_date": lambda: (plain.withColumn("sd", F.col("ds").cast("date")), ["sd"]),
     }
+
+
+#: session confs a fallback case is built and run under
+FALLBACK_CONFS = {
+    "binary_as_string": {"spark.sql.parquet.binaryAsString": "true"},
+    "region_zone": {"spark.sql.session.timeZone": "America/New_York"},
+}
 
 
 def test_streaming_frame_keeps_jvm_path(spark, plain_dir):
     stream = spark.readStream.schema(spark.read.parquet(plain_dir).schema).parquet(plain_dir)
-    assert bare_parquet_files(stream.select("lang", "url")) is None
+    assert bare_parquet_scan(stream.select("lang", "url")) is None
 
 
 FALLBACKS = [
     "filter", "derived", "aliased", "limit", "partitioned", "partitioned_unused",
     "merge_schema", "date", "timestamp", "decimal", "binary_as_string", "cached",
+    "region_zone", "legacy_int96_footer", "date_trunc", "hour", "cast_string_date",
 ]  # fmt: skip
 
 
@@ -229,23 +369,16 @@ FALLBACKS = [
 def test_non_bare_input_keeps_jvm_path(spark, plain_dir, tmp_path, case):
     """Each input keeps the JVM scan: its executed plan has a
     ``FileSourceScanExec`` and the build equals the mapInArrow path's."""
-    cached = None
-    if case == "binary_as_string":
-        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
-    try:
+    with _confs(spark, FALLBACK_CONFS.get(case, {})), contextlib.ExitStack() as stack:
         if case == "cached":
-            cached = spark.read.parquet(plain_dir).cache()
-            df, keys = cached, ["lang"]
+            df, keys = spark.read.parquet(plain_dir).cache(), ["lang"]
+            stack.callback(df.unpersist)
         else:
             df, keys = _fallback_inputs(spark, plain_dir, tmp_path)[case]()
         if case == "binary_as_string":
             assert dict(df.dtypes)["b"] == "string"
-        assert bare_parquet_files(df.select(*keys, "url")) is None
+        assert bare_parquet_scan(df.select(*keys, "url")) is None
         built = build_sketches(df, keys, "url", HllSpec(12))
         got = _rows(built, keys)
         assert "FileScan parquet" in built._jdf.queryExecution().executedPlan().toString()
         assert got == _rows(_jvm_build(df, keys, "url", HllSpec(12)), keys)
-    finally:
-        spark.conf.unset("spark.sql.parquet.binaryAsString")
-        if cached is not None:
-            cached.unpersist()

@@ -69,6 +69,29 @@ def test_filter_pushdown_both_forms(spark, web_dir):
         assert sum(r["n"] for r in got.collect()) == expect
 
 
+def test_malformed_filter_raises_on_driver(spark, web_dir):
+    """A filter that is neither an Expression nor a list of (column, op,
+    value) tuples raises while the plan is built, before any job starts,
+    also from an operator that runs a job of its own before its scan."""
+    from hlld_spark.operators.decontaminate import decontaminate_parquet
+
+    def ident(batches):
+        yield from batches
+
+    bad = ("url", ">", 300)  # one tuple, not a list of tuples
+    ev = spark.createDataFrame([("a b c d e f g h i j k l m n",)], "text string")
+    sc = spark.sparkContext
+    sc.setJobGroup("bad-filter", "plan with a malformed filter")
+    try:
+        with pytest.raises(TypeError):
+            map_parquet_batches(spark, web_dir, ident, "url string", ["url"], filter=bad)
+        with pytest.raises(TypeError):
+            decontaminate_parquet(spark, web_dir, ev, "url", "text", filter=bad)
+        assert sc.statusTracker().getJobIdsForGroup("bad-filter") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_lang_id_rides_worker_side_scan(spark, web_dir):
     """Any Arrow-batch operator composes with the scan primitive: lang-id
     per-lang counts computed entirely worker-side equal the DataFrame-UDF
