@@ -74,7 +74,8 @@ def checkpointed_build(
     keys: list[str] | None,
     col: str,
     spec=None,
-    ckpt_dir: str = None,
+    *,
+    ckpt_dir: str,
     job_id: str = "job0",
     max_splits: int | None = None,
 ) -> DataFrame | None:
@@ -87,7 +88,6 @@ def checkpointed_build(
     spec = spec if spec is not None else HllSpec()
     keys = list(keys or [])
     accumulator_for(spec)
-    assert ckpt_dir, "ckpt_dir is required"
     job_dir = os.path.join(ckpt_dir, job_id)
     os.makedirs(job_dir, exist_ok=True)
 

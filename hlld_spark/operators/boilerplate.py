@@ -62,7 +62,6 @@ _DROP_SUBTREES = re.compile(
     re.I | re.S,
 )
 _TAGS = re.compile(r"<[^>]*>")
-_WS = re.compile(r"\s+")
 _STOP_SET = frozenset(STOPWORDS)
 _PUNCT_CHARS = ".,;:!?()[]{}\"'«»„“”‘’…—-"
 

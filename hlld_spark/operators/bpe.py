@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import re
 
-import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F

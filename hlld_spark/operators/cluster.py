@@ -17,9 +17,6 @@ clusters over crawl corpora), same motivation as operators/dedup.py.
 
 from __future__ import annotations
 
-import pandas as pd
-import numpy as np
-
 from pyspark.sql import DataFrame, functions as F
 
 

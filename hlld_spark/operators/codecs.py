@@ -413,8 +413,6 @@ def encode_png(arr: np.ndarray, filter_type: int = 0) -> bytes:
 # WAV (RIFF/WAVE, PCM)
 # ---------------------------------------------------------------------------
 
-WAV_MAGIC = b"RIFF"
-
 
 class WavFormatError(ValueError):
     """Malformed or unsupported WAV payload."""

@@ -1058,32 +1058,6 @@ def ngram_jaccard_pairs(
     return pairs_df.withColumn(out, jac(F.col(text_a), F.col(text_b)))
 
 
-def ngram_jaccard_dedup(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.8,
-    num_perm: int = 128, bands: int = 32,
-) -> DataFrame:
-    """Exact-Jaccard dedup: MinHash-LSH generates candidates (high recall
-    via many bands), n-gram Jaccard verifies — on the default hashed
-    fast path (exact up to 64-bit shingle-hash collisions; pass the
-    verify through :func:`ngram_jaccard_pairs` with ``exact=True``
-    yourself if collision-free scores are required). Returns
-    (id, keeper_id, jaccard)."""
-    cand = minhash_lsh_dedup(df, id_col, text_col, num_perm=num_perm, bands=bands,
-                             shingle_k=n, threshold=0.5)
-    cand_pairs = cand.filter(F.col("id") != F.col("keeper_id"))
-    texts = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__ta"))
-    keep_texts = df.select(F.col(id_col).alias("keeper_id"), F.col(text_col).alias("__tb"))
-    joined = cand_pairs.join(texts, "id").join(keep_texts, "keeper_id")
-    verified = ngram_jaccard_pairs(joined, "__ta", "__tb", n=n).filter(F.col("jaccard") >= threshold)
-    labels = verified.groupBy("id").agg(F.min("keeper_id").alias("keeper_id"), F.max("jaccard").alias("jaccard"))
-    all_ids = df.select(F.col(id_col).alias("id"))
-    return (
-        all_ids.join(labels, "id", "left")
-        .withColumn("keeper_id", F.coalesce(F.col("keeper_id"), F.col("id")))
-        .withColumn("jaccard", F.coalesce(F.col("jaccard"), F.lit(1.0)))
-    )
-
-
 # ---------------------------------------------------------------------------
 # embedding cosine near-dup
 # ---------------------------------------------------------------------------

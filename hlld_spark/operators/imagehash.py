@@ -39,7 +39,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.types import LongType, StructField, StructType
 
 _N = 32  # resize target; DCT size

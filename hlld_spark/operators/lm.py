@@ -34,7 +34,7 @@ operators/ranking.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from .ranking import tokens_col
 

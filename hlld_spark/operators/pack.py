@@ -192,27 +192,3 @@ def chunk_documents(
         F.array_join("chunk_toks", " ").alias("chunk_text"),
     )
 
-
-def packed_chunk_stats(packed: DataFrame, ctx_len: int) -> DataFrame:
-    """Per-chunk occupancy from :func:`pack_sequences` output:
-    (chunk, n_docs, n_tokens). A document spanning k chunks contributes
-    to each; token attribution clips its span to the chunk window. The
-    explode fans out only (doc → its chunk range) — bounded by
-    n_tokens/ctx_len + 1 rows per doc."""
-    spans = packed.where(F.col("first_chunk").isNotNull()).select(
-        "token_offset",
-        "n_tokens",
-        F.explode(F.sequence("first_chunk", "last_chunk")).alias("chunk"),
-    )
-    start = F.greatest(F.col("token_offset"), F.col("chunk") * ctx_len)
-    end = F.least(
-        F.col("token_offset") + F.col("n_tokens"), (F.col("chunk") + 1) * ctx_len
-    )
-    return (
-        spans.groupBy("chunk")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(end - start).alias("n_tokens"),
-        )
-        .orderBy("chunk")
-    )

@@ -28,15 +28,14 @@ parameter vector is small and the data is huge:
 
 Full-batch GD is exact and reproducible (no RNG, no sampling); for a
 100-TB corpus one would switch the driver loop to mini-batches over
-`deterministic_sample` slices — the per-iteration plan is unchanged.
+md5-keyed `sampling.stratified_sample` slices — the per-iteration plan
+is unchanged.
 
 Reference scope note: armon/hlld has nothing comparable; this module
 belongs to the LLM-data-pipeline layer of the brief.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -301,6 +300,3 @@ def numpy_reference_train(
         bias -= lr * float(r.mean())
     return {b: float(w[idx[b]]) for b in vocab}, float(bias)
 
-
-def sigmoid(x: float) -> float:
-    return 1.0 / (1.0 + math.exp(-x))

@@ -84,29 +84,3 @@ def bm25_search(
     )
     return scored.orderBy(F.desc("bm25"), F.col(id_col)).limit(k)
 
-
-def with_tfidf_top_terms(
-    docs: DataFrame, id_col: str, text_col: str, top: int = 5
-) -> DataFrame:
-    """(id, top_terms array<string>): each document's ``top`` terms by
-    tf·idf (idf = ln(N / df), smoothed), ties broken alphabetically —
-    the classic keyword-extraction projection. The df table is a small
-    aggregate broadcast back against the exploded terms."""
-    from pyspark.sql import Window
-
-    n_docs = docs.count()
-    toks = docs.select(F.col(id_col), tokens_col(text_col).alias("__toks"))
-    hits = toks.select(id_col, F.explode("__toks").alias("term"))
-    tf = hits.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
-    dfreq = hits.distinct().groupBy("term").agg(F.count("*").alias("df"))
-    scored = tf.join(F.broadcast(dfreq), "term").withColumn(
-        "tfidf",
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6),
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.col("term"))
-    ranked = scored.withColumn("__r", F.row_number().over(w)).filter(F.col("__r") <= top)
-    return (
-        ranked.groupBy(id_col)
-        .agg(F.array_sort(F.collect_list(F.struct("__r", "term"))).alias("__s"))
-        .select(id_col, F.transform("__s", lambda s: s["term"]).alias("top_terms"))
-    )

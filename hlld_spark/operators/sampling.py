@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 _HEX_WIDTH = 8
 _HEX_SPACE = 16 ** _HEX_WIDTH
@@ -41,21 +41,6 @@ def sample_threshold_hex(fraction: float) -> str:
     if fraction == 1.0:
         return "g" * _HEX_WIDTH
     return format(int(round(fraction * _HEX_SPACE)), f"0{_HEX_WIDTH}x")
-
-
-def _keep_col(key: Column, fraction: float, seed: int) -> Column:
-    thr = sample_threshold_hex(fraction)
-    return F.substring(
-        F.md5(F.concat(key.cast("string"), F.lit(f":{seed}"))), 1, _HEX_WIDTH
-    ) < F.lit(thr)
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, seed: int = 0
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, membership a pure function of
-    (key, seed) — identical on every engine and every rerun."""
-    return df.where(_keep_col(F.col(key_col), fraction, seed))
 
 
 def stratified_sample(

@@ -4,21 +4,12 @@ handled explicitly").
 Sketch builds don't need salting — the partition-local partial
 aggregation collapses any key skew before the shuffle (operators/
 sketch.py). These helpers cover the operations that DO row-shuffle on a
-skewed key: exact distinct counts, row-level repartitions, and skewed
-joins.
+skewed key: exact distinct counts, and size-balanced repartitions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def salted_repartition(df: DataFrame, key: str, salt_buckets: int = 16, salt_col: str = "__salt") -> DataFrame:
-    """Repartition on (key, salt) so one hot key spreads over
-    ``salt_buckets`` tasks. Salt is derived from the full row's hash —
-    deterministic, no RNG in the plan."""
-    salted = df.withColumn(salt_col, F.pmod(F.hash(*df.columns), F.lit(salt_buckets)))
-    return salted.repartition(F.col(key), F.col(salt_col))
 
 
 def salted_exact_distinct(
@@ -51,9 +42,3 @@ def rebalance(df: DataFrame, n: int) -> DataFrame:
         return df.hint("rebalance", n)
     return df.repartition(n)
 
-
-def broadcast_threshold_join(big: DataFrame, small: DataFrame, on, how: str = "inner") -> DataFrame:
-    """Join with an explicit broadcast hint on the small side — removes
-    the shuffle of the big side entirely (the registry-onto-sketches
-    join shape from SURVEY.md §2.2)."""
-    return big.join(F.broadcast(small), on, how)

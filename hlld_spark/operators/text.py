@@ -12,7 +12,7 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType, StringType
 
 from ..core.hashing import hll_hash
 

@@ -81,27 +81,6 @@ def _query(url: Column) -> Column:
     return F.regexp_extract(url, r"\?([^#]*)", 1)
 
 
-def _fragment(url: Column) -> Column:
-    return F.regexp_extract(url, r"#(.*)$", 1)
-
-
-def with_url_parts(df: DataFrame, url_col: str = "url", out: str = "url_parts") -> DataFrame:
-    """Typed struct column (scheme, host, port, path, query, fragment)
-    — one projection, no UDF, no shuffle."""
-    u = F.col(url_col)
-    return df.withColumn(
-        out,
-        F.struct(
-            _scheme(u).alias("scheme"),
-            _host(u).alias("host"),
-            _port(u).alias("port"),
-            _path(u).alias("path"),
-            _query(u).alias("query"),
-            _fragment(u).alias("fragment"),
-        ),
-    )
-
-
 def canonical_url_col(url: Column) -> Column:
     """The canonicalization rules of the module docstring as a single
     column expression (composable inside any projection)."""

@@ -20,11 +20,8 @@ against this handler.)
 
 from __future__ import annotations
 
-from .core import hll
 from .registry import (
-    DELETE_IN_PROGRESS,
     DONE,
-    EXISTS,
     NOT_PROXIED,
     SET_NOT_FOUND,
     HlldError,

@@ -23,15 +23,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BinaryType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
+from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
 from ..core.accumulator import HllSpec, accumulator_for, deserialize_any
 
@@ -198,46 +190,6 @@ def sketch_stream(
             ),
         )
     )
-
-
-def stream_into_registry(
-    stream_df: DataFrame,
-    col: str,
-    registry_dir: str,
-    set_name: str = None,
-    key: str | None = None,
-    name_prefix: str = "",
-    spec=None,
-):
-    """The reference's online-daemon role: a stream of keys continuously
-    ingested into named registry sets (one set per ``key`` value, or a
-    single ``set_name``), durable via the registry's flush-on-batch.
-
-    Returns a StreamingQuery handle (foreachBatch sink: per micro-batch,
-    build partial sketches distributed, merge into the named sets, flush
-    — the reference's ``bulk`` + periodic-flush loop,
-    src/background.c:99-146, at micro-batch cadence).
-    """
-    spec = spec if spec is not None else HllSpec()
-    if (set_name is None) == (key is None):
-        raise ValueError("pass exactly one of set_name / key")
-
-    def sink(batch_df, epoch_id):
-        from ..core import hll as hll_core
-        from ..registry import EXISTS, SketchRegistry
-        from ..operators.sketch import build_sketches
-
-        reg = SketchRegistry(registry_dir)
-        keys = [key] if key else []
-        rows = build_sketches(batch_df, keys, col, spec).collect()
-        for r in rows:
-            name = f"{name_prefix}{r[key]}" if key else set_name
-            reg.create(name, precision=spec.precision)
-            regs, _ = hll_core.deserialize(bytes(r["sketch"]))
-            reg.merge_registers(name, regs, int(r["n_rows"]))
-        reg.flush()
-
-    return stream_df.writeStream.foreachBatch(sink)
 
 
 def windowed_sketch_stream(

@@ -117,17 +117,24 @@ _mixed_docs = st.one_of(
     # script-dense docs, so the lang-id script-ratio rules fire and overlap
     st.text(alphabet="日本のテЖжΣςم a", max_size=12),
 )
-_CONTAINERS = ("list", "pandas", "arrow", "large_arrow", "slice", "chunked")
+ARROW_CONTAINERS = ("arrow", "large_arrow", "slice", "chunked")
+_CONTAINERS = ("list", "pandas") + ARROW_CONTAINERS
 
 
 @st.composite
-def text_batches(draw):
-    """(batch in some container, the texts it holds as Python values)."""
-    docs = draw(st.lists(draw(st.sampled_from([_ascii_docs, _mixed_docs])), max_size=10))
+def text_batches(draw, extra_alphabet: str = "", containers=_CONTAINERS):
+    """(batch in some container, the texts it holds as Python values).
+    ``extra_alphabet`` adds a third doc source: NULL, or text over the
+    mixed alphabet plus those characters. ``containers`` narrows the
+    batch kinds."""
+    sources = [_ascii_docs, _mixed_docs]
+    if extra_alphabet:
+        sources.append(st.one_of(st.none(), st.text(alphabet=_MIXED + extra_alphabet + _WS, max_size=24)))
+    docs = draw(st.lists(draw(st.sampled_from(sources)), max_size=10))
     if draw(st.booleans()):
         docs = [d.upper() if d and i % 2 else d for i, d in enumerate(docs)]
     texts = [""] * draw(st.integers(0, 2)) + docs + [""] * draw(st.integers(0, 2))
-    kind = draw(st.sampled_from(_CONTAINERS))
+    kind = draw(st.sampled_from(containers))
     if kind == "list":
         return texts, texts
     if kind == "pandas":

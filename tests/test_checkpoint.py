@@ -108,3 +108,13 @@ def test_rewritten_same_size_file_invalidates_split(spark, tmp_path):
     assert new_ids, "rewritten file reused the stale checkpoint split"
     direct = build_sketches(spark.read.parquet(d), [], "k", HllSpec(12)).first()
     assert bytes(out2.first()["sketch"]) == bytes(direct["sketch"])
+
+
+def test_ckpt_dir_is_a_required_keyword():
+    """No default checkpoint directory exists: omitting ``ckpt_dir`` or
+    passing it positionally fails at the call, before any job runs, and
+    the same way under ``python -O``."""
+    with pytest.raises(TypeError, match="ckpt_dir"):
+        checkpointed_build(None, "in", [], "url", HllSpec(12), job_id="jx")
+    with pytest.raises(TypeError):
+        checkpointed_build(None, "in", [], "url", HllSpec(12), "ck")

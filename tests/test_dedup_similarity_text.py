@@ -15,13 +15,7 @@ from hlld_spark.operators.dedup import (
     simhash_dedup,
     simhash_df,
 )
-from hlld_spark.operators.similarity import (
-    cosine_topk,
-    fit_ivf_centroids,
-    ivf_assign,
-    ivf_topk,
-    lsh_topk,
-)
+from hlld_spark.operators.similarity import cosine_topk
 from hlld_spark.operators.text import (
     fingerprint_overlap_pairs,
     with_fingerprint,
@@ -262,45 +256,20 @@ def test_cosine_topk_matches_numpy(spark, emb):
     assert got[0] == pdf["vec_id"].iloc[0]  # self is most similar
 
 
-def test_lsh_topk_recall(spark, emb):
-    pdf = emb.select("vec_id", "embedding").toPandas()
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    q = mat[7]
-    exact = [r["vec_id"] for r in cosine_topk(emb, "vec_id", "embedding", q, 5).collect()]
-    rows = lsh_topk(emb, "vec_id", "embedding", q, k=5, planes=6, tables=8).collect()
-    approx = [r["vec_id"] for r in rows]
-    # random gaussian corpus: only the self-vector is a *true* neighbor;
-    # LSH must recall it, return valid results sorted by cosine
-    assert exact[0] in approx
-    cosines = [r["cosine"] for r in rows]
-    assert cosines == sorted(cosines, reverse=True)
-    assert len(approx) <= 5
-
-
-def test_ivf_topk(spark, emb):
-    pdf = emb.select("vec_id", "embedding").toPandas()
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    cent = fit_ivf_centroids(emb, "embedding", n_lists=8, sample=500)
-    assigned = ivf_assign(emb, "vec_id", "embedding", cent).cache()
-    assert assigned.select("list_id").distinct().count() <= 8
-    q = mat[3]
-    exact = [r["vec_id"] for r in cosine_topk(emb, "vec_id", "embedding", q, 5).collect()]
-    approx = [r["vec_id"] for r in ivf_topk(assigned, "vec_id", "embedding", q, cent, k=5, nprobe=4).collect()]
-    assert exact[0] in approx
-    assert len(set(exact) & set(approx)) >= 3
-
-
-def test_ivf_centroid_sample_spans_clustered_partitions(spark):
-    """VERDICT r4 #3: on a corpus whose partitions are cluster-sorted
-    (the normal crawl layout), the centroid sample must span ALL
-    partitions — the old ``.limit(sample)`` took only the first
-    partition's rows, fitting every centroid to one shard.
+def test_pq_codebook_sample_spans_clustered_partitions(spark):
+    """On a corpus whose partitions are cluster-sorted (the normal crawl
+    layout), the codebook training sample must span ALL partitions — a
+    ``.limit(sample)`` takes only the first partition's rows, fitting
+    every centroid to one shard.
 
     Fixture: 4 well-separated clusters, one partition each (union of
     4 single-cluster frames preserves partition order). sample=400 <
     one cluster's 500 rows, so a first-partition sample would see
-    cluster 0 only. Assert every true cluster center has a fitted
-    centroid nearby and the centroid→cluster assignment is balanced."""
+    cluster 0 only. With m=1 the one codebook is plain k-means: assert
+    every true cluster center has a fitted centroid nearby and the
+    centroid→cluster assignment is balanced."""
+    from hlld_spark.operators.similarity import fit_pq_codebooks
+
     rng = np.random.RandomState(11)
     centers = np.eye(4, 8) * 50.0  # inter-center distance ~70, noise ~1
     rows = []
@@ -315,7 +284,7 @@ def test_ivf_centroid_sample_spans_clustered_partitions(spark):
         .sortWithinPartitions("vec_id")
     )
     assert df.rdd.getNumPartitions() == 4
-    cent = fit_ivf_centroids(df, "embedding", n_lists=4, sample=400)
+    cent = fit_pq_codebooks(df, "embedding", m=1, n_centroids=4, sample=400, seed=3)[0]
     # nearest fitted centroid per TRUE center must be near (noise scale),
     # and all 4 centroids must claim a distinct cluster
     d = ((centers[:, None, :] - cent[None, :, :]) ** 2).sum(-1) ** 0.5
@@ -434,24 +403,6 @@ def test_fingerprint_deterministic(spark):
     assert a == b
 
 
-def test_ngram_jaccard_dedup_end_to_end(spark, neardup_docs):
-    """LSH candidates verified by exact n-gram Jaccard: near-copies map
-    to their family keeper with exact scores; fillers survive."""
-    from hlld_spark.operators.dedup import ngram_jaccard_dedup
-
-    out = ngram_jaccard_dedup(neardup_docs, "doc_id", "text", n=3, threshold=0.6)
-    j = out.join(neardup_docs.select(F.col("doc_id").alias("id"), "family", "kind"), "id").collect()
-    fam_of = {r["doc_id"]: r["family"] for r in neardup_docs.collect()}
-    copies = [r for r in j if r["kind"].startswith("copy")]
-    found = sum(1 for r in copies if r["keeper_id"] != r["id"] and fam_of[r["keeper_id"]] == r["family"])
-    assert found / len(copies) > 0.8
-    for r in j:
-        if r["keeper_id"] != r["id"]:
-            assert r["jaccard"] >= 0.6  # scores are the exact verification values
-    fillers = [r for r in j if r["kind"] == "filler"]
-    assert sum(1 for r in fillers if r["keeper_id"] != r["id"]) <= 1
-
-
 def test_minhash_empty_and_single_docs(spark):
     """Degenerate inputs: empty strings and single-doc corpora."""
     from hlld_spark.operators.dedup import minhash_lsh_dedup
@@ -471,51 +422,6 @@ def test_minhash_keeper_pointers_idempotent(spark, neardup_docs):
     k = {r["id"]: r["keeper_id"] for r in out.collect()}
     for i, kp in k.items():
         assert k[kp] == kp, f"keeper chain not collapsed: {i} -> {kp} -> {k[kp]}"
-
-
-def test_cosine_topk_batch_matches_single(spark, emb):
-    """Batch multi-query top-k agrees with per-query cosine_topk."""
-    from hlld_spark.operators.similarity import cosine_topk_batch
-
-    pdf = emb.select("vec_id", "embedding").toPandas()
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    queries = mat[[0, 7, 42]]
-    out = cosine_topk_batch(emb, "vec_id", "embedding", queries, k=5).collect()
-    assert len(out) == 15
-    by_q = {}
-    for r in out:
-        by_q.setdefault(r["query_idx"], []).append(r["vec_id"])
-    for qi, qvec in enumerate(queries):
-        single = [r["vec_id"] for r in cosine_topk(emb, "vec_id", "embedding", qvec, 5).collect()]
-        assert by_q[qi] == single, f"query {qi}"
-
-
-def test_ann_join_finds_noisy_copies(spark):
-    """Right table = noisy copies of left rows: the join must match each
-    left row to its own copy as the top hit."""
-    from hlld_spark.operators.similarity import ann_join
-
-    rng = np.random.RandomState(6)
-    base = rng.standard_normal((60, 24))
-    left = spark.createDataFrame(
-        [(i, base[i].tolist()) for i in range(60)], "lid long, lvec array<double>"
-    )
-    right = spark.createDataFrame(
-        [(1000 + i, (base[i] + rng.standard_normal(24) * 0.02).tolist()) for i in range(60)],
-        "rid long, rvec array<double>",
-    )
-    out = ann_join(left, right, "lid", "rid", "lvec", "rvec", k=1, planes=8, tables=8, min_cosine=0.9)
-    matches = {r["lid"]: (r["rid"], r["cosine"]) for r in out.collect()}
-    hit = sum(1 for lid, (rid, cos) in matches.items() if rid == 1000 + lid and cos > 0.99)
-    assert hit / 60 > 0.9, f"only {hit}/60 matched their noisy copy"
-    # scale shape: vectors ride only the 2 pre-join bucketize exchanges;
-    # the candidate-dedup and top-k exchanges carry scalars only
-    from hlld_spark.plans.explain_tools import exchange_inputs
-
-    vec_exchanges = {i for i in exchange_inputs(out) if "__vec_" in i}
-    assert len(vec_exchanges) <= 2, vec_exchanges  # only the 2 bucketize sides
-    for i in vec_exchanges:  # and never a post-join exchange (both vectors)
-        assert not ("__vec_l" in i and "__vec_r" in i), i
 
 
 def test_minhash_dedup_against_persisted_corpus(spark, neardup_docs, tmp_path):
@@ -625,25 +531,6 @@ def test_ngram_jaccard_unicode_agrees(spark):
     b = [round(r["jaccard"], 9) for r in ngram_jaccard_pairs(pairs, "ta", "tb", n=3).orderBy("ta").collect()]
     assert a == b
     assert all(0 < x < 1 for x in a)  # genuinely partial overlaps
-
-
-def test_cosine_expr_matches_numpy(spark, emb):
-    """Pure-Catalyst cosine (zip_with + aggregate) equals the numpy path."""
-    from hlld_spark.operators.similarity import cosine_expr
-
-    pdf = emb.limit(50).toPandas()
-    mat = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
-    q = mat[0]
-    df = emb.limit(50).withColumn("q", F.lit(q.tolist()).cast("array<double>"))
-    got = {r["vec_id"]: r["cos"] for r in df.select("vec_id", cosine_expr("embedding", "q").alias("cos")).collect()}
-    import numpy.linalg as la
-
-    for i, vid in enumerate(pdf["vec_id"]):
-        expect = float(mat[i] @ q / (la.norm(mat[i]) * la.norm(q)))
-        assert abs(got[vid] - expect) < 1e-6  # summation-order tolerance
-    # zero Python nodes in the plan
-    plan = df.select(cosine_expr("embedding", "q"))._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan
 
 
 def test_dedup_exact_duplicate_id_cross_content(spark):

@@ -5,16 +5,23 @@ Truth direction: tests corrupt pristine text with the FORWARD transform
 the pristine original — the repair code never generates its own truth.
 """
 
+import re
+
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from hlld_spark.operators.encoding import (
+    _SUSPECT_RE,
     fix_mojibake,
     mojibake_corrupt,
     repair_text_batch,
     with_encoding_repair,
     write_mojibake_fixture,
 )
+from tests.test_ascii_fastpath import text_batches
 
 PRISTINE = [
     "café crème brûlée",
@@ -87,6 +94,32 @@ def test_prefilter_skips_pure_ascii_rows():
     # the suspect regex must never select ascii rows (the scale claim).
     vals = pd.Series(["only ascii %d" % i for i in range(100)])
     assert not vals.str.contains("[Â-ô]", regex=True).any()
+
+
+#: latin-1 letters inside and at both edges of the suspect range
+#: (U+00C1 | U+00C2 .. U+00F4 | U+00F5), cp1252-only punctuation, and
+#: the identity chars of cp1252's unmapped bytes
+_REPAIR_CHARS = "ÁÂÃâéüñçßôõ€’“”•–—…\x81\x8d\x9d"
+_CORRUPTIONS = (None, ("cp1252", 1), ("cp1252", 2), ("latin1", 1))
+
+
+@settings(max_examples=200, deadline=None)
+@given(text_batches(_REPAIR_CHARS), st.data())
+def test_batch_repair_matches_per_row_fix(batch, data):
+    """Differential: ``repair_text_batch`` (prefilter, then repair of
+    the suspect rows) equals per-row ``fix_mojibake`` (NULL read as "")
+    over clean and mojibake-corrupted text, and the Arrow path's RE2
+    prefilter (``pc.match_substring_regex`` after ``fill_null``, as in
+    ``with_encoding_repair``) selects exactly the rows Python ``re``
+    does."""
+    clean = batch[1]
+    ops = data.draw(st.lists(st.sampled_from(_CORRUPTIONS), min_size=len(clean), max_size=len(clean)))
+    texts = [t if t is None or op is None else mojibake_corrupt(t, *op) for t, op in zip(clean, ops)]
+    filled = [t or "" for t in texts]
+    out = repair_text_batch(pd.Series(texts, dtype=object))
+    assert list(zip(out["fixed"], out["rounds"].tolist())) == [fix_mojibake(t) for t in filled]
+    re2 = pc.match_substring_regex(pc.fill_null(pa.array(texts, pa.string()), ""), _SUSPECT_RE)
+    assert re2.to_pylist() == [re.search(_SUSPECT_RE, t) is not None for t in filled]
 
 
 def test_fixture_exact_inverse(tmp_path):

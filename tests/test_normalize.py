@@ -7,13 +7,16 @@ import unicodedata
 import pandas as pd
 import pyarrow as pa
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from hlld_spark.operators.normalize import (
+    _FORMS,
     _normalize_arrow,
     normalize_batch,
     with_unicode_normalization,
     write_unicode_fixture,
 )
+from tests.test_ascii_fastpath import ARROW_CONTAINERS, text_batches
 
 DECOMPOSED = "café crème über 가"
 COMPAT = "ﬁne ｆｕｌｌ x²"  # ligature/fullwidth/superscript
@@ -63,6 +66,29 @@ def test_arrow_batch_matches_stdlib(kind):
         for form in ("NFC", "NFKD"):
             want = [None if t is None else unicodedata.normalize(form, t) for t in texts]
             assert _normalize_arrow(batch, form).to_pylist() == want
+
+
+#: combining marks of several canonical classes (so NFC/NFD reorder
+#: them), compatibility characters (ligature, circled digit, fullwidth,
+#: superscript, roman numeral, squared unit), Hangul conjoining jamo
+#: (L, V, T) beside precomposed syllables, and bases they attach to
+_NORMALIZATION_CHARS = (
+    "\u0300\u0301\u0308\u0323\u0327\u031b\u0345"
+    "ﬁ①ｆ²Ⅳ㎏"
+    "\u1100\u1161\u11a8\uac00\uac01"
+    "aeoAEΑι"
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(text_batches(_NORMALIZATION_CHARS, ARROW_CONTAINERS), st.sampled_from(_FORMS))
+def test_arrow_kernel_matches_per_row_stdlib(batch, form):
+    """Differential: the Arrow kernel equals per-row
+    ``unicodedata.normalize`` on every Arrow batch shape, NULLs
+    included, for each of the four forms."""
+    arr, texts = batch
+    want = [None if t is None else unicodedata.normalize(form, t) for t in texts]
+    assert _normalize_arrow(arr, form).to_pylist() == want
 
 
 def test_fixture_is_genuinely_denormalized(tmp_path):

@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from hlld_spark.operators.pack import (
     chunk_documents,
     pack_sequences,
-    packed_chunk_stats,
     with_global_token_offsets,
 )
 
@@ -108,20 +107,25 @@ def test_pack_hand_case(spark):
 
 @pytest.mark.spark
 def test_chunk_stats_conservation(spark):
+    """Per-chunk occupancy folded from each doc's (token_offset,
+    n_tokens, first_chunk, last_chunk) span: every token lands in
+    exactly one chunk and every chunk but the last is full."""
     rng = random.Random(11)
     rows = [(i, " ".join("w" for _ in range(rng.randrange(1, 40)))) for i in range(80)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    packed = pack_sequences(df, "doc_id", 32, text_col="text")
-    stats = packed_chunk_stats(packed, 32).collect()
+    packed = pack_sequences(df, "doc_id", 32, text_col="text").collect()
     total = sum(len(t.split()) for _, t in rows)
-    # every token lands in exactly one chunk
-    assert sum(r["n_tokens"] for r in stats) == total
-    # all chunks except the last are exactly full
-    chunks = sorted(stats, key=lambda r: r["chunk"])
-    assert [r["chunk"] for r in chunks] == list(range(len(chunks)))
-    for r in chunks[:-1]:
-        assert r["n_tokens"] == 32
-    assert chunks[-1]["n_tokens"] == total - 32 * (len(chunks) - 1)
+    per_chunk = {}
+    for r in packed:
+        start, end = r["token_offset"], r["token_offset"] + r["n_tokens"]
+        assert (r["first_chunk"], r["last_chunk"]) == (start // 32, (end - 1) // 32)
+        for c in range(r["first_chunk"], r["last_chunk"] + 1):
+            per_chunk[c] = per_chunk.get(c, 0) + min(end, (c + 1) * 32) - max(start, c * 32)
+    assert sum(per_chunk.values()) == total
+    assert sorted(per_chunk) == list(range(len(per_chunk)))
+    for c in range(len(per_chunk) - 1):
+        assert per_chunk[c] == 32
+    assert per_chunk[len(per_chunk) - 1] == total - 32 * (len(per_chunk) - 1)
 
 
 @pytest.mark.spark

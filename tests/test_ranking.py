@@ -8,7 +8,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from hlld_spark.operators.ranking import bm25_search, corpus_stats, with_tfidf_top_terms
+from hlld_spark.operators.ranking import bm25_search, corpus_stats
 
 pytestmark = pytest.mark.spark
 
@@ -81,12 +81,3 @@ def test_corpus_stats_and_plan(spark, corpus):
     plan = bm25_search(corpus, "doc_id", "text", ["hash"], k=5)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" not in plan
     assert "PythonUDF" not in plan
-
-
-def test_tfidf_top_terms(spark, corpus):
-    got = {r["doc_id"]: r["top_terms"] for r in with_tfidf_top_terms(corpus, "doc_id", "text", top=2).collect()}
-    assert len(got) == 5
-    assert got[2][0] == "spark"  # 3x spark dominates doc 2
-    # rare term beats common ones within its doc
-    assert "broadcast" in got[3]
-    assert all(len(v) == 2 for v in got.values())

@@ -7,7 +7,6 @@ from pyspark.sql import functions as F
 
 from hlld_spark.operators.sampling import (
     blocklist_pattern,
-    deterministic_sample,
     filter_blocklist,
     sample_threshold_hex,
     stratified_sample,
@@ -22,16 +21,18 @@ def _ref_keep(key, fraction, seed=0):
 
 @pytest.mark.spark
 def test_deterministic_sample_membership_matches_reference(spark):
-    df = spark.createDataFrame([(i,) for i in range(2000)], "k long")
-    got = {r["k"] for r in deterministic_sample(df, "k", 0.3, seed=7).collect()}
-    want = {i for i in range(2000) if _ref_keep(i, 0.3, 7)}
-    assert got == want
+    df = spark.createDataFrame([(i, "en") for i in range(2000)], "k long, lang string")
+
+    def kept(seed):
+        out = stratified_sample(df, "k", "lang", {"en": 0.3}, default_fraction=0.0, seed=seed)
+        return {r["k"] for r in out.collect()}
+
+    got = kept(7)
+    assert got == {i for i in range(2000) if _ref_keep(i, 0.3, 7)}
     assert 0.25 < len(got) / 2000 < 0.35
     # rerun identical; different seed differs
-    got2 = {r["k"] for r in deterministic_sample(df, "k", 0.3, seed=7).collect()}
-    assert got2 == got
-    got3 = {r["k"] for r in deterministic_sample(df, "k", 0.3, seed=8).collect()}
-    assert got3 != got
+    assert kept(7) == got
+    assert kept(8) != got
 
 
 @pytest.mark.spark
@@ -90,7 +91,6 @@ def test_blocklist_pattern_escapes():
 def test_plans_stay_in_codegen(spark):
     df = spark.createDataFrame([(1, "x", "en")], "k long, text string, lang string")
     for q in (
-        deterministic_sample(df, "k", 0.5),
         stratified_sample(df, "k", "lang", {"en": 0.5}),
         filter_blocklist(df, "text", ["bad"]),
     ):

@@ -11,11 +11,7 @@ from hlld_spark.operators.multimodal import (
     resize_images,
     sample_audio_frames,
 )
-from hlld_spark.operators.skew import (
-    broadcast_threshold_join,
-    salted_exact_distinct,
-    salted_repartition,
-)
+from hlld_spark.operators.skew import salted_exact_distinct
 from hlld_spark.sources.webpages import generate_web_pages
 
 pytestmark = pytest.mark.spark
@@ -46,28 +42,6 @@ def test_salted_exact_distinct_matches_plain(spark, wp):
 def test_salted_exact_distinct_global(spark, wp):
     got = salted_exact_distinct(wp, [], "url").first()["exact_distinct"]
     assert got == wp.select("url").distinct().count()
-
-
-def test_salted_repartition_spreads_hot_key(spark, wp):
-    en = salted_repartition(wp.filter(F.col("lang") == "en"), "lang", salt_buckets=16)
-    # one hot key now carries 16 distinct shuffle keys; with AQE's
-    # small-partition coalescing disabled the fan-out is visible (at real
-    # scale AQE keeps it — partitions exceed the advisory size)
-    assert en.select("__salt").distinct().count() == 16
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        per_part = en.groupBy(F.spark_partition_id().alias("p")).count()
-        assert per_part.count() >= 4
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-
-
-def test_broadcast_join_plan(spark, wp):
-    dims = spark.createDataFrame([(l, i) for i, l in enumerate(["en", "zh", "es"])], ["lang", "lang_id"])
-    out = broadcast_threshold_join(wp, dims, "lang")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert out.count() > 0
 
 
 # --- multimodal ---------------------------------------------------------------

@@ -6,7 +6,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from hlld_spark.core import hll
 from hlld_spark.core.accumulator import HllSpec
 from hlld_spark.operators.sketch import build_sketches, with_estimate
 from hlld_spark.sources.webpages import generate_web_pages
@@ -128,43 +127,6 @@ def test_windowed_state_eviction_soak(spark, tmp_path):
     pdf = spark.sql("select * from evict_soak").toPandas()
     assert pdf["window_start"].nunique() == 4
     assert (pdf.groupby("window_start")["n_rows"].max() == 200).all()
-
-
-def test_stream_into_registry(spark, stream_dir, tmp_path):
-    """Streamed keys land in named registry sets, durable and correct."""
-    from hlld_spark.registry import SketchRegistry
-    from hlld_spark.streaming.sketch_stream import stream_into_registry
-
-    batch_df = spark.read.parquet(stream_dir)
-    stream = spark.readStream.schema(batch_df.schema).option("maxFilesPerTrigger", 1).parquet(stream_dir)
-    reg_dir = str(tmp_path / "reg")
-    q = (
-        stream_into_registry(stream, "url", reg_dir, key="lang", name_prefix="urls_", spec=HllSpec(12))
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    reg = SketchRegistry(reg_dir)
-    names = [r["name"] for r in reg.list("urls_")]
-    exact = {r["lang"]: r["d"] for r in batch_df.groupBy("lang").agg(F.countDistinct("url").alias("d")).collect()}
-    assert set(names) == {f"urls_{l}" for l in exact}
-    for lang, d in exact.items():
-        est = reg.info(f"urls_{lang}")["size"]
-        assert abs(est - d) / d <= max(3 * hll.error_for_precision(12), 0.06)
-    # the direct batch build must give byte-identical registers
-    direct = {
-        r["lang"]: bytes(r["sketch"]) for r in build_sketches(batch_df, ["lang"], "url", HllSpec(12)).collect()
-    }
-    import numpy as np
-    from hlld_spark.core import hll as hll_core
-
-    for lang in exact:
-        reg2 = SketchRegistry(reg_dir)
-        reg2._fault_in(reg2._require(f"urls_{lang}"))
-        ours = reg2._sets[f"urls_{lang}"].registers
-        want, _ = hll_core.deserialize(direct[lang])
-        assert np.array_equal(ours, want)
 
 
 def test_stream_generic_specs(spark, stream_dir, tmp_path):

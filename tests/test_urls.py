@@ -8,7 +8,6 @@ import pytest
 from hlld_spark.operators.urls import (
     canonicalize_urls,
     with_registrable_domain,
-    with_url_parts,
     write_urls_fixture,
 )
 
@@ -54,16 +53,6 @@ def test_registrable_domain_heuristic(spark):
     got = {r["i"]: r["domain"] for r in with_registrable_domain(df).collect()}
     for i, (_, want) in enumerate(DOMAIN_CASES):
         assert got[i] == want, DOMAIN_CASES[i]
-
-
-@pytest.mark.spark
-def test_url_parts_struct(spark):
-    df = spark.createDataFrame(
-        [(0, "https://user@Sub.Host.net:8443/p/q?x=1&y=2#frag")], "i long, url string"
-    )
-    p = with_url_parts(df).collect()[0]["url_parts"]
-    assert (p["scheme"], p["host"], p["port"]) == ("https", "sub.host.net", 8443)
-    assert (p["path"], p["query"], p["fragment"]) == ("/p/q", "x=1&y=2", "frag")
 
 
 @pytest.mark.spark
