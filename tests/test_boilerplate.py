@@ -6,7 +6,6 @@ import os
 
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.boilerplate import (
     extract_main_text,

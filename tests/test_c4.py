@@ -7,7 +7,6 @@ semantics of c4_filter, and a plain-Python reference sweep.
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.text import c4_filter, with_c4_signals
 

@@ -2,12 +2,9 @@
 retries are idempotent, and resumed results are byte-identical to an
 uninterrupted run (FIXTURES.md F6)."""
 
-import json
 import os
 
-import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.checkpoint import checkpointed_build, completed_splits, lineage, plan_splits
 from hlld_spark.core.accumulator import HllSpec

@@ -10,7 +10,6 @@ graphs below.
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.cluster import (
     attach_components,

@@ -8,7 +8,6 @@ over-flags at most (never under-flags: every exact flag is a bloom flag).
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.decontaminate import decontaminate, eval_gram_table
 

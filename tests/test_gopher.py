@@ -9,7 +9,6 @@ synthetic docs.
 import re
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.text import (
     GOPHER_STOPWORDS,

@@ -4,8 +4,6 @@ Mirrors the reference unit suite (tests/test_hll.c, tests/test_set.c)
 plus the property-style merge-algebra requirements from BASELINE.md.
 """
 
-import math
-
 import numpy as np
 import pytest
 

@@ -2,7 +2,6 @@
 spec-literal double-loop reference, fixture truth equality, and the
 blocked hamming dedup vs a brute-force replay of the keeper rule."""
 
-import numpy as np
 import pandas as pd
 import pytest
 

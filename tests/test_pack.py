@@ -6,7 +6,6 @@ import os
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.pack import (
     chunk_documents,

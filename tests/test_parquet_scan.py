@@ -3,7 +3,6 @@
 import datetime
 import decimal
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest

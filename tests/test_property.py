@@ -4,6 +4,8 @@ strings, merge-algebra invariants under random shardings, and the
 partial-build kernel against a pure-Python group-by fold."""
 
 import math
+import random
+from collections import Counter
 
 import numpy as np
 import pandas as pd
@@ -13,6 +15,7 @@ from hypothesis import given, settings, strategies as st
 from hlld_spark.core import hll
 from hlld_spark.core.accumulator import HllSpec
 from hlld_spark.core.hashing import hll_hash, murmur3_x64_128
+from tests.test_ascii_fastpath import ARROW_CONTAINERS, text_batches
 
 _M = (1 << 64) - 1
 
@@ -200,8 +203,6 @@ def test_misra_gries_error_bound_property(items, capacity, batch_size):
     """The textbook MG invariant under arbitrary batching: for every
     item, true_count - N/capacity <= summary_count <= true_count (absent
     items have true_count <= N/capacity)."""
-    from collections import Counter
-
     import numpy as np
 
     from hlld_spark.operators.frequent import _mg_update
@@ -218,6 +219,68 @@ def test_misra_gries_error_bound_property(items, capacity, batch_size):
         got = counters.get(it, 0)
         assert got <= tc
         assert got >= tc - n / capacity - 1e-9, (it, got, tc, n, capacity)
+
+
+def _token_ngrams(texts, n):
+    """The n-gram reference: every ``" ".join`` of n consecutive
+    ``str.split()`` tokens of every (non-NULL) doc, counted."""
+    toks = [t.split() for t in texts if t]
+    return Counter(" ".join(t[i : i + n]) for t in toks for i in range(len(t) - n + 1))
+
+
+@settings(max_examples=200, deadline=None)
+@given(text_batches("\xa0\u3000\x1c", ARROW_CONTAINERS), st.integers(min_value=1, max_value=4), st.data())
+def test_ngram_kernels_match_str_split(batch, n, data):
+    """``frequent_ngrams``' two kernels against a pure-Python count of
+    ``str.split()`` windows: pass 1's distinct hashes carry the
+    reference's counts (one hash per distinct n-gram) and its total;
+    pass 2 renders exactly the n-grams of the hashes it is given, each
+    with its full count."""
+    from hlld_spark.operators.frequent import _ngram_counts, _ngram_hits
+
+    want = _token_ngrams(batch[1], n)
+    u, c, total = _ngram_counts(batch[0], n)
+    assert total == sum(want.values())
+    assert sorted(c.tolist()) == sorted(want.values())
+    assert _ngram_hits(batch[0], n, u) == want
+    picked = sorted(data.draw(st.sets(st.sampled_from(range(len(u)))))) if len(u) else []
+    hits = _ngram_hits(batch[0], n, u[picked])
+    assert sorted(hits.values()) == sorted(c[picked].tolist())
+    assert all(want[g] == k for g, k in hits.items())
+
+
+def test_ngram_pipeline_exact_under_forced_collisions(monkeypatch):
+    """With the gram hash wrapped down to 2 bits, every hash stands for
+    many n-grams. Pass 1 -> Misra-Gries -> pass 2 still gives the exact
+    phi-heavy ``{ngram: count}``: a collision only adds candidates, and
+    pass 2 counts the rendered string of every hit."""
+    from hlld_spark.operators import frequent
+
+    grams = frequent._grams
+
+    def two_bit(texts, n, unit):
+        h, offsets = grams(texts, n, unit)
+        return h & np.uint64(3), offsets
+
+    monkeypatch.setattr(frequent, "_grams", two_bit)
+    docs = ["all rights reserved"] * 80 + ["terms of use"] * 20 + [f"page {i} of {i + 1}" for i in range(40)]
+    random.Random(7).shuffle(docs)
+    batches = [pa.array(docs[i : i + 16], pa.string()) for i in range(0, len(docs), 16)]
+    phi, cap = 0.4, 3  # cap = ceil(1 / phi) < 4 hashes: the decrements run
+    counters: dict = {}
+    total = 0
+    for b in batches:
+        u, c, t = frequent._ngram_counts(b, 3)
+        frequent._mg_update(counters, u, c, cap)
+        total += t
+    cands = np.array(sorted(counters), dtype=np.int64)
+    hits: Counter = Counter()
+    for b in batches:
+        hits.update(frequent._ngram_hits(b, 3, cands))
+    want = _token_ngrams(docs, 3)
+    assert len(hits) > len(cands) and all(want[g] == k for g, k in hits.items())
+    threshold = math.ceil(phi * total)
+    assert {g: k for g, k in hits.items() if k >= threshold} == {"all rights reserved": 80}
 
 
 def _docs(alphabet: str, max_size: int):

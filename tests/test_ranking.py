@@ -6,7 +6,6 @@ independent DuckDB SQL reimplementation."""
 import math
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.ranking import bm25_search, corpus_stats
 

@@ -7,11 +7,9 @@ import pytest
 from hlld_spark.core import hll
 from hlld_spark.core.hashing import hll_hash
 from hlld_spark.registry import (
-    BAD_NAME,
     DELETE_IN_PROGRESS,
     DONE,
     EXISTS,
-    NOT_PROXIED,
     SET_NOT_FOUND,
     HlldError,
     SketchRegistry,

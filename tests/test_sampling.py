@@ -3,7 +3,6 @@
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.sampling import (
     blocklist_pattern,

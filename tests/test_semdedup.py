@@ -5,7 +5,6 @@ the keepers anti-join."""
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.embeddings import (
     kmeans_assign,

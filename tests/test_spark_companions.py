@@ -14,7 +14,6 @@ from hlld_spark.operators.sketch import (
     build_sketches,
     merge_sketches,
     rollup_sketches,
-    sketch_estimate,
     with_estimate,
 )
 from hlld_spark.registry import SketchRegistry

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hlld_spark.core.accumulator import HllSpec
-from hlld_spark.operators.sketch import build_sketches, with_estimate
+from hlld_spark.operators.sketch import build_sketches
 from hlld_spark.sources.webpages import generate_web_pages
 from hlld_spark.streaming.sketch_stream import sketch_stream, windowed_sketch_stream
 

@@ -16,7 +16,8 @@ An AST reachability walk, no Spark and no imports of the package:
 A top-level def, class or assigned name under ``hlld_spark/`` that the
 walk does not reach must be on ``KEEP`` with its reason, or be deleted
 with its tests. A second check fails on a module-level import that its
-module never uses, unless the import carries ``# noqa``.
+module, under ``hlld_spark/`` or ``tests/``, never uses, unless the
+import carries ``# noqa``.
 """
 
 from __future__ import annotations
@@ -180,7 +181,8 @@ def _module_level_imports(tree: ast.Module):
 
 def test_no_unused_module_level_import():
     unused = []
-    for mod, path in _package_modules():
+    test_modules = [(os.path.relpath(p, REPO), p) for p in _py_files(os.path.join(REPO, "tests"))]
+    for mod, path in [*_package_modules(), *test_modules]:
         with open(path) as f:
             src = f.read()
         lines = src.splitlines()

@@ -5,7 +5,6 @@ missing matches, and the one-exchange plan shape."""
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from hlld_spark.operators.temporal import asof_join
 
