@@ -30,12 +30,14 @@ asymmetry:
   broadcast at a documented false-positive rate. Bloom errors only
   OVER-flag (drop a clean doc), never under-flag — the safe direction
   for decontamination.
-* :func:`decontaminate_parquet` is the scan-dominated scale path: the
-  same probe closure fed by the worker-side pyarrow scan
-  (``sources.parquet_scan.map_parquet_batches``) in place of
-  ``mapInArrow`` over the DataFrame, dodging the measured ~5.4M rows/s
-  JVM→Python Arrow-IPC ceiling exactly like ``build_sketches_parquet``
-  does. The overflow join's corpus gram stream is shared the same way.
+* the corpus batches come from the worker-side pyarrow scan
+  (``sources.parquet_scan.map_parquet_batches``) for
+  :func:`decontaminate_parquet`, and from ``sources.parquet_scan.map_batches``
+  for :func:`decontaminate`: a bare parquet file scan is read the same
+  worker-side way, any other frame streams through ``mapInArrow``. The
+  worker-side read dodges the measured ~5.4M rows/s JVM→Python
+  Arrow-IPC ceiling exactly like ``build_sketches_parquet`` does. The
+  overflow join's corpus gram stream comes from the same source.
 
 Hash-match vs string-match: grams are compared by 64-bit splitmix-
 finalized poly hashes, so a collision could over-flag a document
@@ -53,6 +55,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..sources.parquet_scan import map_batches
 from .dedup import _grams, _splitmix
 from .skew import rebalance
 
@@ -181,7 +184,7 @@ def _make_member(method: str, blob: bytes):
 def _probe(probe_state, method: str, id_col: str, text_col: str, n: int, unit: str):
     """The corpus probe over Arrow batches of (id, text): per-doc
     matched-gram occurrence counts, yielded as (id, n_matched_grams) for
-    flagged docs only. Shared by the DataFrame path (``mapInArrow``) and
+    flagged docs only. Shared by the DataFrame path (``map_batches``) and
     the worker-side parquet scan (``map_parquet_batches``); unflagged
     rows never become Python objects."""
 
@@ -243,7 +246,7 @@ def _flag_via_join(corpus_grams: DataFrame, eval_df: DataFrame, id_col: str,
 def _flag(run, id_field, eval_df, id_col, text_col, eval_text_col, n, method, bloom_fpr,
           max_eval_grams, unit) -> DataFrame:
     """Both entry points' body: ``run(fn, schema)`` maps an Arrow batch
-    closure over the corpus's (id, text) batches — ``mapInArrow`` over
+    closure over the corpus's (id, text) batches — ``map_batches`` over
     the DataFrame or ``map_parquet_batches`` over the files."""
     try:
         table = eval_gram_table(eval_df, eval_text_col, n, max_eval_grams, unit)
@@ -277,7 +280,10 @@ def decontaminate(
     aggressive; useful for sub-word contamination screens).
 
     Returns (id_col, n_matched_grams) for flagged docs only. Keepers =
-    ``docs.join(flagged, id_col, "left_anti")``.
+    ``docs.join(flagged, id_col, "left_anti")``. When ``docs`` is a bare
+    parquet file scan, the probe reads its files worker-side
+    (``sources.parquet_scan.map_batches``), as :func:`decontaminate_parquet`
+    does; any other frame streams its rows through ``mapInArrow``.
 
     method="exact": broadcast sorted hash array, prefiltered searchsorted.
     method="bloom": broadcast this engine's Bloom over the eval hashes
@@ -294,7 +300,7 @@ def decontaminate(
     "eval" tables.
     """
     return _flag(
-        lambda fn, schema: docs.select(id_col, text_col).mapInArrow(fn, schema),
+        lambda fn, schema: map_batches(docs.select(id_col, text_col), fn, schema),
         docs.schema[id_col], eval_df, id_col, text_col, eval_text_col or text_col,
         n, method, bloom_fpr, max_eval_grams, unit,
     )

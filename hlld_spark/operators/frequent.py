@@ -6,7 +6,7 @@ hosts) with EXACT final counts, without ever shuffling row-level data.
 
 Both operators run one Misra–Gries pipeline, two input scans:
 
-    pass 1  mapInArrow   — :func:`_summarize` keeps one Misra–Gries
+    pass 1  map_batches  — :func:`_summarize` keeps one Misra–Gries
                            summary of capacity c per partition, fed by
                            an ``items_of(batch)`` kernel that returns the
                            batch's distinct items and counts (the MG
@@ -25,6 +25,13 @@ Both operators run one Misra–Gries pipeline, two input scans:
     pass 2  recount      — exact counts of the candidates only, then the
                            ``ceil(φ·N)`` filter. An empty candidate union
                            returns at once, without this scan.
+
+Each scan of the input that runs in Python (both passes of
+``frequent_ngrams``, pass 1 of ``heavy_hitters``) takes its batches from
+``sources/parquet_scan.map_batches``: a bare parquet file scan is read in
+the Python workers, any other frame streams through ``mapInArrow``. The
+summaries then depend on how rows split into tasks; the exact recount
+keeps the output the same either way.
 
 ``heavy_hitters`` summarizes the column's values (``pc.value_counts``)
 and recounts them with a broadcast semi-join + groupBy count: the big
@@ -64,6 +71,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..sources.parquet_scan import map_batches
 from .dedup import _grams, _text_array
 from .skew import rebalance
 
@@ -94,7 +102,7 @@ def _mg_update(counters: dict, items: np.ndarray, counts: np.ndarray, capacity: 
 
 
 def _summarize(items_of, cap: int, schema: StructType):
-    """The one Misra–Gries summarize closure (for ``mapInArrow``).
+    """The one Misra–Gries summarize closure (an Arrow batch function).
     ``items_of(batch)`` returns the batch's (distinct items, counts,
     item total); the closure folds them into one capacity-``cap``
     summary and emits it as ``schema`` rows (item, MG count, 0) plus the
@@ -168,9 +176,10 @@ def _ngram_hits(texts, n: int, cands: np.ndarray) -> Counter:
     return hits
 
 
-def _frequent(items: DataFrame, item_type, items_of, phi: float, capacity, fan_in: int, out_count: str, recount):
+def _frequent(items: DataFrame, item_type, items_of, phi: float, capacity, fan_in: int, name: str, out_count: str, recount):
     """The pipeline both operators share. Pass 1 summarizes the
-    one-column ``items`` frame with ``items_of`` and merges the
+    one-column ``items`` frame with ``items_of`` (through
+    :func:`~hlld_spark.sources.parquet_scan.map_batches`) and merges the
     summaries to ≤ ``fan_in`` partitions before the driver collect (at
     10^5–10^6 input tasks the driver would otherwise hold
     partitions×(cap+1) rows). MG summaries are mergeable [Agarwal et al.
@@ -184,8 +193,8 @@ def _frequent(items: DataFrame, item_type, items_of, phi: float, capacity, fan_i
     on a 16-partition input at ``local[4]``. With AQE off it is a plain
     ``repartition(fan_in)`` (see :func:`.skew.rebalance`).
 
-    ``recount(candidates)`` is pass 2: a frame of (item, ``out_count``)
-    exact counts, filtered here to ``ceil(φ·N)``."""
+    ``recount(candidates)`` is pass 2: a frame of (``name``,
+    ``out_count``) exact counts, filtered here to ``ceil(φ·N)``."""
     if not (0 < phi < 1):
         raise ValueError("phi must be in (0, 1)")
     cap = capacity or int(np.ceil(2.0 / phi))  # 2× the ceil(1/φ) bound: slack for near-threshold items
@@ -196,12 +205,12 @@ def _frequent(items: DataFrame, item_type, items_of, phi: float, capacity, fan_i
             StructField("__total", LongType(), False),
         ]
     )
-    summaries = items.mapInArrow(_summarize(items_of, cap, schema), schema)
+    summaries = map_batches(items, _summarize(items_of, cap, schema), schema)
     rows = rebalance(summaries, fan_in).mapInArrow(_summarize(_summary_rows, cap, schema), schema).collect()
     cands = list({r[0] for r in rows if r[0] is not None})
     if not cands:
         # MG superset guarantee: empty candidate union ⇒ no φ-heavy item
-        return items.limit(0).withColumn(out_count, F.lit(0).cast("long"))
+        return items.limit(0).select(F.col(items.columns[0]).alias(name), F.lit(0).cast("long").alias(out_count))
     threshold = int(np.ceil(phi * sum(r[2] for r in rows)))
     return recount(cands).filter(F.col(out_count) >= threshold)
 
@@ -245,7 +254,7 @@ def heavy_hitters(
             .agg(F.count("*").alias(out_count))
         )
 
-    return _frequent(items, in_type, _value_counts, phi, capacity, summary_fan_in, out_count, recount)
+    return _frequent(items, in_type, _value_counts, phi, capacity, summary_fan_in, col, out_count, recount)
 
 
 def frequent_ngrams(
@@ -275,7 +284,7 @@ def frequent_ngrams(
     """
     if n < 1:
         raise ValueError("n must be >= 1")
-    docs = df.select(F.col(text_col).alias("ngram"))
+    docs = df.select(text_col)
 
     def recount(cands):
         cand = np.unique(np.asarray(cands, dtype=np.int64))
@@ -291,8 +300,8 @@ def frequent_ngrams(
                     names=["ngram", out_count],
                 )
 
-        return docs.mapInArrow(count_hits, schema).groupBy("ngram").agg(F.sum(out_count).alias(out_count))
+        return map_batches(docs, count_hits, schema).groupBy("ngram").agg(F.sum(out_count).alias(out_count))
 
     return _frequent(
-        docs, LongType(), lambda rb: _ngram_counts(rb.column(0), n), phi, capacity, summary_fan_in, out_count, recount
+        docs, LongType(), lambda rb: _ngram_counts(rb.column(0), n), phi, capacity, summary_fan_in, "ngram", out_count, recount
     )

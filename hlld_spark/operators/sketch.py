@@ -29,14 +29,14 @@ Scale properties (designed for 10^12 rows / 1000 executors):
 
 Where the rows come from: ``build_sketches_parquet`` plans file splits on
 the driver and reads them in the Python tasks with pyarrow
-(``sources/parquet_scan.py``). ``build_sketches`` does the same when its
-pruned input is a bare parquet file scan — e.g. ``spark.read.parquet(p)``
-with only columns selected, or with a ``to_date(ts)`` key such as the
-(lang, day) grain ``rollup_sketches`` builds — so no row crosses the JVM
-scan or the JVM→Python Arrow channel; a derived day is computed per
-batch in the task. Any other input streams its rows into stage 1 through
-``mapInArrow``. Both feed the same partial kernel and
-``_merge_partials``.
+(``sources/parquet_scan.map_parquet_batches``). ``build_sketches`` takes
+its stage-1 batches from ``sources/parquet_scan.map_batches``: a bare
+parquet file scan — e.g. ``spark.read.parquet(p)`` with only columns
+selected, or with a ``to_date(ts)`` key such as the (lang, day) grain
+``rollup_sketches`` builds — is read the same worker-side way, so no row
+crosses the JVM scan or the JVM→Python Arrow channel; any other input
+streams its rows through ``mapInArrow``. Both feed the same partial
+kernel and ``_merge_partials``.
 """
 
 from __future__ import annotations
@@ -49,18 +49,17 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import BinaryType, DoubleType, LongType, StructField, StructType
 
 from ..core.accumulator import HllSpec, accumulator_for, deserialize_any, merge_serialized
-from ..sources.parquet_scan import (
-    BareScan,
-    bare_parquet_scan,
-    list_parquet_files,
-    map_parquet_batches,
-    parquet_schema,
-    plain_scan,
-    project_batches,
-)
+from ..sources.parquet_scan import list_parquet_files, map_batches, map_parquet_batches, parquet_schema
 
 _SKETCH_FIELD = "sketch"
 _NROWS_FIELD = "n_rows"
+#: task waves of a worker-side build read (see ``plan_parquet_splits``).
+#: r7: ONE wave of full-width tasks — the sketch build is uniform
+#: scan+hash work, and each Python task paid a fixed cost (mostly the
+#: zip-directory re-read hlld_spark/__init__.py now skips), so one wave
+#: measured faster (A/B: best 0.67 s vs 1.05 s at bench scale);
+#: compute-heavy consumers keep waves=2
+_BUILD_WAVES = 1
 
 
 def _result_schema(schema: StructType, keys: list[str]) -> StructType:
@@ -213,67 +212,22 @@ def build_sketches(
     ``spec`` defaults to reference-default HLL (p=12, eps≈2%
     — /root/reference/src/config.c:26-27).
 
-    The input is pruned to ``keys + [col]``. When that pruned frame is a
-    bare parquet file scan (:func:`~hlld_spark.sources.parquet_scan.bare_parquet_scan`,
-    decided from the optimized plan and the footers without running a
-    job), the build reads its files worker-side as
-    :func:`build_sketches_parquet` does, so no row crosses the JVM scan or
-    the JVM→Python Arrow channel. A ``to_date(ts)`` / ``cast(ts AS date)``
-    column routes too: each task computes the day from the µs timestamps
-    it reads, when ``ts`` is a ``timestamp_ntz`` or a ``timestamp`` cast
-    in a fixed-offset zone (UTC, ``+05:30``), both parquet rebase modes
-    are CORRECTED, ``int96TimestampConversion`` is off and no footer asks
-    for a legacy rebase. It takes the ``mapInArrow`` path over the
-    frame's rows instead when the pruned plan holds anything else over
-    one parquet relation (a filter, another derived or an aliased column,
-    a region zone such as ``America/New_York``, a limit, a join, a cached
-    or streaming frame, a non-file source); when the relation is
-    partitioned or bucketed, or reads with ``mergeSchema``,
-    ``ignoreCorruptFiles``, ``ignoreMissingFiles`` or field ids; when a
-    file is not a ``file:`` URI; or when a column read as is has a Spark
-    type that is not string, binary, boolean or a
-    byte/short/int/long/float/double number, differs from the type in the
-    first file's footer, or reaches Python
-    as another Arrow type than pyarrow reads (e.g. ``binaryAsString``
-    over unannotated binary, a dictionary-encoded column, large var
-    types). Both paths give byte-identical HLL, CMS and Bloom sketches and
-    equal ``n_rows``; KLL and t-digest fold in a different order, so they
-    agree within rank error.
+    The input is pruned to ``keys + [col]`` and its batches come from
+    :func:`~hlld_spark.sources.parquet_scan.map_batches`: a bare parquet
+    file scan (:func:`~hlld_spark.sources.parquet_scan.bare_parquet_scan`
+    lists the conditions) is read worker-side as
+    :func:`build_sketches_parquet` reads it, any other frame through
+    ``mapInArrow``. Both paths give byte-identical HLL, CMS and Bloom
+    sketches and equal ``n_rows``; KLL and t-digest fold in a different
+    order, so they agree within rank error.
     """
     spec = spec if spec is not None else HllSpec()
     keys = list(keys or [])
     accumulator_for(spec)  # validate early, on the driver
     pruned = df.select(*keys, col)
     schema = _result_schema(pruned.schema, keys)
-    scan = bare_parquet_scan(pruned)
-    if scan is not None:
-        return _build_from_files(pruned.sparkSession, scan, keys, col, spec, schema)
-    partials = pruned.mapInArrow(_make_build_partials_arrow(keys, col, spec), schema=schema)
-    return _merge_partials(partials, keys, schema)
-
-
-def _build_from_files(spark, scan: BareScan, keys: list[str], col: str, spec, schema, filter=None) -> DataFrame:
-    """The worker-side-read build: each Python task reads its splits of
-    ``scan.files`` with pyarrow, derives the scan's output columns
-    (``project_batches``) and feeds one continuous batch stream to the
-    partial kernel, so the task emits one partial per group whatever its
-    split count; ``_merge_partials`` finishes it."""
-    build, outputs = _make_build_partials_arrow(keys, col, spec), scan.outputs
-    partials = map_parquet_batches(
-        spark,
-        scan.files,
-        lambda batches: build(project_batches(batches, outputs)),
-        schema,
-        scan.sources,
-        filter=filter,
-        # r7: ONE wave of full-width tasks — the sketch build is uniform
-        # scan+hash work, and each Python task paid a fixed cost (mostly
-        # the zip-directory re-read hlld_spark/__init__.py now skips), so
-        # one wave measured faster (A/B: best 0.67 s vs 1.05 s at bench
-        # scale); compute-heavy consumers keep waves=2
-        waves=1,
-    )
-    return _merge_partials(partials, keys, schema)
+    build = _make_build_partials_arrow(keys, col, spec)
+    return _merge_partials(map_batches(pruned, build, schema, waves=_BUILD_WAVES), keys, schema)
 
 
 def build_sketches_parquet(
@@ -316,7 +270,9 @@ def build_sketches_parquet(
     accumulator_for(spec)
     files = list_parquet_files(path)
     schema = _result_schema(parquet_schema(files, keys), keys)
-    return _build_from_files(spark, plain_scan(files, keys + [col]), keys, col, spec, schema, filter)
+    build = _make_build_partials_arrow(keys, col, spec)
+    partials = map_parquet_batches(spark, files, build, schema, keys + [col], filter, waves=_BUILD_WAVES)
+    return _merge_partials(partials, keys, schema)
 
 
 def merge_sketches(sketch_df: DataFrame, keys: list[str] | None) -> DataFrame:

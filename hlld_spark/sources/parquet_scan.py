@@ -14,13 +14,17 @@ pattern: object store → worker, scan next to the compute.
 ``map_parquet_batches(spark, files, fn, schema, columns)`` is the
 generic form and ``parquet_schema(files, columns)`` gives the Spark types
 of the columns it reads. Both take a table path (listed once with
-:func:`list_parquet_files`) or the file list itself. Sketch builds are
-their main client: ``build_sketches_parquet`` reads a path this way, and
-``build_sketches`` takes the same worker-side read whenever its pruned
-input is a bare parquet file scan, its columns as read or cast from a
-timestamp to a date (:func:`bare_parquet_scan`); any
-Arrow-batch operator (language ID, tokenization, fingerprinting) can
-ride the same splits.
+:func:`list_parquet_files`) or the file list itself; the ``*_parquet``
+entry points (``build_sketches_parquet``, ``decontaminate_parquet``, …)
+call them directly.
+
+``map_batches(df, fn, schema)`` is the one batch source for a per-batch
+reduction over a DataFrame (sketch builds, the Misra–Gries passes of
+``heavy_hitters`` and ``frequent_ngrams``, ``decontaminate``'s probe): it
+reads the frame's files worker-side when :func:`bare_parquet_scan`
+accepts the frame — its columns as read, or cast from a timestamp to a
+date — and streams the frame's rows through ``mapInArrow`` otherwise.
+Both sources hand ``fn`` the same columns with the same Arrow types.
 """
 
 from __future__ import annotations
@@ -158,11 +162,6 @@ class BareScan(NamedTuple):
         return list(dict.fromkeys(src for _, src, _ in self.outputs))
 
 
-def plain_scan(files: list[str], columns: list[str]) -> BareScan:
-    """The :class:`BareScan` that reads ``columns`` of ``files`` as they are."""
-    return BareScan(files, tuple((c, c, None) for c in dict.fromkeys(columns)))
-
-
 def _days(ts, offset_s: int):
     """``cast(ts AS date)`` of a µs timestamp array at UTC+``offset_s``, as
     date32. Floor division, as Spark's ``microsToDays``: ``pc.divide``
@@ -176,7 +175,7 @@ def _days(ts, offset_s: int):
     return pa.array(days.astype(np.int32), mask=mask).cast(pa.date32())
 
 
-def project_batches(batches, outputs):
+def _project_batches(batches, outputs):
     """A :class:`BareScan`'s output columns from batches of its sources."""
     import pyarrow as pa
 
@@ -466,3 +465,22 @@ def map_parquet_batches(
 
     ids_df = spark.range(0, n_tasks, 1, n_tasks)
     return ids_df.mapInArrow(task, schema=schema)
+
+
+def map_batches(df: DataFrame, fn, schema, waves: int = 2) -> DataFrame:
+    """``df.mapInArrow(fn, schema)``, read worker-side when it can be: when
+    :func:`bare_parquet_scan` accepts ``df``, each Python task reads its
+    splits of ``df``'s files (:func:`map_parquet_batches`, ``waves`` as
+    there) and ``fn`` gets the frame's columns, a ``cast(ts AS date)``
+    derived per batch; any other frame streams its rows from the JVM scan
+    through ``mapInArrow``. Both give ``fn`` the same columns as the same
+    Arrow types, so a reduction that does not depend on how rows split
+    into tasks gives the same output on either. Building the plan runs no
+    Spark job."""
+    scan = bare_parquet_scan(df)
+    if scan is None:
+        return df.mapInArrow(fn, schema)
+    outputs = scan.outputs
+    return map_parquet_batches(
+        df.sparkSession, scan.files, lambda batches: fn(_project_batches(batches, outputs)), schema, scan.sources, waves=waves
+    )

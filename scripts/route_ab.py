@@ -8,10 +8,10 @@ to_date("warc_ts"))``, the shape of perfbench's ``frame_build`` rollup,
 on two sides:
 
 * ``routed``: the build as ``build_sketches`` plans it, a worker-side read
-  of the parquet files (``sources/parquet_scan.bare_parquet_scan``);
-* ``jvm``: the same call with ``bare_parquet_scan`` stubbed to None while
-  the plan is built, so the rows stream from the JVM scan through
-  ``mapInArrow``, as for any input that does not route.
+  of the parquet files (``sources/parquet_scan.map_batches``);
+* ``jvm``: the same call with ``sources/parquet_scan.bare_parquet_scan``
+  stubbed to None while the plan is built, so the rows stream from the
+  JVM scan through ``mapInArrow``, as for any input that does not route.
 
 The corpus is ``--rows`` web pages (``generate_web_pages``) written as
 ``--files`` parquet files with (url, lang, warc_ts), or the table at
@@ -50,11 +50,9 @@ def _digest(rows) -> str:
 
 def _plan(side: str, build):
     """``build()``'s DataFrame, planned as ``side`` plans it."""
-    from hlld_spark.operators import sketch
-
     if side == "routed":
         return build()
-    with mock.patch.object(sketch, "bare_parquet_scan", lambda _df: None):
+    with mock.patch("hlld_spark.sources.parquet_scan.bare_parquet_scan", lambda _df: None):
         return build()
 
 

@@ -1,9 +1,11 @@
-"""``build_sketches`` over a bare parquet scan reads the files worker-side
-(``sources/parquet_scan.bare_parquet_scan``), also when a key is
-``cast(ts AS date)``; every other input keeps the ``mapInArrow`` path over
-the JVM scan. The routed build must give what the JVM path gives on the
-same frame: HLL, CMS and Bloom bytes and ``n_rows`` equal, KLL and
-t-digest within rank error."""
+"""A per-batch reduction over a bare parquet scan reads the files
+worker-side (``sources/parquet_scan.map_batches``, deciding with
+``bare_parquet_scan``), also when a column is ``cast(ts AS date)``; every
+other input keeps the ``mapInArrow`` path over the JVM scan. The routed
+``build_sketches`` must give what the JVM path gives on the same frame:
+HLL, CMS and Bloom bytes and ``n_rows`` equal, KLL and t-digest within
+rank error. ``heavy_hitters``, ``frequent_ngrams`` and ``decontaminate``
+must give the same final output on both paths."""
 
 import contextlib
 import os
@@ -21,9 +23,11 @@ from hlld_spark.core.bloom import BloomSpec
 from hlld_spark.core.cms import CmsSpec
 from hlld_spark.core.kll import KllSpec
 from hlld_spark.core.tdigest import TDigestSpec
-from hlld_spark.operators import sketch
+from hlld_spark.operators import frequent
+from hlld_spark.operators.decontaminate import decontaminate
+from hlld_spark.operators.frequent import frequent_ngrams, heavy_hitters
 from hlld_spark.operators.sketch import _make_build_partials_arrow, _merge_partials, _result_schema, build_sketches, rollup_sketches
-from hlld_spark.sources.parquet_scan import bare_parquet_scan
+from hlld_spark.sources.parquet_scan import bare_parquet_scan, map_batches
 from tests.conftest import assert_plan_runs_no_job
 
 pytestmark = pytest.mark.spark
@@ -46,11 +50,15 @@ RANK_EPS = 0.03
 
 
 def _values(kind: str, codes: np.ndarray, rng) -> pa.Array:
-    """``codes`` as values of ``kind``; about 1 in 10 is NULL, and float
-    columns carry NaN (code 0) and -0.0 next to 0.0 (codes 1 and 2)."""
+    """``codes`` as values of ``kind`` (a ``TYPES`` name, or ``"text"``:
+    strings of 0 to 6 tokens from a 5-word vocabulary); about 1 in 10 is
+    NULL, and float columns carry NaN (code 0) and -0.0 next to 0.0 (codes
+    1 and 2)."""
     codes = codes.astype(np.int64)
     null = rng.random(len(codes)) < 0.1
-    if kind == "string":
+    if kind == "text":
+        vals = [" ".join(f"w{(c + j * c) % 5}" for j in range(c % 7)) for c in codes]
+    elif kind == "string":
         vals = [f"s{c}" for c in codes]
     elif kind == "binary":
         vals = [c.tobytes()[: 1 + c % 8] for c in codes]
@@ -61,7 +69,7 @@ def _values(kind: str, codes: np.ndarray, rng) -> pa.Array:
         vals = [special.get(int(c), c * 0.25) for c in codes]
     else:
         vals = [int(c) % 100 - 50 if kind == "tinyint" else int(c) - 500 for c in codes]
-    return pa.array([None if m else v for v, m in zip(vals, null)], type=TYPES[kind])
+    return pa.array([None if m else v for v, m in zip(vals, null)], type=TYPES.get(kind, pa.string()))
 
 
 def _table(key: str, val: str, n: int, rng, columns=("k", "v")) -> pa.Table:
@@ -147,10 +155,16 @@ def _assert_routed_matches_jvm(df, keys, col, specs) -> None:
             assert a == b, type(spec).__name__
 
 
+def _jvm(build):
+    """``build()``'s DataFrame with every ``map_batches`` in it forced onto
+    the JVM path (no frame is a bare scan while the plan is built)."""
+    with mock.patch("hlld_spark.sources.parquet_scan.bare_parquet_scan", lambda _df: None):
+        return build()
+
+
 def _jvm_rollup(df, keys, col, spec):
     """``rollup_sketches`` with its build forced onto the JVM path."""
-    with mock.patch.object(sketch, "bare_parquet_scan", lambda _df: None):
-        return rollup_sketches(df, keys, col, spec)
+    return _jvm(lambda: rollup_sketches(df, keys, col, spec))
 
 
 def _assert_routed_rollup_matches_jvm(df, keys, col, spec) -> None:
@@ -382,3 +396,122 @@ def test_non_bare_input_keeps_jvm_path(spark, plain_dir, tmp_path, case):
         got = _rows(built, keys)
         assert "FileScan parquet" in built._jdf.queryExecution().executedPlan().toString()
         assert got == _rows(_jvm_build(df, keys, "url", HllSpec(12)), keys)
+
+
+def _routed_passes(build):
+    """``build()``'s result, and the executed plan of every frame the
+    ``frequent`` passes took from ``map_batches`` while it ran."""
+    frames = []
+
+    def spy(*args, **kwargs):
+        frames.append(map_batches(*args, **kwargs))
+        return frames[-1]
+
+    with mock.patch.object(frequent, "map_batches", spy):
+        out = build()
+    return out, [f._jdf.queryExecution().executedPlan().toString() for f in frames]
+
+
+def _sorted_rows(df) -> list:
+    """Every row as a tuple, NaN as the string 'nan', sorted by repr."""
+    return sorted((tuple("nan" if isinstance(v, float) and v != v else v for v in r) for r in df.collect()), key=repr)
+
+
+@pytest.mark.parametrize("layout", ["files", "row_groups"])
+@pytest.mark.parametrize("kind", ["string", "bigint", "double"])
+def test_routed_heavy_hitters_matches_jvm_path(spark, tmp_path, kind, layout):
+    """``heavy_hitters``' summarize pass reads a bare scan worker-side and
+    its output equals the JVM path's; the double column's NaN (one code of
+    twelve) is a heavy item."""
+    d = str(tmp_path / "t")
+    _write(d, layout, kind, "string", spark.sparkContext.defaultParallelism + 2)
+    df = _read(spark, d, kind, "string")
+    run = lambda: heavy_hitters(df, "k", phi=0.05)  # noqa: E731
+    routed, plans = _routed_passes(run)
+    jvm, jvm_plans = _routed_passes(lambda: _jvm(run))
+    assert len(plans) == 1 and "FileScan" not in plans[0] and "FileScan parquet" in jvm_plans[0]
+    got = _sorted_rows(routed)
+    assert got == _sorted_rows(jvm)
+    assert len(got) > 5 and (kind != "double" or any(r[0] == "nan" for r in got))
+
+
+@pytest.mark.parametrize("layout", ["files", "row_groups"])
+def test_routed_frequent_ngrams_matches_jvm_path(spark, tmp_path, layout):
+    """Both ``frequent_ngrams`` passes read a bare scan worker-side; the
+    (ngram, exact_count) output equals the JVM path's."""
+    d = str(tmp_path / "t")
+    _write(d, layout, "string", "text", spark.sparkContext.defaultParallelism + 2)
+    df = spark.read.schema("k string, v string").parquet(d)
+    run = lambda: frequent_ngrams(df, "v", n=3, phi=0.01)  # noqa: E731
+    routed, plans = _routed_passes(run)
+    jvm, jvm_plans = _routed_passes(lambda: _jvm(run))
+    assert len(plans) == 2 and not any("FileScan" in p for p in plans)
+    assert all("FileScan parquet" in p for p in jvm_plans)
+    got = _sorted_rows(routed)
+    assert routed.columns == ["ngram", "exact_count"] and len(got) > 5
+    assert got == _sorted_rows(jvm)
+
+
+@pytest.mark.parametrize("layout", ["files", "row_groups"])
+@pytest.mark.parametrize(
+    "method,unit,max_eval_grams",
+    [("exact", "char", 10**6), ("exact", "token", 10**6), ("bloom", "char", 10**6), ("bloom", "token", 10**6), ("exact", "token", 1)],
+    ids=["exact-char", "exact-token", "bloom-char", "bloom-token", "overflow_join"],
+)
+def test_routed_decontaminate_matches_jvm_path(spark, tmp_path, layout, method, unit, max_eval_grams):
+    """``decontaminate`` probes a bare scan worker-side, and so does its
+    ``EvalGramOverflow`` join (``max_eval_grams=1``); the flags equal the
+    JVM path's."""
+    d = str(tmp_path / "t")
+    _write(d, layout, "bigint", "text", spark.sparkContext.defaultParallelism + 2)
+    docs = _read(spark, d, "bigint", "string")
+    ev = spark.createDataFrame([("w1 w2 w3 w4",), ("w0 w0 w0",)], "text string")
+    run = lambda: decontaminate(docs, ev, "k", "v", "text", n=3, method=method, unit=unit, max_eval_grams=max_eval_grams)  # noqa: E731
+    routed, jvm = run(), _jvm(run)
+    assert "FileScan" not in routed._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan parquet" in jvm._jdf.queryExecution().executedPlan().toString()
+    got = _sorted_rows(routed)
+    assert len(got) > 5
+    assert got == _sorted_rows(jvm)
+
+
+@pytest.mark.parametrize("case", ["filter", "cached"])
+def test_non_bare_heavy_hitters_keeps_jvm_path(spark, plain_dir, tmp_path, case):
+    """``heavy_hitters`` over a filtered or a cached frame keeps the JVM
+    scan in its summarize pass, with the JVM path's output."""
+    with contextlib.ExitStack() as stack:
+        if case == "cached":
+            df = spark.read.parquet(plain_dir).cache()
+            stack.callback(df.unpersist)
+        else:
+            df = _fallback_inputs(spark, plain_dir, tmp_path)[case]()[0]
+        run = lambda: heavy_hitters(df, "lang", phi=0.1)  # noqa: E731
+        routed, plans = _routed_passes(run)
+        assert len(plans) == 1 and "FileScan parquet" in plans[0]
+        got = _sorted_rows(routed)
+        assert len(got) >= 4 and got == _sorted_rows(_jvm(run))
+
+
+def test_map_batches_plan_runs_no_job(spark, tmp_path):
+    d = str(tmp_path / "pq")
+    spark.range(2000).selectExpr("cast(id % 7 as string) AS lang", "cast(id as string) AS url").write.parquet(d)
+    df = spark.read.parquet(d)
+    assert_plan_runs_no_job(spark, lambda: map_batches(df, lambda batches: batches, df.schema), "map-batches-plan")
+
+
+def test_map_batches_identity_matches_map_in_arrow(spark, ts_dirs):
+    """An identity ``fn`` over a bare scan with a ``to_date(ts)`` column
+    reads worker-side and returns the rows ``mapInArrow`` returns."""
+    with _confs(spark, {"spark.sql.session.timeZone": "+05:30"}):
+        df = spark.read.parquet(ts_dirs["micros"]).select("lang", F.to_date("ts").alias("day"), "url")
+        routed = map_batches(df, lambda batches: batches, df.schema)
+        assert "FileScan" not in routed._jdf.queryExecution().executedPlan().toString()
+        got = _sorted_rows(routed)
+        assert len(got) > 100 and got == _sorted_rows(df.mapInArrow(lambda batches: batches, df.schema))
+
+
+def test_map_batches_over_non_bare_frame_keeps_file_scan(spark, plain_dir):
+    df = spark.read.parquet(plain_dir).filter(F.col("lang") != "0").select("lang", "url")
+    out = map_batches(df, lambda batches: batches, df.schema)
+    assert "FileScan parquet" in out._jdf.queryExecution().executedPlan().toString()
+    assert _sorted_rows(out) == _sorted_rows(df)

@@ -113,7 +113,8 @@ def test_frequent_ngrams_empty_and_short(spark):
     from hlld_spark.operators.frequent import frequent_ngrams
 
     df = spark.createDataFrame([("",), ("one two",), (None,)], "text string")
-    assert frequent_ngrams(df, "text", n=3, phi=0.5).count() == 0
+    out = frequent_ngrams(df, "text", n=3, phi=0.5)
+    assert out.columns == ["ngram", "exact_count"] and out.count() == 0
 
 
 def test_frequent_ngrams_rejects_n_below_one(spark):
